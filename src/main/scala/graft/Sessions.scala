@@ -50,9 +50,9 @@ object Sessions {
       // when stringified even though execution dedupes through the
       // cache: pipeline_report's plan printed 6-11 MB, ~0.2-0.5 s
       // PER EVENT of pure driver string-building for a UI that is
-      // disabled (ReportPlanProbe, r20: report count 1.9-2.3 s →
-      // 1.3 s with the cap; §5 — the driver should do almost no
-      // data work, and a discarded 10 MB string is data work). 64 KB
+      // disabled (r20: report count 1.9-2.3 s → 1.3 s with the cap,
+      // OPTIMIZATION_r20.md §5 — the driver should do almost no data
+      // work, and a discarded 10 MB string is data work). 64 KB
       // keeps event payloads humanly readable and bounds the cost at
       // ANY scale; tools that need the full text (graft.tools.Explain
       // plan capture) raise the limit per session at runtime.

@@ -33,27 +33,6 @@ object SparkEntry {
     * doubles). */
   private val interpLambda = 0.9
 
-  /** r19 (r18 verdict item 2): `GRAFT_LM_LOCAL=0` forces the LM/PMI
-    * family (text_bigram_lm / text_interp_lm / quality_perplexity /
-    * text_pmi) onto its DISTRIBUTED tiers by threading zeroed local
-    * gates through the query declarations — so the per-round
-    * oracle_check can hash-gate the distributed plans directly
-    * against DuckDB (at verify SFs the default gates dispatch the
-    * driver kernel, which is what the ordinary CORRECTNESS rows
-    * exercise). Unset (the default) leaves the adaptive three-tier
-    * dispatch exactly as declared; the tiers are bit-identical by
-    * construction and parity-spec'd, so the declared RESULTS are
-    * identical either way — this knob only changes which tier the
-    * hash gate touches. */
-  private val lmForceDistributed: Boolean =
-    sys.env.get("GRAFT_LM_LOCAL").contains("0")
-  private def lmModelThreshold: Long =
-    if (lmForceDistributed) 0L else Curation.defaultLocalModelThreshold
-  private def lmKernelMaxBytes: Long =
-    if (lmForceDistributed) 0L else Curation.defaultLmLocalMaxBytes
-  private def pmiVocabThreshold: Long =
-    if (lmForceDistributed) 0L else Curation.defaultPmiLocalVocabThreshold
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
@@ -660,8 +639,8 @@ object SparkEntry {
     "graph_pagerank" -> ((s, dir) => {
       import graft.functions.expr.NativeFunctions.sorted_pairs
       // pre-repartition on the ~unique set key (the r15 q2 /
-      // hotSupplierGraph finding, PrankDerivAb r20: 1.34-1.77 →
-      // 1.25-1.28 s): partial agg compresses nothing at ~4 rows per
+      // hotSupplierGraph finding, r20: 1.34-1.77 → 1.25-1.28 s;
+      // OPTIMIZATION_r20.md §10): partial agg compresses nothing at ~4 rows per
       // order and its second hash-map build is real cost; the
       // exchange carries raw (key, member) rows and both collect_set
       // phases land in one stage
@@ -688,8 +667,8 @@ object SparkEntry {
     // unrolls the iterations with the dangling scalar per round
     "graph_pagerank_dangling" -> ((s, dir) => {
       import graft.functions.expr.NativeFunctions.sorted_pairs
-      // pre-repartitioned set gather — same PrankDerivAb finding as
-      // graph_pagerank above
+      // pre-repartitioned set gather — same finding as
+      // graph_pagerank above (OPTIMIZATION_r20.md §10)
       val sets = t(s, dir, "lineitem")
         .repartition(col("l_orderkey"))
         .groupBy(col("l_orderkey"))
@@ -1021,9 +1000,7 @@ object SparkEntry {
     // (no positional self-join), min-count 5, corpus totals broadcast
     "text_pmi" -> ((s, dir) =>
       Curation.pmiCollocations(t(s, dir, "documents"), col("text"),
-        window = 2, minCount = 5L,
-        localVocabThreshold = pmiVocabThreshold,
-        localKernelMaxBytes = lmKernelMaxBytes)),
+        window = 2, minCount = 5L)),
 
     // BM25 (Lucene idf form) top-20 docs for a literal query bag —
     // the retrieval scorer of CCNet-style domain mining / RAG corpus
@@ -1099,18 +1076,14 @@ object SparkEntry {
     // matters, unlike the unigram signal
     "text_bigram_lm" -> ((s, dir) =>
       Curation.bigramLogProb(t(s, dir, "documents"), "doc_id",
-        Text.tokens(col("text")),
-        localModelThreshold = lmModelThreshold,
-        localKernelMaxBytes = lmKernelMaxBytes)),
+        Text.tokens(col("text")))),
 
     // interpolated (Jelinek-Mercer) bigram+unigram LM — the CCNet
     // shape: rare-prefix MLE overconfidence cushioned by the unigram
     // mixture; hash-keyed like bigramLogProb
     "text_interp_lm" -> ((s, dir) =>
       Curation.interpLogProb(t(s, dir, "documents"), "doc_id",
-        Text.tokens(col("text")), lambda = interpLambda,
-        localModelThreshold = lmModelThreshold,
-        localKernelMaxBytes = lmKernelMaxBytes)),
+        Text.tokens(col("text")), lambda = interpLambda)),
 
     // CCNet-style perplexity triage (r10): head/middle/tail buckets
     // by interpolated-LM likelihood, cut at exact score quantiles —
@@ -1119,9 +1092,7 @@ object SparkEntry {
     "quality_perplexity" -> ((s, dir) =>
       Curation.perplexityBuckets(t(s, dir, "documents"), "doc_id",
         Text.tokens(col("text")), lambda = interpLambda,
-        headQ = 0.3, tailQ = 0.3,
-        localModelThreshold = lmModelThreshold,
-        localKernelMaxBytes = lmKernelMaxBytes)),
+        headQ = 0.3, tailQ = 0.3)),
 
     // fixed-budget sequence packing per source shard (2048 tokens)
     "pack_sequences" -> ((s, dir) =>

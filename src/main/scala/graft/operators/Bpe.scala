@@ -45,9 +45,10 @@ object Bpe {
     * (top-pair collect + re-persist count) were ~2/3 of the row's
     * driver jobs while the actual per-round math is microseconds. A
     * corpus whose vocab exceeds the gate (the 100 TB shape — vocab
-    * grows with corpus) keeps the distributed loop; 0 pins it for
-    * the parity specs and scale probes. */
-  val defaultLocalVocabThreshold: Long = 1000000L
+    * grows with corpus) keeps the distributed loop; the
+    * `distributed` [[Tier]] pins it for the parity specs and scale
+    * probes. */
+  private val LocalVocabThreshold: Long = 1000000L
 
   /** Whitespace word frequencies — the training vocabulary (and the
     * tokenization every other text operator in this repo uses). */
@@ -78,21 +79,20 @@ object Bpe {
     * of adjacent pairs (fully merged). `minFreq` drops hapax words
     * from the vocab — at corpus scale the long tail of unique words
     * dominates vocab size while contributing nothing to top pair
-    * counts. Below `localVocabThreshold` distinct words the merge
+    * counts. Below [[LocalVocabThreshold]] distinct words the merge
     * loop runs driver-local on the collected vocab (bit-identical by
     * construction: same [[graft.functions.expr.BpeOps]] fold, integer
     * sums, UTF-8-byte tie order — TokenizerLocalSpec asserts equality
     * against the pinned distributed path). */
   def train(docs: DataFrame, textCol: String, nMerges: Int,
-      minFreq: Long = 1L,
-      localVocabThreshold: Long = defaultLocalVocabThreshold): Model = {
+      minFreq: Long = 1L): Model = {
     require(nMerges > 0, s"nMerges $nMerges must be positive")
     val base = vocabOf(docs, textCol)
       .filter(col("freq") >= minFreq)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nWords = base.count()
     try {
-      if (nWords <= localVocabThreshold) {
+      if (Tier.allows(docs.sparkSession, Tier.Model)(
+          base.count() <= LocalVocabThreshold)) {
         val words = base.collect().map(r =>
           (graft.functions.expr.BpeOps.codepointSyms(r.getString(0)), r.getLong(1)))
         trainLocal(words, nMerges)

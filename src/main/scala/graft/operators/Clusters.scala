@@ -112,7 +112,7 @@ object Clusters {
     * same blocks twice per round, and runs ~log₂(diameter)+2
     * rounds), so even a corpus-sized graph pays ~5% for the
     * possibility of skipping the whole loop. */
-  val defaultLocalEdgeThreshold: Long = 1L << 21
+  private[operators] val LocalEdgeThreshold: Long = 1L << 21
 
   /** @param truncateEvery lineage-truncation cadence (the pagerank
     *        knob): 1 (default) materializes every round — right for
@@ -135,16 +135,10 @@ object Clusters {
     *        frame is file-backed before its parent is deleted, and
     *        on a real cluster per-round truncation is what you want
     *        anyway.
-    * @param localEdgeThreshold symmetrized-edge-row count at or below
-    *        which the measured graph is handed to ONE task's
-    *        union-find instead of the convergence loop (see
-    *        [[defaultLocalEdgeThreshold]]); 0 disables the local
-    *        strategy (scale probes pin the distributed path with it).
     * @return (node, cluster_id) for every node appearing in `pairs`,
     *         cluster_id = min node id of the component. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 50, truncateEvery: Int = 1,
-      localEdgeThreshold: Long = defaultLocalEdgeThreshold): DataFrame = {
+      maxIter: Int = 50, truncateEvery: Int = 1): DataFrame = {
     require(truncateEvery >= 1, s"truncateEvery $truncateEvery must be >= 1")
     val sc = pairs.sparkSession.sparkContext
     val reliable = sc.getCheckpointDir.isDefined
@@ -187,41 +181,40 @@ object Clusters {
     // recursive CTE runs the same computation in-process; matching
     // it when the data is measured-tiny is honest adaptivity, not a
     // shortcut — the loop below is what runs at corpus scale, and
-    // the scale probes pin it via localEdgeThreshold = 0). The count
-    // reads blocks the eager truncation just materialized.
+    // the scale probes pin it with the `distributed` [[Tier]]). The
+    // count reads blocks the eager truncation just materialized.
     val nodeType = e.schema("src").dataType
     val integral = nodeType match {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    if (localEdgeThreshold > 0 && integral) {
-      val edgeCount = e.count()
-      if (edgeCount <= localEdgeThreshold) {
-        import e.sparkSession.implicits._
-        val expectedNodes = math.min(edgeCount, 1L << 28).toInt
-        val out = e
-          .select(col("src").cast("long"), col("dst").cast("long"))
-          .as[(Long, Long)]
-          .coalesce(1) // no exchange: one task fetches the blocks
-          .mapPartitions { it =>
-            val uf = new LongUnionFind(expectedNodes)
-            it.foreach { case (a, b) => uf.union(a, b) }
-            uf.labels
-          }
-          .toDF("node", "cluster_id")
-          .select(col("node").cast(nodeType).as("node"),
-            col("cluster_id").cast(nodeType).as("cluster_id"))
-        // non-reliable mode: stay lazy — re-execution reads the
-        // localCheckpointed blocks and union-find is deterministic.
-        // Reliable mode: land the labels as the one surviving
-        // snapshot so the edge generation can be deleted (the loop's
-        // contract: at return only the final labels remain on disk).
-        return if (!reliable) out
-        else {
-          val cp = out.checkpoint(true)
-          delete(eFiles)
-          cp
+    lazy val edgeCount = e.count()
+    if (Tier.allows(e.sparkSession, Tier.Input)(
+        integral && edgeCount <= LocalEdgeThreshold)) {
+      import e.sparkSession.implicits._
+      val expectedNodes = math.min(edgeCount, 1L << 28).toInt
+      val out = e
+        .select(col("src").cast("long"), col("dst").cast("long"))
+        .as[(Long, Long)]
+        .coalesce(1) // no exchange: one task fetches the blocks
+        .mapPartitions { it =>
+          val uf = new LongUnionFind(expectedNodes)
+          it.foreach { case (a, b) => uf.union(a, b) }
+          uf.labels
         }
+        .toDF("node", "cluster_id")
+        .select(col("node").cast(nodeType).as("node"),
+          col("cluster_id").cast(nodeType).as("cluster_id"))
+      // non-reliable mode: stay lazy — re-execution reads the
+      // localCheckpointed blocks and union-find is deterministic.
+      // Reliable mode: land the labels as the one surviving
+      // snapshot so the edge generation can be deleted (the loop's
+      // contract: at return only the final labels remain on disk).
+      return if (!reliable) out
+      else {
+        val cp = out.checkpoint(true)
+        delete(eFiles)
+        cp
       }
     }
 
@@ -311,8 +304,8 @@ object Clusters {
     * et al., "Connected Components in MapReduce and Beyond", SoCC
     * '14) — the round-count A/B ALTERNATIVE to [[connectedComponents]]'
     * pointer-jumping loop, kept as a first-class strategy so the two
-    * can be measured against each other on any graph shape (CcAb;
-    * results in SURVEY §6).
+    * can be measured against each other on any graph shape (results
+    * in SURVEY §6, the large-star/small-star entry).
     *
     * Each iteration runs two deterministic relabelings over the
     * canonical (u < v) edge set:
@@ -514,8 +507,7 @@ object Clusters {
     *        micro-batch. */
   def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
       aCol: String, bCol: String, maxIter: Int = 50,
-      extraNodes: Option[DataFrame] = None,
-      localEdgeThreshold: Long = defaultLocalEdgeThreshold): DataFrame = {
+      extraNodes: Option[DataFrame] = None): DataFrame = {
     val lab = labels.select(col("node"), col("cluster_id"))
     val edges = newPairs.select(col(aCol).as("src"), col(bCol).as("dst"))
     val endpoints = edges.select(col("src").as("node"))
@@ -543,7 +535,7 @@ object Clusters {
     // rows, cheaper than an eager materialization job per round
     // (forced back to per-round under a reliable checkpoint dir)
     val merged = connectedComponents(clusterEdges, "la", "lb", maxIter,
-        truncateEvery = 3, localEdgeThreshold = localEdgeThreshold)
+        truncateEvery = 3)
       .select(col("node").as("old_lbl"), col("cluster_id").as("new_lbl"))
     val newSelf = seen.filter(col("cluster_id").isNull)
       .select(col("node"), col("node").as("cluster_id"))

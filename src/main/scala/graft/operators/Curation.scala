@@ -141,17 +141,14 @@ object Curation {
     * (~|V|²/2^64) merge two counts — immaterial, and the hash gate
     * would catch one at verify scale. Docs with < 2 tokens drop out
     * (no bigram evidence). */
-  def bigramLogProb(docs: DataFrame, idCol: String, tokens: Column,
-      localModelThreshold: Long = defaultLocalModelThreshold,
-      localKernelMaxBytes: Long = defaultLmLocalMaxBytes): DataFrame = {
+  def bigramLogProb(docs: DataFrame, idCol: String, tokens: Column): DataFrame = {
     // r18 TIER 1 — the driver kernel (see [[LmLocal]]): a tiny input
     // (plan stats ≤ the gate) whose tokens column IS the shared
     // whitespace convention collects once and scores in-process —
     // the measured distributed floor at that size is two ~150 ms
     // serial scan stages of pure orchestration. Bit-identical by
     // construction; parity-spec'd.
-    lmLocalDocs(docs, idCol, tokens,
-        if (localModelThreshold > 0L) localKernelMaxBytes else 0L).foreach { rows =>
+    lmLocalDocs(docs, idCol, tokens).foreach { rows =>
       val sess = docs.sparkSession
       import sess.implicits._
       // one partition: a 5000-row driver result parallelized 32 ways
@@ -192,17 +189,14 @@ object Curation {
     // its busy single-task stage critical path: stages removed =
     // wall removed). Above the threshold — a real 100 TB corpus's
     // bigram vocab — the r17 partition-window fold is unchanged
-    // (pinnable with threshold = 0, how the plan spec + scale probes
-    // keep the distributed shape honest).
+    // (pinnable with the `distributed` [[Tier]], how the plan spec +
+    // scale probes keep the distributed shape honest).
     // r19 probe stats gate (r18 ADVICE): the vocab probe is itself a
     // full corpus aggregation, so it only runs when the input plan is
     // small enough that losing it is cheap — see
-    // [[defaultLmModelProbeMaxBytes]]. Above the bound: straight to
-    // the distributed partition-window fold, zero wasted passes.
-    val probeOk = localModelThreshold > 0L &&
-      docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(defaultLmModelProbeMaxBytes)
-    val model = (if (probeOk) localBigramModel(bfreq, localModelThreshold)
+    // [[LmModelProbeMaxBytes]]. Above the bound: straight to the
+    // distributed partition-window fold, zero wasted passes.
+    val model = (if (modelProbeOk(docs)) localBigramModel(bfreq)
       else None).getOrElse {
       bfreq
         .withColumn("pcnt", sum(col("bcnt")).over(Window.partitionBy(col("__pfx"))))
@@ -220,30 +214,30 @@ object Curation {
     * collect can never blow the driver — above it, a web corpus's
     * open vocabulary goes distributed without ever probing the
     * pair table. */
-  val defaultPmiLocalVocabThreshold: Long = 1024L
+  private val PmiLocalVocabThreshold: Long = 1024L
 
   /** Collected-text char bound for the PMI driver kernel (r19 — r18
     * ADVICE): the kernel's pair LongMap holds up to ~nt·window
     * entries and the bytes gate compares COMPRESSED parquet stats,
     * so token mass needs its own cap. 4M chars ≲ 0.8M tokens ≲
     * ~1.6M pair entries at window 2 — tens of MB of driver heap,
-    * safe beside the ≤[[defaultLmLocalMaxBytes]] text collect. Over
+    * safe beside the ≤[[LmLocalMaxBytes]] text collect. Over
     * the cap the kernel abandons its (stats-bounded) collect and
     * the distributed tiers run unchanged. */
-  val defaultPmiLocalMaxChars: Long = 4L << 20
+  private val PmiLocalMaxChars: Long = 4L << 20
 
   /** Bigram-model vocab size at or below which the LM model folds
     * driver-local and broadcasts ([[bigramLogProb]] /
-    * [[interpLogProb]] — the [[Bpe.defaultLocalVocabThreshold]]
-    * convention). r19 sizing (r18 ADVICE): a collectIfSmall of the
-    * model table materializes GenericRow objects with boxed longs —
+    * [[interpLogProb]] — the [[Bpe]] local-vocab convention). r19
+    * sizing (r18 ADVICE): a collectIfSmall of the model table
+    * materializes GenericRow objects with boxed longs —
     * ~hundreds of bytes per row transient — so the default is 250k
     * rows (tens of MB of transient driver heap, a ~6 MB broadcast
     * relation), not the r18 1M whose collect could transiently reach
     * hundreds of MB on a default driver. A web-scale corpus's bigram
     * vocab blows past it and stays on the distributed
     * partition-window path. */
-  val defaultLocalModelThreshold: Long = 250000L
+  private val LocalModelThreshold: Long = 250000L
 
   /** Input-plan stats bound for the LM driver kernel ([[LmLocal]]):
     * collect-and-score only when Catalyst's size estimate for the
@@ -255,7 +249,7 @@ object Curation {
     * ~3-6×, and the collected rows are boxed — so the gate is 16 MB
     * (≈ 50-100 MB of driver heap worst case, safe on a default 1g
     * driver), not the r18 64 MB. */
-  val defaultLmLocalMaxBytes: Long = 16L << 20
+  private val LmLocalMaxBytes: Long = 16L << 20
 
   /** Input-plan stats bound for PROBING the driver-local model fold
     * (tier 2 of [[bigramLogProb]] / [[interpLogProb]], r19 — r18
@@ -269,27 +263,34 @@ object Curation {
     * over a ≤256 MB input — bounded, and the tier-2 broadcast-join
     * win when it fires is worth the gamble at that size. The
     * practical loss is nil at 100 TB: a corpus that large cannot
-    * have a ≤[[defaultLocalModelThreshold]] bigram vocab. */
-  val defaultLmModelProbeMaxBytes: Long = 256L << 20
+    * have a ≤[[LocalModelThreshold]] bigram vocab. */
+  private val LmModelProbeMaxBytes: Long = 256L << 20
 
-  /** Eligibility + collect for the LM driver kernel: the tokens
-    * column must be EXACTLY the shared whitespace convention (any
-    * custom tokenizer → None — the kernel's byte-level \s scan would
-    * diverge), the id column must be LongType (the kernel keys boxed
-    * longs), and the input plan must fit the stats gate. */
-  private def lmLocalDocs(docs: DataFrame, idCol: String, tokens: Column,
-      maxBytes: Long): Option[Array[(java.lang.Long, String)]] = {
-    if (maxBytes <= 0L) return None
-    if (docs.schema(idCol).dataType != org.apache.spark.sql.types.LongType)
-      return None
-    org.apache.spark.sql.graft.ColumnBridge.whitespaceSplitSource(tokens)
-      .flatMap { textCol =>
-        if (docs.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(maxBytes)) None
-        else Some(docs.select(col(idCol), textCol.cast("string")).collect()
-          .map(r => (if (r.isNullAt(0)) null
-            else java.lang.Long.valueOf(r.getLong(0)),
-            if (r.isNullAt(1)) null else r.getString(1))))
-      }
+  /** The LM model-fold probe gate: pin, then input-plan stats. */
+  private def modelProbeOk(docs: DataFrame): Boolean =
+    Tier.allows(docs.sparkSession, Tier.Model)(
+      docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        BigInt(LmModelProbeMaxBytes))
+
+  /** Eligibility + collect for the LM driver kernel: the [[Tier]]
+    * pin must allow [[Tier.Input]] tiers, the id column must be
+    * LongType (the kernel keys boxed longs), the tokens column must
+    * be EXACTLY the shared whitespace convention (any custom
+    * tokenizer → None — the kernel's byte-level \s scan would
+    * diverge), and the input plan must fit the stats gate. */
+  private def lmLocalDocs(docs: DataFrame, idCol: String,
+      tokens: Column): Option[Array[(java.lang.Long, String)]] = {
+    lazy val textCol =
+      org.apache.spark.sql.graft.ColumnBridge.whitespaceSplitSource(tokens)
+    if (!Tier.allows(docs.sparkSession, Tier.Input)(
+        docs.schema(idCol).dataType == org.apache.spark.sql.types.LongType &&
+          textCol.isDefined &&
+          docs.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(LmLocalMaxBytes)))
+      None
+    else Some(docs.select(col(idCol), textCol.get.cast("string")).collect()
+      .map(r => (if (r.isNullAt(0)) null
+        else java.lang.Long.valueOf(r.getLong(0)),
+        if (r.isNullAt(1)) null else r.getString(1))))
   }
 
   /** The limit+collect small-frame gate: Some(rows) iff `df` has at
@@ -298,11 +299,6 @@ object Curation {
     * threshold-sized fetch, never an OOM (the limit bounds it). */
   private def collectIfSmall(df: DataFrame,
       threshold: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (threshold <= 0L) return None
-    // clamp before the Int narrowing (r18 ADVICE): a caller-supplied
-    // threshold above Int.MaxValue−1 must mean "never local", not an
-    // overflowed negative limit / AnalysisException
-    if (threshold > Int.MaxValue - 1L) return None
     val rows = df.limit(threshold.toInt + 1).collect()
     if (rows.length > threshold) None else Some(rows)
   }
@@ -324,9 +320,8 @@ object Curation {
   /** Collect the bigram-grouped model if its vocab fits the driver
     * gate and fold pcnt locally; None → caller takes the
     * distributed partition-window path. */
-  private def localBigramModel(bfreq: DataFrame,
-      threshold: Long): Option[DataFrame] =
-    collectIfSmall(bfreq, threshold).map { rows =>
+  private def localBigramModel(bfreq: DataFrame): Option[DataFrame] =
+    collectIfSmall(bfreq, LocalModelThreshold).map { rows =>
       val pc = localPrefixCounts(rows)
       val sess = bfreq.sparkSession
       import sess.implicits._
@@ -351,13 +346,10 @@ object Curation {
     * cross join (no driver count).
     */
   def interpLogProb(docs: DataFrame, idCol: String, tokens: Column,
-      lambda: Double,
-      localModelThreshold: Long = defaultLocalModelThreshold,
-      localKernelMaxBytes: Long = defaultLmLocalMaxBytes): DataFrame = {
+      lambda: Double): DataFrame = {
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0,1], got $lambda")
     // r18 TIER 1 — the driver kernel (see [[bigramLogProb]])
-    lmLocalDocs(docs, idCol, tokens,
-        if (localModelThreshold > 0L) localKernelMaxBytes else 0L).foreach { rows =>
+    lmLocalDocs(docs, idCol, tokens).foreach { rows =>
       val sess = docs.sparkSession
       import sess.implicits._
       return LmLocal.interpScores(rows, lambda)
@@ -385,14 +377,11 @@ object Curation {
     // exactly (a missing token cannot occur — both sides key the
     // same seed-1L hash of the same non-empty tokens).
     // r19 probe stats gate — see [[bigramLogProb]] /
-    // [[defaultLmModelProbeMaxBytes]]: both probes are corpus-scale
+    // [[LmModelProbeMaxBytes]]: both probes are corpus-scale
     // aggregations; skip them outright on large inputs
-    val probeOk = localModelThreshold > 0L &&
-      docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(defaultLmModelProbeMaxBytes)
-    val localScore = (if (probeOk) collectIfSmall(bfreq, localModelThreshold)
+    val localScore = (if (modelProbeOk(docs)) collectIfSmall(bfreq, LocalModelThreshold)
       else None).flatMap { brows =>
-      collectIfSmall(uni, localModelThreshold).map { urows =>
+      collectIfSmall(uni, LocalModelThreshold).map { urows =>
         val pc = localPrefixCounts(brows)
         val um = new scala.collection.mutable.LongMap[Long](urows.length * 2)
         urows.foreach(r => um.update(r.getLong(0), r.getLong(1)))
@@ -463,17 +452,14 @@ object Curation {
     * internal frame (r17, retiring the r16 un-releasable score
     * persist the ADVICE flagged). */
   def perplexityBuckets(docs: DataFrame, idCol: String, tokens: Column,
-      lambda: Double, headQ: Double = 0.3, tailQ: Double = 0.3,
-      localModelThreshold: Long = defaultLocalModelThreshold,
-      localKernelMaxBytes: Long = defaultLmLocalMaxBytes): DataFrame = {
+      lambda: Double, headQ: Double = 0.3, tailQ: Double = 0.3): DataFrame = {
     require(headQ > 0 && tailQ > 0 && headQ + tailQ <= 1.0,
       s"headQ=$headQ / tailQ=$tailQ must be positive with sum <= 1")
     // r18 TIER 1 — the full driver kernel: scores, exact-percentile
     // cuts and the CASE all run in-process ([[LmLocal]]); only the
     // result cache (the documented caller-owned contract) touches
     // the cluster. See [[bigramLogProb]].
-    lmLocalDocs(docs, idCol, tokens,
-        if (localModelThreshold > 0L) localKernelMaxBytes else 0L).foreach { rows =>
+    lmLocalDocs(docs, idCol, tokens).foreach { rows =>
       val sess = docs.sparkSession
       import sess.implicits._
       // NO result persist on this tier: the frame IS driver-local
@@ -490,8 +476,7 @@ object Curation {
     // percentile scalars come back as bounded driver state (the
     // centroid/GD-weights convention) instead of a broadcast
     // crossJoin, so the LM pipeline runs once
-    val lp = interpLogProb(docs, idCol, tokens, lambda, localModelThreshold,
-      localKernelMaxBytes)
+    val lp = interpLogProb(docs, idCol, tokens, lambda)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cuts = lp.agg(
       expr(s"percentile(avg_logprob, ${1.0 - headQ})").as("__th"),
@@ -615,19 +600,17 @@ object Curation {
     * nothing is silently dropped.
     */
   def pmiCollocations(docs: DataFrame, textCol: Column, window: Int,
-      minCount: Long,
-      localVocabThreshold: Long = defaultPmiLocalVocabThreshold,
-      localKernelMaxBytes: Long = defaultLmLocalMaxBytes): DataFrame = {
+      minCount: Long): DataFrame = {
     require(window >= 1, s"window $window must be >= 1")
     require(minCount >= 1, s"minCount $minCount must be >= 1")
     // r18 TIER 1 — the driver kernel ([[LmLocal.pmiCollocations]]):
     // a tiny input collects once and the whole pair/count/score
     // chain runs in-process (the distributed floor at that size is
-    // two serial ~150 ms corpus scan stages). localVocabThreshold=0
-    // pins everything distributed, the probe/spec convention.
-    if (localVocabThreshold > 0L && localKernelMaxBytes > 0L &&
+    // two serial ~150 ms corpus scan stages). The `distributed`
+    // [[Tier]] pins everything distributed, the probe/spec convention.
+    if (Tier.allows(docs.sparkSession, Tier.Input)(
         docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          BigInt(localKernelMaxBytes)) {
+          BigInt(LmLocalMaxBytes))) {
       val texts = docs.select(textCol.cast("string")).collect()
         .map(r => if (r.isNullAt(0)) null else r.getString(0))
       // r19 token-mass cap (r18 ADVICE): the bytes gate compares
@@ -637,7 +620,7 @@ object Curation {
       // distributed tiers run unchanged.
       val chars = texts.foldLeft(0L)((s, t) =>
         s + (if (t == null) 0 else t.length))
-      if (chars <= defaultPmiLocalMaxChars) {
+      if (chars <= PmiLocalMaxChars) {
         val sess = docs.sparkSession
         import sess.implicits._
         // no result persist — driver-local already (see
@@ -685,8 +668,10 @@ object Curation {
     // filter, ln, HALF_UP 4dp round — replays Spark's arithmetic
     // bit-for-bit (same promotion order, same java.math rounding).
     // Above the gate the distributed path is unchanged and pinnable
-    // with threshold = 0 (the LshLocal/plan-spec convention).
-    val localOut = collectIfSmall(uc, localVocabThreshold).map { urows =>
+    // with the `distributed` [[Tier]] (the plan-spec convention).
+    lazy val vocab = collectIfSmall(uc, PmiLocalVocabThreshold)
+    val localOut = (if (Tier.allows(docs.sparkSession, Tier.Model)(
+        vocab.isDefined)) vocab else None).map { urows =>
       val pc = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_cooc")).collect()
       val cx = urows.map(r => r.getString(0) -> r.getLong(1)).toMap
       val nt = urows.foldLeft(0L)((s, r) => s + r.getLong(1))

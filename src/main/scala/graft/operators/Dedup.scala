@@ -18,12 +18,12 @@ object Dedup {
 
   /** Corpus-size bar for [[embeddingPairsLsh]]'s single-task
     * dispatch ([[LshLocal]]) — the vector analogue of
-    * [[Clusters.defaultLocalEdgeThreshold]]. 2^12 vectors × 64 dims
+    * [[Clusters.LocalEdgeThreshold]]. 2^12 vectors × 64 dims
     * is ~2 MB of doubles and ≤ ~1M bucket-mate cosine verifies at
     * the default (bits=4, tables=8) — well under one task's scan
     * budget, while sf1's 20k-vector corpus (and anything bigger)
     * already takes the distributed path. */
-  val defaultLocalVecThreshold: Long = 1L << 12
+  private[operators] val LocalVecThreshold: Long = 1L << 12
 
   /** Stats-derived hot-key cap — the cbo_stats wiring for the dedup
     * family: `max(50, ceil(sqrt(N)))` where N is the corpus row
@@ -1221,13 +1221,13 @@ object Dedup {
     */
   def embeddingPairsLsh(embeddings: DataFrame, idCol: String, vecCol: String,
       dim: Int, bits: Int, tables: Int, seed: Long, tau: Double,
-      probeRadius: Int = 0,
-      localVecThreshold: Long = defaultLocalVecThreshold): DataFrame = {
+      probeRadius: Int = 0): DataFrame = {
     // adaptive strategy (the Clusters.connectedComponents pattern):
     // a measured-tiny corpus dispatches to one task — the distributed
     // plan's 9 driver jobs are pure orchestration at that size, and
     // the single-task kernel reproduces the output exactly (spec).
-    // Threshold 0 pins the distributed path (scale probes do).
+    // The `distributed` [[Tier]] pins the distributed path (scale
+    // probes do).
     val idType = embeddings.schema(idCol).dataType
     val integralId = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
@@ -1236,10 +1236,10 @@ object Dedup {
     // bound), so a 100 TB corpus never pays a dispatch scan — the
     // estimate is free and only ever OVER-estimates (filters keep
     // their child's size absent CBO stats), which errs distributed.
-    val maybeTiny = embeddings.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(localVecThreshold) * 4096
-    if (localVecThreshold > 0 && integralId && maybeTiny &&
-        embeddings.count() <= localVecThreshold) {
+    def maybeTiny = embeddings.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(LocalVecThreshold) * 4096
+    if (Tier.allows(embeddings.sparkSession, Tier.Input)(
+        integralId && maybeTiny && embeddings.count() <= LocalVecThreshold)) {
       val spark = embeddings.sparkSession
       import spark.implicits._
       val out = embeddings
@@ -1582,8 +1582,9 @@ object Dedup {
     // SHUFFLE BYTES (compressed text), but the banded-DP verify costs
     // O(len·maxDist) per pair — ~65× more CPU per byte than a scan —
     // so the byte-sized layout ran the whole DP on 2 of 32 cores
-    // (r20 EditAb: verify 1.6 s → 0.35 s once spread). Pair count,
-    // not bytes, is the right work proxy for a CPU-bound stage.
+    // (r20: verify 1.6 s → 0.35 s once spread; OPTIMIZATION_r20.md
+    // §3). Pair count, not bytes, is the right work proxy for a
+    // CPU-bound stage.
     val pairEst = editCandidateEstimate(kept)
     val d = raw.join(kept, Seq("__lb", "__p"))
       .drop("__bs")
@@ -1617,7 +1618,7 @@ object Dedup {
     // repartition sits BELOW the persist: the cache boundary pins the
     // verify's parallelism to this layout (a repartition above the
     // persist is undone by Catalyst pushing the DP filter below it —
-    // measured in EditAb arm B: no speedup).
+    // measured no speedup, OPTIMIZATION_r20.md §3).
     val verifyParts = math.max(
       docs.sparkSession.sparkContext.defaultParallelism,
       math.min(1 << 18, ((pairEst >> 16) + 1).toInt))

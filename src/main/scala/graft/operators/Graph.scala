@@ -70,8 +70,7 @@ object Graph {
       danglingRedistribution: Boolean = false,
       tolerance: Option[Double] = None,
       onIteration: (Int, Double) => Unit = NoIteration,
-      weightCol: Option[String] = None,
-      localEdgeThreshold: Long = Clusters.defaultLocalEdgeThreshold): DataFrame = {
+      weightCol: Option[String] = None): DataFrame = {
     require(iterations >= 1, s"iterations $iterations must be >= 1")
     require(damping > 0.0 && damping < 1.0, s"damping $damping outside (0, 1)")
     require(truncateEvery >= 1, s"truncateEvery $truncateEvery must be >= 1")
@@ -114,14 +113,15 @@ object Graph {
     // join + inflow aggregate + truncation job per iteration.
     // Eligibility mirrors LPA: a custom onIteration pins the loop
     // (the observer watches its per-iteration driver reads), the
-    // tolerance branch needs those reads anyway, and threshold 0 pins
-    // the distributed path (the probe/spec convention). The gate is
+    // tolerance branch needs those reads anyway, and the
+    // `distributed` [[Tier]] pins the distributed path. The gate is
     // one count() of the frame the distributed path was about to
     // materialize anyway — in local mode it computes, caches and
     // lineage-truncates `e` (the lazy localCheckpoint above), so the
     // expensive upstream edge derivation still runs exactly once.
-    if (tolerance.isEmpty && (onIteration eq NoIteration) &&
-        localEdgeThreshold > 0 && e.count() <= localEdgeThreshold) {
+    if (Tier.allows(edges.sparkSession, Tier.Input)(
+        tolerance.isEmpty && (onIteration eq NoIteration) &&
+          e.count() <= Clusters.LocalEdgeThreshold)) {
       val nodeType = e.schema("src").dataType
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("node", nodeType),
@@ -231,7 +231,7 @@ object Graph {
     *
     * ADAPTIVE STRATEGY PICK (r20 — the pagerank/CC/LPA r14-r19
     * contract applied to the census): when the MEASURED canonical
-    * edge list fits [[defaultLocalCensusThreshold]] (a census-specific
+    * edge list fits [[LocalCensusThreshold]] (a census-specific
     * bar — per-task work is Σ outdeg², bounded by O(m^1.5) under the
     * orientation, so the edge bar sits far below the linear kernels')
     * and the node type is integral, the census runs in one task over
@@ -239,10 +239,9 @@ object Graph {
     * integer-exact degree/tri_count, and the clustering column is the
     * SAME Catalyst expression applied on top, so rounding semantics
     * cannot drift. The gate is one count() of the canonical frame
-    * both paths persist and materialize anyway. Threshold 0 pins the
-    * distributed wedge joins (the probe/spec convention). */
-  def triangleCensus(edges: DataFrame, aCol: String, bCol: String,
-      localEdgeThreshold: Long = defaultLocalCensusThreshold): DataFrame = {
+    * both paths persist and materialize anyway. The `distributed`
+    * [[Tier]] pins the distributed wedge joins. */
+  def triangleCensus(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val e = edges.select(
         least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
@@ -252,8 +251,8 @@ object Graph {
     val nodeType = e.schema("u").dataType
     val integral = nodeType == org.apache.spark.sql.types.LongType ||
       nodeType == org.apache.spark.sql.types.IntegerType
-    if (integral && localEdgeThreshold > 0 &&
-        e.count() <= localEdgeThreshold) {
+    if (Tier.allows(edges.sparkSession, Tier.Input)(
+        integral && e.count() <= LocalCensusThreshold)) {
       // int ids ride as longs through the kernel (ordering and
       // equality are unchanged by the widening; node is cast back
       // below) so the kernel reads one primitive width
@@ -377,8 +376,7 @@ object Graph {
 
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
       iterations: Int,
-      onRound: (Int, Long) => Unit = NoRound,
-      localEdgeThreshold: Long = Clusters.defaultLocalEdgeThreshold): DataFrame = {
+      onRound: (Int, Long) => Unit = NoRound): DataFrame = {
     require(iterations >= 1, s"iterations $iterations must be >= 1")
     val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
     def truncate(df: DataFrame): DataFrame =
@@ -402,7 +400,8 @@ object Graph {
     // cap-parity output (property-spec'd ≡ the loop across caps) —
     // instead of paying one driver action + exchange jobs per round.
     // A custom onRound pins the loop (the observer watches its
-    // per-round driver reads); scale probes pin it with threshold 0.
+    // per-round driver reads); scale probes pin it with the
+    // `distributed` [[Tier]].
     val nodeType = adj.schema("node").dataType
     val integral = nodeType match {
       case org.apache.spark.sql.types.LongType |
@@ -411,8 +410,9 @@ object Graph {
            org.apache.spark.sql.types.ByteType => true
       case _ => false
     }
-    if (integral && (onRound eq NoRound) && localEdgeThreshold > 0 &&
-        adj.count() <= localEdgeThreshold) {
+    if (Tier.allows(edges.sparkSession, Tier.Input)(
+        integral && (onRound eq NoRound) &&
+          adj.count() <= Clusters.LocalEdgeThreshold)) {
       import adj.sparkSession.implicits._
       val iters = iterations
       val out = adj
@@ -640,7 +640,7 @@ object Graph {
     * bounded sub-second task, while the 2^21 bar the linear kernels
     * use would admit ~3e9. Above the bar the unchanged distributed
     * wedge joins run. */
-  val defaultLocalCensusThreshold: Long = 1L << 17
+  private val LocalCensusThreshold: Long = 1L << 17
 
   /** Single-task triangle census over a CANONICAL deduped (u, v)
     * long edge list (u < v, no nulls — the relational prefix in

@@ -7,8 +7,8 @@ import org.apache.spark.unsafe.Platform
 
 /** Single-task kernels for the bigram/interpolated-LM family,
   * dispatched by [[Curation.bigramLogProb]] / [[Curation.interpLogProb]]
-  * when the measured input plan is tiny (default ≤
-  * [[Curation.defaultLmLocalMaxBytes]] of source stats) — the
+  * when the measured input plan is tiny (≤ 16 MB of source stats)
+  * and the [[Tier]] pin allows it — the
   * LshLocal/Bpe adaptive-strategy pattern applied to the LM chain.
   * Measured motivation (r18, QueryJobs + a per-variant microbench at
   * sf0.1): the distributed chain's wall is two serial corpus passes

@@ -6,15 +6,15 @@ import graft.functions.Vectors
 
 /** Single-task kernels for the embedding-LSH family, dispatched by
   * [[Dedup.embeddingPairsLsh]] / [[Similarity.lshTopK]] when the
-  * measured corpus is tiny (default ≤ [[Dedup.defaultLocalVecThreshold]]
-  * vectors) — the r14 connected-components adaptive-strategy pattern
+  * measured corpus is tiny (≤ 2^12 vectors) and the [[Tier]] pin
+  * allows it — the r14 connected-components adaptive-strategy pattern
   * (Clusters.scala): at that size the distributed plan's 6-9 driver
   * jobs of pure orchestration (measured ~0.15 s each on local mode)
   * dwarf the sub-100 ms of actual math, while an in-process columnar
   * engine runs the identical bucket join in one thread. The
   * distributed path is unchanged above the threshold and pinnable
-  * below it (threshold = 0), which is how the scale probes keep
-  * probing it.
+  * below it (the `distributed` [[Tier]]), which is how the scale
+  * probes keep probing it.
   *
   * Every kernel reproduces the distributed output EXACTLY (property
   * specs assert set equality): same seeded hyperplane weights, the

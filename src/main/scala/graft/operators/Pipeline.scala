@@ -49,10 +49,10 @@ object Pipeline {
     // stage: partial aggregation buys nothing here (set keys repeat
     // only ~|set| times, and the partial sets serialize as array
     // buffers — heavier rows than the raw pairs they replace) while
-    // its second object-hash-map build cost is real (same-JVM A/B,
-    // tools/PairsAb2: 1.14 s → 0.93 s at sf0.1). Shuffle volume and
-    // skew behavior are unchanged at any scale: the same member
-    // occurrences travel, keyed the same way.
+    // its second object-hash-map build cost is real (same-JVM A/B:
+    // 1.14 s → 0.93 s at sf0.1; OPTIMIZATION_r20.md §6). Shuffle
+    // volume and skew behavior are unchanged at any scale: the same
+    // member occurrences travel, keyed the same way.
     val grouped = df.repartition(col(setKey))
       .groupBy(col(setKey).as("__set"))
       .agg(sort_array(collect_set(col(memberKey))).as("__ms"))

@@ -920,38 +920,36 @@ object Similarity {
     * tunable by (bits, tables); verified against bruteForceTopK in
     * the test suite. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      dim: Int, bits: Int, tables: Int, seed: Long, k: Int,
-      localVecThreshold: Long = Dedup.defaultLocalVecThreshold): DataFrame = {
+      dim: Int, bits: Int, tables: Int, seed: Long, k: Int): DataFrame = {
     // adaptive strategy (the Clusters.connectedComponents pattern):
     // measured-tiny corpus+queries dispatch to one task; the kernel
-    // reproduces the distributed output exactly (spec). Threshold 0
-    // pins the distributed path.
+    // reproduces the distributed output exactly (spec). The
+    // `distributed` [[Tier]] pins the distributed path.
     val idType = corpus.schema(idCol).dataType
     val integralId = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
-    if (localVecThreshold > 0 && integralId) {
-      val tagged = corpus.select(lit(false).as("q"),
-          col(idCol).cast("long").as("id"),
-          col(vecCol).cast("array<double>").as("v"))
-        .unionAll(queries.select(lit(true).as("q"),
-          col(idCol).cast("long").as("id"),
-          col(vecCol).cast("array<double>").as("v")))
-      // sizeInBytes pre-gate (see embeddingPairsLsh): the confirming
-      // count() only runs when the free plan estimate says "possibly
-      // tiny", so a huge corpus never pays a dispatch scan
-      val maybeTiny = tagged.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(localVecThreshold) * 4096
-      if (maybeTiny && tagged.count() <= localVecThreshold) {
-        val spark = corpus.sparkSession
-        import spark.implicits._
-        return tagged.as[(Boolean, Long, Array[Double])]
-          .coalesce(1)
-          .mapPartitions(it =>
-            LshLocal.topkRows(it, dim, bits, tables, seed, k))
-          .toDF("query_id", "rnk", "neighbor_id")
-          .select(col("query_id").cast(idType), col("rnk"),
-            col("neighbor_id").cast(idType))
-      }
+    lazy val tagged = corpus.select(lit(false).as("q"),
+        col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<double>").as("v"))
+      .unionAll(queries.select(lit(true).as("q"),
+        col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<double>").as("v")))
+    // sizeInBytes pre-gate (see embeddingPairsLsh): the confirming
+    // count() only runs when the free plan estimate says "possibly
+    // tiny", so a huge corpus never pays a dispatch scan
+    def maybeTiny = tagged.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(Dedup.LocalVecThreshold) * 4096
+    if (Tier.allows(corpus.sparkSession, Tier.Input)(
+        integralId && maybeTiny && tagged.count() <= Dedup.LocalVecThreshold)) {
+      val spark = corpus.sparkSession
+      import spark.implicits._
+      return tagged.as[(Boolean, Long, Array[Double])]
+        .coalesce(1)
+        .mapPartitions(it =>
+          LshLocal.topkRows(it, dim, bits, tables, seed, k))
+        .toDF("query_id", "rnk", "neighbor_id")
+        .select(col("query_id").cast(idType), col("rnk"),
+          col("neighbor_id").cast(idType))
     }
     def sigTables(df: DataFrame, side: String): DataFrame =
       df.select(

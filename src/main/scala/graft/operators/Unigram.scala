@@ -41,14 +41,14 @@ object Unigram {
   val UnkLogp: Double = -100.0
 
   /** Local-trainer gate for Unigram — DELIBERATELY smaller than
-    * [[Bpe.defaultLocalVocabThreshold]]: the local seed holds every
+    * the [[Bpe]] gate (1M words): the local seed holds every
     * ≤ maxLen-codepoint substring of every vocab word (~avg_len ×
     * maxLen map entries per word, vs BPE's one adjacent-pair count
     * per symbol), so the driver-memory cost per word is ~an order of
     * magnitude higher. 200k words × ~30 substring entries ≈ 6M map
     * keys — comfortably in a default driver heap; above the gate the
     * distributed map-side-combined aggregate path is unchanged. */
-  val defaultLocalVocabThreshold: Long = 200000L
+  private val LocalVocabThreshold: Long = 200000L
 
   private def vocabOf(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
@@ -69,7 +69,7 @@ object Unigram {
   }
 
   /** Train `iters` hard-EM rounds over the corpus vocabulary. Below
-    * `localVocabThreshold` distinct words the EM loop runs
+    * [[LocalVocabThreshold]] distinct words the EM loop runs
     * driver-local on the collected vocab (r16, the Bpe.train gate):
     * the seed/E/M rounds are integer-count sums, the SAME
     * [[graft.functions.expr.UnigramOps.viterbi]] the native
@@ -77,13 +77,12 @@ object Unigram {
     * TokenizerLocalSpec asserts model equality against the pinned
     * distributed path. */
   def train(docs: DataFrame, textCol: String, iters: Int = 2,
-      maxLen: Int = 3, seedTopK: Int = 200,
-      localVocabThreshold: Long = defaultLocalVocabThreshold): Model = {
+      maxLen: Int = 3, seedTopK: Int = 200): Model = {
     require(iters >= 1 && maxLen >= 1 && seedTopK >= 1)
     val vocab = vocabOf(docs, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nWords = vocab.count()
-    if (nWords <= localVocabThreshold) {
+    if (Tier.allows(docs.sparkSession, Tier.Model)(
+        vocab.count() <= LocalVocabThreshold)) {
       // try/finally like the distributed arm below: a collect that
       // throws must not leave the corpus-vocab cache pinned
       val words =

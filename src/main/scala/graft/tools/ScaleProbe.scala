@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.operators.{Clusters, Curation, Dedup, Events, Pipeline, Similarity}
+import graft.operators.{Clusters, Curation, Dedup, Events, Pipeline, Similarity, Tier}
 
 /** Empirical scaling probe: runs the super-linear-risk operators (the
   * near-dup family and pair counting) at 1× and N× the sf0.1 corpus
@@ -78,11 +78,18 @@ object ScaleProbe {
           s""""ratio":${JsonOut.num(tN / t1, 2)},"warm1_s":${JsonOut.num(warm1, 3)},""" +
           s""""baseline":${JsonOut.str(baseline)}}""")
 
-    def probe(name: String)(at1: => Long)(atN: => Long): Unit = {
+    // `distributed` pins every adaptive operator in the arm to its
+    // distributed tier: the probe then measures the plan that runs at
+    // corpus scale, not the single-task kernel the tiny 1x input
+    // would dispatch to (trivially linear — it would measure nothing)
+    def probe(name: String, distributed: Boolean = false)(at1: => Long)(
+        atN: => Long): Unit = {
       if (!onlyNames.forall(_.contains(name))) return
-      val (w1, n1) = time(at1) // warm codegen at 1x, then measure both
-      val (t1, _) = time(at1)
-      val (tN, nN) = time(atN)
+      def run(f: => Long): (Double, Long) =
+        if (distributed) Tier.pinned(spark, "distributed")(time(f)) else time(f)
+      val (w1, n1) = run(at1) // warm codegen at 1x, then measure both
+      val (t1, _) = run(at1)
+      val (tN, nN) = run(atN)
       println(f"[scaleprobe] $name%-22s 1x: $t1%6.2f s ($n1%8d rows)  " +
         f"${mult}x: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (linear=$mult)" +
         f"  warm1: $w1%5.2f")
@@ -119,19 +126,12 @@ object ScaleProbe {
     } {
       Curation.tfidfTopTerms(docsN, "doc_id", Text.tokens(col("text")), 3).count()
     }
-    // localEdgeThreshold = 0 pins the DISTRIBUTED loop: this probe
-    // exists to prove the convergence loop's scaling (the path the
-    // adaptive dispatch takes above the threshold at corpus scale) —
-    // the single-task union-find the default would pick here is
-    // trivially linear and would measure nothing
-    probe("dedup_clusters") {
+    probe("dedup_clusters", distributed = true) {
       Clusters.connectedComponents(
-        Dedup.ngramJaccardPairs(docs1, "doc_id", "text", 3, 0.6), "doc_a", "doc_b",
-        localEdgeThreshold = 0).count()
+        Dedup.ngramJaccardPairs(docs1, "doc_id", "text", 3, 0.6), "doc_a", "doc_b").count()
     } {
       Clusters.connectedComponents(
-        Dedup.ngramJaccardPairs(docsN, "doc_id", "text", 3, 0.6), "doc_a", "doc_b",
-        localEdgeThreshold = 0).count()
+        Dedup.ngramJaccardPairs(docsN, "doc_id", "text", 3, 0.6), "doc_a", "doc_b").count()
     }
     probe("dedup_substring") {
       Dedup.substringDupSpans(docs1, "doc_id", "text", 20).count()
@@ -279,17 +279,14 @@ object ScaleProbe {
           (col("l_orderkey") + lit(k.toLong * 1000000000L)).as("l_orderkey"),
           (col("l_suppkey") + lit(k.toLong * 10000000L)).as("l_suppkey"))
       }.reduce(_ unionByName _)
-      // threshold 0 pins the distributed per-iteration joins — the
-      // path that runs at corpus scale (the r19 single-task kernel
-      // the default picks here is trivially linear)
-      probe("graph_pagerank") {
+      probe("graph_pagerank", distributed = true) {
         graft.operators.Graph.pagerank(
           edgesOf(Pipeline.pairCounts(li1, "l_orderkey", "l_suppkey", or1, "o_orderkey")),
-          "src", "dst", 3, localEdgeThreshold = 0).count()
+          "src", "dst", 3).count()
       } {
         graft.operators.Graph.pagerank(
           edgesOf(Pipeline.pairCounts(liG, "l_orderkey", "l_suppkey", orN, "o_orderkey")),
-          "src", "dst", 3, localEdgeThreshold = 0).count()
+          "src", "dst", 3).count()
       }
       // triangle census on the thresholded co-occurrence graph: the
       // suppkey shift makes the Nx corpus N disjoint copies of the 1x
@@ -315,33 +312,22 @@ object ScaleProbe {
         pc.unpersist(blocking = false)
         e
       }
-      // threshold 0 pins the distributed wedge joins — the path that
-      // runs at corpus scale (the r20 single-task census kernel the
-      // default picks here is Σ outdeg² in one task, not the probed
-      // plan)
-      probe("graph_triangles") {
-        val r = graft.operators.Graph.triangleCensus(hotEdges(li1), "sa", "sb",
-          localEdgeThreshold = 0)
+      probe("graph_triangles", distributed = true) {
+        val r = graft.operators.Graph.triangleCensus(hotEdges(li1), "sa", "sb")
         val n = r.count(); r.unpersist(); n
       } {
-        val r = graft.operators.Graph.triangleCensus(hotEdges(liG), "sa", "sb",
-          localEdgeThreshold = 0)
+        val r = graft.operators.Graph.triangleCensus(hotEdges(liG), "sa", "sb")
         val n = r.count(); r.unpersist(); n
       }
       // LPA on the same N-disjoint-copy hot graph: per-round work is
       // one adjacency join + two aggregates — must track edge growth
       // linearly, with iteration count fixed
-      // threshold 0 pins the distributed per-round joins — the path
-      // that runs at corpus scale (the adaptive in-task strategy the
-      // default picks here is trivially linear)
-      probe("graph_lpa") {
+      probe("graph_lpa", distributed = true) {
         graft.operators.Graph.labelPropagation(
-          hotEdges(li1), "sa", "sb", iterations = 3,
-          localEdgeThreshold = 0).count()
+          hotEdges(li1), "sa", "sb", iterations = 3).count()
       } {
         graft.operators.Graph.labelPropagation(
-          hotEdges(liG), "sa", "sb", iterations = 3,
-          localEdgeThreshold = 0).count()
+          hotEdges(liG), "sa", "sb", iterations = 3).count()
       }
     }
     // CDC dedup: replica-suffixed words give disjoint chunk spaces —
@@ -449,17 +435,14 @@ object ScaleProbe {
       } {
         hostGraph(docsN, mult).count()
       }
-      // threshold 0 pins the distributed rank loop (see graph_pagerank)
-      probe("crawl_hostrank") {
+      probe("crawl_hostrank", distributed = true) {
         graft.operators.Graph.pagerank(hostGraph(docs1, 1),
           "src_host", "dst_host", iterations = 3, truncateEvery = 3,
-          danglingRedistribution = true, weightCol = Some("n_links"),
-          localEdgeThreshold = 0).count()
+          danglingRedistribution = true, weightCol = Some("n_links")).count()
       } {
         graft.operators.Graph.pagerank(hostGraph(docsN, mult),
           "src_host", "dst_host", iterations = 3, truncateEvery = 3,
-          danglingRedistribution = true, weightCol = Some("n_links"),
-          localEdgeThreshold = 0).count()
+          danglingRedistribution = true, weightCol = Some("n_links")).count()
       }
     }
     // per-stratum window with a rank cap: WindowGroupLimit must keep
@@ -536,14 +519,10 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$tmp/embeddings_lsh")
       val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
       val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
-      // localVecThreshold = 0 pins the distributed path — the probe
-      // measures the scale plan, not the tiny-corpus dispatch
-      probe("embedding_lsh") {
-        Dedup.embeddingPairsLsh(emb1, "vec_id", "embedding", 64, 4, 8, 42L, 0.4,
-          localVecThreshold = 0).count()
+      probe("embedding_lsh", distributed = true) {
+        Dedup.embeddingPairsLsh(emb1, "vec_id", "embedding", 64, 4, 8, 42L, 0.4).count()
       } {
-        Dedup.embeddingPairsLsh(embDN, "vec_id", "embedding", 64, bitsN, 8, 42L, 0.4,
-          localVecThreshold = 0).count()
+        Dedup.embeddingPairsLsh(embDN, "vec_id", "embedding", 64, bitsN, 8, 42L, 0.4).count()
       }
     }
     // conservation-corrected pagerank on the DIRECTED pair graph
@@ -556,17 +535,14 @@ object ScaleProbe {
           (col("l_orderkey") + lit(k.toLong * 1000000000L)).as("l_orderkey"),
           (col("l_suppkey") + lit(k.toLong * 10000000L)).as("l_suppkey"))
       }.reduce(_ unionByName _)
-      // threshold 0 pins the distributed rank loop (see graph_pagerank)
-      probe("pagerank_dangling") {
+      probe("pagerank_dangling", distributed = true) {
         graft.operators.Graph.pagerank(
           dirEdges(Pipeline.pairCounts(li1, "l_orderkey", "l_suppkey", or1, "o_orderkey")),
-          "src", "dst", 3, danglingRedistribution = true,
-          localEdgeThreshold = 0).count()
+          "src", "dst", 3, danglingRedistribution = true).count()
       } {
         graft.operators.Graph.pagerank(
           dirEdges(Pipeline.pairCounts(liG, "l_orderkey", "l_suppkey", orN, "o_orderkey")),
-          "src", "dst", 3, danglingRedistribution = true,
-          localEdgeThreshold = 0).count()
+          "src", "dst", 3, danglingRedistribution = true).count()
       }
     }
     // logistic-regression training: one corpus scan + one-row agg per
@@ -588,16 +564,13 @@ object ScaleProbe {
       }
     }
     // hash-keyed LM scores: shuffles carry (8-byte hash, count) pairs.
-    // localModelThreshold = 0 pins the DISTRIBUTED partition-window
-    // path (the LshLocal probe convention) — the r18 driver gate
+    // distributed: the partition-window path — the r18 driver gate
     // would otherwise swallow this corpus's small model and the probe
     // would measure the gate, not the plan that runs at 100 TB
-    probe("bigram_lm") {
-      Curation.bigramLogProb(docs1, "doc_id", Text.tokens(col("text")),
-        localModelThreshold = 0).count()
+    probe("bigram_lm", distributed = true) {
+      Curation.bigramLogProb(docs1, "doc_id", Text.tokens(col("text"))).count()
     } {
-      Curation.bigramLogProb(docsN, "doc_id", Text.tokens(col("text")),
-        localModelThreshold = 0).count()
+      Curation.bigramLogProb(docsN, "doc_id", Text.tokens(col("text"))).count()
     }
     // the r15-vs-r16 caching trade, measured (verdict r15 item 4):
     // bigram_lm above RECOMPUTES the corpus-scale exploded bigram
@@ -634,12 +607,10 @@ object ScaleProbe {
       }
       probe("bigram_lm_mat") { mat(docs1) } { mat(docsN) }
     }
-    probe("interp_lm") {
-      Curation.interpLogProb(docs1, "doc_id", Text.tokens(col("text")), 0.9,
-        localModelThreshold = 0).count()
+    probe("interp_lm", distributed = true) {
+      Curation.interpLogProb(docs1, "doc_id", Text.tokens(col("text")), 0.9).count()
     } {
-      Curation.interpLogProb(docsN, "doc_id", Text.tokens(col("text")), 0.9,
-        localModelThreshold = 0).count()
+      Curation.interpLogProb(docsN, "doc_id", Text.tokens(col("text")), 0.9).count()
     }
     // DSIR: two corpus passes (B-row distribution agg + literal-dot
     // scoring), no shuffle — expect ≈ linear
@@ -814,23 +785,20 @@ object ScaleProbe {
       val frontier = spark.createDataFrame(
         reps.grouped(2).collect { case Array(a, b) => (a, b) }.toSeq)
         .toDF("src", "dst")
-      def t(f: => Long): (Double, Long) = {
-        val t0 = System.nanoTime(); val n = f
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      // threshold 0 pins the distributed quotient-CC/loop path: the
+      // the distributed tier pins the quotient-CC/loop path: the
       // probe proves the LOOP's corpus-size independence — the
       // adaptive single-task dispatch (the default, which a
       // frontier-sized quotient graph always takes in production)
       // would be flat by construction and prove nothing
-      t(Clusters.incrementalComponents(lab1, frontier, "src", "dst",
-        localEdgeThreshold = 0).count()) // warm
-      val (ti1, ni1) = t(Clusters.incrementalComponents(lab1, frontier, "src", "dst",
-        localEdgeThreshold = 0).count())
-      val (tiN, niN) = t(Clusters.incrementalComponents(labN, frontier, "src", "dst",
-        localEdgeThreshold = 0).count())
+      def t(f: => Long): (Double, Long) = Tier.pinned(spark, "distributed") {
+        val t0 = System.nanoTime(); val n = f
+        ((System.nanoTime() - t0) / 1e9, n)
+      }
+      t(Clusters.incrementalComponents(lab1, frontier, "src", "dst").count()) // warm
+      val (ti1, ni1) = t(Clusters.incrementalComponents(lab1, frontier, "src", "dst").count())
+      val (tiN, niN) = t(Clusters.incrementalComponents(labN, frontier, "src", "dst").count())
       val (tfN, _) = t(Clusters.connectedComponents(
-        edgesN.union(frontier), "src", "dst", localEdgeThreshold = 0).count())
+        edgesN.union(frontier), "src", "dst").count())
       println(f"[scaleprobe] clusters_inc           1x: $ti1%6.2f s ($ni1%8d rows)  " +
         f"${mult}x: $tiN%6.2f s ($niN%8d rows)  ratio: ${tiN / ti1}%5.1f (linear=$mult)")
       println(f"[scaleprobe] clusters_inc_vs_full   inc@${mult}x: $tiN%6.2f s  " +
@@ -1172,16 +1140,16 @@ object ScaleProbe {
     } {
       Dedup.containmentPairs(docsN, "doc_id", "text", 3, 0.8).count()
     }
-    probe("quality_perplexity") {
+    probe("quality_perplexity", distributed = true) {
       // caller-owned result cache (r17): count, then release — an
       // un-unpersisted corpus-scale cache would leak into every
       // subsequent probe arm's memory budget for the rest of the run
       val r1 = Curation.perplexityBuckets(docs1, "doc_id",
-        Text.tokens(col("text")), 0.8, localModelThreshold = 0)
+        Text.tokens(col("text")), 0.8)
       try r1.count() finally r1.unpersist(blocking = false)
     } {
       val rN = Curation.perplexityBuckets(docsN, "doc_id",
-        Text.tokens(col("text")), 0.8, localModelThreshold = 0)
+        Text.tokens(col("text")), 0.8)
       try rN.count() finally rN.unpersist(blocking = false)
     }
     locally {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Clusters
+import graft.operators.{Clusters, Tier}
 import org.apache.spark.sql.functions._
 
 /** The adaptive CC strategy contract: below the measured edge
@@ -11,12 +11,17 @@ import org.apache.spark.sql.functions._
 class ClustersStrategySpec extends SparkSpec {
   import spark.implicits._
 
+  /** The convergence loop's labels: the `distributed` tier pin. */
+  private def loopLabels(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    Tier.pinned(spark, "distributed") {
+      Clusters.connectedComponents(pairs, "a", "b")
+        .as[(Long, Long)].collect().toMap
+    }
+
   private def both(pairs: org.apache.spark.sql.DataFrame): Unit = {
     val local = Clusters.connectedComponents(pairs, "a", "b")
       .as[(Long, Long)].collect().toMap
-    val loop = Clusters.connectedComponents(pairs, "a", "b",
-        localEdgeThreshold = 0)
-      .as[(Long, Long)].collect().toMap
+    val loop = loopLabels(pairs)
     assert(local === loop)
     // the Kiveris large-star/small-star alternative must agree too
     val stars = Clusters.connectedComponentsStars(pairs, "a", "b")
@@ -76,14 +81,12 @@ class ClustersStrategySpec extends SparkSpec {
     assert(got === Map(1 -> 1, 2 -> 1, 3 -> 1, 10 -> 10, 11 -> 10))
   }
 
-  test("threshold dispatch: an explicit tiny threshold forces the loop") {
-    // 10 pairs symmetrize to 20 rows > threshold 5 — the loop must
-    // still produce the same labels (this is the >threshold path of
-    // the SAME call shape the default would send local)
+  test("tier dispatch: the distributed pin forces the loop") {
+    // the loop must produce the labels of a 10-edge chain (this is
+    // the distributed path of the SAME call shape the default would
+    // send local)
     val pairs = (1L to 10L).map(i => (i, i + 1)).toDF("a", "b")
-    val loop = Clusters.connectedComponents(pairs, "a", "b",
-      localEdgeThreshold = 5).as[(Long, Long)].collect().toMap
-    assert(loop === (1L to 11L).map(_ -> 1L).toMap)
+    assert(loopLabels(pairs) === (1L to 11L).map(_ -> 1L).toMap)
   }
 
   test("local union-find ≡ distributed loop at 2k nodes / 5k edges") {
@@ -95,9 +98,7 @@ class ClustersStrategySpec extends SparkSpec {
       (rnd.nextInt(2000).toLong, rnd.nextInt(2000).toLong)).toDF("a", "b")
     val local = Clusters.connectedComponents(pairs, "a", "b")
       .as[(Long, Long)].collect().toMap
-    val loop = Clusters.connectedComponents(pairs, "a", "b",
-        localEdgeThreshold = 0)
-      .as[(Long, Long)].collect().toMap
+    val loop = loopLabels(pairs)
     assert(local === loop)
     assert(local.size > 1500, "graph too sparse to exercise anything")
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Events}
+import graft.operators.{Curation, Events, Tier}
 import graft.sources.Tables
 
 /** Per-domain cap, mixture resampling, C4 filters (Curation) and the
@@ -114,17 +114,17 @@ class CorpusOpsSpec extends SparkSpec {
       def s(df: org.apache.spark.sql.DataFrame) =
         df.as[(Option[Long], Long, Double)].collect().toSet
       val bigK = s(Curation.bigramLogProb(docs, "doc_id", toks))
-      val bigM = s(Curation.bigramLogProb(docs, "doc_id", toks,
-        localKernelMaxBytes = 0L))
-      val bigD = s(Curation.bigramLogProb(docs, "doc_id", toks,
-        localModelThreshold = 0L, localKernelMaxBytes = 0L))
+      val bigM = s(Tier.pinned(spark, "model")(
+        Curation.bigramLogProb(docs, "doc_id", toks)))
+      val bigD = s(Tier.pinned(spark, "distributed")(
+        Curation.bigramLogProb(docs, "doc_id", toks)))
       assert(bigK === bigD, "kernel vs distributed (bigram)")
       assert(bigM === bigD, "broadcast model vs distributed (bigram)")
       val iK = s(Curation.interpLogProb(docs, "doc_id", toks, 0.9))
-      val iM = s(Curation.interpLogProb(docs, "doc_id", toks, 0.9,
-        localKernelMaxBytes = 0L))
-      val iD = s(Curation.interpLogProb(docs, "doc_id", toks, 0.9,
-        localModelThreshold = 0L, localKernelMaxBytes = 0L))
+      val iM = s(Tier.pinned(spark, "model")(
+        Curation.interpLogProb(docs, "doc_id", toks, 0.9)))
+      val iD = s(Tier.pinned(spark, "distributed")(
+        Curation.interpLogProb(docs, "doc_id", toks, 0.9)))
       assert(iK === iD, "kernel vs distributed (interp)")
       assert(iM === iD, "broadcast model vs distributed (interp)")
     }
@@ -140,8 +140,8 @@ class CorpusOpsSpec extends SparkSpec {
         r
       }
       val pK = b(Curation.perplexityBuckets(docs, "doc_id", toks, 0.8))
-      val pD = b(Curation.perplexityBuckets(docs, "doc_id", toks, 0.8,
-        localModelThreshold = 0L, localKernelMaxBytes = 0L))
+      val pD = b(Tier.pinned(spark, "distributed")(
+        Curation.perplexityBuckets(docs, "doc_id", toks, 0.8)))
       assert(pK === pD, "kernel vs distributed (perplexity buckets)")
     }
     // tokenize-convention edge cases: tabs/newlines split, control

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Profile}
+import graft.operators.{Curation, Profile, Tier}
 
 /** Hand-checks for the r11 monitoring/planning trio: PMI
   * collocations, PSI drift, token-budget planner. */
@@ -60,10 +60,10 @@ class DriftPmiSpec extends SparkSpec {
       r
     }
     val kernel = s(Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 5L))
-    val folded = s(Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 5L,
-      localKernelMaxBytes = 0L))
-    val dist = s(Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 5L,
-      localVocabThreshold = 0L))
+    val folded = s(Tier.pinned(spark, "model")(
+      Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 5L)))
+    val dist = s(Tier.pinned(spark, "distributed")(
+      Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 5L)))
     assert(dist.nonEmpty)
     assert(kernel === dist, "kernel vs distributed")
     assert(folded === dist, "collected fold vs distributed")
@@ -93,10 +93,10 @@ class DriftPmiSpec extends SparkSpec {
       r
     }
     val kernel = s(Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 2L))
-    val folded = s(Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 2L,
-      localKernelMaxBytes = 0L))
-    val dist = s(Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 2L,
-      localVocabThreshold = 0L))
+    val folded = s(Tier.pinned(spark, "model")(
+      Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 2L)))
+    val dist = s(Tier.pinned(spark, "distributed")(
+      Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 2L)))
     assert(dist.nonEmpty)
     // the NBSP-glued and control-char tokens must actually appear —
     // the pathology is exercised, not vacuously passed

@@ -3,10 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Urls
-import graft.operators.Graph
+import graft.operators.{Graph, Tier}
 
 class GraphUrlSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Run `f` on the distributed tier (the kernels' parity reference). */
+  private def distributed[T](f: => T): T = Tier.pinned(spark, "distributed")(f)
 
   // ---- pagerank ----
 
@@ -47,15 +50,16 @@ class GraphUrlSpec extends SparkSpec {
   test("pagerank hand-check on an asymmetric directed graph (dangling mass drops)") {
     // 1 -> 2, 1 -> 3, 2 -> 3; 3 is dangling (no out-edges).
     // Both strategies must meet the hand-derived values directly
-    // (kernel by default, the distributed loop via threshold 0).
+    // (kernel on the auto tier, the distributed loop when pinned).
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("src", "dst")
-    for (thr <- Seq(0L, graft.operators.Clusters.defaultLocalEdgeThreshold)) {
-      val r = Graph.pagerank(edges, "src", "dst", 1, localEdgeThreshold = thr)
-        .as[(Long, Double)].collect().toMap
+    for (tier <- Seq("distributed", "auto")) {
+      val r = Tier.pinned(spark, tier) {
+        Graph.pagerank(edges, "src", "dst", 1).as[(Long, Double)].collect().toMap
+      }
       val t = 0.15 / 3
-      assert(math.abs(r(1L) - t) < 1e-12, s"thr=$thr")             // no in-links
-      assert(math.abs(r(2L) - (t + 0.85 * (1.0 / 3 / 2))) < 1e-12, s"thr=$thr")
-      assert(math.abs(r(3L) - (t + 0.85 * (1.0 / 3 / 2 + 1.0 / 3))) < 1e-12, s"thr=$thr")
+      assert(math.abs(r(1L) - t) < 1e-12, s"tier=$tier")             // no in-links
+      assert(math.abs(r(2L) - (t + 0.85 * (1.0 / 3 / 2))) < 1e-12, s"tier=$tier")
+      assert(math.abs(r(3L) - (t + 0.85 * (1.0 / 3 / 2 + 1.0 / 3))) < 1e-12, s"tier=$tier")
     }
   }
 
@@ -74,10 +78,11 @@ class GraphUrlSpec extends SparkSpec {
     }
     // redistributed ranks match an independent driver-side power
     // iteration with the D/N correction term — on BOTH strategies
-    for (thr <- Seq(0L, graft.operators.Clusters.defaultLocalEdgeThreshold)) {
-      val r = Graph.pagerank(edges, "src", "dst", 5, danglingRedistribution = true,
-          localEdgeThreshold = thr)
-        .as[(Long, Double)].collect().toMap
+    for (tier <- Seq("distributed", "auto")) {
+      val r = Tier.pinned(spark, tier) {
+        Graph.pagerank(edges, "src", "dst", 5, danglingRedistribution = true)
+          .as[(Long, Double)].collect().toMap
+      }
       var exp = Map(1L -> 1.0 / 3, 2L -> 1.0 / 3, 3L -> 1.0 / 3)
       for (_ <- 1 to 5) {
         val dm = exp(3L)
@@ -87,7 +92,7 @@ class GraphUrlSpec extends SparkSpec {
           3L -> (0.15 / 3 + 0.85 * (exp(2L) + dm / 3)))
       }
       exp.foreach { case (k, v) =>
-        assert(math.abs(r(k) - v) < 1e-12, s"thr=$thr node $k") }
+        assert(math.abs(r(k) - v) < 1e-12, s"tier=$tier node $k") }
     }
   }
 
@@ -133,10 +138,9 @@ class GraphUrlSpec extends SparkSpec {
       val kernel = Graph.pagerank(edges, "src", "dst", iters,
           danglingRedistribution = dang, weightCol = Some("w"))
         .as[(String, Double)].collect().toMap
-      val loop = Graph.pagerank(edges, "src", "dst", iters,
-          danglingRedistribution = dang, weightCol = Some("w"),
-          localEdgeThreshold = 0)
-        .as[(String, Double)].collect().toMap
+      val loop = distributed(Graph.pagerank(edges, "src", "dst", iters,
+          danglingRedistribution = dang, weightCol = Some("w"))
+        .as[(String, Double)].collect().toMap)
       assert(kernel.keySet === loop.keySet, s"dang=$dang iters=$iters")
       kernel.keySet.foreach { k =>
         assert(math.abs(kernel(k) - loop(k)) < 1e-12,
@@ -162,10 +166,10 @@ class GraphUrlSpec extends SparkSpec {
           danglingRedistribution = dang)
         .select(col("node"), col("rank")).collect()
         .map(r => (if (r.isNullAt(0)) null else r.getLong(0): Any) -> r.getDouble(1)).toMap
-      val loop = Graph.pagerank(edges, "src", "dst", 2,
-          danglingRedistribution = dang, localEdgeThreshold = 0)
+      val loop = distributed(Graph.pagerank(edges, "src", "dst", 2,
+          danglingRedistribution = dang)
         .select(col("node"), col("rank")).collect()
-        .map(r => (if (r.isNullAt(0)) null else r.getLong(0): Any) -> r.getDouble(1)).toMap
+        .map(r => (if (r.isNullAt(0)) null else r.getLong(0): Any) -> r.getDouble(1)).toMap)
       assert(kernel.keySet === loop.keySet, s"dang=$dang")
       assert(kernel.keySet.contains(null), "null endpoint must be a node row")
       kernel.keySet.foreach { k =>
@@ -229,17 +233,16 @@ class GraphUrlSpec extends SparkSpec {
   }
 
   test("triangle census single-task kernel ≡ distributed wedge joins") {
-    // r20 adaptive pick: the kernel (default threshold) and the
-    // distributed plan (threshold 0) must agree row-for-row AND on
-    // schema, on a messy graph exercising dups, reversals,
-    // self-loops, degree ties and triangle-free tails
+    // r20 adaptive pick: the kernel (auto tier) and the distributed
+    // plan (distributed tier) must agree row-for-row AND on schema,
+    // on a messy graph exercising dups, reversals, self-loops,
+    // degree ties and triangle-free tails
     val rnd = new scala.util.Random(7)
     val messy = (Seq((1L, 2L), (2L, 1L), (2L, 2L)) ++
       (1 to 400).map(_ => ((rnd.nextInt(40) + 1).toLong,
         (rnd.nextInt(40) + 1).toLong))).toDF("a", "b")
     val kernel = graft.operators.Graph.triangleCensus(messy, "a", "b")
-    val loop = graft.operators.Graph.triangleCensus(messy, "a", "b",
-      localEdgeThreshold = 0)
+    val loop = distributed(graft.operators.Graph.triangleCensus(messy, "a", "b"))
     assert(kernel.schema === loop.schema)
     val k = kernel.orderBy("node").collect().toSeq
     val l = loop.orderBy("node").collect().toSeq
@@ -389,9 +392,9 @@ class GraphUrlSpec extends SparkSpec {
       val local = graft.operators.Graph.labelPropagation(
           edges.toDF("a", "b"), "a", "b", iters)
         .as[(Long, Long)].collect().toMap
-      val loop = graft.operators.Graph.labelPropagation(
-          edges.toDF("a", "b"), "a", "b", iters, localEdgeThreshold = 0)
-        .as[(Long, Long)].collect().toMap
+      val loop = distributed(graft.operators.Graph.labelPropagation(
+          edges.toDF("a", "b"), "a", "b", iters)
+        .as[(Long, Long)].collect().toMap)
       assert(local === loop, s"strategies diverged at cap $iters")
       assert(local === lpaReference(edges, iters), s"cap $iters vs unroll")
     }

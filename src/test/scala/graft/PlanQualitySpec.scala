@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Relational
+import graft.operators.{Relational, Tier}
 import graft.sources.Tables
 
 /** Physical-plan assertions: correctness tests prove the small-SF
@@ -145,10 +145,9 @@ class PlanQualitySpec extends SparkSpec {
   test("perplexity triage: no global sort, thresholds are plan literals over the scored corpus") {
     // kernel + mid-tier pinned OFF (r18): this test pins the fully
     // DISTRIBUTED triage shape — the plan that runs at 100 TB
-    val ppl = graft.operators.Curation.perplexityBuckets(
+    val ppl = Tier.pinned(spark, "distributed")(graft.operators.Curation.perplexityBuckets(
       Tables.documents(spark, sfDir), "doc_id",
-      graft.functions.Text.tokens(col("text")), lambda = 0.8,
-      localModelThreshold = 0L, localKernelMaxBytes = 0L)
+      graft.functions.Text.tokens(col("text")), lambda = 0.8))
     val p = plan(ppl)
     ppl.unpersist(blocking = false) // caller-owned result cache (r17)
     // bucket assignment must be a literal CASE compare, never a
@@ -269,15 +268,16 @@ class PlanQualitySpec extends SparkSpec {
     // frame persist (the shape the r15 AQE race forced, now gone)
     val toks = graft.functions.Text.tokens(col("text"))
     val docs = Tables.documents(spark, sfDir)
-    // TIER 3 — DISTRIBUTED path (pinned with threshold = 0 and the
-    // kernel gate off, the LshLocal convention): the plan that runs
-    // at 100 TB
-    val big = plan(graft.operators.Curation.bigramLogProb(docs, "doc_id", toks,
-      localModelThreshold = 0L, localKernelMaxBytes = 0L))
+    // TIER 3 — DISTRIBUTED path (the `distributed` tier pin): the
+    // plan that runs at 100 TB
+    def pinned(tier: String)(df: => DataFrame): String =
+      Tier.pinned(spark, tier)(plan(df))
+    val big = pinned("distributed")(
+      graft.operators.Curation.bigramLogProb(docs, "doc_id", toks))
     assert(!big.contains("InMemoryTableScan"),
       s"bigramLogProb plan reads a cache:\n$big")
-    val interp = plan(graft.operators.Curation.interpLogProb(docs, "doc_id", toks, 0.9,
-      localModelThreshold = 0L, localKernelMaxBytes = 0L))
+    val interp = pinned("distributed")(
+      graft.operators.Curation.interpLogProb(docs, "doc_id", toks, 0.9))
     assert(!interp.contains("InMemoryTableScan"),
       s"interpLogProb plan reads a cache:\n$interp")
     // r17: the prefix count attaches as a PARTITION-WINDOW sum over
@@ -288,19 +288,20 @@ class PlanQualitySpec extends SparkSpec {
       s"bigramLogProb lost the prefix-count window fold:\n$big")
     assert(interp.contains("Window"),
       s"interpLogProb lost the prefix-count window fold:\n$interp")
-    // TIER 2 — big-corpus/small-vocab (kernel gate off, model gate
-    // on): the model is a BROADCAST local relation — no Window node,
-    // no model exchange, the scoring join never shuffles the corpus
-    val bigM = plan(graft.operators.Curation.bigramLogProb(docs, "doc_id", toks,
-      localKernelMaxBytes = 0L))
+    // TIER 2 — big-corpus/small-vocab (the `model` tier pin: kernel
+    // gate off, model gate on): the model is a BROADCAST local
+    // relation — no Window node, no model exchange, the scoring join
+    // never shuffles the corpus
+    val bigM = pinned("model")(
+      graft.operators.Curation.bigramLogProb(docs, "doc_id", toks))
     assert(!bigM.contains("Window") && !bigM.contains("windowspecdefinition"),
       s"broadcast-model bigram plan still carries the window fold:\n$bigM")
     assert(bigM.contains("BroadcastExchange") || bigM.contains("BroadcastHashJoin"),
       s"broadcast bigram model is not broadcast:\n$bigM")
     assert(!bigM.contains("SortMergeJoin"),
       s"broadcast-model scoring join degenerated to a shuffle join:\n$bigM")
-    val interpM = plan(graft.operators.Curation.interpLogProb(docs, "doc_id", toks, 0.9,
-      localKernelMaxBytes = 0L))
+    val interpM = pinned("model")(
+      graft.operators.Curation.interpLogProb(docs, "doc_id", toks, 0.9))
     assert(!interpM.contains("Window") && !interpM.contains("SortMergeJoin"),
       s"broadcast-model interp plan regressed:\n$interpM")
     // TIER 1 — the default on a tiny input (r18): the whole score is
@@ -319,9 +320,8 @@ class PlanQualitySpec extends SparkSpec {
     // distributed tiers (r18): on the kernel tier the scores are a
     // LocalRelation whose re-scan is free, so the internal score
     // cache is deliberately SKIPPED — asserted separately below.
-    val pplDf = graft.operators.Curation.perplexityBuckets(
-      docs, "doc_id", toks, lambda = 0.8,
-      localModelThreshold = 0L, localKernelMaxBytes = 0L)
+    val pplDf = Tier.pinned(spark, "distributed")(graft.operators.Curation.perplexityBuckets(
+      docs, "doc_id", toks, lambda = 0.8))
     val ppl = plan(pplDf)
     pplDf.unpersist(blocking = false)
     // >= 2: the result's own cache read PLUS the frozen score-cache

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Local stand-in for the driver's DuckDB oracle compare.
+"""DuckDB oracle compare for a graft.Verify output directory.
 
 Usage: oracle_check.py <sfDir> <verifyOutDir>
 
@@ -8,6 +8,10 @@ run the matching oracle SQL from oracle_sql.json in DuckDB against the
 sfDir tables, sort columns by name, sort rows, and compare values
 EXACTLY (floats included — queries are written to be bit-deterministic
 across engines: rounded aggregates, id-only similarity outputs).
+
+Every oracle key with no query dir (a query that threw in Verify, which
+then writes nothing for it) is a NO_SPARK_OUTPUT failure and counts in
+the total. Exits 1 if any row FAILs, 0 otherwise.
 """
 import sys, json, glob, os
 import duckdb
@@ -27,6 +31,9 @@ def main():
         con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
+    for name in oracles:
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            results[name] = "NO_SPARK_OUTPUT"
     for qdir in sorted(glob.glob(os.path.join(out_dir, "*/"))):
         name = os.path.basename(qdir.rstrip("/"))
         files = glob.glob(os.path.join(qdir, "*.parquet"))
@@ -74,10 +81,13 @@ def main():
                     break
         results[name] = mismatch or "OK"
     n_ok = sum(1 for v in results.values() if v == "OK")
+    n_fail = 0
     for k, v in sorted(results.items()):
         flag = "PASS" if v == "OK" else ("INFO" if v.startswith("ROWS_ONLY") else "FAIL")
+        n_fail += flag == "FAIL"
         print(f"[{flag}] {k}: {v}")
     print(f"\n{n_ok} exact-match / {len(results)} total")
+    return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
