@@ -1,6 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Schema'd readers for the engine's table surface.
@@ -19,9 +24,54 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Read one parquet table from a scale-factor directory. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Read one parquet table from a scale-factor directory.
+    *
+    * The schema is read from the table's parquet footer here, on the
+    * driver, and handed to the reader. A bare `spark.read.parquet`
+    * infers it through `SchemaMergeUtils.mergeSchemasInParallel`,
+    * which schedules a one-task Spark job to read that same footer —
+    * even for a single file with `mergeSchema` off — so every table
+    * read would pay one job before its query starts. The conversion
+    * is the per-file code that job runs
+    * (`ParquetFileFormat.readSchemaFromFooter` with a converter built
+    * from the session conf), so `nanosAsLong`, INT96, binary-as-string
+    * and NTZ inference apply exactly as before. Nothing is kept
+    * between calls: each read reads its footer again, so a replaced
+    * file is seen by the next read. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  /** The Spark schema stored in the footer of the file Spark's own
+    * inference would pick for `path`. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val file = schemaFile(p.getFileSystem(conf), p)
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Spark's pick (`ParquetUtils.inferSchema` without mergeSchema): a
+    * file path is its own pick; under a directory, the leaves in path
+    * order — skipping the names Spark's file listing skips — offer
+    * `_common_metadata`, then `_metadata`, then the first data file. */
+  private def schemaFile(fs: FileSystem, path: Path): FileStatus = {
+    def listed(name: String): Boolean =
+      name.startsWith("_common_metadata") || name.startsWith("_metadata") ||
+        !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+          name.endsWith("._COPYING_"))
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter(s => listed(s.getPath.getName)).flatMap(leaves)
+    val files = leaves(fs.getFileStatus(path)).sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .getOrElse(throw new IllegalArgumentException(s"no parquet file under $path to read a schema from"))
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** Stage decomposition of the minhash fixed-batch probe (r16 verdict
   * item 5: the flat=1 scaleprobe arm read 2.11 at 10× standing
@@ -28,7 +29,7 @@ object ProbeAutopsy {
     val spark = graft.Sessions.build(32, appName = "graft-probeautopsy")
     val tmp = sys.env.getOrElse("SCALEPROBE_DIR", "/tmp/graft_scaleprobe")
 
-    val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs1 = Tables.table(spark, sfDir, "documents")
       .select("doc_id", "text")
     (0 until mult).map { k =>
       docs1.select((col("doc_id") + lit(k.toLong * 10000000L)).as("doc_id"),

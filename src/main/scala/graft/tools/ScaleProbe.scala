@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Text
 import graft.operators.{Clusters, Curation, Dedup, Events, Pipeline, Similarity, Tier}
+import graft.sources.Tables
 
 /** Empirical scaling probe: runs the super-linear-risk operators (the
   * near-dup family and pair counting) at 1× and N× the sf0.1 corpus
@@ -31,7 +32,7 @@ object ScaleProbe {
 
     // overridable so concurrent probes don't clobber each other's corpora
     val tmp = sys.env.getOrElse("SCALEPROBE_DIR", "/tmp/graft_scaleprobe")
-    val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs1 = Tables.table(spark, sfDir, "documents")
       .select("doc_id", "text")
     (0 until mult).map { k =>
       docs1.select((col("doc_id") + lit(k.toLong * 10000000L)).as("doc_id"),
@@ -40,9 +41,9 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$tmp/documents")
     val docsN = spark.read.parquet(s"$tmp/documents")
 
-    val li1 = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li1 = Tables.table(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_suppkey")
-    val or1 = spark.read.parquet(s"$sfDir/orders.parquet")
+    val or1 = Tables.table(spark, sfDir, "orders")
       .select(col("o_orderkey"), year(col("o_orderdate")).as("year"))
     (0 until mult).map { k =>
       li1.select((col("l_orderkey") + lit(k.toLong * 1000000000L)).as("l_orderkey"),
@@ -214,7 +215,7 @@ object ScaleProbe {
     // copies shift user_id, so the N× corpus has N× users over the
     // same horizon — grid rows (and the true answer) scale linearly
     locally {
-      val ev1 = graft.sources.Tables.events(spark, sfDir)
+      val ev1 = Tables.events(spark, sfDir)
         .select("event_id", "user_id", "ts", "event_type", "value")
       (0 until mult).map { k =>
         ev1.select(col("event_id"),
@@ -463,7 +464,7 @@ object ScaleProbe {
       }
     }
     locally {
-      val o1 = spark.read.parquet(s"$sfDir/orders.parquet")
+      val o1 = Tables.table(spark, sfDir, "orders")
         .select("o_orderkey", "o_totalprice")
       (0 until mult).map { k =>
         o1.select((col("o_orderkey") + lit(k.toLong * 1000000000L)).as("o_orderkey"),
@@ -486,7 +487,7 @@ object ScaleProbe {
       }
     }
     locally {
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = Tables.table(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       (0 until mult).map { k =>
         emb1.select((col("vec_id") + lit(k.toLong * 10000000L)).as("vec_id"),
@@ -508,7 +509,7 @@ object ScaleProbe {
     // keeps the bucket join linear; fixed bits at growing N would
     // grow occupancy ∝ N and candidate pairs ∝ N².
     locally {
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = Tables.table(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       (0 until mult).map { k =>
         emb1.select((col("vec_id") + lit(k.toLong * 10000000L)).as("vec_id"),
@@ -814,7 +815,7 @@ object ScaleProbe {
     // the batch is signed; probe keys broadcast), N× batch ~linear.
     // Index occupancy follows the bits rule of embedding_lsh above.
     if (onlyNames.forall(_.contains("embedding_probe"))) {
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = Tables.table(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
       val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
@@ -854,7 +855,7 @@ object ScaleProbe {
     // handful of label/index scans, so fixed-batch ingest should stay
     // near-flat as the standing state grows 10×.
     if (onlyNames.forall(_.contains("cluster_stream"))) {
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = Tables.table(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
       val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
@@ -945,7 +946,7 @@ object ScaleProbe {
     // below as the adversarial-GROWTH case (cross-copy merges
     // inflate touched membership ∝ delta).
     if (onlyNames.forall(_.contains("cluster_retract"))) {
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = Tables.table(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
       val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
@@ -1002,7 +1003,7 @@ object ScaleProbe {
     // membership∝delta baseline: expect the ratio to track nN/n1,
     // not flat=1.
     if (onlyNames.forall(_.contains("cluster_retract_growth"))) {
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = Tables.table(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
       val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
@@ -1116,7 +1117,7 @@ object ScaleProbe {
     // ~√N to hold per-list occupancy, same knob as embedding_lsh's
     // bits rule).
     locally {
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = Tables.table(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val embN = spark.read.parquet(s"$tmp/embeddings")
       val queries = emb1.orderBy("vec_id").limit(64)
@@ -1153,7 +1154,7 @@ object ScaleProbe {
       try rN.count() finally rN.unpersist(blocking = false)
     }
     locally {
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = Tables.table(spark, sfDir, "embeddings")
         .select("vec_id", "embedding")
       val embN = spark.read.parquet(s"$tmp/embeddings")
       val queries = emb1.orderBy("vec_id").limit(8)
