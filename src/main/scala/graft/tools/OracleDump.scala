@@ -14,15 +14,7 @@ object OracleDump {
       if (args.length > 1) Some(args(1).split(",").toSet) else None
     val entries = graft.SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .filter { case (k, _) => names.forall(_.contains(k)) }
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val json = entries.map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
+    val json = entries.map { case (k, v) => s"${JsonOut.str(k)}: ${JsonOut.str(v)}" }
       .mkString("{\n", ",\n", "\n}\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
     println(s"[oracle-dump] wrote ${entries.size} oracle(s) to $out")

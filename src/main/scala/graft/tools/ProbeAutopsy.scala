@@ -9,8 +9,9 @@ import graft.sources.Tables
 /** Stage decomposition of the minhash fixed-batch probe (r16 verdict
   * item 5: the flat=1 scaleprobe arm read 2.11 at 10× standing
   * state — find WHERE the linear term lives before touching the
-  * plan). Replicates ScaleProbe's minhash_probe corpora and times
-  * cumulative prefixes of [[Dedup.minhashProbe]]'s pipeline:
+  * plan). Reads ScaleProbe's minhash_probe corpora (the N× side
+  * written by [[ScaleProbe.writeCopies]]) and times cumulative
+  * prefixes of [[Dedup.minhashProbe]]'s pipeline:
   *
   *   sig    — batch shingling/signing only (must be flat: fixed batch)
   *   cand   — + band-table join (scans the standing band table:
@@ -31,18 +32,13 @@ object ProbeAutopsy {
 
     val docs1 = Tables.table(spark, sfDir, "documents")
       .select("doc_id", "text")
-    (0 until mult).map { k =>
-      docs1.select((col("doc_id") + lit(k.toLong * 10000000L)).as("doc_id"),
-        regexp_replace(col("text"), "(\\S+)", s"$$1x$k").as("text"))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$tmp/documents")
-    val docsN = spark.read.parquet(s"$tmp/documents")
+    ScaleProbe.writeCopies(spark, sfDir, s"$tmp/x$mult", mult)
+    val docsN = Tables.table(spark, s"$tmp/x$mult", "documents")
+      .select("doc_id", "text")
 
     val corpus1 = docs1.filter(pmod(col("doc_id"), lit(10)) =!= 3)
     val batch1 = docs1.filter(pmod(col("doc_id"), lit(10)) === 3)
     val corpusN = docsN.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-    val batchFix = docsN.filter(pmod(col("doc_id"), lit(10)) === 3 &&
-      col("doc_id") < 10000000L)
     val idx1 = Dedup.minhashIndex(corpus1, "doc_id", "text", 3, 64, 16)
     val idxN = Dedup.minhashIndex(corpusN, "doc_id", "text", 3, 64, 16)
 
@@ -82,7 +78,7 @@ object ProbeAutopsy {
     }
     stages(idx1, batch1, "1x  ") // first pass doubles as codegen warm
     stages(idx1, batch1, "1x  ")
-    stages(idxN, batchFix, s"${mult}x ")
+    stages(idxN, batch1, s"${mult}x ") // copy 0 is verbatim: the fixed batch
     idx1.release(); idxN.release()
     spark.stop()
   }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Noise-free cost profile of registered queries: driver-scheduled
@@ -111,19 +112,10 @@ object QueryJobs {
       }
     })
 
-    def settle(): Unit = {
-      // listener events are posted asynchronously (the bus drain API
-      // is private[spark]): wait until the status tracker — fed by
-      // the same bus — reports no active jobs (so job-end events have
-      // been processed), then a short settle for trailing
-      // stage-completed metrics. Bounded so a wedged bus cannot hang
-      // the tool.
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty &&
-          System.nanoTime() < deadline)
-        Thread.sleep(20)
-      Thread.sleep(200)
-    }
+    // listener events are posted asynchronously: drain the bus so the
+    // job-end and trailing stage-completed events of the run just
+    // timed have reached the listener before its counters are read
+    def settle(): Unit = ListenerBusDrain(spark.sparkContext)
 
     val out = new scala.collection.mutable.LinkedHashMap[
       String, Vector[Map[String, Any]]]()

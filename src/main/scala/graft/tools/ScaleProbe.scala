@@ -1,1202 +1,453 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 
+import graft.SparkEntry
 import graft.functions.Text
-import graft.operators.{Clusters, Curation, Dedup, Events, Pipeline, Similarity, Tier}
+import graft.operators.{Clusters, Curation, Dedup, Tier}
 import graft.sources.Tables
+import graft.streaming.{ClusterStream, LmLoop, LmStream, TextClusterStream}
 
-/** Empirical scaling probe: runs the super-linear-risk operators (the
-  * near-dup family and pair counting) at 1× and N× the sf0.1 corpus
-  * and reports the wall-time ratio. A linear operator should scale at
-  * ≈N× (plus fixed overhead amortization, so typically < N×); a
-  * quadratic regression shows up as ≫N×.
+/** Empirical scaling probe: runs declared queries at 1× and N× the sf
+  * corpus and reports the wall-time ratio. A linear operator should
+  * scale at ≈N× (plus fixed overhead amortization, so typically < N×);
+  * a quadratic regression shows up as ≫N×.
   *
-  * The N× corpus is N perturbed copies: every token gets a per-copy
-  * suffix, so copies share no shingles — near-dup structure inside
-  * each copy is preserved, cross-copy similarity is zero, and the
-  * TRUE answer scales exactly linearly. (Naive duplication would make
-  * every doc an N-way exact dup and the honest answer itself
-  * quadratic — useless for measuring operator scaling.)
+  * Both sides are written by [[writeCopies]] (the 1× side as one
+  * copy), so they share one file layout. The N× side is N decorrelated
+  * copies: keys are offset per copy and text tokens relabeled per
+  * copy, so near-dup and join structure inside each copy is preserved,
+  * cross-copy similarity is zero, and the TRUE answer scales exactly
+  * linearly. (Naive duplication would make every doc an N-way exact
+  * dup and the honest answer itself quadratic — useless for measuring
+  * operator scaling.)
+  *
+  * Each [[Declared]] name runs `SparkEntry.queries(name)` with the tier
+  * pinned `distributed`: the probe measures the plan that runs at
+  * corpus scale, not the single-task kernel a tiny 1× input would
+  * dispatch to (trivially linear — it would measure nothing). The
+  * [[Explicit]] arms keep standing state across their timers, or grow
+  * an index parameter with N, which no declared query expresses.
   *
   * Usage: runMain graft.tools.ScaleProbe [mult] [sfDir] [names-csv]
+  * Env:   SCALEPROBE_DIR  where the 1× and N× copies are written
+  *        SCALEPROBE_OUT  write the scaleprobe_rN.json artifact
   */
 object ScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val mult = args.headOption.map(_.toInt).getOrElse(10)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val onlyNames: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.Sessions.build(cpus, appName = "graft-scaleprobe")
 
-    // overridable so concurrent probes don't clobber each other's corpora
-    val tmp = sys.env.getOrElse("SCALEPROBE_DIR", "/tmp/graft_scaleprobe")
-    val docs1 = Tables.table(spark, sfDir, "documents")
-      .select("doc_id", "text")
-    (0 until mult).map { k =>
-      docs1.select((col("doc_id") + lit(k.toLong * 10000000L)).as("doc_id"),
-        regexp_replace(col("text"), "(\\S+)", s"$$1x$k").as("text"))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$tmp/documents")
-    val docsN = spark.read.parquet(s"$tmp/documents")
+  /** Per-copy key offset: above every key of the sf tables, so no two
+    * copies share a key value. */
+  val Stride = 1000000000L
 
-    val li1 = Tables.table(spark, sfDir, "lineitem")
-      .select("l_orderkey", "l_suppkey")
-    val or1 = Tables.table(spark, sfDir, "orders")
-      .select(col("o_orderkey"), year(col("o_orderdate")).as("year"))
-    (0 until mult).map { k =>
-      li1.select((col("l_orderkey") + lit(k.toLong * 1000000000L)).as("l_orderkey"),
-        col("l_suppkey"))
-    }.reduce(_ unionByName _).write.mode("overwrite").parquet(s"$tmp/lineitem")
-    (0 until mult).map { k =>
-      or1.select((col("o_orderkey") + lit(k.toLong * 1000000000L)).as("o_orderkey"),
-        col("year"))
-    }.reduce(_ unionByName _).write.mode("overwrite").parquet(s"$tmp/orders")
-    val liN = spark.read.parquet(s"$tmp/lineitem")
-    val orN = spark.read.parquet(s"$tmp/orders")
+  /** Declared queries timed by default: the linear arms of
+    * scaleprobe_r18.json, by declared name. */
+  val Declared: Seq[String] = Seq(
+    "dedup_exact", "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_simhash",
+    "q2_pair_counts", "text_tfidf", "dedup_clusters", "dedup_substring",
+    "dedup_substring_remove", "decon_ngram", "text_repetition", "decon_bloom",
+    "dedup_edit", "approx_topk", "mm_manifest", "q39_resample",
+    "q44_cohort_retention", "q43_sliding_windows", "q47_mad_outliers",
+    "q47a_mad_sketch", "events_pattern", "graph_pagerank", "graph_triangles",
+    "graph_lpa", "dedup_cdc", "text_extract_html", "text_extract_links",
+    "text_charset", "crawl_robots", "text_script", "crawl_hostgraph",
+    "crawl_hostrank", "sample_domain_cap", "sample_shards", "q48_equidepth",
+    "q48a_equidepth_sketch", "emb_kmeans", "graph_pagerank_dangling",
+    "quality_classifier_train", "text_bigram_lm", "text_interp_lm",
+    "sample_dsir", "text_bm25", "sample_epochs", "quality_ensemble",
+    "ann_ivfpq", "dedup_containment", "quality_perplexity", "ann_sq8",
+    "pipeline_curate")
 
-    def time(f: => Long): (Double, Long) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
+  /** Arms run explicitly: embedding_lsh and the standing-state arms. */
+  val Explicit: Seq[String] = Seq(
+    "embedding_lsh", "curate_probe", "minhash_probe", "substring_probe",
+    "clusters_inc", "embedding_probe", "cluster_stream", "text_cluster_stream",
+    "cluster_retract", "cluster_retract_growth", "text_cluster_retract",
+    "lm_refresh")
+
+  /** The names a run covers: every default, or the requested names,
+    * each of which must be a declared query or an explicit arm. */
+  def selected(only: Option[Seq[String]]): Seq[String] = only match {
+    case None => Declared ++ Explicit
+    case Some(names) =>
+      val unknown = names.filterNot(n => SparkEntry.queries.contains(n) || Explicit.contains(n))
+      require(unknown.isEmpty,
+        s"unknown scaleprobe name(s): ${unknown.mkString(", ")} — " +
+          s"expected a SparkEntry.queries name or one of ${Explicit.mkString(", ")}")
+      names.distinct
+  }
+
+  /** Write `n` decorrelated copies of every sf table as
+    * `dst/<table>.parquet` (nation and region once: they are shared
+    * dimensions). Copy 0 is verbatim. Copy k ≥ 1:
+    *
+    *   - offsets every BIGINT `*key` / `*_id` column by k × [[Stride]],
+    *     so joins stay inside a copy;
+    *   - prefixes every text token with a fixed-width decimal copy
+    *     code — a bijection within the copy (shingle structure kept),
+    *     and, as the source corpus's tokens never start with a digit,
+    *     no token is shared between copies. The code sits at the START
+    *     of each token so editDistancePairs' first-4-char block key
+    *     stays copy-local; a block key shared across copies would
+    *     merge blocks past the 1000 cap, and the ratio would measure
+    *     the cap. Below 10 copies the code is one char, so copies
+    *     k ≥ 1 block on their first 3 source chars;
+    *   - flips the embedding's sign per (copy, dimension): within a
+    *     copy both pair members flip the same dims, so cosine structure
+    *     is preserved; across copies the signs decorrelate. */
+  def writeCopies(spark: SparkSession, sfDir: String, dst: String, n: Int): Unit =
+    Tables.names.foreach { name =>
+      val src = if (name == "events") Tables.events(spark, sfDir) else Tables.table(spark, sfDir, name)
+      val copies = if (name == "nation" || name == "region") 1 else n
+      (0 until copies).map(k => if (k == 0) src else copy(src, k, copies))
+        .reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$dst/$name.parquet")
     }
 
-    // machine-readable record per probe → SCALEPROBE_OUT (the r16
-    // scaleprobe_rN.json artifact: per-family 1×/N× wall + ratio so
-    // the 100×-readiness evidence is diffable like bench/sweep).
-    // `baseline` names what ratio is measured against: "linear=N"
-    // for scaled-input arms, "flat=1" for fixed-batch/standing-state
-    // arms (where flat cost is the claim under test).
-    val results = new scala.collection.mutable.LinkedHashMap[String, String]()
+  private def copy(src: DataFrame, k: Int, n: Int): DataFrame = {
+    val code = s"%0${(n - 1).toString.length}d".format(k)
+    val text = regexp_replace(col("text"), "(\\S+)", code + "$1")
+    src.select(src.schema.fields.toSeq.map { f =>
+      val c: Column = f.name match {
+        case key if f.dataType == LongType && (key.endsWith("key") || key.endsWith("_id")) =>
+          col(key) + lit(k * Stride)
+        case "text" => text
+        case "n_chars" => length(text).cast(LongType)
+        case "embedding" => transform(col("embedding"), (x, i) =>
+          x * when(pmod(xxhash64(lit(k), i), lit(2)) === 0, lit(1.0f)).otherwise(lit(-1.0f)))
+        case other => col(other)
+      }
+      c.as(f.name)
+    }: _*)
+  }
+
+  /** Machine-readable records, one per arm, in run order. `baseline`
+    * names what the ratio is measured against: "linear=N" for
+    * scaled-input arms, "flat=1" for fixed-batch/standing-state arms
+    * (where flat cost is the claim under test). */
+  final class Results(mult: Int) {
+    val entries = new scala.collection.mutable.LinkedHashMap[String, String]()
 
     def record(name: String, t1: Double, tN: Double, n1: Long, nN: Long,
-        baseline: String, warm1: Double = -1.0): Unit =
-      results.update(name,
+        baseline: String, warm1: Double = -1.0): Unit = {
+      println(f"[scaleprobe] $name%-28s 1x: $t1%6.2f s ($n1%8d rows)  " +
+        f"${mult}x: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f ($baseline)")
+      entries.update(name,
         s"""{"t1_s":${JsonOut.num(t1, 3)},"tN_s":${JsonOut.num(tN, 3)},""" +
           s""""rows1":$n1,"rowsN":$nN,""" +
           s""""ratio":${JsonOut.num(tN / t1, 2)},"warm1_s":${JsonOut.num(warm1, 3)},""" +
           s""""baseline":${JsonOut.str(baseline)}}""")
+    }
+  }
 
-    // `distributed` pins every adaptive operator in the arm to its
-    // distributed tier: the probe then measures the plan that runs at
-    // corpus scale, not the single-task kernel the tiny 1x input
-    // would dispatch to (trivially linear — it would measure nothing)
-    def probe(name: String, distributed: Boolean = false)(at1: => Long)(
-        atN: => Long): Unit = {
-      if (!onlyNames.forall(_.contains(name))) return
-      def run(f: => Long): (Double, Long) =
-        if (distributed) Tier.pinned(spark, "distributed")(time(f)) else time(f)
-      val (w1, n1) = run(at1) // warm codegen at 1x, then measure both
-      val (t1, _) = run(at1)
-      val (tN, nN) = run(atN)
-      println(f"[scaleprobe] $name%-22s 1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"${mult}x: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (linear=$mult)" +
-        f"  warm1: $w1%5.2f")
-      record(name, t1, tN, n1, nN, s"linear=$mult", w1)
-    }
+  private def timed(f: => Long): (Double, Long) = {
+    val t0 = System.nanoTime()
+    val n = f
+    ((System.nanoTime() - t0) / 1e9, n)
+  }
 
-    probe("dedup_exact") {
-      Dedup.exact(docs1, "doc_id", "text").count()
-    } {
-      Dedup.exact(docsN, "doc_id", "text").count()
+  /** Count a result whose cache the caller owns, then release it. */
+  private def countOnce(df: DataFrame): Long =
+    try df.count() finally df.unpersist(blocking = false)
+
+  /** LSH bits at `scale`× the corpus: 2^bits grows with N (4 → 4 +
+    * log2 N), holding expected bucket occupancy constant — the index
+    * tunable that keeps the bucket join linear; fixed bits at growing
+    * N would grow occupancy ∝ N and candidate pairs ∝ N². */
+  private def bitsAt(scale: Int): Int = 4 + (math.log(scale.toDouble) / math.log(2.0)).round.toInt
+
+  /** Write both sides under `tmp` and run every selected arm. Names
+    * are checked before anything is written. */
+  def run(spark: SparkSession, mult: Int, sfDir: String, tmp: String,
+      only: Option[Seq[String]]): Results = {
+    val names = selected(only)
+    val dir1 = s"$tmp/x1"
+    val dirN = s"$tmp/x$mult"
+    writeCopies(spark, sfDir, dir1, 1)
+    writeCopies(spark, sfDir, dirN, mult)
+    val res = new Results(mult)
+
+    // one warm run at 1× (codegen), then the timed 1× and N× runs;
+    // build and count sit inside the timer, as in Bench
+    def scaled(name: String)(at: (String, Int) => Long): Unit = {
+      def once(dir: String, scale: Int) = { spark.catalog.clearCache(); timed(at(dir, scale)) }
+      val (w1, _) = once(dir1, 1)
+      val (t1, n1) = once(dir1, 1)
+      val (tN, nN) = once(dirN, mult)
+      spark.catalog.clearCache()
+      res.record(name, t1, tN, n1, nN, s"linear=$mult", w1)
     }
-    probe("ngram_jaccard") {
-      Dedup.ngramJaccardPairs(docs1, "doc_id", "text", 3, 0.6).count()
-    } {
-      Dedup.ngramJaccardPairs(docsN, "doc_id", "text", 3, 0.6).count()
-    }
-    probe("minhash_lsh") {
-      Dedup.minhashLshPairs(docs1, "doc_id", "text", 3, 64, 16, 0.5).count()
-    } {
-      Dedup.minhashLshPairs(docsN, "doc_id", "text", 3, 64, 16, 0.5).count()
-    }
-    probe("simhash") {
-      Dedup.simhashPairs(docs1, "doc_id", "text", 3).count()
-    } {
-      Dedup.simhashPairs(docsN, "doc_id", "text", 3).count()
-    }
-    probe("pair_counts") {
-      Pipeline.pairCounts(li1, "l_orderkey", "l_suppkey", or1, "o_orderkey").count()
-    } {
-      Pipeline.pairCounts(liN, "l_orderkey", "l_suppkey", orN, "o_orderkey").count()
-    }
-    probe("tfidf_top_terms") {
-      Curation.tfidfTopTerms(docs1, "doc_id", Text.tokens(col("text")), 3).count()
-    } {
-      Curation.tfidfTopTerms(docsN, "doc_id", Text.tokens(col("text")), 3).count()
-    }
-    probe("dedup_clusters", distributed = true) {
-      Clusters.connectedComponents(
-        Dedup.ngramJaccardPairs(docs1, "doc_id", "text", 3, 0.6), "doc_a", "doc_b").count()
-    } {
-      Clusters.connectedComponents(
-        Dedup.ngramJaccardPairs(docsN, "doc_id", "text", 3, 0.6), "doc_a", "doc_b").count()
-    }
-    probe("dedup_substring") {
-      Dedup.substringDupSpans(docs1, "doc_id", "text", 20).count()
-    } {
-      Dedup.substringDupSpans(docsN, "doc_id", "text", 20).count()
-    }
-    // the removal twin adds the victim-position fold + in-row rebuild
-    // on top of the spans derivation — still hash/int-only shuffles
-    probe("substring_remove") {
-      Dedup.substringDupRemove(docs1, "doc_id", "text", 20).count()
-    } {
-      Dedup.substringDupRemove(docsN, "doc_id", "text", 20).count()
-    }
-    // fixed benchmark (copy-0 5%), growing corpus — the real
-    // decontamination shape (the broadcast side must stay constant)
-    locally {
-      val bench = docsN.filter(col("doc_id") < 10000000L && col("doc_id") % 20 === 0)
-      val corpus1 = docsN.filter(col("doc_id") < 10000000L && col("doc_id") % 20 =!= 0)
-      val corpusN = docsN.filter(col("doc_id") % 20 =!= 0)
-      probe("decon_ngram") {
-        Curation.contaminationFlags(corpus1, bench, "doc_id", "text", 5).count()
-      } {
-        Curation.contaminationFlags(corpusN, bench, "doc_id", "text", 5).count()
+    Tier.pinned(spark, "distributed") {
+      val declared = SparkEntry.queries
+      names.flatMap(n => declared.get(n).map(n -> _)).foreach { case (name, q) =>
+        scaled(name)((dir, _) => q(spark, dir).count())
+      }
+      // LSH-bucketed embedding dedup with the bits rule of [[bitsAt]]
+      if (names.contains("embedding_lsh")) scaled("embedding_lsh") { (dir, scale) =>
+        Dedup.embeddingPairsLsh(Tables.table(spark, dir, "embeddings"), "vec_id", "embedding",
+          64, bitsAt(scale), 8, 42L, 0.4).count()
       }
     }
-    probe("text_repetition") {
-      Curation.repetitionStats(docs1, "doc_id", "text", 0.12, 0.05).count()
-    } {
-      Curation.repetitionStats(docsN, "doc_id", "text", 0.12, 0.05).count()
-    }
-    // same fixed-benchmark shape as decon_ngram: the filter build side
-    // is constant, only the probed corpus grows
-    locally {
-      val bench = docsN.filter(col("doc_id") < 10000000L && col("doc_id") % 20 === 0)
-      val corpus1 = docsN.filter(col("doc_id") < 10000000L && col("doc_id") % 20 =!= 0)
-      val corpusN = docsN.filter(col("doc_id") % 20 =!= 0)
-      probe("decon_bloom") {
-        Curation.contaminationFlagsBloom(corpus1, bench, "doc_id", "text",
-          5, 1 << 22, 3).count()
-      } {
-        Curation.contaminationFlagsBloom(corpusN, bench, "doc_id", "text",
-          5, 1 << 22, 3).count()
-      }
-    }
-    // a copy marker PREPENDED to the text keeps blocks copy-local
-    // (the shared-token perturbation leaves first-4-chars equal, which
-    // would merge blocks across copies and measure the hot-block
-    // pathology instead of scaling)
-    locally {
-      def edCopy(base: DataFrame, k: Int): DataFrame =
-        base.select((col("doc_id") + lit(k.toLong * 10000000L)).as("doc_id"),
-          concat(lit(s"c$k "), col("text")).as("text"))
-      val edN = (0 until mult).map(edCopy(docs1, _)).reduce(_ unionByName _)
-      // the 1× arm is built directly from docs1 (one clean scan), NOT
-      // by filtering the N-way union — that would scan all N copies
-      // in both arms and bias the reported ratio toward 1.0
-      val ed1 = edCopy(docs1, 0)
-      probe("dedup_edit") {
-        Dedup.editDistancePairs(ed1, "doc_id", "text", 64).count()
-      } {
-        Dedup.editDistancePairs(edN, "doc_id", "text", 64).count()
-      }
-    }
-    probe("approx_topk") {
-      Curation.approxTopTokens(docs1, Text.tokens(col("text")), col("text"),
-        4, 2048, 10, 2, 20).count()
-    } {
-      Curation.approxTopTokens(docsN, Text.tokens(col("text")), col("text"),
-        4, 2048, 10, 2, 20).count()
-    }
-    probe("mm_manifest") {
-      graft.operators.Multimodal.contentManifest(
-        docs1.withColumn("payload", encode(col("text"), "UTF-8")),
-        "doc_id", "payload").count()
-    } {
-      graft.operators.Multimodal.contentManifest(
-        docsN.withColumn("payload", encode(col("text"), "UTF-8")),
-        "doc_id", "payload").count()
-    }
-    // copies shift user_id, so the N× corpus has N× users over the
-    // same horizon — grid rows (and the true answer) scale linearly
-    locally {
-      val ev1 = Tables.events(spark, sfDir)
-        .select("event_id", "user_id", "ts", "event_type", "value")
-      (0 until mult).map { k =>
-        ev1.select(col("event_id"),
-          (col("user_id") + lit(k.toLong * 10000000L)).as("user_id"),
-          col("ts"), col("event_type"), col("value"))
-      }.reduce(_ unionByName _).write.mode("overwrite").parquet(s"$tmp/events")
-      val evN = spark.read.parquet(s"$tmp/events")
-      probe("resample") {
-        Events.resampleGrid(ev1, "user_id", "ts", "value", 3600L).count()
-      } {
-        Events.resampleGrid(evN, "user_id", "ts", "value", 3600L).count()
-      }
-      // same horizon, N× users: retention output rows constant
-      // (weeks²), input work linear
-      probe("cohort_retention") {
-        Events.cohortRetention(ev1, "user_id", "ts").count()
-      } {
-        Events.cohortRetention(evN, "user_id", "ts").count()
-      }
-      // ×4 in-row fan-out, then map-side combine: window rows are
-      // horizon-bounded, so the agg shuffle stays constant-size
-      probe("sliding_windows") {
-        Events.slidingCounts(ev1, 3600, 900).count()
-      } {
-        Events.slidingCounts(evN, 3600, 900).count()
-      }
-      probe("mad_outliers") {
-        Events.madOutliers(ev1, 3.5).count()
-      } {
-        Events.madOutliers(evN, 3.5).count()
-      }
-      // the scale-default sketch twin: fixed-size GK buffers replace
-      // the full-multiset exact percentile state
-      probe("mad_sketch") {
-        Events.madOutliers(ev1, 3.5, approxAccuracy = Some(10000)).count()
-      } {
-        Events.madOutliers(evN, 3.5, approxAccuracy = Some(10000)).count()
-      }
-      // N× users (per-copy offset): per-user event counts constant,
-      // so the two as-of window passes and the start-id join must all
-      // scale with the user fan-out, never per-user quadratically
-      probe("seq_pattern") {
-        Events.sequenceMatch(ev1, "user_id", "ts", "event_id",
-          "event_type", "view", "purchase", "error", 1800L).count()
-      } {
-        Events.sequenceMatch(evN, "user_id", "ts", "event_id",
-          "event_type", "view", "purchase", "error", 1800L).count()
-      }
-    }
-    // iterative fixpoint: SUPPLIER keys offset per copy, so each copy
-    // is a disjoint component — nodes, edges, and per-iteration join
-    // work all scale linearly (offsetting only order keys would
-    // densify one shared 1000-node graph instead)
-    locally {
-      def edgesOf(pc: DataFrame): DataFrame = {
-        val pairs = pc.select(col("member_a"), col("member_b")).distinct()
-        pairs.select(col("member_a").as("src"), col("member_b").as("dst"))
-          .union(pairs.select(col("member_b").as("src"), col("member_a").as("dst")))
-      }
-      val liG = (0 until mult).map { k =>
-        li1.select(
-          (col("l_orderkey") + lit(k.toLong * 1000000000L)).as("l_orderkey"),
-          (col("l_suppkey") + lit(k.toLong * 10000000L)).as("l_suppkey"))
-      }.reduce(_ unionByName _)
-      probe("graph_pagerank", distributed = true) {
-        graft.operators.Graph.pagerank(
-          edgesOf(Pipeline.pairCounts(li1, "l_orderkey", "l_suppkey", or1, "o_orderkey")),
-          "src", "dst", 3).count()
-      } {
-        graft.operators.Graph.pagerank(
-          edgesOf(Pipeline.pairCounts(liG, "l_orderkey", "l_suppkey", orN, "o_orderkey")),
-          "src", "dst", 3).count()
-      }
-      // triangle census on the thresholded co-occurrence graph: the
-      // suppkey shift makes the Nx corpus N disjoint copies of the 1x
-      // graph (same p95 per copy), so edges and triangles both scale
-      // Nx — the degree-ordered wedge join must track that linearly,
-      // not the m^1.5 worst case it is merely BOUNDED by
-      // the r13 shipped derivation (SparkEntry.hotSupplierGraph):
-      // collect_set per order + in-row SortedPairs — one fact shuffle
-      def hotEdges(li: DataFrame): DataFrame = {
-        import graft.functions.expr.NativeFunctions.sorted_pairs
-        val pc = li
-          .groupBy(col("l_orderkey"))
-          .agg(sort_array(collect_set(col("l_suppkey"))).as("__ms"))
-          .select(explode(sorted_pairs(col("__ms"))).as("__p"))
-          .groupBy(col("__p.a").as("sa"), col("__p.b").as("sb"))
-          .agg(count(lit(1)).as("c"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val thr = pc.agg(expr("percentile(c, 0.95)")).collect()(0).getDouble(0)
-        // materialize while cached (the SparkEntry.hotSupplierGraph
-        // contract) — else the timed probe blocks pay a derivation
-        // recompute and measure the wrong thing
-        val e = pc.filter(col("c") >= lit(thr)).localCheckpoint(true)
-        pc.unpersist(blocking = false)
-        e
-      }
-      probe("graph_triangles", distributed = true) {
-        val r = graft.operators.Graph.triangleCensus(hotEdges(li1), "sa", "sb")
-        val n = r.count(); r.unpersist(); n
-      } {
-        val r = graft.operators.Graph.triangleCensus(hotEdges(liG), "sa", "sb")
-        val n = r.count(); r.unpersist(); n
-      }
-      // LPA on the same N-disjoint-copy hot graph: per-round work is
-      // one adjacency join + two aggregates — must track edge growth
-      // linearly, with iteration count fixed
-      probe("graph_lpa", distributed = true) {
-        graft.operators.Graph.labelPropagation(
-          hotEdges(li1), "sa", "sb", iterations = 3).count()
-      } {
-        graft.operators.Graph.labelPropagation(
-          hotEdges(liG), "sa", "sb", iterations = 3).count()
-      }
-    }
-    // CDC dedup: replica-suffixed words give disjoint chunk spaces —
-    // chunks, groups and duplicated chunks all scale Nx; the plan is
-    // scan + explode + one hash groupBy, so the ratio must be ≈ linear
-    probe("dedup_cdc") {
-      Dedup.cdcDuplicateChunks(docs1, "doc_id", "text", 4, 8, 4).count()
-    } {
-      Dedup.cdcDuplicateChunks(docsN, "doc_id", "text", 4, 8, 4).count()
-    }
-    // extraction family (r14, r13 verdict item 7): stateless per-row
-    // scans with no shuffle — synthesize the gated queries' page
-    // shape per doc, then extract. Must track ≈ linear (per-row CPU
-    // only; the replica suffixes grow each page's text N-fold in
-    // aggregate but each ROW stays the same size, so wall time is
-    // pure row-count scaling)
-    locally {
-      import graft.functions.{Html, Urls}
-      def page(d: DataFrame): DataFrame = d.select(col("doc_id"), concat(
-        lit("<html><head><title>doc "), col("doc_id").cast("string"),
-        lit("</title><script>t()</script></head><body><nav>Home</nav><p>"),
-        col("text"),
-        lit("</p><a href=\"HTTPS://S"), (col("doc_id") % 7).cast("string"),
-        lit(".COM:443/p/?utm_a=1&q=1#f\">x</a><a href=\"http://c"),
-        (col("doc_id") % 3).cast("string"),
-        lit(".net:80/a//\">y</a></body></html>")).as("html"))
-      probe("text_extract_html") {
-        page(docs1).select(col("doc_id"),
-          Html.titleFromHtml(col("html")),
-          Html.textFromHtml(col("html"))).count()
-      } {
-        page(docsN).select(col("doc_id"),
-          Html.titleFromHtml(col("html")),
-          Html.textFromHtml(col("html"))).count()
-      }
-      probe("text_extract_links") {
-        page(docs1)
-          .select(col("doc_id"), posexplode(regexp_extract_all(col("html"),
-            lit("href=\"([^\"]+)\""), lit(1))))
-          .select(Urls.canonicalize(col("col"))).count()
-      } {
-        page(docsN)
-          .select(col("doc_id"), posexplode(regexp_extract_all(col("html"),
-            lit("href=\"([^\"]+)\""), lit(1))))
-          .select(Urls.canonicalize(col("col"))).count()
-      }
-      import graft.functions.expr.NativeFunctions.{charset_decode, charset_sniff}
-      def mangled(d: DataFrame): DataFrame = d.select(
-        when(col("doc_id") % 3 === 0,
-          encode(col("text"), "ISO-8859-1"))
-          .when(col("doc_id") % 3 === 1, encode(col("text"), "UTF-16"))
-          .otherwise(encode(col("text"), "UTF-8")).as("raw"))
-      probe("text_charset") {
-        mangled(docs1).select(charset_sniff(col("raw")),
-          charset_decode(col("raw"))).count()
-      } {
-        mangled(docsN).select(charset_sniff(col("raw")),
-          charset_decode(col("raw"))).count()
-      }
-      // robots + script profile (r14): both stateless per-row scans —
-      // same ≈linear expectation as the rest of the family
-      import graft.functions.expr.NativeFunctions.robots_allowed
-      val robotsTxt = lit("User-agent: *\nDisallow: /private/*\n" +
-        "Allow: /private/pub$\nDisallow: /tmp\n")
-      def paths(d: DataFrame): DataFrame = d.select(
-        concat(lit("/private/x"), (col("doc_id") % 97).cast("string")).as("p"))
-      probe("crawl_robots") {
-        paths(docs1).select(robots_allowed(robotsTxt, col("p"), "bot")).count()
-      } {
-        paths(docsN).select(robots_allowed(robotsTxt, col("p"), "bot")).count()
-      }
-      probe("text_script") {
-        docs1.select(graft.functions.Text.scriptCounts(col("text"))
-          .map(_._2): _*).count()
-      } {
-        docsN.select(graft.functions.Text.scriptCounts(col("text"))
-          .map(_._2): _*).count()
-      }
-      // host link graph + weighted host rank (r15, r14 verdict item
-      // 8): the N× arm scales HOSTS with the corpus too (more docs ↔
-      // more hosts on a real crawl), so both the explode+groupBy scan
-      // AND the rank loop's graph grow — expectation stays ≈linear
-      // (scan ∝ docs, pagerank ∝ edges ∝ hosts)
-      def hostGraph(d: DataFrame, hostMult: Int): DataFrame = {
-        val id = col("doc_id")
-        val html = concat(
-          lit("<html><body><a href=\"HTTPS://WWW.Shop"),
-          (id % (7 * hostMult)).cast("string"),
-          lit(".COM:443/item/"), (id % 50).cast("string"),
-          lit("/?utm_campaign=x&q=z#frag\">here</a><a href=\"http://cdn.site"),
-          (id % (3 * hostMult)).cast("string"),
-          lit(".net:80/a//\">img</a></body></html>"))
-        d.select(concat(lit("src"), (id % (5 * hostMult)).cast("string"),
-            lit(".org")).as("src_host"),
-            explode(regexp_extract_all(html, lit("href=\"([^\"]+)\""),
-              lit(1))).as("href"))
-          .select(col("src_host"),
-            regexp_extract(Urls.canonicalize(col("href")),
-              "^[a-z0-9+.-]+://([^/]*)", 1).as("dst_host"))
-          .groupBy("src_host", "dst_host")
-          .agg(count(lit(1)).as("n_links"))
-      }
-      probe("crawl_hostgraph") {
-        hostGraph(docs1, 1).count()
-      } {
-        hostGraph(docsN, mult).count()
-      }
-      probe("crawl_hostrank", distributed = true) {
-        graft.operators.Graph.pagerank(hostGraph(docs1, 1),
-          "src_host", "dst_host", iterations = 3, truncateEvery = 3,
-          danglingRedistribution = true, weightCol = Some("n_links")).count()
-      } {
-        graft.operators.Graph.pagerank(hostGraph(docsN, mult),
-          "src_host", "dst_host", iterations = 3, truncateEvery = 3,
-          danglingRedistribution = true, weightCol = Some("n_links")).count()
-      }
-    }
-    // per-stratum window with a rank cap: WindowGroupLimit must keep
-    // the per-reducer work bounded as strata get N× hotter (copies
-    // share the same #strata, so each stratum grows N×)
-    locally {
-      def withSource(d: DataFrame): DataFrame =
-        d.withColumn("source", (col("doc_id") % 50).cast("string"))
-      probe("stratum_cap") {
-        Curation.stratumCap(withSource(docs1), "source", "doc_id", 20).count()
-      } {
-        Curation.stratumCap(withSource(docsN), "source", "doc_id", 20).count()
-      }
-      probe("shard_assign") {
-        Curation.shardAssign(docs1, "doc_id", col("text"), 64).count()
-      } {
-        Curation.shardAssign(docsN, "doc_id", col("text"), 64).count()
-      }
-    }
-    locally {
-      val o1 = Tables.table(spark, sfDir, "orders")
-        .select("o_orderkey", "o_totalprice")
-      (0 until mult).map { k =>
-        o1.select((col("o_orderkey") + lit(k.toLong * 1000000000L)).as("o_orderkey"),
-          col("o_totalprice"))
-      }.reduce(_ unionByName _).write.mode("overwrite").parquet(s"$tmp/orders_ed")
-      val oN = spark.read.parquet(s"$tmp/orders_ed")
-      probe("equidepth_hist") {
-        graft.operators.Profile.equidepthHistogram(o1, "o_totalprice", 10).count()
-      } {
-        graft.operators.Profile.equidepthHistogram(oN, "o_totalprice", 10).count()
-      }
-      // sketch cuts at production accuracy: the agg buffer stays
-      // O(accuracy) while the exact form's multiset grows N×
-      probe("equidepth_sketch") {
-        graft.operators.Profile.equidepthHistogram(o1, "o_totalprice", 10,
-          approxAccuracy = Some(10000)).count()
-      } {
-        graft.operators.Profile.equidepthHistogram(oN, "o_totalprice", 10,
-          approxAccuracy = Some(10000)).count()
-      }
-    }
-    locally {
-      val emb1 = Tables.table(spark, sfDir, "embeddings")
-        .select("vec_id", "embedding")
-      (0 until mult).map { k =>
-        emb1.select((col("vec_id") + lit(k.toLong * 10000000L)).as("vec_id"),
-          col("embedding"))
-      }.reduce(_ unionByName _).write.mode("overwrite").parquet(s"$tmp/embeddings")
-      val embN = spark.read.parquet(s"$tmp/embeddings")
-      probe("emb_kmeans") {
-        Similarity.kmeans(emb1, "vec_id", "embedding", 8, 2).count()
-      } {
-        Similarity.kmeans(embN, "vec_id", "embedding", 8, 2).count()
-      }
-    }
-    // LSH-bucketed embedding dedup. Copies get a per-copy RANDOM SIGN
-    // pattern per dimension: within a copy both pair members flip the
-    // same dims so cosine structure is preserved, across copies the
-    // signs decorrelate — the true near-dup answer scales ~linearly.
-    // Occupancy rule: 2^bits grows with N (bits 4 → 4 + log2(mult)),
-    // holding expected bucket size constant — THE index tunable that
-    // keeps the bucket join linear; fixed bits at growing N would
-    // grow occupancy ∝ N and candidate pairs ∝ N².
-    locally {
-      val emb1 = Tables.table(spark, sfDir, "embeddings")
-        .select("vec_id", "embedding")
-      (0 until mult).map { k =>
-        emb1.select((col("vec_id") + lit(k.toLong * 10000000L)).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            x * when(pmod(xxhash64(lit(k), i), lit(2)) === 0, lit(1.0f))
-              .otherwise(lit(-1.0f))).as("embedding"))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$tmp/embeddings_lsh")
-      val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
-      val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
-      probe("embedding_lsh", distributed = true) {
-        Dedup.embeddingPairsLsh(emb1, "vec_id", "embedding", 64, 4, 8, 42L, 0.4).count()
-      } {
-        Dedup.embeddingPairsLsh(embDN, "vec_id", "embedding", 64, bitsN, 8, 42L, 0.4).count()
-      }
-    }
-    // conservation-corrected pagerank on the DIRECTED pair graph
-    // (per-copy supplier offsets → disjoint components, linear truth)
-    locally {
-      def dirEdges(pc: DataFrame): DataFrame =
-        pc.select(col("member_a").as("src"), col("member_b").as("dst")).distinct()
-      val liG = (0 until mult).map { k =>
-        li1.select(
-          (col("l_orderkey") + lit(k.toLong * 1000000000L)).as("l_orderkey"),
-          (col("l_suppkey") + lit(k.toLong * 10000000L)).as("l_suppkey"))
-      }.reduce(_ unionByName _)
-      probe("pagerank_dangling", distributed = true) {
-        graft.operators.Graph.pagerank(
-          dirEdges(Pipeline.pairCounts(li1, "l_orderkey", "l_suppkey", or1, "o_orderkey")),
-          "src", "dst", 3, danglingRedistribution = true).count()
-      } {
-        graft.operators.Graph.pagerank(
-          dirEdges(Pipeline.pairCounts(liG, "l_orderkey", "l_suppkey", orN, "o_orderkey")),
-          "src", "dst", 3, danglingRedistribution = true).count()
-      }
-    }
-    // logistic-regression training: one corpus scan + one-row agg per
-    // iteration, weights the only driver state — expect ≈ linear
-    locally {
-      import graft.functions.Text
-      def feats(d: DataFrame): DataFrame = d.select(
-          when(length(col("text")) % 2 === 0, 1.0).otherwise(0.0).as("y"),
-          lit(1.0).as("x0"),
-          (least(Text.tokenCount(col("text")), lit(1000)) / lit(1000.0)).as("x1"),
-          round(Text.stopwordRatio(col("text")), 4).as("x2"))
-        .filter(Text.tokenCount(col("text")) >= 1)
-      probe("logreg_train") {
-        Curation.logisticTrain(feats(docs1), "y", Seq("x0", "x1", "x2"), 3)
-          .length.toLong
-      } {
-        Curation.logisticTrain(feats(docsN), "y", Seq("x0", "x1", "x2"), 3)
-          .length.toLong
-      }
-    }
-    // hash-keyed LM scores: shuffles carry (8-byte hash, count) pairs.
-    // distributed: the partition-window path — the r18 driver gate
-    // would otherwise swallow this corpus's small model and the probe
-    // would measure the gate, not the plan that runs at 100 TB
-    probe("bigram_lm", distributed = true) {
-      Curation.bigramLogProb(docs1, "doc_id", Text.tokens(col("text"))).count()
-    } {
-      Curation.bigramLogProb(docsN, "doc_id", Text.tokens(col("text"))).count()
-    }
-    // the r15-vs-r16 caching trade, measured (verdict r15 item 4):
-    // bigram_lm above RECOMPUTES the corpus-scale exploded bigram
-    // frame for each of its two consumers (model agg + scoring
-    // join); this arm MATERIALIZES it once (persist + eager count,
-    // the r15 checkpoint-table convention) before the same two
-    // consumers. Identical output; the delta is cache-write bytes vs
-    // one extra tokenize+explode scan. The cache write loses when
-    // the explode is cheap relative to spilling an exploded frame
-    // several times the corpus size — compare bigram_lm_mat's
-    // t1/tN against bigram_lm's to see by how much at each scale.
-    locally {
-      def mat(d: DataFrame): Long = {
-        val withB = d.select(col("doc_id"),
-            array_remove(Text.tokens(col("text")), "").as("__t"))
-          .filter(size(col("__t")) >= 2)
-          .select(col("doc_id"), explode(
-            graft.functions.expr.NativeFunctions.bigram_hashes(col("__t"))).as("p"))
-          .select(col("doc_id"), col("p.prefix_h").as("prefix_h"),
-            col("p.bigram_h").as("bigram_h"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        withB.count()
-        val bfreq = withB.groupBy("bigram_h")
-          .agg(count("*").as("bcnt"), min(col("prefix_h")).as("__pfx"))
-        val pfreq = bfreq.groupBy("__pfx").agg(sum(col("bcnt")).as("pcnt"))
-        val model = bfreq.join(pfreq, "__pfx").select("bigram_h", "bcnt", "pcnt")
-        val n = withB.join(model, "bigram_h")
-          .groupBy("doc_id")
-          .agg(count("*").as("n_bigrams"),
-            round(avg(log(col("bcnt") / col("pcnt"))), 4).as("avg_logprob"))
-          .count()
-        withB.unpersist(blocking = false)
-        n
-      }
-      probe("bigram_lm_mat") { mat(docs1) } { mat(docsN) }
-    }
-    probe("interp_lm", distributed = true) {
-      Curation.interpLogProb(docs1, "doc_id", Text.tokens(col("text")), 0.9).count()
-    } {
-      Curation.interpLogProb(docsN, "doc_id", Text.tokens(col("text")), 0.9).count()
-    }
-    // DSIR: two corpus passes (B-row distribution agg + literal-dot
-    // scoring), no shuffle — expect ≈ linear
-    probe("dsir_weights") {
-      Curation.dsirWeights(docs1, "doc_id", col("text"),
-        pmod(col("doc_id"), lit(2)) === 0, nBuckets = 32).count()
-    } {
-      Curation.dsirWeights(docsN, "doc_id", col("text"),
-        pmod(col("doc_id"), lit(2)) === 0, nBuckets = 32).count()
-    }
-    // BM25: one broadcast 1-row stats agg + one in-row scoring pass +
-    // TakeOrdered — expect ≈ linear
-    probe("bm25_topk") {
-      Curation.bm25TopK(docs1, "doc_id", col("text"),
-        Seq("vector", "customer", "spark"), k = 20).count()
-    } {
-      Curation.bm25TopK(docsN, "doc_id", col("text"),
-        Seq("vector", "customer", "spark"), k = 20).count()
-    }
-    // epochs: #strata-row agg + broadcast + stateless copy count
-    locally {
-      def withSrc(d: DataFrame) =
-        d.withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(20))))
-      val shares = Map("s0" -> 0.3, "s1" -> 0.2)
-      probe("sample_epochs") {
-        Curation.epochsSample(withSrc(docs1), "source", "doc_id",
-          Text.tokenCount(col("text")), shares, 1.0, 4.0).count()
-      } {
-        Curation.epochsSample(withSrc(docsN), "source", "doc_id",
-          Text.tokenCount(col("text")), shares, 1.0, 4.0).count()
-      }
-    }
-    // ensemble: one in-row flag projection + the repetition agg +
-    // a thin (id, booleans) join
-    probe("quality_ensemble") {
-      Curation.qualityEnsemble(docs1, "doc_id", "text",
-        10, 50000, 0, -2.0, 0.6, -6.0, 0.1, -4.0, 0.12, 0.05).count()
-    } {
-      Curation.qualityEnsemble(docsN, "doc_id", "text",
-        10, 50000, 0, -2.0, 0.6, -6.0, 0.1, -4.0, 0.12, 0.05).count()
-    }
-    // curation gauntlet: FIXED batch vs N× standing corpus — the
-    // hash index builds OUTSIDE the timer (land-time cost, the
-    // minhash_probe convention: probe() not reused because its
-    // clearCache would evict the standing index); a probe's cost
-    // must track the batch, so the ratio target is ~flat
-    if (onlyNames.forall(_.contains("curate_probe"))) {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    standing(spark, names, mult, dir1, dirN, res)
+    res
+  }
+
+  /** The standing-state arms. Their state (index, labeling, loop)
+    * builds OUTSIDE the timer — it is the amortized land-time cost —
+    * and no clearCache runs between their timers, which would evict
+    * it. Every fixed batch or victim set is taken from copy 0, which
+    * is verbatim in both directories, so it finds its real near-dups
+    * in the N× state too. */
+  private def standing(spark: SparkSession, names: Seq[String], mult: Int,
+      dir1: String, dirN: String, res: Results): Unit = {
+    val lvl = StorageLevel.MEMORY_AND_DISK
+    val docs1 = Tables.table(spark, dir1, "documents").select("doc_id", "text")
+    val docsN = Tables.table(spark, dirN, "documents").select("doc_id", "text")
+    val emb1 = Tables.table(spark, dir1, "embeddings").select("vec_id", "embedding")
+    val embN = Tables.table(spark, dirN, "embeddings").select("vec_id", "embedding")
+    def batchOf(d: DataFrame, id: String) = d.filter(pmod(col(id), lit(10)) === 3)
+    def corpusOf(d: DataFrame, id: String) = d.filter(pmod(col(id), lit(10)) =!= 3)
+
+    // curation gauntlet: FIXED batch vs N× standing hash index — a
+    // probe's cost must track the batch, so the ratio target is ~flat
+    if (names.contains("curate_probe")) {
       // novel text (suffix token): the batch is dup-free against BOTH
       // corpora, so the survivor count reads identically at 1× and N×
-      val batchFix = docs1.limit(500)
-        .withColumn("text", concat(col("text"), lit(" zz")))
-        .persist(lvl)
-      batchFix.count()
+      val batch = docs1.limit(500).withColumn("text", concat(col("text"), lit(" zz"))).persist(lvl)
+      batch.count()
       def index(c: DataFrame): DataFrame = {
-        val i = c.select(col("doc_id").as("__cid"), md5(col("text")).as("__h"))
-          .persist(lvl)
+        val i = c.select(col("doc_id").as("__cid"), md5(col("text")).as("__h")).persist(lvl)
         i.count(); i
       }
       val idx1 = index(docs1); val idxN = index(docsN)
-      def run(idx: DataFrame): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val dups = Dedup.exactIncrementalHashed(idx, batchFix, "doc_id", "text")
-        val flags = Curation.qualityEnsemble(batchFix, "doc_id", "text",
+      def probe(idx: DataFrame) = timed {
+        val dups = Dedup.exactIncrementalHashed(idx, batch, "doc_id", "text")
+        val flags = Curation.qualityEnsemble(batch, "doc_id", "text",
           10, 50000, 0, -2.0, 0.6, -6.0, 0.1, -4.0, 0.12, 0.05)
-        val n = dups.join(flags, "doc_id")
-          .filter(col("dup_of").isNull && col("keep")).count()
-        ((System.nanoTime() - t0) / 1e9, n)
+        dups.join(flags, "doc_id").filter(col("dup_of").isNull && col("keep")).count()
       }
-      run(idx1) // warm codegen
-      val (t1, n1) = run(idx1)
-      val (tN, nN) = run(idxN)
-      println(f"[scaleprobe] curate_probe           1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"fixed-batch@${mult}x-corpus: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (flat=1)")
-      Seq(idx1, idxN, batchFix).foreach(_.unpersist(blocking = false))
-      record("curate_probe", t1, tN, n1, nN, "flat=1")
+      probe(idx1) // warm codegen
+      val (t1, n1) = probe(idx1)
+      val (tN, nN) = probe(idxN)
+      Seq(idx1, idxN, batch).foreach(_.unpersist(blocking = false))
+      res.record("curate_probe", t1, tN, n1, nN, "flat=1")
     }
-    // standing-index probe: index build sits OUTSIDE the timer (it is
-    // the amortized land-time cost); two claims measured — (a) a
-    // FIXED batch against an N× corpus stays ~flat (the corpus is
-    // never recomputed for a probe), (b) an N× batch against the N×
-    // corpus scales ~linearly in the batch. probe() is not reused
-    // here because its clearCache() would evict the standing index.
-    if (onlyNames.forall(_.contains("minhash_probe"))) {
-      val corpus1 = docs1.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-      val batch1 = docs1.filter(pmod(col("doc_id"), lit(10)) === 3)
-      val corpusN = docsN.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-      val batchN = docsN.filter(pmod(col("doc_id"), lit(10)) === 3)
-      val idx1 = Dedup.minhashIndex(corpus1, "doc_id", "text", 3, 64, 16)
-      val idxN = Dedup.minhashIndex(corpusN, "doc_id", "text", 3, 64, 16)
-      def runProbe(idx: Dedup.MinhashIndex, b: DataFrame): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val r = Dedup.minhashProbe(idx, b, "doc_id", "text", 0.5)
-        val n = r.count()
-        val t = (System.nanoTime() - t0) / 1e9
-        r.unpersist(blocking = false)
-        (t, n)
-      }
-      // the fixed batch is the N× batch's copy-0 slice: same size as
-      // batch1 AND in the perturbed token space, so it finds its real
-      // near-dups in the big index (an out-of-space batch would do
-      // the same probe work but verify nothing)
-      val batchFix = batchN.filter(col("doc_id") < 10000000L)
-      runProbe(idx1, batch1) // warm codegen
-      val (t1, n1) = runProbe(idx1, batch1)
-      val (tFix, nFix) = runProbe(idxN, batchFix)
-      val (tN, nN) = runProbe(idxN, batchN)
-      println(f"[scaleprobe] minhash_probe          1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"fixed-batch@${mult}x-corpus: $tFix%6.2f s ($nFix%8d rows)  ratio: ${tFix / t1}%5.1f (flat=1)")
-      println(f"[scaleprobe] minhash_probe          1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"${mult}x-batch@${mult}x-corpus: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (linear=$mult)")
-      idx1.release(); idxN.release()
-      record("minhash_probe_fixed_batch", t1, tFix, n1, nFix, "flat=1")
-      record("minhash_probe_scaled_batch", t1, tN, n1, nN, s"linear=$mult")
+
+    // standing-index probes, two claims each: (a) a FIXED batch against
+    // the N× index stays ~flat (the corpus is never recomputed for a
+    // probe), (b) the N× batch against the N× index scales ~linearly
+    // in the batch
+    def indexProbe[I](name: String, id: String, d1: DataFrame, dN: DataFrame)(
+        index: (DataFrame, Int) => I)(probe: (I, DataFrame) => DataFrame)(
+        release: I => Unit): Unit = if (names.contains(name)) {
+      val idx1 = index(corpusOf(d1, id), 1)
+      val idxN = index(corpusOf(dN, id), mult)
+      def time(idx: I, b: DataFrame) = timed(countOnce(probe(idx, b)))
+      time(idx1, batchOf(d1, id)) // warm codegen
+      val (t1, n1) = time(idx1, batchOf(d1, id))
+      val (tFix, nFix) = time(idxN, batchOf(d1, id))
+      val (tN, nN) = time(idxN, batchOf(dN, id))
+      release(idx1); release(idxN)
+      res.record(s"${name}_fixed_batch", t1, tFix, n1, nFix, "flat=1")
+      res.record(s"${name}_scaled_batch", t1, tN, n1, nN, s"linear=$mult")
     }
-    // standing substring index: fixed batch vs N× window universe —
-    // same claims as minhash_probe (batch-only windowing, broadcast
-    // probe keys; the corpus is never rescanned)
-    if (onlyNames.forall(_.contains("substring_probe"))) {
-      val corpus1 = docs1.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-      val batch1 = docs1.filter(pmod(col("doc_id"), lit(10)) === 3)
-      val corpusN = docsN.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-      val batchN = docsN.filter(pmod(col("doc_id"), lit(10)) === 3)
-      val idx1 = Dedup.substringIndex(corpus1, "doc_id", "text", 20)
-      val idxN = Dedup.substringIndex(corpusN, "doc_id", "text", 20)
-      def runProbe(idx: Dedup.SubstringIndex, b: DataFrame): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val r = Dedup.substringProbe(idx, b, "doc_id", "text")
-        val n = r.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        r.unpersist(blocking = false)
-        (dt, n)
-      }
-      val batchFix = batchN.filter(col("doc_id") < 10000000L)
-      runProbe(idx1, batch1) // warm codegen
-      val (t1, n1) = runProbe(idx1, batch1)
-      val (tFix, nFix) = runProbe(idxN, batchFix)
-      val (tN, nN) = runProbe(idxN, batchN)
-      println(f"[scaleprobe] substring_probe        1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"fixed-batch@${mult}x-corpus: $tFix%6.2f s ($nFix%8d rows)  ratio: ${tFix / t1}%5.1f (flat=1)")
-      println(f"[scaleprobe] substring_probe        1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"${mult}x-batch@${mult}x-corpus: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (linear=$mult)")
-      idx1.release(); idxN.release()
-      record("substring_probe_fixed_batch", t1, tFix, n1, nFix, "flat=1")
-      record("substring_probe_scaled_batch", t1, tN, n1, nN, s"linear=$mult")
-    }
-    // incremental CC (r5 verdict: "measure the frontier-sized
-    // claim"). Standing labeling built OUTSIDE the timers (land-time
-    // cost); a FIXED frontier of merge edges folds in. Claims: (a)
-    // the fold ≪ the full recompute over (old ∪ new) edges at N× —
-    // the quotient-CC rounds run on frontier-sized edges, so the only
-    // corpus-sized work is the ONE remap join; (b) fold@N× / fold@1×
-    // stays at-or-below linear (it IS that one scan + join).
-    // probe() is not reused: its clearCache would evict the standing
-    // labelings.
-    if (onlyNames.forall(_.contains("clusters_inc"))) {
+    indexProbe("minhash_probe", "doc_id", docs1, docsN)(
+      (c, _) => Dedup.minhashIndex(c, "doc_id", "text", 3, 64, 16))(
+      Dedup.minhashProbe(_, _, "doc_id", "text", 0.5))(_.release())
+    // batch-only windowing, broadcast probe keys
+    indexProbe("substring_probe", "doc_id", docs1, docsN)(
+      (c, _) => Dedup.substringIndex(c, "doc_id", "text", 20))(
+      Dedup.substringProbe(_, _, "doc_id", "text"))(_.release())
+    // only the batch is signed; index occupancy follows the bits rule
+    indexProbe("embedding_probe", "vec_id", emb1, embN)(
+      (c, scale) => Dedup.embeddingIndex(c, "vec_id", "embedding", 64, bitsAt(scale), 8, 42L))(
+      Dedup.embeddingProbe(_, _, "vec_id", "embedding", 0.4))(_.release())
+
+    // incremental CC: a FIXED frontier of merge edges folds into a
+    // standing labeling. Claims: (a) the fold ≪ the full recompute
+    // over (old ∪ new) edges at N× — the quotient-CC rounds run on
+    // frontier-sized edges, so the only corpus-sized work is the ONE
+    // remap join; (b) fold@N× / fold@1× stays at-or-below linear.
+    if (names.contains("clusters_inc")) {
       def chain(d: DataFrame): DataFrame =
-        d.select(col("doc_id").as("src"),
-            (col("doc_id") - pmod(col("doc_id"), lit(4))).as("dst"))
+        d.select(col("doc_id").as("src"), (col("doc_id") - pmod(col("doc_id"), lit(4))).as("dst"))
           .filter(col("src") =!= col("dst"))
-      val edges1 = chain(docs1)
       val edgesN = chain(docsN)
-      val lab1 = Clusters.connectedComponents(edges1, "src", "dst")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val labN = Clusters.connectedComponents(edgesN, "src", "dst")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val lab1 = Clusters.connectedComponents(chain(docs1), "src", "dst").persist(lvl)
+      val labN = Clusters.connectedComponents(edgesN, "src", "dst").persist(lvl)
       lab1.count(); labN.count()
       // fixed frontier: pair up 2000 real representatives (cluster
       // ids ARE member ids by the CC contract) → 1000 merge edges
       val reps = lab1.select("cluster_id").distinct().orderBy("cluster_id")
         .limit(2000).collect().map(_.getLong(0)) // bounded: 2000 longs
       val frontier = spark.createDataFrame(
-        reps.grouped(2).collect { case Array(a, b) => (a, b) }.toSeq)
-        .toDF("src", "dst")
-      // the distributed tier pins the quotient-CC/loop path: the
-      // probe proves the LOOP's corpus-size independence — the
-      // adaptive single-task dispatch (the default, which a
-      // frontier-sized quotient graph always takes in production)
+        reps.grouped(2).collect { case Array(a, b) => (a, b) }.toSeq).toDF("src", "dst")
+      // the distributed tier pins the quotient-CC loop: the probe
+      // proves the LOOP's corpus-size independence — the single-task
+      // dispatch a frontier-sized quotient graph takes by default
       // would be flat by construction and prove nothing
-      def t(f: => Long): (Double, Long) = Tier.pinned(spark, "distributed") {
-        val t0 = System.nanoTime(); val n = f
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      t(Clusters.incrementalComponents(lab1, frontier, "src", "dst").count()) // warm
-      val (ti1, ni1) = t(Clusters.incrementalComponents(lab1, frontier, "src", "dst").count())
-      val (tiN, niN) = t(Clusters.incrementalComponents(labN, frontier, "src", "dst").count())
-      val (tfN, _) = t(Clusters.connectedComponents(
-        edgesN.union(frontier), "src", "dst").count())
-      println(f"[scaleprobe] clusters_inc           1x: $ti1%6.2f s ($ni1%8d rows)  " +
-        f"${mult}x: $tiN%6.2f s ($niN%8d rows)  ratio: ${tiN / ti1}%5.1f (linear=$mult)")
-      println(f"[scaleprobe] clusters_inc_vs_full   inc@${mult}x: $tiN%6.2f s  " +
-        f"full-recompute@${mult}x: $tfN%6.2f s  inc/full: ${tiN / tfN}%5.2f (want ≪ 1)")
-      record("clusters_inc_fold", ti1, tiN, ni1, niN, s"linear=$mult")
-      results.update("clusters_inc_vs_full",
-        s"""{"inc_s":${JsonOut.num(tiN, 3)},"full_s":${JsonOut.num(tfN, 3)},""" +
-          s""""inc_over_full":${JsonOut.num(tiN / tfN, 2)},"baseline":"want<<1"}""")
+      def time(f: => Long) = Tier.pinned(spark, "distributed")(timed(f))
+      time(Clusters.incrementalComponents(lab1, frontier, "src", "dst").count()) // warm
+      val (t1, n1) = time(Clusters.incrementalComponents(lab1, frontier, "src", "dst").count())
+      val (tN, nN) = time(Clusters.incrementalComponents(labN, frontier, "src", "dst").count())
+      val (tFull, _) = time(Clusters.connectedComponents(edgesN.union(frontier), "src", "dst").count())
       lab1.unpersist(blocking = false); labN.unpersist(blocking = false)
+      res.record("clusters_inc_fold", t1, tN, n1, nN, s"linear=$mult")
+      println(f"[scaleprobe] clusters_inc_vs_full inc@${mult}x: $tN%6.2f s  " +
+        f"full-recompute@${mult}x: $tFull%6.2f s  inc/full: ${tN / tFull}%5.2f (want ≪ 1)")
+      res.entries.update("clusters_inc_vs_full",
+        s"""{"inc_s":${JsonOut.num(tN, 3)},"full_s":${JsonOut.num(tFull, 3)},""" +
+          s""""inc_over_full":${JsonOut.num(tN / tFull, 2)},"baseline":"want<<1"}""")
     }
-    // standing embedding-LSH index probe (r5 verdict): same two
-    // claims as minhash_probe — fixed batch vs N× corpus ~flat (only
-    // the batch is signed; probe keys broadcast), N× batch ~linear.
-    // Index occupancy follows the bits rule of embedding_lsh above.
-    if (onlyNames.forall(_.contains("embedding_probe"))) {
-      val emb1 = Tables.table(spark, sfDir, "embeddings")
-        .select("vec_id", "embedding")
-      val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
-      val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
-      def split(d: DataFrame) = (
-        d.filter(pmod(col("vec_id"), lit(10)) =!= 3),
-        d.filter(pmod(col("vec_id"), lit(10)) === 3))
-      val (corpus1, batch1) = split(emb1)
-      val (corpusN, batchN) = split(embDN)
-      val idx1 = Dedup.embeddingIndex(corpus1, "vec_id", "embedding", 64, 4, 8, 42L)
-      val idxN = Dedup.embeddingIndex(corpusN, "vec_id", "embedding", 64, bitsN, 8, 42L)
-      def runProbe(idx: Dedup.EmbeddingLshIndex, b: DataFrame): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val r = Dedup.embeddingProbe(idx, b, "vec_id", "embedding", 0.4)
-        val n = r.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        r.unpersist(blocking = false)
-        (dt, n)
+
+    // continuous-dedup loops: one fixed operation (an ingest or a
+    // retraction) against a loop built outside the timer at 1× and at
+    // N× standing state. A fresh loop per timed run: the operation
+    // changes the loop's state.
+    def loopArm[L](name: String, baseline: String)(build: Int => L)(
+        op: L => DataFrame)(release: L => Unit): Unit = if (names.contains(name)) {
+      def time(scale: Int) = {
+        val loop = build(scale)
+        try timed(countOnce(op(loop))) finally release(loop)
       }
-      val batchFix = batchN.filter(col("vec_id") < 10000000L) // copy-0 slice
-      runProbe(idx1, batch1) // warm codegen
-      val (t1, n1) = runProbe(idx1, batch1)
-      val (tFix, nFix) = runProbe(idxN, batchFix)
-      val (tN, nN) = runProbe(idxN, batchN)
-      println(f"[scaleprobe] embedding_probe        1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"fixed-batch@${mult}x-corpus: $tFix%6.2f s ($nFix%8d rows)  ratio: ${tFix / t1}%5.1f (flat=1)")
-      println(f"[scaleprobe] embedding_probe        1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"${mult}x-batch@${mult}x-corpus: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (linear=$mult)")
-      idx1.release(); idxN.release()
-      record("embedding_probe_fixed_batch", t1, tFix, n1, nFix, "flat=1")
-      record("embedding_probe_scaled_batch", t1, tN, n1, nN, s"linear=$mult")
+      time(1) // warm codegen
+      val (t1, n1) = time(1)
+      val (tN, nN) = time(mult)
+      res.record(name, t1, tN, n1, nN, baseline)
     }
-    // continuous SemDeDup loop (r7): a FIXED batch ingested into a
-    // standing loop state built outside the timer at 1× and 10×.
-    // Ingest = idempotent append (id-projection anti-join) + probe
-    // (batch-signed, keys broadcast) + quotient CC (frontier-sized) +
-    // ONE remap join + the delta join — the corpus-sized work is the
-    // handful of label/index scans, so fixed-batch ingest should stay
-    // near-flat as the standing state grows 10×.
-    if (onlyNames.forall(_.contains("cluster_stream"))) {
-      val emb1 = Tables.table(spark, sfDir, "embeddings")
-        .select("vec_id", "embedding")
-      val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
-      val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
-      def mkLoop(corpus: DataFrame, bits: Int): graft.streaming.ClusterStream = {
-        val idx = Dedup.embeddingIndex(corpus, "vec_id", "embedding",
-          64, bits, 8, 42L)
-        val pairs = Dedup.embeddingPairsFromIndex(idx, 0.4)
-        val labels = Clusters.connectedComponents(pairs, "vec_a", "vec_b")
-        pairs.unpersist(blocking = false)
-        graft.streaming.ClusterStream(idx, labels, "vec_id", "embedding", 0.4)
-      }
-      val corpus1 = emb1.filter(pmod(col("vec_id"), lit(10)) =!= 3)
-      val corpusN = embDN.filter(pmod(col("vec_id"), lit(10)) =!= 3)
-      val batchFix = embDN.filter(pmod(col("vec_id"), lit(10)) === 3 &&
-        col("vec_id") < 10000000L)
-      def ingestTime(loop: graft.streaming.ClusterStream): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val d = loop.ingest(batchFix)
-        val n = d.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        d.unpersist(blocking = false)
-        (dt, n)
-      }
-      val warm = mkLoop(corpus1, 4); ingestTime(warm); warm.release() // codegen warm
-      val loop1 = mkLoop(corpus1, 4)
-      val (t1, n1) = ingestTime(loop1); loop1.release()
-      val loopN = mkLoop(corpusN, bitsN)
-      val (tN, nN) = ingestTime(loopN); loopN.release()
-      println(f"[scaleprobe] cluster_stream         1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"fixed-batch@${mult}x-state: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (flat=1)")
-      record("cluster_stream", t1, tN, n1, nN, "flat=1")
+    def embLoop(corpus: DataFrame, dim: Int, scale: Int): ClusterStream = {
+      val idx = Dedup.embeddingIndex(corpus, "vec_id", "embedding", dim, bitsAt(scale), 8, 42L)
+      val pairs = Dedup.embeddingPairsFromIndex(idx, 0.4)
+      val labels = Clusters.connectedComponents(pairs, "vec_a", "vec_b")
+      pairs.unpersist(blocking = false)
+      ClusterStream(idx, labels, "vec_id", "embedding", 0.4)
     }
-    // text-granularity continuous-dedup loop (r7): fixed batch
-    // ingested into a standing MinHash-backed loop at 1× and 10×
-    // standing state — same near-flat claim as cluster_stream.
-    if (onlyNames.forall(_.contains("text_cluster_stream"))) {
-      def mkLoop(corpus: DataFrame): graft.streaming.TextClusterStream = {
-        val idx = Dedup.minhashIndex(corpus, "doc_id", "text", 3, 64, 16)
-        val pairs = Dedup.minhashPairsFromIndex(idx, 0.5)
-        val labels = Clusters.connectedComponents(pairs, "doc_a", "doc_b")
-        // labels are checkpoint-materialized — release the persisted
-        // pairs before handing the loop out
-        val loop = graft.streaming.TextClusterStream(idx, labels, "doc_id", "text", 0.5)
-        pairs.unpersist(blocking = false)
-        loop
-      }
-      val corpus1 = docs1.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-      val corpusN = docsN.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-      val batchFix = docsN.filter(pmod(col("doc_id"), lit(10)) === 3 &&
-        col("doc_id") < 10000000L)
-      def ingestTime(loop: graft.streaming.TextClusterStream): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val d = loop.ingest(batchFix)
-        val n = d.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        d.unpersist(blocking = false)
-        (dt, n)
-      }
-      val warm = mkLoop(corpus1); ingestTime(warm); warm.release()
-      val loop1 = mkLoop(corpus1)
-      val (t1, n1) = ingestTime(loop1); loop1.release()
-      val loopN = mkLoop(corpusN)
-      val (tN, nN) = ingestTime(loopN); loopN.release()
-      println(f"[scaleprobe] text_cluster_stream    1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"fixed-batch@${mult}x-state: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (flat=1)")
-      record("text_cluster_stream", t1, tN, n1, nN, "flat=1")
+    def textLoop(corpus: DataFrame): TextClusterStream = {
+      val idx = Dedup.minhashIndex(corpus, "doc_id", "text", 3, 64, 16)
+      val pairs = Dedup.minhashPairsFromIndex(idx, 0.5)
+      val labels = Clusters.connectedComponents(pairs, "doc_a", "doc_b")
+      // labels are checkpoint-materialized — release the persisted
+      // pairs before handing the loop out
+      val loop = TextClusterStream(idx, labels, "doc_id", "text", 0.5)
+      pairs.unpersist(blocking = false)
+      loop
     }
-    // takedown retraction, FLAT contract (r17 — r16 verdict item 6):
-    // a FIXED victim set whose TOUCHED-CLUSTER MEMBERSHIP is held
-    // constant BY CONSTRUCTION at both scales, so the flat=1 claim
-    // can actually fail. An INJECTED VICTIM CLIQUE — 210 vectors
-    // near a common base direction, carrying a tag component of
-    // 3×‖w‖ on an extra 65th dimension the ambient corpus zero-pads —
-    // is unioned into both corpora once (not copied): by
-    // Cauchy-Schwarz, cos(ambient, clique) ≤ ‖w64‖/√(‖w64‖²+9‖w64‖²)
-    // = 1/√10 ≈ 0.316 < τ=0.4 WHATEVER the ambient norms or corpus
-    // scale, so no ambient vector can ever merge into the victims'
-    // cluster; within the clique cos ≈ 1 (near-identical + shared
-    // dominant tag), so it stays one cluster at any bits. Touched
-    // membership is therefore exactly the 210-row clique at 1× and
-    // N×, while the standing state scales honestly (sign-flip copies
-    // + the occupancy bits rule — the r17 first cut held bits FIXED
-    // for bit-identical bucketing and occupancy ∝ N blew candidate
-    // pairs up ∝ N²: OOM; recorded as a measured-and-declined
-    // construction). Residual linear terms the arm intentionally
-    // keeps: the index-retraction generation swap and the labeling
-    // rewrite (both ∝ state). The old all-ambient-victims arm stays
-    // below as the adversarial-GROWTH case (cross-copy merges
-    // inflate touched membership ∝ delta).
-    if (onlyNames.forall(_.contains("cluster_retract"))) {
-      val emb1 = Tables.table(spark, sfDir, "embeddings")
-        .select("vec_id", "embedding")
-      val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
-      val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
+    def at[T](scale: Int, one: T, many: T): T = if (scale == 1) one else many
+
+    // continuous SemDeDup loop: ingest = idempotent append + probe
+    // (batch-signed, keys broadcast) + quotient CC + ONE remap join +
+    // the delta join — the corpus-sized work is a handful of
+    // label/index scans, so fixed-batch ingest should stay near-flat
+    loopArm("cluster_stream", "flat=1")(s =>
+      embLoop(at(s, corpusOf(emb1, "vec_id"), corpusOf(embN, "vec_id")), 64, s))(
+      _.ingest(batchOf(emb1, "vec_id")))(_.release())
+    // the text-granularity loop over a standing MinHash index
+    loopArm("text_cluster_stream", "flat=1")(s =>
+      textLoop(at(s, corpusOf(docs1, "doc_id"), corpusOf(docsN, "doc_id"))))(
+      _.ingest(batchOf(docs1, "doc_id")))(_.release())
+
+    // takedown retraction, FLAT contract: a FIXED victim set whose
+    // touched-cluster membership is constant BY CONSTRUCTION at both
+    // scales, so the flat=1 claim can actually fail. An injected victim
+    // clique — 210 vectors near a common base direction, carrying a tag
+    // component of 3×‖w‖ on a 65th dimension the ambient corpus
+    // zero-pads — is unioned into both corpora once (not copied): by
+    // Cauchy-Schwarz, cos(ambient, clique) ≤ 1/√10 ≈ 0.316 < τ=0.4
+    // whatever the corpus scale, so no ambient vector merges into the
+    // victims' cluster; within the clique cos ≈ 1, so it stays one
+    // cluster at any bits. The residual linear terms are the
+    // index-retraction generation swap and the labeling rewrite (both
+    // ∝ state).
+    if (names.contains("cluster_retract")) {
       val cliqueRows = (0 until 210).map { i =>
         val w = Array.tabulate(64) { j =>
-          (math.sin(j * 1.7) * 0.5 +
-            ((i * 64L + j) * 2654435761L % 1000L) / 1000.0 * 0.01).toFloat
+          (math.sin(j * 1.7) * 0.5 + ((i * 64L + j) * 2654435761L % 1000L) / 1000.0 * 0.01).toFloat
         }
         val norm = math.sqrt(w.map(x => x.toDouble * x).sum)
         (900000000L + i, (w :+ (3.0 * norm).toFloat).toSeq)
       }
-      val clique = spark.createDataFrame(cliqueRows)
-        .toDF("vec_id", "embedding")
+      val clique = spark.createDataFrame(cliqueRows).toDF("vec_id", "embedding")
         .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
       def pad(d: DataFrame): DataFrame =
-        d.select(col("vec_id"),
-          concat(col("embedding"), array(lit(0.0f))).as("embedding"))
-      val corpus1 = pad(emb1).unionByName(clique)
-      val corpusN = pad(embDN).unionByName(clique)
-      def mkLoop(corpus: DataFrame, bits: Int): graft.streaming.ClusterStream = {
-        val idx = Dedup.embeddingIndex(corpus, "vec_id", "embedding",
-          65, bits, 8, 42L)
-        val pairs = Dedup.embeddingPairsFromIndex(idx, 0.4)
-        val labels = Clusters.connectedComponents(pairs, "vec_a", "vec_b")
-        pairs.unpersist(blocking = false)
-        graft.streaming.ClusterStream(idx, labels, "vec_id", "embedding", 0.4)
-      }
+        d.select(col("vec_id"), concat(col("embedding"), array(lit(0.0f))).as("embedding"))
+          .unionByName(clique)
       // fixed victims: the clique's first half — the second half is
       // the constant-size remaining membership that re-clusters
-      val victims = clique.filter(col("vec_id") < 900000105L)
-        .select("vec_id")
-      def retractTime(loop: graft.streaming.ClusterStream): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val d = loop.retract(victims)
-        val n = d.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        d.unpersist(blocking = false)
-        (dt, n)
-      }
-      val warm = mkLoop(corpus1, 4); retractTime(warm); warm.release()
-      val loop1 = mkLoop(corpus1, 4)
-      val (t1, n1) = retractTime(loop1); loop1.release()
-      val loopN = mkLoop(corpusN, bitsN)
-      val (tN, nN) = retractTime(loopN); loopN.release()
-      println(f"[scaleprobe] cluster_retract        1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"fixed-victims@${mult}x-state: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (flat=1)")
-      record("cluster_retract", t1, tN, n1, nN, "flat=1")
+      val victims = clique.filter(col("vec_id") < 900000105L).select("vec_id")
+      loopArm("cluster_retract", "flat=1")(s => embLoop(pad(at(s, emb1, embN)), 65, s))(
+        _.retract(victims))(_.release())
     }
-    // the ADVERSARIAL-GROWTH twin (the pre-r17 arm, relabeled): the
-    // sign-flip corpus lets statistically-rare cross-copy cosines
-    // cross tau at N×, so the fixed victims' touched membership — and
-    // therefore the emitted delta — GROWS with scale. Cost ∝ touched
-    // membership is the contract here (r16 §6 root cause), hence the
-    // membership∝delta baseline: expect the ratio to track nN/n1,
-    // not flat=1.
-    if (onlyNames.forall(_.contains("cluster_retract_growth"))) {
-      val emb1 = Tables.table(spark, sfDir, "embeddings")
-        .select("vec_id", "embedding")
-      val embDN = spark.read.parquet(s"$tmp/embeddings_lsh")
-      val bitsN = 4 + (math.log(mult.toDouble) / math.log(2.0)).round.toInt
-      def mkLoop(corpus: DataFrame, bits: Int): graft.streaming.ClusterStream = {
-        val idx = Dedup.embeddingIndex(corpus, "vec_id", "embedding",
-          64, bits, 8, 42L)
-        val pairs = Dedup.embeddingPairsFromIndex(idx, 0.4)
-        val labels = Clusters.connectedComponents(pairs, "vec_a", "vec_b")
-        pairs.unpersist(blocking = false)
-        graft.streaming.ClusterStream(idx, labels, "vec_id", "embedding", 0.4)
-      }
-      val victims = emb1.filter(pmod(col("vec_id"), lit(7)) === 0)
-        .select("vec_id")
-      def retractTime(loop: graft.streaming.ClusterStream): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val d = loop.retract(victims)
-        val n = d.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        d.unpersist(blocking = false)
-        (dt, n)
-      }
-      val warm = mkLoop(emb1, 4); retractTime(warm); warm.release()
-      val loop1 = mkLoop(emb1, 4)
-      val (t1, n1) = retractTime(loop1); loop1.release()
-      val loopN = mkLoop(embDN, bitsN)
-      val (tN, nN) = retractTime(loopN); loopN.release()
-      println(f"[scaleprobe] cluster_retract_growth 1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"fixed-victims@${mult}x-state: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (membership∝delta)")
-      record("cluster_retract_growth", t1, tN, n1, nN, "membership∝delta")
-    }
-    // text-granularity takedown (r7 verdict open item): the embedding
-    // retract probe showed cost ∝ touched membership; measure the
-    // MinHash-pair re-derivation path the same way — fixed victims
-    // against a 1× vs N× standing TextClusterStream. The sub-index
-    // pair re-derivation is semi-joined to the touched clusters'
-    // remaining members, so fixed-victim cost should stay near-flat.
-    if (onlyNames.forall(_.contains("text_cluster_retract"))) {
-      def mkLoop(corpus: DataFrame): graft.streaming.TextClusterStream = {
-        val idx = Dedup.minhashIndex(corpus, "doc_id", "text", 3, 64, 16)
-        val pairs = Dedup.minhashPairsFromIndex(idx, 0.5)
-        val labels = Clusters.connectedComponents(pairs, "doc_a", "doc_b")
-        val loop = graft.streaming.TextClusterStream(idx, labels, "doc_id", "text", 0.5)
-        pairs.unpersist(blocking = false)
-        loop
-      }
-      // fixed victims: copy-0 ids, mod-7 slice (present at both scales)
-      val victims = docs1.filter(pmod(col("doc_id"), lit(7)) === 0)
-        .select("doc_id")
-      def retractTime(loop: graft.streaming.TextClusterStream): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val d = loop.retract(victims)
-        val n = d.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        d.unpersist(blocking = false)
-        (dt, n)
-      }
-      val warm = mkLoop(docs1); retractTime(warm); warm.release()
-      val loop1 = mkLoop(docs1)
-      val (t1, n1) = retractTime(loop1); loop1.release()
-      val loopN = mkLoop(docsN)
-      val (tN, nN) = retractTime(loopN); loopN.release()
-      println(f"[scaleprobe] text_cluster_retract   1x: $t1%6.2f s ($n1%8d rows)  " +
-        f"fixed-victims@${mult}x-state: $tN%6.2f s ($nN%8d rows)  ratio: ${tN / t1}%5.1f (flat=1)")
-      record("text_cluster_retract", t1, tN, n1, nN, "flat=1")
-    }
-    // LM refresh (r8): a FIXED landed batch folded into a standing
-    // LmLoop whose frozen model was trained on 1× vs N× corpus.
-    // refresh() = trainLm(landed) + mergeLm (union→group-sum of the
-    // standing count tables) — cost ∝ batch + model-table sizes,
-    // never ∝ corpus. The suffixed N× corpus grows vocab ~N×, so the
-    // merge side is honestly N× bigger — the claim under test is that
-    // refresh stays FAR below the full retrain the merge replaces
-    // (also timed at N× for the comparison).
-    if (onlyNames.forall(_.contains("lm_refresh"))) {
-      import graft.streaming.{LmLoop, LmStream}
+    // the ADVERSARIAL-GROWTH twin: statistically-rare cross-copy
+    // cosines cross tau at N×, so the fixed victims' touched membership
+    // — and the emitted delta — GROWS with scale. Cost ∝ touched
+    // membership is the contract here: expect the ratio to track
+    // rowsN/rows1, not flat=1.
+    loopArm("cluster_retract_growth", "membership∝delta")(s => embLoop(at(s, emb1, embN), 64, s))(
+      _.retract(emb1.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id")))(_.release())
+    // text-granularity takedown: the sub-index pair re-derivation is
+    // semi-joined to the touched clusters' remaining members, so
+    // fixed-victim cost should stay near-flat
+    loopArm("text_cluster_retract", "flat=1")(s => textLoop(at(s, docs1, docsN)))(
+      _.retract(docs1.filter(pmod(col("doc_id"), lit(7)) === 0).select("doc_id")))(_.release())
+
+    // LM refresh: a FIXED landed batch folded into a standing LmLoop
+    // whose frozen model was trained on the 1× vs N× corpus. refresh()
+    // = trainLm(landed) + mergeLm (union→group-sum of the standing
+    // count tables) — cost ∝ batch + model-table sizes, never ∝ corpus.
+    // The relabeled N× corpus grows vocab ~N×, so the merge side is
+    // honestly N× bigger; the claim under test is that refresh stays
+    // FAR below the full retrain it replaces (also timed at N×).
+    if (names.contains("lm_refresh")) {
       val toks = Text.tokens(col("text"))
-      val corpus1 = docs1.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-      val corpusN = docsN.filter(pmod(col("doc_id"), lit(10)) =!= 3)
-      val batchFix = docsN.filter(pmod(col("doc_id"), lit(10)) === 3 &&
-        col("doc_id") < 10000000L)
-      def refreshTime(corpus: DataFrame): Double = {
+      val batch = batchOf(docs1, "doc_id")
+      def refresh(corpus: DataFrame): Double = {
         val loop = new LmLoop(LmStream.trainLm(corpus, "doc_id", toks), 0.9)
-        val scored = loop.ingest(0L, batchFix)
-        scored.unpersist(blocking = false)
-        val t0 = System.nanoTime()
-        loop.refresh()
-        val dt = (System.nanoTime() - t0) / 1e9
+        loop.ingest(0L, batch).unpersist(blocking = false)
+        val (dt, _) = timed { loop.refresh(); 0L }
         loop.release()
         dt
       }
-      refreshTime(corpus1) // warm
-      val t1 = refreshTime(corpus1)
-      val tN = refreshTime(corpusN)
-      // the alternative refresh() replaces: full retrain at N×
-      val tr0 = System.nanoTime()
-      val full = LmStream.trainLm(corpusN.unionByName(batchFix), "doc_id", toks)
-      val tRetrain = (System.nanoTime() - tr0) / 1e9
-      full.release()
-      println(f"[scaleprobe] lm_refresh             1x: $t1%6.2f s  " +
-        f"fixed-batch@${mult}x-state: $tN%6.2f s  ratio: ${tN / t1}%5.1f  " +
-        f"(full ${mult}x retrain: $tRetrain%6.2f s, refresh wins ${tRetrain / tN}%4.1fx)")
-      record("lm_refresh", t1, tN, -1L, -1L, "flat=1")
-      results.update("lm_refresh_vs_retrain",
+      refresh(corpusOf(docs1, "doc_id")) // warm
+      val t1 = refresh(corpusOf(docs1, "doc_id"))
+      val tN = refresh(corpusOf(docsN, "doc_id"))
+      val (tRetrain, _) = timed {
+        LmStream.trainLm(corpusOf(docsN, "doc_id").unionByName(batch), "doc_id", toks).release(); 0L
+      }
+      res.record("lm_refresh", t1, tN, -1L, -1L, "flat=1")
+      println(f"[scaleprobe] lm_refresh_vs_retrain full ${mult}x retrain: $tRetrain%6.2f s, " +
+        f"refresh wins ${tRetrain / tN}%4.1fx")
+      res.entries.update("lm_refresh_vs_retrain",
         s"""{"refresh_s":${JsonOut.num(tN, 3)},"retrain_s":${JsonOut.num(tRetrain, 3)},""" +
           s""""refresh_wins":${JsonOut.num(tRetrain / tN, 1)},"baseline":"want>>1"}""")
     }
-    // composite IVF-PQ (r5 verdict): fixed 64-query batch, corpus 1×
-    // vs N×. With nlists FIXED the ADC scan within probed lists is ∝
-    // corpus → expect ≈ linear (the 100 TB win is the 16-byte-code
-    // constant factor + the nlists tunable: production scales nlists
-    // ~√N to hold per-list occupancy, same knob as embedding_lsh's
-    // bits rule).
-    locally {
-      val emb1 = Tables.table(spark, sfDir, "embeddings")
-        .select("vec_id", "embedding")
-      val embN = spark.read.parquet(s"$tmp/embeddings")
-      val queries = emb1.orderBy("vec_id").limit(64)
-      probe("ivfpq_topk") {
-        Similarity.ivfPqTopK(emb1, queries, "vec_id", "embedding",
-          16, 4, 8, 16, 10).count()
-      } {
-        Similarity.ivfPqTopK(embN, queries, "vec_id", "embedding",
-          16, 4, 8, 16, 10).count()
-      }
-    }
-    // r10 additions: perplexity triage = the interp-LM passes + one
-    // 2-scalar percentile agg + a broadcast CASE (expect ≈ the
-    // interp_lm probe's shape); SQ8 = one per-dim min/max agg + a
-    // codegen'd quantize/dequantize scan × a fixed broadcast query
-    // set (expect ≈ linear like the other ann scans)
-    // containment shares the jaccard operator's machinery wholesale —
-    // expect the same at-or-below-linear band
-    probe("dedup_containment") {
-      Dedup.containmentPairs(docs1, "doc_id", "text", 3, 0.8).count()
-    } {
-      Dedup.containmentPairs(docsN, "doc_id", "text", 3, 0.8).count()
-    }
-    probe("quality_perplexity", distributed = true) {
-      // caller-owned result cache (r17): count, then release — an
-      // un-unpersisted corpus-scale cache would leak into every
-      // subsequent probe arm's memory budget for the rest of the run
-      val r1 = Curation.perplexityBuckets(docs1, "doc_id",
-        Text.tokens(col("text")), 0.8)
-      try r1.count() finally r1.unpersist(blocking = false)
-    } {
-      val rN = Curation.perplexityBuckets(docsN, "doc_id",
-        Text.tokens(col("text")), 0.8)
-      try rN.count() finally rN.unpersist(blocking = false)
-    }
-    locally {
-      val emb1 = Tables.table(spark, sfDir, "embeddings")
-        .select("vec_id", "embedding")
-      val embN = spark.read.parquet(s"$tmp/embeddings")
-      val queries = emb1.orderBy("vec_id").limit(8)
-      probe("sq8_topk") {
-        Similarity.sq8TopK(emb1, queries, "vec_id", "embedding", 5).count()
-      } {
-        Similarity.sq8TopK(embN, queries, "vec_id", "embedding", 5).count()
-      }
-    }
-    // the CAPSTONE composition (r10 — r9 verdict item 7): every stage
-    // is probed individually above/elsewhere, this probes the WIRED
-    // funnel — pair-join+CC once, then scans/broadcast-probes over the
-    // shrinking survivor set with persisted boundaries. Expect ≤
-    // linear: the one super-linear-risk stage (the dedup pair join)
-    // is LSH/inverted-index-bucketed, and every downstream stage is a
-    // scan or a #strata-row aggregate.
-    locally {
-      def curate(docs: DataFrame): Long = {
-        val d = docs.select(col("doc_id"), col("text"),
-          concat(lit("l"), pmod(col("doc_id"), lit(3))).as("lang"),
-          concat(lit("src"), pmod(col("doc_id"), lit(4))).as("source"),
-          length(col("text")).cast("long").as("n_chars"))
-        val c = graft.operators.CuratePipeline.curate(
-          d, "doc_id", "text", "lang", "source", col("n_chars"),
-          benchSources = Seq("src0"), shingleK = 3, tau = 0.6,
-          minWords = 10, maxWords = 50000, minSentences = 0,
-          bias = -2.0, wLogTokens = 0.6, wStopDev = -6.0,
-          wTokenLen = 0.1, wPunct = -4.0,
-          maxTopTokenRatio = 0.12, maxDupTrigramRatio = 0.05,
-          deconN = 5, bloomBits = 1 << 22, bloomHashes = 3,
-          langShares = Map("l0" -> 0.4, "l1" -> 0.35), defaultRate = 0.6,
-          epochShares = Map("src1" -> 0.5, "src2" -> 0.3),
-          budgetFactor = 1.0, maxEpochs = 4.0,
-          nShards = 8, packBudget = 2048)
-        try c.packed.count() finally c.release()
-      }
-      probe("pipeline_curate") { curate(docs1) } { curate(docsN) }
-    }
+  }
+
+  /** The 1-minute load average, as Bench samples it. */
+  private def loadAvg(): Double =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+").head.toDouble
+    catch { case _: Exception => -1.0 }
+
+  def main(args: Array[String]): Unit = {
+    val mult = args.headOption.map(_.toInt).getOrElse(10)
+    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val only = args.lift(2).map(_.split(",").toSeq)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // overridable so concurrent probes don't clobber each other's corpora
+    val tmp = sys.env.getOrElse("SCALEPROBE_DIR", "/tmp/graft_scaleprobe")
+    val spark = graft.Sessions.build(cpus, appName = "graft-scaleprobe")
+    val load0 = loadAvg()
+    val res = run(spark, mult, sfDir, tmp, only)
+    val load1 = loadAvg()
     sys.env.get("SCALEPROBE_OUT").foreach { path =>
-      val body = results.map { case (k, v) => JsonOut.str(k) + ":" + v }
+      val body = res.entries.map { case (k, v) => JsonOut.str(k) + ":" + v }
         .mkString(
-          s"""{"mult":$mult,"sf_dir":${JsonOut.str(sfDir)},"corpus":"per-copy token-suffix perturbed replicas (cross-copy similarity zero; true answer linear)","queries":{""",
+          s"""{"mult":$mult,"sf_dir":${JsonOut.str(sfDir)},""" +
+            s""""nproc":${Runtime.getRuntime.availableProcessors},"cpus":$cpus,""" +
+            s""""load_avg_start":${JsonOut.num(load0, 2)},"load_avg_end":${JsonOut.num(load1, 2)},""" +
+            s""""corpus":"writeCopies: copy 0 verbatim; copies k>=1 offset BIGINT *key/*_id columns by k*$Stride, prefix each text token with a fixed-width copy code, and sign-flip embeddings per copy; nation and region once (cross-copy similarity zero; true answer linear)",""" +
+            s""""queries":{""",
           ",", "}}")
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
