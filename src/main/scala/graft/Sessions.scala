@@ -41,21 +41,21 @@ object Sessions {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // Bound plan stringification (r20). Every SQL execution start
+      // Bound the STORED plan string (r20). Every SQL execution start
       // and every AQE stage materialization posts a listener event
-      // carrying qe.explainString — and a plan over NESTED cached
-      // boundaries (the curate funnel: each stage references its
-      // cached input twice, and InMemoryRelation PRINTS its whole
-      // cached child plan at every occurrence) expands exponentially
-      // when stringified even though execution dedupes through the
-      // cache: pipeline_report's plan printed 6-11 MB, ~0.2-0.5 s
-      // PER EVENT of pure driver string-building for a UI that is
-      // disabled (r20: report count 1.9-2.3 s → 1.3 s with the cap,
-      // OPTIMIZATION_r20.md §5 — the driver should do almost no data
-      // work, and a discarded 10 MB string is data work). 64 KB
-      // keeps event payloads humanly readable and bounds the cost at
-      // ANY scale; tools that need the full text (graft.tools.Explain
-      // plan capture) raise the limit per session at runtime.
+      // carrying qe.explainString; 64 KB keeps those payloads humanly
+      // readable (r20: report count 1.9-2.3 s → 1.3 s with the cap,
+      // OPTIMIZATION_r20.md §5). The cap does NOT bound the
+      // traversal: StringConcat still stringifies every node and only
+      // drops the text past the limit, so a plan that nests cached
+      // plans (InMemoryRelation prints its whole cached child at
+      // every occurrence) still costs its full, possibly exponential,
+      // size per event. The fix for that is a small tree: the curate
+      // funnel reads its cached stage boundaries through plan leaves
+      // (CuratePipeline, ColumnBridge.leaf), which took
+      // pipeline_report's formatted plan from 6.3 MB to 9 KB. Tools
+      // that need the full text (graft.tools.Explain plan capture,
+      // PlanCost) raise the limit per session at runtime.
       .config("spark.sql.maxPlanStringLength", (64 * 1024).toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // bucketed tables (Tables.writeBucketed) need a catalog home;

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Text
@@ -30,8 +31,8 @@ import graft.functions.Text
   * object only wires survivor sets through, so the composed oracle is
   * the component oracles' CTEs nested in sequence. The reference
   * pipeline ships its stages as separate Airflow tasks
-  * (main_dag.py:16-47 task graph); here the whole funnel is ONE
-  * declarative plan per output.
+  * (main_dag.py:16-47 task graph); here each stage reads the
+  * previous stage's cached boundary through a plan leaf (below).
   *
   * Scale shape: the expensive stage (shingle pair-join + CC) runs
   * once; downstream gates are per-doc scans or broadcast probes over
@@ -41,14 +42,33 @@ import graft.functions.Text
   * persisted MEMORY_AND_DISK — the in-session stand-in for the
   * intermediate tables a 100 TB run would checkpoint between stages.
   * Callers own the lifecycle via [[Curated.release]].
+  *
+  * Each boundary is READ through a plan leaf
+  * ([[org.apache.spark.sql.graft.ColumnBridge.leaf]]), as each
+  * reference task reads its predecessor's landed table rather than
+  * its lineage. Downstream frames that kept the whole upstream plan
+  * grew exponentially (d2 reads d1 twice, d3 reads d2 twice, …):
+  * pipeline_report's formatted plan was 6.3 MB, re-analyzed on every
+  * DataFrame call and re-printed at every AQE event, and
+  * `spark.sql.maxPlanStringLength` only truncates the stored string
+  * after the whole tree has been stringified. Behind a leaf every
+  * plan is a few KB. The leaf's RDD is the persisted frame's own
+  * executed plan, so it reads the cache (`InMemoryTableScanExec`), a
+  * lost cache block is recomputed from source (persist, not
+  * checkpoint), and stats/partitioning carry over. Building a leaf
+  * runs that boundary's upstream jobs at build time, not at the
+  * first action.
   */
 object CuratePipeline {
 
   /** Stage outputs of one curation run. `packed` is the shipping
     * artifact: one row per (doc copy) with its shard, within-shard
-    * position and pack id. `report` is the one-row funnel. All
-    * frames are lazy; `release()` drops the cached stage
-    * boundaries once the caller has materialized what it needs. */
+    * position and pack id. `report` is the one-row funnel. The
+    * boundary frames (deduped, quality, deconned, mixed, packed) are
+    * leaves over the persisted frames in `cached`, so their own
+    * `storageLevel` is always NONE; `release()` drops the cached
+    * stage boundaries once the caller has materialized what it
+    * needs. */
   final case class Curated(
       deduped: DataFrame,
       quality: DataFrame,
@@ -57,15 +77,15 @@ object CuratePipeline {
       epochs: DataFrame,
       packed: DataFrame,
       report: DataFrame,
-      private val cached: Seq[DataFrame]) {
+      private[graft] val cached: Seq[DataFrame]) {
     def release(): Unit = cached.foreach(_.unpersist())
 
     /** True while every persisted stage boundary is still registered
       * with the cache manager. A harness-side `clearCache()` (the
       * Verify/Bench isolation step) deregisters them behind our back;
       * a memoizing caller must treat such an instance as STALE —
-      * reusing it would recompute the dedup subtree once per
-      * downstream reference instead of once total. */
+      * its leaves would recompute each boundary from lineage at
+      * every read instead of reading the cache. */
     def isLive: Boolean = cached.forall(
       _.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
   }
@@ -88,7 +108,6 @@ object CuratePipeline {
       epochShares: Map[String, Double], budgetFactor: Double,
       maxEpochs: Double,
       nShards: Int, packBudget: Int,
-      persistStages: Boolean = true,
       deconIndex: Option[DeconIndex.DeconIndex] = None): Curated = {
     // copies are folded into a synthetic unique id (uid = doc_id *
     // stride + copy) so downstream orderings stay total; the stride
@@ -97,9 +116,17 @@ object CuratePipeline {
     val uidStride = 16
     require(maxEpochs + 1 <= uidStride,
       s"maxEpochs $maxEpochs too large for uid stride $uidStride")
+    // checked before any boundary is built: a leaf runs its upstream
+    // jobs at build time
+    deconIndex.foreach(ix => require(ix.n == deconN,
+      s"standing decon index shingle width ${ix.n} != pipeline deconN $deconN"))
 
-    def stage(df: DataFrame): DataFrame =
-      if (persistStages) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+    val cached = Seq.newBuilder[DataFrame]
+    def stage(df: DataFrame): DataFrame = {
+      val persisted = df.persist(StorageLevel.MEMORY_AND_DISK)
+      cached += persisted
+      ColumnBridge.leaf(persisted)
+    }
 
     // 1. near-dup removal: keep each cluster's min-id representative
     val drop = Clusters.connectedComponents(
@@ -107,7 +134,11 @@ object CuratePipeline {
         "doc_a", "doc_b")
       .filter(col("node") =!= col("cluster_id"))
       .select(col("node").as("__drop"))
-    val d1raw = docs.join(drop, docs(idCol) === col("__drop"), "left_anti")
+    // a leaf too: the partition count below then comes off the RDD
+    // the boundary caches, so the anti-join runs once, not once for
+    // the count and again for the cache
+    val d1raw = ColumnBridge.leaf(
+      docs.join(drop, docs(idCol) === col("__drop"), "left_anti"))
     // the dedup boundary feeds EVERY downstream per-doc text pass
     // (quality features, decon shingle flags, mixture weights, token
     // counts) — CPU-heavy work per byte. A broadcast anti-join adds
@@ -149,8 +180,6 @@ object CuratePipeline {
     // spec-proven), which is why the oracle needs no second form
     val flaggedIds = (deconIndex match {
       case Some(ix) =>
-        require(ix.n == deconN,
-          s"standing decon index shingle width ${ix.n} != pipeline deconN $deconN")
         DeconIndex.deconBloomFromIndex(ix, corpus2, idCol, textCol,
           bloomBits, bloomHashes)
       case None => Curation.contaminationFlagsBloom(
@@ -225,7 +254,6 @@ object CuratePipeline {
       countDistinct(col("shard"), col("pack_id")).as("n_packs"),
       sum(col("__nt")).as("n_tokens"))
 
-    Curated(d1, d2, d3, d4, ep, packed, report,
-      cached = if (persistStages) Seq(d1, d2, d3, d4, packed) else Nil)
+    Curated(d1, d2, d3, d4, ep, packed, report, cached.result())
   }
 }

@@ -53,6 +53,22 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Read a (persisted) frame through a plan LEAF: the
+    * `LogicalRDD` that `Dataset.checkpoint` builds, minus the
+    * checkpoint. The leaf's RDD is the frame's own executed plan, so a
+    * persisted frame is read through its `InMemoryTableScanExec` and
+    * a lost cache block is recomputed from source (lineage intact);
+    * stats, partitioning and ordering carry over from `df`, and the
+    * leaf prints as one `Scan ExistingRDD` line instead of re-printing
+    * `df`'s whole plan. Building the RDD runs `df`'s upstream AQE
+    * stages now, not at the first action. */
+  def leaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(
+        ds.queryExecution.toRdd, ds, isStreaming = false))
+  }
+
   /** Append a planner strategy to a LIVE session (idempotent). */
   def addStrategy(spark: org.apache.spark.sql.SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {

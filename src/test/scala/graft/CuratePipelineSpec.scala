@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExplainMode, LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
-import graft.operators.{CuratePipeline, Curation, Clusters, Dedup}
+import org.apache.spark.storage.StorageLevel
+import graft.operators.{CuratePipeline, Curation, Clusters, Dedup, DeconIndex}
 
 /** The end-to-end curation capstone: the composed funnel must agree
   * stage-for-stage with the standalone gated operators it wires
@@ -10,19 +15,30 @@ class CuratePipelineSpec extends SparkSpec {
 
   private lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
-  private lazy val cur = CuratePipeline.curate(
-    docs, "doc_id", "text", "lang", "source", col("n_chars"),
-    benchSources = Seq("src0", "src1"),
-    shingleK = 3, tau = 0.6,
-    minWords = 10, maxWords = 50000, minSentences = 0,
-    bias = -2.0, wLogTokens = 0.6, wStopDev = -6.0,
-    wTokenLen = 0.1, wPunct = -4.0,
-    maxTopTokenRatio = 0.12, maxDupTrigramRatio = 0.05,
-    deconN = 5, bloomBits = 1 << 22, bloomHashes = 3,
-    langShares = Map("en" -> 0.25, "de" -> 0.35), defaultRate = 0.6,
-    epochShares = Map("src0" -> 0.3, "src1" -> 0.2, "src2" -> 0.05),
-    budgetFactor = 1.0, maxEpochs = 4.0,
-    nShards = 8, packBudget = 2048)
+  private def curate(deconN: Int = 5,
+      deconIndex: Option[DeconIndex.DeconIndex] = None) =
+    CuratePipeline.curate(
+      docs, "doc_id", "text", "lang", "source", col("n_chars"),
+      benchSources = Seq("src0", "src1"),
+      shingleK = 3, tau = 0.6,
+      minWords = 10, maxWords = 50000, minSentences = 0,
+      bias = -2.0, wLogTokens = 0.6, wStopDev = -6.0,
+      wTokenLen = 0.1, wPunct = -4.0,
+      maxTopTokenRatio = 0.12, maxDupTrigramRatio = 0.05,
+      deconN = deconN, bloomBits = 1 << 22, bloomHashes = 3,
+      langShares = Map("en" -> 0.25, "de" -> 0.35), defaultRate = 0.6,
+      epochShares = Map("src0" -> 0.3, "src1" -> 0.2, "src2" -> 0.05),
+      budgetFactor = 1.0, maxEpochs = 4.0,
+      nShards = 8, packBudget = 2048,
+      deconIndex = deconIndex)
+
+  private lazy val cur = curate()
+
+  /** The boundary leaves, in the order of their persisted frames. */
+  private def leaves(c: CuratePipeline.Curated) =
+    Seq(c.deduped, c.quality, c.deconned, c.mixed, c.packed)
+
+  private def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
 
   private lazy val report = cur.report.collect().head
 
@@ -125,42 +141,15 @@ class CuratePipelineSpec extends SparkSpec {
     // deconIndexWrite land-time path); the pipeline then re-aggregates
     // its Bloom from stored hashes instead of re-shingling benchmark
     // text — identical packed output and funnel report
-    val ix = graft.operators.DeconIndex.deconIndexBuild(
+    val ix = DeconIndex.deconIndexBuild(
       docs.filter(col("source").isin("src0", "src1")), "doc_id", "text", 5)
-    val viaIndex = CuratePipeline.curate(
-      docs, "doc_id", "text", "lang", "source", col("n_chars"),
-      benchSources = Seq("src0", "src1"),
-      shingleK = 3, tau = 0.6,
-      minWords = 10, maxWords = 50000, minSentences = 0,
-      bias = -2.0, wLogTokens = 0.6, wStopDev = -6.0,
-      wTokenLen = 0.1, wPunct = -4.0,
-      maxTopTokenRatio = 0.12, maxDupTrigramRatio = 0.05,
-      deconN = 5, bloomBits = 1 << 22, bloomHashes = 3,
-      langShares = Map("en" -> 0.25, "de" -> 0.35), defaultRate = 0.6,
-      epochShares = Map("src0" -> 0.3, "src1" -> 0.2, "src2" -> 0.05),
-      budgetFactor = 1.0, maxEpochs = 4.0,
-      nShards = 8, packBudget = 2048,
-      deconIndex = Some(ix))
+    val viaIndex = curate(deconIndex = Some(ix))
     try {
-      val a = viaIndex.packed.collect().map(_.toString).sorted.toSeq
-      val b = cur.packed.collect().map(_.toString).sorted.toSeq
-      assert(a === b, "index-backed decon must be flag-identical")
+      assert(rows(viaIndex.packed) === rows(cur.packed),
+        "index-backed decon must be flag-identical")
       // a width-mismatched index must refuse, not silently no-match
       intercept[IllegalArgumentException] {
-        CuratePipeline.curate(
-          docs, "doc_id", "text", "lang", "source", col("n_chars"),
-          benchSources = Seq("src0", "src1"),
-          shingleK = 3, tau = 0.6,
-          minWords = 10, maxWords = 50000, minSentences = 0,
-          bias = -2.0, wLogTokens = 0.6, wStopDev = -6.0,
-          wTokenLen = 0.1, wPunct = -4.0,
-          maxTopTokenRatio = 0.12, maxDupTrigramRatio = 0.05,
-          deconN = 7, bloomBits = 1 << 22, bloomHashes = 3,
-          langShares = Map("en" -> 0.25), defaultRate = 0.6,
-          epochShares = Map("src2" -> 0.05),
-          budgetFactor = 1.0, maxEpochs = 4.0,
-          nShards = 8, packBudget = 2048,
-          deconIndex = Some(ix))
+        curate(deconN = 7, deconIndex = Some(ix))
       }
     } finally {
       viaIndex.release()
@@ -168,12 +157,60 @@ class CuratePipelineSpec extends SparkSpec {
     }
   }
 
+  test("stage boundaries are leaves: no plan re-prints its upstream") {
+    // the session's 64 KB cap lifted, so the full text is measured
+    val key = "spark.sql.maxPlanStringLength"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, (1 << 28).toString)
+    try {
+      for ((name, df) <- Seq("report" -> cur.report, "packed" -> cur.packed)) {
+        val n = df.queryExecution
+          .explainString(ExplainMode.fromString("formatted")).length
+        assert(n < 64 * 1024, s"$name's formatted plan is $n chars")
+      }
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("each leaf reads its boundary's cache") {
+    def scans(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case s: InMemoryTableScanExec => Seq(s)
+      case other => other.children.flatMap(scans)
+    }
+    assert(cur.cached.size === 5)
+    cur.cached.foreach { df =>
+      assert(scans(df.queryExecution.executedPlan).nonEmpty,
+        "a boundary leaf must read the persisted frame, not recompute it")
+    }
+  }
+
+  test("a leaf carries its boundary's size estimate") {
+    leaves(cur).zip(cur.cached).foreach { case (leaf, origin) =>
+      assert(leaf.queryExecution.optimizedPlan.stats.sizeInBytes ===
+        origin.queryExecution.optimizedPlan.stats.sizeInBytes)
+    }
+  }
+
+  test("a leaf keeps its lineage: released and lost blocks recompute") {
+    val c = curate()
+    val before = leaves(c).map(rows)
+    c.release()
+    // lose every block the leaves' own RDDs hold, as when the
+    // executor that stored them dies: a checkpoint-backed leaf has
+    // nothing left to read, a lineage-backed one recomputes
+    leaves(c).foreach(_.queryExecution.analyzed.collectLeaves().foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = true)
+      case _ =>
+    })
+    assert(leaves(c).map(rows) === before)
+  }
+
   test("release unpersists the stage caches") {
+    assert(cur.isLive)
     cur.release()
-    // the released frames must no longer hold storage
-    assert(cur.deduped.storageLevel ===
-      org.apache.spark.storage.StorageLevel.NONE)
-    assert(cur.mixed.storageLevel ===
-      org.apache.spark.storage.StorageLevel.NONE)
+    assert(!cur.isLive)
+    assert(cur.cached.nonEmpty)
+    assert(cur.cached.forall(_.storageLevel === StorageLevel.NONE))
   }
 }
