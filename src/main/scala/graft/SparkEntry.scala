@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Clusters, Curation, Dedup, Events, Pipeline, Profile, Relational, Similarity}
+import graft.operators.{Boundary, Clusters, Curation, Dedup, Events, Pipeline, Profile, Relational, Similarity}
 import graft.functions.Text
 import graft.sources.Tables
 
@@ -443,14 +443,11 @@ object SparkEntry {
       // truth AND the MinHash candidates from the cache (r20, guide
       // §1.2: the standalone operators each paid their own
       // scan+shingle pass; outputs are expression-identical, so the
-      // declared results don't change). Both FromIndex forms persist+
-      // materialize their pair results before returning, so the
-      // corpus-sized index is releasable here and the final agg runs
-      // over the small cached pair frames.
+      // declared results don't change). Both FromIndex forms return
+      // filled boundaries, so the corpus-sized index is releasable
+      // here and the final agg runs over the small cached pair frames.
       val cap = Dedup.autoCap(d)
-      val sh = Dedup.shingleIndexOf(d, "doc_id", "text", k = 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sh.count()
+      val sh = Boundary.stage(Dedup.shingleIndexOf(d, "doc_id", "text", k = 3))
       // NOTE (r20): submitting the two pipelines from two driver
       // threads (guide §2.6 back-fill) was A/B'd and measured WORSE —
       // 2.65-3.47 s wall / 4.9-7.3 s Σ executor run vs 2.40-2.47 s /
@@ -462,7 +459,7 @@ object SparkEntry {
       val cand = Dedup.minhashLshPairsFromShingles(sh,
           perms = 64, bands = 16, tau = 0.5)
         .select("doc_a", "doc_b")
-      sh.unpersist(blocking = false)
+      Boundary.release(sh)
       val hit = truth.join(cand, Seq("doc_a", "doc_b"), "left_semi")
       // ONE aggregate over a tagged union of the three (cached/
       // derived) pair sets, not three crossJoined 1-row aggregates
@@ -1984,9 +1981,10 @@ object SparkEntry {
     * — the fact table is shuffled ONCE on the set key instead of
     * three times (distinct + both join sides), the formulation the
     * repo measured 1.75× faster at 10× (SURVEY §6). The pair frame
-    * is persisted for the two passes (quantile, then filter);
+    * is staged for the two passes (quantile, then filter);
     * per-pair counts are identical to the self-join's by
-    * construction, so both gates' hashes are unchanged. */
+    * construction, so both gates' hashes are unchanged. The
+    * thresholded edge frame is returned as a filled boundary. */
   private[graft] def hotSupplierGraph(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.expr.NativeFunctions.sorted_pairs
     // pre-repartition on the set key so the exchange carries raw
@@ -1994,23 +1992,22 @@ object SparkEntry {
     // stage — the Pipeline.pairCounts r15 finding (partial agg buys
     // nothing on ~unique set keys; its second hash-map build is real
     // cost), applied to the same-shape derivation here
-    val pc = t(s, dir, "lineitem")
+    val pc = Boundary.stage(t(s, dir, "lineitem")
       .repartition(col("l_orderkey"))
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_suppkey"))).as("__ms"))
       .select(explode(sorted_pairs(col("__ms"))).as("__p"))
       .groupBy(col("__p.a").as("sa"), col("__p.b").as("sb"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("c")))
     val thr = pc.agg(expr("percentile(c, 0.95)")).collect()(0).getDouble(0)
-    // materialize the (small) thresholded edge frame WHILE pc is
-    // still cached — unpersisting first would hand the consumer a
-    // lazy filter whose whole pair derivation recomputes (the r13
-    // review catch); the eager localCheckpoint also truncates
-    // lineage, so census/LPA never re-reach the fact table
-    val out = pc.filter(col("c") >= lit(thr)).select(col("sa"), col("sb"))
-      .localCheckpoint(true)
-    pc.unpersist(blocking = false)
+    // fill the (small) thresholded edge frame WHILE pc is still
+    // cached — releasing first would hand the consumer a lazy filter
+    // whose whole pair derivation recomputes (the r13 review catch);
+    // census/LPA then read the edge cache, and a lost block
+    // recomputes from lineage instead of failing the query
+    val out = Boundary.stage(
+      pc.filter(col("c") >= lit(thr)).select(col("sa"), col("sb")))
+    Boundary.release(pc)
     out
   }
 
@@ -2087,14 +2084,13 @@ object SparkEntry {
     incStateMemo.computeIfAbsent((s, dir), _ => {
       val allPairs = Dedup.ngramJaccardPairs(
           t(s, dir, "documents"), "doc_id", "text", k = 3, tau = 0.6)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val newA = pmod(col("doc_a"), lit(10)) === 3
       val newB = pmod(col("doc_b"), lit(10)) === 3
       val labels = Clusters.connectedComponents(
           allPairs.filter(!newA && !newB), "doc_a", "doc_b")
         .localCheckpoint(true)
       val newEdges = allPairs.filter(newA || newB).localCheckpoint(true)
-      allPairs.unpersist(blocking = false)
+      Boundary.release(allPairs)
       (labels, newEdges)
     })
   }

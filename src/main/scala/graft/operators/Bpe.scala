@@ -14,7 +14,7 @@ import graft.functions.expr.NativeFunctions
   * the vocab), each merge round is ONE adjacent-pair aggregation
   * (map-side combined; ties break (count desc, lhs, rhs) — fully
   * deterministic), and the learned rules are bounded driver state
-  * like k-means centroids. The vocab is re-persisted per round with
+  * like k-means centroids. The vocab is re-staged per round with
   * the previous generation released, so plan depth and cache both
   * stay O(1) in the round count.
   *
@@ -87,9 +87,7 @@ object Bpe {
   def train(docs: DataFrame, textCol: String, nMerges: Int,
       minFreq: Long = 1L): Model = {
     require(nMerges > 0, s"nMerges $nMerges must be positive")
-    val base = vocabOf(docs, textCol)
-      .filter(col("freq") >= minFreq)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = Boundary.stage(vocabOf(docs, textCol).filter(col("freq") >= minFreq))
     try {
       if (Tier.allows(docs.sparkSession, Tier.Model)(
           base.count() <= LocalVocabThreshold)) {
@@ -97,22 +95,20 @@ object Bpe {
           (graft.functions.expr.BpeOps.codepointSyms(r.getString(0)), r.getLong(1)))
         trainLocal(words, nMerges)
       } else trainDistributed(base, nMerges)
-    } finally base.unpersist(blocking = false)
+    } finally Boundary.release(base)
   }
 
   /** The distributed merge loop — one adjacent-pair aggregation +
-    * vocab re-persist per round over the (w, freq) frame. */
+    * vocab re-stage per round over the (w, freq) frame. */
   private def trainDistributed(base: DataFrame, nMerges: Int): Model = {
-    var vocab = base
+    var vocab = Boundary.stage(base
       .select(NativeFunctions.bpe_encode(col("w"), Seq.empty).as("syms"),
-        col("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    vocab.count()
+        col("freq")))
     // base is read exactly once (the symbolized vocab above) —
     // release it NOW rather than after all rounds, so the loop holds
-    // one vocab-sized cache, not two (train's finally re-unpersist
+    // one vocab-sized cache, not two (train's finally re-release
     // is a no-op)
-    base.unpersist(blocking = false)
+    Boundary.release(base)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var round = 0
     var exhausted = false
@@ -132,17 +128,15 @@ object Bpe {
         val r = top(0)
         val (lhs, rhs) = (r.getString(0), r.getString(1))
         merges += Merge(round + 1, lhs, rhs, r.getLong(2))
-        val next = vocab
+        val next = Boundary.stage(vocab
           .select(NativeFunctions.bpe_merge_step(col("syms"), lhs, rhs).as("syms"),
-            col("freq"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        vocab.unpersist(blocking = false)
+            col("freq")))
+        Boundary.release(vocab)
         vocab = next
       }
       round += 1
     }
-    vocab.unpersist(blocking = false)
+    Boundary.release(vocab)
     Model(merges.toIndexedSeq)
   }
 

@@ -50,8 +50,8 @@ object CdcIndex {
   final case class CdcIndex(chunks: DataFrame, members: DataFrame,
       w: Int, modD: Int, minLen: Int) {
     def release(): Unit = {
-      chunks.unpersist(blocking = false)
-      members.unpersist(blocking = false)
+      Boundary.release(chunks)
+      Boundary.release(members)
     }
   }
 
@@ -131,8 +131,7 @@ object CdcIndex {
     * outer join against the corpus-scale table). */
   def cdcProbeFromIndex(index: CdcIndex, batch: DataFrame,
       idCol: String, textCol: String): DataFrame = {
-    val bc = docChunks(batch, idCol, textCol, index.w, index.modD)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bc = Boundary.stage(docChunks(batch, idCol, textCol, index.w, index.modD))
     val probeSide = broadcast(
       bc.filter(col("len") >= index.minLen).select(col("doc_id"), col("ch")))
     val shared = index.chunks.join(probeSide, Seq("ch"))
@@ -142,11 +141,9 @@ object CdcIndex {
       .select(col("doc_id"), col("n_chunks"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"))
       .withColumn("shared_ratio", round(col("n_shared") / col("n_chunks"), 4))
-    val materialized = out.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    bc.unpersist(blocking = false)
-    materialized
+    val result = Boundary.stage(out)
+    Boundary.release(bc)
+    result
   }
 
   /** Land the index durably (the deconIndexWrite contract): both

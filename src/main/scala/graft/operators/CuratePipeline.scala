@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Text
 
@@ -38,26 +37,15 @@ import graft.functions.Text
   * once; downstream gates are per-doc scans or broadcast probes over
   * the shrinking survivor set. Stage boundaries that feed multiple
   * downstream aggregates (dedup survivors; post-decon survivors,
-  * whose lang/source sums parameterize mixture and epochs) are
-  * persisted MEMORY_AND_DISK — the in-session stand-in for the
-  * intermediate tables a 100 TB run would checkpoint between stages.
-  * Callers own the lifecycle via [[Curated.release]].
-  *
-  * Each boundary is READ through a plan leaf
-  * ([[org.apache.spark.sql.graft.ColumnBridge.leaf]]), as each
-  * reference task reads its predecessor's landed table rather than
-  * its lineage. Downstream frames that kept the whole upstream plan
-  * grew exponentially (d2 reads d1 twice, d3 reads d2 twice, …):
-  * pipeline_report's formatted plan was 6.3 MB, re-analyzed on every
-  * DataFrame call and re-printed at every AQE event, and
-  * `spark.sql.maxPlanStringLength` only truncates the stored string
-  * after the whole tree has been stringified. Behind a leaf every
-  * plan is a few KB. The leaf's RDD is the persisted frame's own
-  * executed plan, so it reads the cache (`InMemoryTableScanExec`), a
-  * lost cache block is recomputed from source (persist, not
-  * checkpoint), and stats/partitioning carry over. Building a leaf
-  * runs that boundary's upstream jobs at build time, not at the
-  * first action.
+  * whose lang/source sums parameterize mixture and epochs) go
+  * through [[Boundary.stage]]: each stage reads its predecessor's
+  * filled cache through a plan leaf, as each reference task reads its
+  * predecessor's landed table rather than its lineage. Downstream
+  * frames that kept the whole upstream plan grew exponentially (d2
+  * reads d1 twice, d3 reads d2 twice, …): pipeline_report's formatted
+  * plan was 6.3 MB, re-analyzed on every DataFrame call. Behind a
+  * leaf every plan is a few KB. Callers own the lifecycle via
+  * [[Curated.release]].
   */
 object CuratePipeline {
 
@@ -65,10 +53,8 @@ object CuratePipeline {
     * artifact: one row per (doc copy) with its shard, within-shard
     * position and pack id. `report` is the one-row funnel. The
     * boundary frames (deduped, quality, deconned, mixed, packed) are
-    * leaves over the persisted frames in `cached`, so their own
-    * `storageLevel` is always NONE; `release()` drops the cached
-    * stage boundaries once the caller has materialized what it
-    * needs. */
+    * [[Boundary]] leaves, all read by `report`; `release()` drops
+    * them once the caller has materialized what it needs. */
   final case class Curated(
       deduped: DataFrame,
       quality: DataFrame,
@@ -76,18 +62,15 @@ object CuratePipeline {
       mixed: DataFrame,
       epochs: DataFrame,
       packed: DataFrame,
-      report: DataFrame,
-      private[graft] val cached: Seq[DataFrame]) {
-    def release(): Unit = cached.foreach(_.unpersist())
+      report: DataFrame) {
+    def release(): Unit = Boundary.release(report)
 
-    /** True while every persisted stage boundary is still registered
-      * with the cache manager. A harness-side `clearCache()` (the
-      * Verify/Bench isolation step) deregisters them behind our back;
-      * a memoizing caller must treat such an instance as STALE —
-      * its leaves would recompute each boundary from lineage at
-      * every read instead of reading the cache. */
-    def isLive: Boolean = cached.forall(
-      _.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    /** True while every stage boundary is still cached. A
+      * harness-side `clearCache()` (the Verify/Bench isolation step)
+      * drops them behind our back; a memoizing caller must treat such
+      * an instance as STALE — its leaves would recompute each boundary
+      * from lineage at every read instead of reading the cache. */
+    def isLive: Boolean = Boundary.isLive(report)
   }
 
   /** Run the full funnel. Parameters are the standalone gates'
@@ -121,17 +104,11 @@ object CuratePipeline {
     deconIndex.foreach(ix => require(ix.n == deconN,
       s"standing decon index shingle width ${ix.n} != pipeline deconN $deconN"))
 
-    val cached = Seq.newBuilder[DataFrame]
-    def stage(df: DataFrame): DataFrame = {
-      val persisted = df.persist(StorageLevel.MEMORY_AND_DISK)
-      cached += persisted
-      ColumnBridge.leaf(persisted)
-    }
+    import Boundary.stage
 
     // 1. near-dup removal: keep each cluster's min-id representative
-    val drop = Clusters.connectedComponents(
-        Dedup.ngramJaccardPairs(docs, idCol, textCol, shingleK, tau),
-        "doc_a", "doc_b")
+    val pairs = Dedup.ngramJaccardPairs(docs, idCol, textCol, shingleK, tau)
+    val drop = Clusters.connectedComponents(pairs, "doc_a", "doc_b")
       .filter(col("node") =!= col("cluster_id"))
       .select(col("node").as("__drop"))
     // a leaf too: the partition count below then comes off the RDD
@@ -155,6 +132,9 @@ object CuratePipeline {
       if (d1raw.rdd.getNumPartitions < targetParts)
         d1raw.repartition(targetParts)
       else d1raw)
+    // d1's fill ran connected components to the end: the labels no
+    // longer read the pair boundary
+    Boundary.release(pairs)
 
     // 2. quality ensemble over the dedup survivors
     val keepIds = Curation.qualityEnsemble(d1, idCol, textCol,
@@ -254,6 +234,6 @@ object CuratePipeline {
       countDistinct(col("shard"), col("pack_id")).as("n_packs"),
       sum(col("__nt")).as("n_tokens"))
 
-    Curated(d1, d2, d3, d4, ep, packed, report, cached.result())
+    Curated(d1, d2, d3, d4, ep, packed, report)
   }
 }

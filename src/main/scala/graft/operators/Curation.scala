@@ -443,41 +443,32 @@ object Curation {
     * a tiny or degenerate corpus the head branch wins, then tail —
     * the CASE order the oracle mirrors.
     *
-    * Caching contract (the dedup-family convention): the RETURNED
-    * frame is persisted and eagerly materialized — callers own it
-    * and `unpersist()` when done. The internal score cache (read by
-    * the cuts aggregate and the bucket scan) is released before
-    * returning, so repeated calls in a long-lived session pin at
-    * most the results the caller still holds, never an orphaned
-    * internal frame (r17, retiring the r16 un-releasable score
-    * persist the ADVICE flagged). */
+    * The result is a [[Boundary]] leaf; the internal score boundary
+    * (read by the cuts aggregate and the bucket scan) is released
+    * before returning. */
   def perplexityBuckets(docs: DataFrame, idCol: String, tokens: Column,
       lambda: Double, headQ: Double = 0.3, tailQ: Double = 0.3): DataFrame = {
     require(headQ > 0 && tailQ > 0 && headQ + tailQ <= 1.0,
       s"headQ=$headQ / tailQ=$tailQ must be positive with sum <= 1")
     // r18 TIER 1 — the full driver kernel: scores, exact-percentile
-    // cuts and the CASE all run in-process ([[LmLocal]]); only the
-    // result cache (the documented caller-owned contract) touches
-    // the cluster. See [[bigramLogProb]].
+    // cuts and the CASE all run in-process ([[LmLocal]]); the result
+    // is a driver-local frame. See [[bigramLogProb]].
     lmLocalDocs(docs, idCol, tokens).foreach { rows =>
       val sess = docs.sparkSession
       import sess.implicits._
-      // NO result persist on this tier: the frame IS driver-local
-      // (building it was the work; a re-scan is free), so the
-      // caller-owned cache contract degenerates to a no-op — callers'
-      // unpersist() of an uncached frame is harmless, and skipping
-      // the persist+materialize job is a measured ~2-job win
+      // NO result boundary on this tier: the frame IS driver-local
+      // (building it was the work; a re-scan is free), and releasing
+      // a frame that reads no boundary is a no-op — skipping the
+      // persist+materialize job is a measured ~2-job win
       return LmLocal.perplexityBuckets(
           LmLocal.interpScores(rows, lambda), headQ, tailQ)
         .toDF("doc_id", "n_bigrams", "avg_logprob", "ppl_bucket").coalesce(1)
     }
-    // the scored frame is read twice (cuts, bucket scan): persist it
-    // and let the CUTS AGGREGATE be the materializing pass — the two
-    // percentile scalars come back as bounded driver state (the
-    // centroid/GD-weights convention) instead of a broadcast
+    // the scored frame is read twice (cuts, bucket scan): stage it —
+    // the two percentile scalars come back as bounded driver state
+    // (the centroid/GD-weights convention) instead of a broadcast
     // crossJoin, so the LM pipeline runs once
-    val lp = interpLogProb(docs, idCol, tokens, lambda)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lp = Boundary.stage(interpLogProb(docs, idCol, tokens, lambda))
     val cuts = lp.agg(
       expr(s"percentile(avg_logprob, ${1.0 - headQ})").as("__th"),
       expr(s"percentile(avg_logprob, $tailQ)").as("__tt")).head()
@@ -490,13 +481,11 @@ object Curation {
       when(col("avg_logprob") >= th, "head")
         .when(col("avg_logprob") <= tt, "tail")
         .otherwise("middle").as("ppl_bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the materializing pass reads the score cache (one cheap scan),
-    // after which the internal persist can be released — the caller
-    // inherits exactly one cache: the result it was handed
-    out.count()
-    lp.unpersist(blocking = false)
-    out
+    // the fill reads the score cache (one cheap scan), after which
+    // the score boundary is released
+    val result = Boundary.stage(out)
+    Boundary.release(lp)
+    result
   }
 
   /** THE bigram-row convention shared by [[interpLogProb]] and the
@@ -646,19 +635,17 @@ object Curation {
       .select(col("__p.w1").as("w1"), col("__p.w2").as("w2"))
     val ucRaw = docs.select(explode(tk).as("token"))
       .groupBy("token").agg(count(lit(1)).as("__cx"))
-    // r19 (r18 ADVICE): persist the vocab table BEFORE the probe —
+    // r19 (r18 ADVICE): stage the vocab table BEFORE the probe —
     // the probe below is a full corpus-scale tokenize+aggregate, and
     // without the cache an over-the-gate corpus (any real one, with
     // the provable v ≤ 1024 bound) paid that aggregation once for
-    // the discarded probe and AGAIN on the distributed path. The
-    // probe's limit-scan now fills the cache the distributed
-    // materializing pass reads; the local branch releases it.
-    val uc = ucRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the discarded probe and AGAIN on the distributed path. Both
+    // branches read the filled cache; each releases it.
+    val uc = Boundary.stage(ucRaw)
     // r18 adaptive fold (the bigram-LM driver gate, with a PROVABLE
     // bound making the probe free): if the token vocab fits the gate
     // (v ≤ threshold, one vocab-sized collect of the table the
-    // distributed path persists anyway), the distinct-pair table is
+    // distributed path reads anyway), the distinct-pair table is
     // AT MOST v(v+1)/2 rows — collectable by construction, so the
     // local branch never wastes a probe on a corpus it must abandon.
     // Both corpus scalars fold out driver-side (nt = Σ ucnt exactly
@@ -685,15 +672,12 @@ object Curation {
       }.toSeq
       val sess = docs.sparkSession
       import sess.implicits._
-      val materialized = rows.toDF("w1", "w2", "n_cooc", "pmi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      materialized.count()
-      materialized
+      Boundary.stage(rows.toDF("w1", "w2", "n_cooc", "pmi"))
     }
     if (localOut.isDefined) {
       // the vocab cache fed the probe only — the local branch scored
       // from the collected rows
-      uc.unpersist(blocking = false)
+      Boundary.release(uc)
       return localOut.get
     }
     // the corpus-wide scalars fold out of a LENGTHS-ONLY scan EXACTLY:
@@ -705,11 +689,8 @@ object Curation {
     // output job), nothing corpus-scale is ever cached, and the only
     // pinned frame is the vocab-sized unigram table. The scalars stay
     // bounded driver state (two longs — the centroid/GD-weights
-    // convention); the crossJoined vocab-row aggregate makes this one
-    // action the materializing pass of the uc cache, whose two join
-    // consumers below then read the cache instead of racing to
-    // re-tokenize (the AQE concurrent-exchange hazard). coalesce keeps
-    // the non-null-zero contract on an empty corpus.
+    // convention). coalesce keeps the non-null-zero contract on an
+    // empty corpus.
     val perDocPairs = (1 to window)
       .map(d => greatest(col("__len") - d, lit(0)).cast("long"))
       .reduce(_ + _)
@@ -733,11 +714,9 @@ object Curation {
         round(log((col("n_cooc").cast("double") * lit(nt) * lit(nt))
           / (lit(np).cast("double") * col("__c1") * col("__c2"))), 4)
           .as("pmi"))
-    val materialized = out.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    uc.unpersist(blocking = false)
-    materialized
+    val result = Boundary.stage(out)
+    Boundary.release(uc)
+    result
   }
 
   /** Token-budget planner: given per-group target SHARES of a total
@@ -1212,19 +1191,15 @@ object Curation {
       featureCols: Seq[String], iters: Int, lr: Double = 1.0,
       roundTo: Int = 6): Array[Double] = {
     require(iters > 0 && featureCols.nonEmpty)
-    // cache the training frame for the duration of the loop (the
+    // stage the training frame for the duration of the loop (the
     // MLlib-iterative-input convention): every GD iteration is one
-    // aggregate over `feats`, and without the persist each iteration
+    // aggregate over `feats`, and without the cache each iteration
     // re-runs the caller's whole feature-extraction pipeline
-    // (tokenize + bucket-hash at corpus scale). Only a persist WE
-    // took is released before returning: a caller that passes an
-    // already-persisted frame keeps ownership of its cache (the
-    // trailing unpersist would otherwise silently drop it).
-    val callerCached = feats.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cached =
-      if (callerCached) feats
-      else feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cached.count()
+    // (tokenize + bucket-hash at corpus scale). A frame that already
+    // reads live boundaries is the caller's: it is read in place and
+    // stays live; only a boundary staged here is released.
+    val owned = !Boundary.isLive(feats)
+    val cached = if (owned) Boundary.stage(feats) else feats
     var w = Array.fill(featureCols.length)(0.0)
     for (_ <- 1 to iters) {
       val z = featureCols.zip(w)
@@ -1235,7 +1210,7 @@ object Curation {
       val g = cached.agg(aggs.head, aggs.tail: _*).head()
       w = w.indices.map(i => w(i) + lr * g.getDouble(i)).toArray
     }
-    if (!callerCached) cached.unpersist(blocking = false)
+    if (owned) Boundary.release(cached)
     w
   }
 
@@ -1303,16 +1278,14 @@ object Curation {
     * bias row (bucket 0, value 1) for every doc so documents whose
     * other features are all implicit zeros still count in the
     * gradient denominator (the dense trainer's x0 column plays this
-    * role). Returns the final (bucket, w) frame, persisted — caller
-    * unpersists.
+    * role). Returns the final (bucket, w) frame.
     */
   def logisticTrainSparse(feats: DataFrame, idCol: String, labelCol: String,
       bucketCol: String, valueCol: String, iters: Int, lr: Double = 1.0,
       roundTo: Int = 6): DataFrame = {
     require(iters > 0)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val f = feats.select(col(idCol).as("__doc"), col(labelCol).as("__y"),
-      col(bucketCol).as("bucket"), col(valueCol).as("__v")).persist(lvl)
+    val f = Boundary.stage(feats.select(col(idCol).as("__doc"),
+      col(labelCol).as("__y"), col(bucketCol).as("bucket"), col(valueCol).as("__v")))
     // one bounded driver scalar, computed once (the pagerank-L1 shape)
     val nDocs = f.select(col("__doc")).distinct().count().toDouble
     require(nDocs > 0, "empty feature frame")
@@ -1333,16 +1306,16 @@ object Curation {
         .groupBy("bucket")
         .agg(round(sum(col("__v") * (col("__y") - col("__p"))) / nDocs,
           roundTo).as("__g"))
-      val next = w.join(g, Seq("bucket"), "full_outer")
+      // generation swap: the next weights are filled before the
+      // previous generation is released
+      val next = Boundary.stage(w.join(g, Seq("bucket"), "full_outer")
         .select(col("bucket"),
           (coalesce(col("w"), lit(0.0)) + lit(lr) * coalesce(col("__g"), lit(0.0)))
-            .as("w"))
-        .persist(lvl)
-      next.count() // generation swap: materialize before releasing
-      w.unpersist(blocking = false)
+            .as("w")))
+      Boundary.release(w)
       w = next
     }
-    f.unpersist(blocking = false)
+    Boundary.release(f)
     w
   }
 
@@ -1507,13 +1480,11 @@ object Curation {
   def dsirWeights(docs: DataFrame, idCol: String, textCol: Column,
       isTarget: Column, nBuckets: Int): DataFrame = {
     val (base, lr) = dsirBase(docs, idCol, textCol, isTarget, nBuckets)
-    // eager-materialize contract: the tiny (id, weight) result holds
-    // the cache so the corpus-sized bucketed frame can release
-    val out = base.select(col("__id").as(idCol),
-        round(dsirDotCol(lr), 6).as("dsir_logweight"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    base.unpersist(blocking = false)
+    // the tiny (id, weight) result is filled so the corpus-sized
+    // bucketed boundary can be released
+    val out = Boundary.stage(base.select(col("__id").as(idCol),
+        round(dsirDotCol(lr), 6).as("dsir_logweight")))
+    Boundary.release(base)
     out
   }
 
@@ -1558,10 +1529,9 @@ object Curation {
       .join(lrDf, "b")
       .groupBy("__id").agg(round(sum(col("c") * col("lr")), 6).as("dsir_logweight"))
       .select(col("__id").as(idCol), col("dsir_logweight"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    base.unpersist(blocking = false)
-    out
+    val result = Boundary.stage(out)
+    Boundary.release(base)
+    result
   }
 
   /** The bucketed-token frame every DSIR stage shares: (__id, __tgt,
@@ -1623,12 +1593,11 @@ object Curation {
     graft.functions.expr.NativeFunctions.bucket_dot(
       col("__b"), lr.toIndexedSeq)
 
-  /** Shared head of the batch DSIR scorers: the persisted bucketed
+  /** Shared head of the batch DSIR scorers: the staged bucketed
     * corpus and the B smoothed log-ratios. */
   private def dsirBase(docs: DataFrame, idCol: String, textCol: Column,
       isTarget: Column, nBuckets: Int): (DataFrame, IndexedSeq[Double]) = {
-    val base = dsirBucketize(docs, idCol, textCol, isTarget, nBuckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = Boundary.stage(dsirBucketize(docs, idCol, textCol, isTarget, nBuckets))
     val (ct, cr) = dsirCounts(base, nBuckets)
     (base, dsirLogRatios(ct, cr))
   }

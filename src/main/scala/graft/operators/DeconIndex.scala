@@ -52,8 +52,8 @@ object DeconIndex {
   final case class DeconIndex(shingles: DataFrame, members: DataFrame,
       n: Int) {
     def release(): Unit = {
-      shingles.unpersist(blocking = false)
-      members.unpersist(blocking = false)
+      Boundary.release(shingles)
+      Boundary.release(members)
     }
   }
 

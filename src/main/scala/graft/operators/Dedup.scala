@@ -109,20 +109,14 @@ object Dedup {
     // interpreted HOF pipeline (~30× on the shingling stage), the
     // shuffle is 3× smaller, and equality is a long compare (collision
     // odds over a shingle vocabulary are ~|V|²/2^64 — immaterial).
-    // The index is persisted: it feeds both self-join sides and both
-    // size lookups, and without an explicit persist Catalyst re-scans
-    // + re-shingles the corpus four times. MATERIALIZED EAGERLY:
-    // persist alone is lazy, and AQE launches the downstream exchange
-    // stages (hot-df, both join sides, sizes) as concurrent jobs that
-    // would each race to compute the not-yet-cached scan+shingle
-    // partition ("Block already exists" warnings = k redundant corpus
-    // scans of the operator's most expensive stage); one count() pays
-    // the scan exactly once and every exchange reads the cache.
-    val sh = shingleIndexOf(docs, idCol, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.count()
+    // The index is a filled boundary: it feeds both self-join sides
+    // and both size lookups (Catalyst would otherwise re-scan and
+    // re-shingle the corpus four times), and AQE's concurrent
+    // exchange jobs (hot-df, both join sides, sizes) then read the
+    // cache instead of racing to compute the scan+shingle partition.
+    val sh = Boundary.stage(shingleIndexOf(docs, idCol, textCol, k))
     val out = ngramJaccardPairsFromIndex(sh, dfCap, tau)
-    sh.unpersist(blocking = false)
+    Boundary.release(sh)
     out
   }
 
@@ -130,7 +124,7 @@ object Dedup {
     * pipelines start from — exact Jaccard AND MinHash read the same
     * exploded hash stream, which is why a caller running both over
     * one corpus (dedup_recall's truth-vs-candidates audit) can build
-    * it ONCE, persist it, and feed both ([[ngramJaccardPairsFromIndex]]
+    * it ONCE, stage it, and feed both ([[ngramJaccardPairsFromIndex]]
     * + [[minhashLshPairsFromShingles]]) instead of paying the
     * scan+shingle pass twice (guide §1.2: same bytes, same
     * expression, one computation). */
@@ -140,12 +134,10 @@ object Dedup {
       explode(graft.functions.expr.NativeFunctions
         .shingle_hashes(col(textCol), k)).as("s"))
 
-  /** [[ngramJaccardPairs]] from a PRE-BUILT shingle index. `sh` must
-    * be (doc_id, s), persisted and materialized by the caller (the
-    * eager-materialization contract in [[ngramJaccardPairs]]'s body
-    * comment); the caller also owns its unpersist — the returned pair
-    * frame is persisted+materialized here, so the index is releasable
-    * the moment this returns. */
+  /** [[ngramJaccardPairs]] from a PRE-BUILT (doc_id, s) shingle index
+    * the caller staged ([[Boundary]]) and releases; the returned pair
+    * frame is filled here, so the index is releasable the moment this
+    * returns. */
   private[graft] def ngramJaccardPairsFromIndex(sh: DataFrame, dfCap: Int,
       tau: Double): DataFrame = {
     val shPruned =
@@ -177,20 +169,9 @@ object Dedup {
         round(col("shared") / (col("n_a") + col("n_b") - col("shared")), 4))
       .filter(col("jaccard") >= tau)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    // Caching contract: the result (tiny next to the corpus) is
-    // persisted and materialized eagerly so the corpus-sized index can
-    // be released before returning — callers never inherit an
-    // index-sized persist they didn't ask for. Lineage stays intact
-    // (persist, not checkpoint): losing a cached block on a real
-    // cluster recomputes from source instead of failing the job.
-    // NOTE the returned frame IS cached and CacheManager holds it
-    // until released — long-lived sessions calling this repeatedly
-    // MUST call result.unpersist() (or clearCache) when done with
-    // each result; there is no public API for GC-driven cache
-    // release, so the bounded result-sized entry is the contract.
-    val materialized = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    materialized
+    // the result (tiny next to the corpus) is a [[Boundary]] leaf,
+    // filled before the corpus-sized index is released
+    Boundary.stage(out)
   }
 
   /** Directed CONTAINMENT near-dup pairs — the asymmetric cousin of
@@ -209,18 +190,12 @@ object Dedup {
     * stats-derived √N hot-shingle cap, sizes from the PRUNED
     * universe, one a<b bucket join — both directions derive from the
     * single shared-count row, so containment costs ZERO extra
-    * shuffles over Jaccard. Same eager-persist caching contract. */
+    * shuffles over Jaccard. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int, tauC: Double, maxDf: CapPolicy = CapPolicy.Auto): DataFrame = {
     val dfCap = resolveCap(docs, maxDf)
-    val sh = docs
-      .select(col(idCol).as("doc_id"),
-        explode(graft.functions.expr.NativeFunctions
-          .shingle_hashes(col(textCol), k)).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager materialization: see ngramJaccardPairs — without it AQE's
-    // concurrent exchange jobs each re-run the corpus scan+shingle
-    sh.count()
+    // a filled boundary: see ngramJaccardPairs
+    val sh = Boundary.stage(shingleIndexOf(docs, idCol, textCol, k))
     val shPruned =
       if (dfCap == Int.MaxValue) sh
       else {
@@ -275,11 +250,9 @@ object Dedup {
           round(col("shared") / col("n_b"), 4).as("containment")))).as("p"))
       .select(col("p.doc_inner"), col("p.doc_outer"), col("p.containment"))
       .filter(col("containment") >= tauC)
-    val materialized = out.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    sh.unpersist(blocking = false)
-    materialized
+    val result = Boundary.stage(out)
+    Boundary.release(sh)
+    result
   }
 
   /** Exploded content-defined chunks of a corpus: one row per chunk,
@@ -330,8 +303,7 @@ object Dedup {
     * groupBy that built it), then one aggregation per doc. */
   def cdcDocStats(docs: DataFrame, idCol: String, textCol: String,
       w: Int = 4, modD: Int = 8, minLen: Int = 4): DataFrame = {
-    val chunks = cdcChunks(docs, idCol, textCol, w, modD)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val chunks = Boundary.stage(cdcChunks(docs, idCol, textCol, w, modD))
     val dupSet = chunks
       .filter(col("chunk_len") >= minLen)
       .groupBy(col("chunk_hash"))
@@ -345,11 +317,9 @@ object Dedup {
         sum(when(col("__dup").isNotNull && col("chunk_len") >= minLen, 1L)
           .otherwise(0L)).as("n_dup"))
       .withColumn("dup_ratio", round(col("n_dup") / col("n_chunks"), 4))
-    val materialized = out.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    chunks.unpersist(blocking = false)
-    materialized
+    val result = Boundary.stage(out)
+    Boundary.release(chunks)
+    result
   }
 
   /** MinHash signature over an in-row shingle array — used for
@@ -388,27 +358,21 @@ object Dedup {
       shingleIndexOf(docs, idCol, textCol, k), perms, bands, tau)
 
   /** [[minhashLshPairs]] from a (doc_id, s) shingle stream — lazy or
-    * pre-persisted ([[shingleIndexOf]]); the public form passes the
-    * unpersisted stream (the sig aggregation is its ONLY consumer, so
+    * staged ([[shingleIndexOf]]); the public form passes the
+    * lazy stream (the sig aggregation is its ONLY consumer, so
     * caching it would be a pure write cost), while a caller that also
     * runs the exact-Jaccard pipeline over the same corpus passes its
-    * already-persisted index and the corpus is scanned+shingled once
+    * staged index and the corpus is scanned+shingled once
     * for both. */
   private[graft] def minhashLshPairsFromShingles(sh: DataFrame,
       perms: Int, bands: Int, tau: Double): DataFrame = {
     require(perms % bands == 0, "bands must divide perms")
-    // persisted: feeds both band-join sides and the final verify.
-    val sigs = minhashSigsRelational(sh, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // staged: feeds both band-join sides and the final verify
+    val sigs = Boundary.stage(minhashSigsRelational(sh, perms))
     val candIds = selfCandidates(bandedOf(sigs, perms, bands))
-    val out = verifyPairs(candIds, sigs, sigs, perms, tau)
-    // eager result persist + index release: same caching contract as
-    // ngramJaccardPairs — no signature-table-sized persist survives
-    // the call, lineage stays recomputable
-    val materialized = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    sigs.unpersist(blocking = false)
-    materialized
+    val result = Boundary.stage(verifyPairs(candIds, sigs, sigs, perms, tau))
+    Boundary.release(sigs)
+    result
   }
 
   /** MinHash signatures (doc_id, sig) — the persistable dedup INDEX.
@@ -461,21 +425,17 @@ object Dedup {
       idCol: String, textCol: String,
       k: Int, perms: Int, bands: Int, tau: Double): DataFrame = {
     require(perms % bands == 0, "bands must divide perms")
-    val sigsC = minhashSigsOf(corpus, idCol, textCol, k, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigsB = minhashSigsOf(batch, idCol, textCol, k, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigsC = Boundary.stage(minhashSigsOf(corpus, idCol, textCol, k, perms))
+    val sigsB = Boundary.stage(minhashSigsOf(batch, idCol, textCol, k, perms))
     val candIds = bandedOf(sigsC, perms, bands).as("a")
       .join(broadcast(bandedOf(sigsB, perms, bands)).as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    val out = verifyPairs(candIds, sigsC, sigsB, perms, tau)
-    val materialized = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    sigsC.unpersist(blocking = false)
-    sigsB.unpersist(blocking = false)
-    materialized
+    val result = Boundary.stage(verifyPairs(candIds, sigsC, sigsB, perms, tau))
+    Boundary.release(sigsC)
+    Boundary.release(sigsB)
+    result
   }
 
   /** A STANDING MinHash-LSH index: persisted signatures + band table,
@@ -487,8 +447,8 @@ object Dedup {
   final case class MinhashIndex(sigs: DataFrame, banded: DataFrame,
       k: Int, perms: Int, bands: Int) {
     def release(): Unit = {
-      banded.unpersist(blocking = false)
-      sigs.unpersist(blocking = false)
+      Boundary.release(banded)
+      Boundary.release(sigs)
     }
   }
 
@@ -496,11 +456,8 @@ object Dedup {
   def minhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       k: Int, perms: Int, bands: Int): MinhashIndex = {
     require(perms % bands == 0, "bands must divide perms")
-    val sigs = minhashSigsOf(corpus, idCol, textCol, k, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = bandedOf(sigs, perms, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    banded.count() // materialize both (banded pulls sigs through)
+    val sigs = Boundary.standing(minhashSigsOf(corpus, idCol, textCol, k, perms))
+    val banded = Boundary.standing(bandedOf(sigs, perms, bands))
     MinhashIndex(sigs, banded, k, perms, bands)
   }
 
@@ -679,18 +636,17 @@ object Dedup {
     * twin drives it per micro-batch). */
   def minhashProbe(index: MinhashIndex, batch: DataFrame,
       idCol: String, textCol: String, tau: Double): DataFrame = {
-    val sigsB = minhashSigsOf(batch, idCol, textCol, index.k, index.perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigsB = Boundary.stage(
+      minhashSigsOf(batch, idCol, textCol, index.k, index.perms))
     val candIds = index.banded.as("a")
       .join(broadcast(bandedOf(sigsB, index.perms, index.bands)).as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    val out = verifyPairs(candIds, index.sigs, sigsB, index.perms, tau)
-    val materialized = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    sigsB.unpersist(blocking = false)
-    materialized
+    val result = Boundary.stage(
+      verifyPairs(candIds, index.sigs, sigsB, index.perms, tau))
+    Boundary.release(sigsB)
+    result
   }
 
   /** Incremental exact dedup: for each batch doc, the lowest-id
@@ -879,11 +835,7 @@ object Dedup {
     * are the durable cross-session form. */
   final case class SubstringIndex(hashes: DataFrame, members: DataFrame,
       tombs: DataFrame, k: Int, dfCap: Int) {
-    def release(): Unit = {
-      hashes.unpersist(blocking = false)
-      members.unpersist(blocking = false)
-      tombs.unpersist(blocking = false)
-    }
+    def release(): Unit = Seq(hashes, members, tombs).foreach(Boundary.release)
   }
 
   private def substringWindows(docs: DataFrame, idCol: String,
@@ -897,22 +849,17 @@ object Dedup {
       k: Int, maxDf: CapPolicy = CapPolicy.Auto): SubstringIndex = {
     val dfCap = resolveCap(corpus, maxDf)
     // one windows scan, cached for the three derivations below
-    val allPairs = substringWindows(corpus, idCol, textCol, k)
-      .select(col("h"), col("doc_id")).dropDuplicates("h", "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val allPairs = Boundary.stage(substringWindows(corpus, idCol, textCol, k)
+      .select(col("h"), col("doc_id")).dropDuplicates("h", "doc_id"))
     val agg = allPairs.groupBy("h")
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("rep_doc"))
     val tombs = (if (dfCap == Int.MaxValue) agg.limit(0)
       else agg.filter(col("n_docs") > dfCap))
       .select(col("h")).localCheckpoint(true)
-    val hashes = agg.filter(col("n_docs") <= dfCap)
-      .select(col("h"), col("rep_doc"), col("n_docs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashes.count()
-    val members = allPairs.join(tombs, Seq("h"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    members.count()
-    allPairs.unpersist(blocking = false)
+    val hashes = Boundary.standing(agg.filter(col("n_docs") <= dfCap)
+      .select(col("h"), col("rep_doc"), col("n_docs")))
+    val members = Boundary.standing(allPairs.join(tombs, Seq("h"), "left_anti"))
+    Boundary.release(allPairs)
     SubstringIndex(hashes, members, tombs, k, dfCap)
   }
 
@@ -978,8 +925,8 @@ object Dedup {
       .localCheckpoint(true)
     // tombs carries over UNRELEASED (a localCheckpoint'd frame is
     // unrecomputable once unpersisted) — release the replaced frames only
-    index.hashes.unpersist(blocking = false)
-    index.members.unpersist(blocking = false)
+    Boundary.release(index.hashes)
+    Boundary.release(index.members)
     SubstringIndex(hashes2, members2, index.tombs, index.k, index.dfCap)
   }
 
@@ -1060,8 +1007,7 @@ object Dedup {
     * ingest-time passage-dup screen. Only the batch is windowed; its
     * (hash, pos) rows broadcast into the index join, the corpus never
     * rescanned. Self-hits (the batch doc IS the window's corpus
-    * representative, after an append) are excluded. Eagerly
-    * persisted — callers unpersist. */
+    * representative, after an append) are excluded. */
   def substringProbe(index: SubstringIndex, batch: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     val wb = substringWindows(batch, idCol, textCol, index.k)
@@ -1077,9 +1023,7 @@ object Dedup {
         (max(col("pos")) + index.k - 1).as("span_end"),
         count("*").as("n_windows"))
       .drop("grp")
-    val materialized = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    materialized
+    Boundary.stage(out)
   }
 
   /** The REMOVAL transform at INGEST TIME — [[substringDupRemove]]'s
@@ -1250,9 +1194,7 @@ object Dedup {
           LshLocal.pairRows(it, dim, bits, tables, seed, tau, probeRadius))
         .toDF("vec_a", "vec_b")
         .select(col("vec_a").cast(idType), col("vec_b").cast(idType))
-      val materialized = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      materialized.count()
-      return materialized
+      return Boundary.stage(out)
     }
     val e = embeddings.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
@@ -1264,13 +1206,11 @@ object Dedup {
   /** The shared self-dedup tail of [[embeddingPairsLsh]] and
     * [[embeddingPairsFromIndex]]: (optionally Hamming-1-expanded)
     * candidate self-join over a band table, pair dedup, the two
-    * vector joins, the cosine verify, and the eager result persist
-    * (the ngramJaccardPairs caching contract: the ids-only result is
-    * tiny, while the plan signs/scans the corpus into tables×bits
-    * buckets and verifies candidates — consumers that branch the
-    * result, e.g. connected components unioning both edge directions,
-    * must not run that twice; callers unpersist in long-lived
-    * sessions). */
+    * vector joins, the cosine verify, and the staged result (the
+    * ids-only result is tiny, while the plan signs/scans the corpus
+    * into tables×bits buckets and verifies candidates — consumers
+    * that branch the result, e.g. connected components unioning both
+    * edge directions, must not run that twice). */
   private def selfPairsFromBands(vecs: DataFrame, banded: DataFrame,
       bits: Int, tau: Double, probeRadius: Int): DataFrame = {
     require(probeRadius == 0 || probeRadius == 1,
@@ -1286,9 +1226,7 @@ object Dedup {
       .join(vecs.select(col("id").as("vec_b"), col("v").as("vb"), col("n2").as("nb")), "vec_b")
       .filter(Vectors.cosineWithNorms(col("va"), col("vb"), col("na"), col("nb")) >= tau)
       .select(col("vec_a"), col("vec_b"))
-    val materialized = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    materialized
+    Boundary.stage(out)
   }
 
   /** LSH banding of an (id, v) vector frame: one row per (id, table,
@@ -1324,21 +1262,18 @@ object Dedup {
   final case class EmbeddingLshIndex(vecs: DataFrame, banded: DataFrame,
       dim: Int, bits: Int, tables: Int, seed: Long) {
     def release(): Unit = {
-      banded.unpersist(blocking = false)
-      vecs.unpersist(blocking = false)
+      Boundary.release(banded)
+      Boundary.release(vecs)
     }
   }
 
   /** Build (and materialize) the standing embedding index. */
   def embeddingIndex(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, bits: Int, tables: Int, seed: Long): EmbeddingLshIndex = {
-    val vecs = corpus.select(col(idCol).as("id"),
+    val vecs = Boundary.standing(corpus.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n2", Vectors.normSq(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = vecBands(vecs, dim, bits, tables, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    banded.count() // materialize both (banded pulls vecs through)
+      .withColumn("n2", Vectors.normSq(col("v"))))
+    val banded = Boundary.standing(vecBands(vecs, dim, bits, tables, seed))
     EmbeddingLshIndex(vecs, banded, dim, bits, tables, seed)
   }
 
@@ -1399,8 +1334,7 @@ object Dedup {
     * The candidate self-join runs over the stored band table and the
     * verify reads stored vectors; with a durable index loaded from
     * [[embeddingIndexLoad]] tables both sides come bucketed on their
-    * join keys. Result is eagerly persisted (the pair-operator
-    * caching contract) — callers unpersist. */
+    * join keys. */
   def embeddingPairsFromIndex(index: EmbeddingLshIndex, tau: Double,
       probeRadius: Int = 0): DataFrame =
     selfPairsFromBands(index.vecs, index.banded, index.bits, tau, probeRadius)
@@ -1480,10 +1414,9 @@ object Dedup {
       probeRadius: Int = 0): DataFrame = {
     require(probeRadius == 0 || probeRadius == 1,
       s"probeRadius must be 0 or 1, got $probeRadius")
-    val b = batch.select(col(idCol).as("id"),
+    val b = Boundary.stage(batch.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n2", Vectors.normSq(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("n2", Vectors.normSq(col("v"))))
     val bBands = expandProbes(
       vecBands(b, index.dim, index.bits, index.tables, index.seed),
       index.bits, probeRadius)
@@ -1498,10 +1431,9 @@ object Dedup {
         col("v").as("vb"), col("n2").as("nb"))), "vec_b")
       .filter(Vectors.cosineWithNorms(col("va"), col("vb"), col("na"), col("nb")) >= tau)
       .select(col("vec_a"), col("vec_b"))
-    val materialized = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    b.unpersist(blocking = false)
-    materialized
+    val result = Boundary.stage(out)
+    Boundary.release(b)
+    result
   }
 
   /** Exact candidate-pair count of [[editDistancePairs]]'s blocking
@@ -1569,15 +1501,14 @@ object Dedup {
       .withColumn("__lb", floor(length(col("t")) / bucket))
       .withColumn("__p", substring(col("t"), 1, prefixLen))
     val sizes = raw.groupBy("__lb", "__p").agg(count("*").as("__bs"))
-    // the kept-block table is persisted: it feeds the block filter
+    // the kept-block table is staged: it feeds the block filter
     // join AND the verify-stage sizing estimate below — one row per
     // (bucket, prefix) block, tiny next to the corpus, and without it
     // the corpus scan + block-count agg would run once per consumer
-    val kept = sizes.filter(col("__bs") <= blockCap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kept = Boundary.stage(sizes.filter(col("__bs") <= blockCap))
     // exact candidate-pair count (pre length-diff filter): same-bucket
     // C(bs,2) + adjacent-bucket cross products — one small job over
-    // the persisted block table, never over the corpus. This sizes
+    // the staged block table, never over the corpus. This sizes
     // the verify stage: AQE coalesces the candidate exchange by
     // SHUFFLE BYTES (compressed text), but the banded-DP verify costs
     // O(len·maxDist) per pair — ~65× more CPU per byte than a scan —
@@ -1586,9 +1517,7 @@ object Dedup {
     // §3). Pair count, not bytes, is the right work proxy for a
     // CPU-bound stage.
     val pairEst = editCandidateEstimate(kept)
-    val d = raw.join(kept, Seq("__lb", "__p"))
-      .drop("__bs")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val d = Boundary.stage(raw.join(kept, Seq("__lb", "__p")).drop("__bs"))
     val a = d.select(col("id").as("doc_a"), col("t").as("__ta"), col("__lb"), col("__p"))
     val b = d.select(col("id").as("doc_b"), col("t").as("__tb"), col("__lb"), col("__p"))
     // same-bucket candidates (id-ordered: each pair once) ∪
@@ -1615,21 +1544,20 @@ object Dedup {
     // at the cluster's core count so the CPU-bound verify fills the
     // machine even when the candidate table is byte-small, capped so
     // a pathological estimate cannot explode the task count. The
-    // repartition sits BELOW the persist: the cache boundary pins the
-    // verify's parallelism to this layout (a repartition above the
+    // repartition sits BELOW the boundary: the cache pins the
+    // verify's parallelism to this layout (a repartition above a
     // persist is undone by Catalyst pushing the DP filter below it —
     // measured no speedup, OPTIMIZATION_r20.md §3).
     val verifyParts = math.max(
       docs.sparkSession.sparkContext.defaultParallelism,
       math.min(1 << 18, ((pairEst >> 16) + 1).toInt))
-    val candidates = same.union(adj)
+    val candidates = Boundary.stage(same.union(adj)
       // levenshtein >= |len difference|, so adjacent-bucket pairs with
       // a length gap beyond maxDist (possible up to 2·lenBucket) can
       // never verify — an integer compare prunes them before the
       // O(len·maxDist) DP pays for the proof
       .filter(abs(length(col("__ta")) - length(col("__tb"))) <= maxDist)
-      .repartition(verifyParts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(verifyParts))
     val out = candidates
       // thresholded levenshtein: banded DP, O(len·maxDist) per pair
       // instead of the full O(len²) matrix; returns -1 above the
@@ -1639,13 +1567,10 @@ object Dedup {
       .withColumn("lev", levenshtein(col("__ta"), col("__tb"), maxDist))
       .filter(col("lev") >= 0)
       .select(col("doc_a"), col("doc_b"), col("lev").cast("int").as("lev"))
-    // eager result persist + block/candidate-table release (the
-    // ngramJaccardPairs caching contract)
-    val materialized = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    candidates.unpersist(blocking = false)
-    d.unpersist(blocking = false)
-    kept.unpersist(blocking = false)
-    materialized
+    // the candidate release also drops d and kept: nothing else
+    // reads them
+    val result = Boundary.stage(out)
+    Boundary.release(candidates)
+    result
   }
 }

@@ -239,15 +239,14 @@ object Graph {
     * integer-exact degree/tri_count, and the clustering column is the
     * SAME Catalyst expression applied on top, so rounding semantics
     * cannot drift. The gate is one count() of the canonical frame
-    * both paths persist and materialize anyway. The `distributed`
+    * both paths stage anyway. The `distributed`
     * [[Tier]] pins the distributed wedge joins. */
   def triangleCensus(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val e = edges.select(
+    val e = Boundary.stage(edges.select(
         least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val nodeType = e.schema("u").dataType
     val integral = nodeType == org.apache.spark.sql.types.LongType ||
       nodeType == org.apache.spark.sql.types.IntegerType
@@ -279,26 +278,22 @@ object Graph {
           round(lit(2.0) * col("tri_count")
             / (col("degree") * (col("degree") - lit(1))), 6))
           .otherwise(lit(0.0)))
-      val materialized = out.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      materialized.count()
-      e.unpersist(blocking = false)
-      return materialized
+      val result = Boundary.stage(out)
+      Boundary.release(e)
+      return result
     }
-    val deg = e.select(col("u").as("node"))
+    val deg = Boundary.stage(e.select(col("u").as("node"))
       .union(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("degree"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("node").agg(count(lit(1)).as("degree")))
     val lower = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val o = e
+    val o = Boundary.stage(e
       .join(deg.select(col("node").as("u"), col("degree").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("degree").as("dv")), "v")
       .select(
         when(lower, col("u")).otherwise(col("v")).as("src"),
         when(lower, col("v")).otherwise(col("u")).as("dst"),
-        when(lower, col("dv")).otherwise(col("du")).as("ddeg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        when(lower, col("dv")).otherwise(col("du")).as("ddeg")))
     // wedges at each apex, ordered so the closing edge — if it exists
     // — is oriented x→y by the SAME total order; the (x, y) equi-join
     // against the oriented list closes them
@@ -320,11 +315,9 @@ object Graph {
           round(lit(2.0) * col("tri_count")
             / (col("degree") * (col("degree") - lit(1))), 6))
           .otherwise(lit(0.0)))
-    val materialized = out.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materialized.count()
-    Seq(e, deg, o).foreach(_.unpersist(blocking = false))
-    materialized
+    val result = Boundary.stage(out)
+    Seq(e, deg, o).foreach(Boundary.release)
+    result
   }
 
   /** Synchronous label-propagation community detection (Raghavan '07,

@@ -231,7 +231,7 @@ object IndexTuning {
       .agg((sum(when(col("__hit").isNotNull, 1L).otherwise(0L))
         / count(lit(1)).cast("double")).as("r"))
       .collect()
-    served.unpersist(blocking = false)
+    Boundary.release(served)
     if (r.isEmpty || r.head.isNullAt(0)) 1.0 // no true pairs: nothing sags
     else r.head.getDouble(0)
   }

@@ -742,8 +742,7 @@ object Similarity {
     def rd(x: Double): Double = // Spark Round semantics for doubles
       java.math.BigDecimal.valueOf(x)
         .setScale(roundTo, java.math.RoundingMode.HALF_UP).doubleValue()
-    val vecs = corpus.select(col(vecCol).cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vecs = Boundary.stage(corpus.select(col(vecCol).cast("array<double>").as("v")))
     val mean = vecs.select(posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy("pos").agg(round(avg(col("x")), roundTo).as("m"))
       .collect().sortBy(_.getInt(0)).map(_.getDouble(1))
@@ -770,7 +769,7 @@ object Similarity {
       eigenScale = nn
       comp = u.map(x => rd(x / nn))
     }
-    vecs.unpersist(blocking = false)
+    Boundary.release(vecs)
     (mean, comp, eigenScale)
   }
 
@@ -820,9 +819,8 @@ object Similarity {
   def kCenterCoreset(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int): (IndexedSeq[(Long, Array[Double])], DataFrame) = {
     require(k >= 1, s"k $k must be >= 1")
-    val vecs = corpus.select(col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vecs = Boundary.stage(corpus.select(col(idCol).cast("long").as("vec_id"),
+        col(vecCol).cast("array<double>").as("v")))
     def d2To(c: Array[Double]): Column = {
       var cDot = 0.0
       var i = 0
@@ -845,7 +843,7 @@ object Similarity {
         }.toIndexedSeq: _*)).as("__m"))
       .select(col("vec_id"), col("__m.cid").as("center_id"),
         round(col("__m.d"), 6).as("d2"))
-    vecs.unpersist(blocking = false)
+    Boundary.release(vecs)
     (chosen.toIndexedSeq, assign)
   }
 

@@ -79,29 +79,26 @@ object Unigram {
   def train(docs: DataFrame, textCol: String, iters: Int = 2,
       maxLen: Int = 3, seedTopK: Int = 200): Model = {
     require(iters >= 1 && maxLen >= 1 && seedTopK >= 1)
-    val vocab = vocabOf(docs, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vocab = Boundary.stage(vocabOf(docs, textCol))
     if (Tier.allows(docs.sparkSession, Tier.Model)(
         vocab.count() <= LocalVocabThreshold)) {
       // try/finally like the distributed arm below: a collect that
       // throws must not leave the corpus-vocab cache pinned
       val words =
         try vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-        finally vocab.unpersist(blocking = false)
+        finally Boundary.release(vocab)
       return trainLocal(words, iters, maxLen, seedTopK)
     }
     try {
       // seed: occurrence-weighted substring counts (every start ×
       // every length ≤ maxLen — the suffix-seed of SentencePiece)
-      val subs = vocab.select(
+      val subs = Boundary.stage(vocab.select(
           explode(expr(
             s"""flatten(transform(sequence(1, char_length(w)),
                |  i -> transform(sequence(1, least($maxLen, char_length(w) - i + 1)),
                |       l -> substring(w, i, l))))""".stripMargin)).as("piece"),
           col("freq"))
-        .groupBy("piece").agg(sum(col("freq")).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      subs.count()
+        .groupBy("piece").agg(sum(col("freq")).as("cnt")))
       try {
         val top = subs.orderBy(col("cnt").desc, col("piece"))
           .limit(seedTopK)
@@ -117,8 +114,8 @@ object Unigram {
           model = Model(normalized(counts), maxLen)
         }
         model
-      } finally subs.unpersist(blocking = false)
-    } finally vocab.unpersist(blocking = false)
+      } finally Boundary.release(subs)
+    } finally Boundary.release(vocab)
   }
 
   /** Spark round() replica: BigDecimal HALF_UP at 6dp — the decimal

@@ -59,9 +59,8 @@ object WordPiece {
              |  i -> transform(sequence(1, least($maxLen, char_length(w) - i + 1)),
              |       l -> substring(w, i, l)))) END""".stripMargin)).as("piece"),
         col("freq"), lit(1).as("cont"))
-    val counts = init.unionByName(cont)
-      .groupBy("piece", "cont").agg(sum(col("freq")).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = Boundary.stage(init.unionByName(cont)
+      .groupBy("piece", "cont").agg(sum(col("freq")).as("cnt")))
     try {
       val top = counts.orderBy(col("cnt").desc, col("cont"), col("piece"))
         .limit(topK)
@@ -72,7 +71,7 @@ object WordPiece {
         rows.filter(_.getInt(1) == 0).map(_.getString(0)).sorted.toSeq,
         rows.filter(_.getInt(1) == 1).map(_.getString(0)).sorted.toSeq,
         maxLen)
-    } finally counts.unpersist(blocking = false)
+    } finally Boundary.release(counts)
   }
 
   /** Greedy-encode every word occurrence: `(idCol, word, pieces)` —

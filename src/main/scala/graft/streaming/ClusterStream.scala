@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Clusters, Dedup}
+import graft.operators.{Boundary, Clusters, Dedup}
 
 /** The continuous SemDeDup LOOP — the wired composition the probe
   * operators feed: a STANDING (node, cluster_id) labeling kept
@@ -308,7 +308,7 @@ final class ClusterStream private (
     // lineage-free BEFORE the old one is released (foreachBatch
     // frames are not replayable after the micro-batch ends)
     val (next, delta) = ClusterFold.ingestFold(prev, ids, pairs)
-    raw.unpersist(blocking = false)
+    Boundary.release(raw)
     prev.unpersist(blocking = false)
     index = extended
     indexSizeState = -1L // appended a batch: size re-derives on demand
@@ -366,7 +366,7 @@ final class ClusterStream private (
     val pairs = Dedup.embeddingPairsFromIndex(sub, tau, probeRadius)
     val (next, delta) =
       ClusterFold.retractFold(prev, del, touched, remaining, pairs)
-    pairs.unpersist(blocking = false)
+    Boundary.release(pairs)
     prev.unpersist(blocking = false)
     labelsState = next
     // derived threshold (r18) against the MAINTAINED size (r19): no
@@ -467,7 +467,7 @@ final class TextClusterStream private (
     val pairs = tombSet.dropPairs(
       ClusterFold.normalizePairs(raw, "doc_a", "doc_b"), "vec_a", "vec_b")
     val (next, delta) = ClusterFold.ingestFold(prev, ids, pairs)
-    raw.unpersist(blocking = false)
+    Boundary.release(raw)
     prev.unpersist(blocking = false)
     index = extended
     indexSizeState = -1L
@@ -494,15 +494,12 @@ final class TextClusterStream private (
       index.sigs.join(remIds, Seq("doc_id"), "left_semi"),
       index.banded.join(remIds, Seq("doc_id"), "left_semi"),
       index.k, index.perms, index.bands)
-    // hold the eagerly-persisted raw pairs so they can be released
-    // after the fold (retractFold persists its own normalized copy) —
-    // the embedding twin does the same; without this each takedown
-    // leaks one cached frame for the life of the stream
-    val rawPairs = Dedup.minhashPairsFromIndex(sub, tau)
-    val pairs = ClusterFold.normalizePairs(rawPairs, "doc_a", "doc_b")
+    // the raw pairs are lazy (retractFold persists its own
+    // normalized copy): nothing to release after the fold
+    val pairs = ClusterFold.normalizePairs(
+      Dedup.minhashPairsFromIndex(sub, tau), "doc_a", "doc_b")
     val (next, delta) =
       ClusterFold.retractFold(prev, del, touched, remaining, pairs)
-    rawPairs.unpersist(blocking = false)
     prev.unpersist(blocking = false)
     labelsState = next
     // maintained size (r19): no per-retract count job

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.operators.Dedup
+import graft.operators.{Boundary, Dedup}
 
 /** Streaming incremental dedup — the continuous twins of
   * [[graft.operators.Dedup.exactIncremental]] (exact hash probe) and
@@ -120,11 +120,11 @@ object DedupStream {
       tau: Double)(onBatch: DataFrame => Unit): StreamingQuery =
     stream.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[Doc], _: Long) =>
-        // the probe's eager result persist is released once the
-        // consumer returns — a long-lived stream must not accrete one
-        // cached frame per micro-batch
+        // the probe's result boundary is released once the consumer
+        // returns — a long-lived stream must not accrete one cached
+        // frame per micro-batch
         val pairs = Dedup.minhashProbe(index, batch.toDF(), "doc_id", "text", tau)
-        try onBatch(pairs) finally pairs.unpersist(blocking = false)
+        try onBatch(pairs) finally Boundary.release(pairs)
       }
       .start()
 
@@ -141,7 +141,7 @@ object DedupStream {
     stream.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[Doc], _: Long) =>
         val spans = Dedup.substringProbe(index, batch.toDF(), "doc_id", "text")
-        try onBatch(spans) finally spans.unpersist(blocking = false)
+        try onBatch(spans) finally Boundary.release(spans)
       }
       .start()
 
@@ -160,7 +160,7 @@ object DedupStream {
       .foreachBatch { (batch: Dataset[Doc], _: Long) =>
         val stats = graft.operators.CdcIndex.cdcProbeFromIndex(
           index, batch.toDF(), "doc_id", "text")
-        try onBatch(stats) finally stats.unpersist(blocking = false)
+        try onBatch(stats) finally Boundary.release(stats)
       }
       .start()
 
@@ -184,7 +184,7 @@ object DedupStream {
       .foreachBatch { (batch: Dataset[EmbDoc], _: Long) =>
         val pairs = Dedup.embeddingProbe(index, batch.toDF(),
           "vec_id", "embedding", tau, probeRadius)
-        try onBatch(pairs) finally pairs.unpersist(blocking = false)
+        try onBatch(pairs) finally Boundary.release(pairs)
       }
       .start()
 }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Boundary, Dedup}
 import graft.sources.Tables
 
 /** Stage decomposition of the minhash fixed-batch probe (r16 verdict
@@ -51,25 +51,25 @@ object ProbeAutopsy {
       for (r <- 1 to reps) {
         // sig: fixed-batch work only
         val (tSig, nSig) = t {
-          val s = Dedup.minhashSigsOf(b, "doc_id", "text", idx.k, idx.perms)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val n = s.count(); s.unpersist(blocking = false); n
+          val s = Boundary.stage(
+            Dedup.minhashSigsOf(b, "doc_id", "text", idx.k, idx.perms))
+          val n = s.count(); Boundary.release(s); n
         }
         // cand: sig + band-table join (cumulative)
         val (tCand, nCand) = t {
-          val s = Dedup.minhashSigsOf(b, "doc_id", "text", idx.k, idx.perms)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val s = Boundary.stage(
+            Dedup.minhashSigsOf(b, "doc_id", "text", idx.k, idx.perms))
           val cand = idx.banded.as("a")
             .join(broadcast(Dedup.bandedOf(s, idx.perms, idx.bands)).as("b"),
               col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
             .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
             .dropDuplicates("doc_a", "doc_b")
-          val n = cand.count(); s.unpersist(blocking = false); n
+          val n = cand.count(); Boundary.release(s); n
         }
         // full: the production probe
         val (tFull, nFull) = t {
           val r = Dedup.minhashProbe(idx, b, "doc_id", "text", 0.5)
-          val n = r.count(); r.unpersist(blocking = false); n
+          val n = r.count(); Boundary.release(r); n
         }
         println(f"[probe-autopsy] $label rep$r: sig $tSig%6.3f s ($nSig rows)  " +
           f"cand $tCand%6.3f s ($nCand cands)  full $tFull%6.3f s ($nFull pairs)  " +

@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.SparkEntry
 import graft.functions.Text
-import graft.operators.{Clusters, Curation, Dedup, Tier}
+import graft.operators.{Boundary, Clusters, Curation, Dedup, Tier}
 import graft.sources.Tables
 import graft.streaming.{ClusterStream, LmLoop, LmStream, TextClusterStream}
 
@@ -150,7 +150,7 @@ object ScaleProbe {
 
   /** Count a result whose cache the caller owns, then release it. */
   private def countOnce(df: DataFrame): Long =
-    try df.count() finally df.unpersist(blocking = false)
+    try df.count() finally Boundary.release(df)
 
   /** LSH bits at `scale`× the corpus: 2^bits grows with N (4 → 4 +
     * log2 N), holding expected bucket occupancy constant — the index
@@ -321,18 +321,15 @@ object ScaleProbe {
       val idx = Dedup.embeddingIndex(corpus, "vec_id", "embedding", dim, bitsAt(scale), 8, 42L)
       val pairs = Dedup.embeddingPairsFromIndex(idx, 0.4)
       val labels = Clusters.connectedComponents(pairs, "vec_a", "vec_b")
-      pairs.unpersist(blocking = false)
+      Boundary.release(pairs)
       ClusterStream(idx, labels, "vec_id", "embedding", 0.4)
     }
     def textLoop(corpus: DataFrame): TextClusterStream = {
       val idx = Dedup.minhashIndex(corpus, "doc_id", "text", 3, 64, 16)
       val pairs = Dedup.minhashPairsFromIndex(idx, 0.5)
+      // the pairs are lazy over the standing index: nothing to release
       val labels = Clusters.connectedComponents(pairs, "doc_a", "doc_b")
-      // labels are checkpoint-materialized — release the persisted
-      // pairs before handing the loop out
-      val loop = TextClusterStream(idx, labels, "doc_id", "text", 0.5)
-      pairs.unpersist(blocking = false)
-      loop
+      TextClusterStream(idx, labels, "doc_id", "text", 0.5)
     }
     def at[T](scale: Int, one: T, many: T): T = if (scale == 1) one else many
 

@@ -69,6 +69,25 @@ object ColumnBridge {
         ds.queryExecution.toRdd, ds, isStreaming = false))
   }
 
+  /** Fill a persisted frame's cache and return the id of the RDD
+    * holding it: the one job AQE's `TableCacheQueryStageExec` runs
+    * for a cache a query reads first (`df.count()` adds its own map
+    * and result stages to it). */
+  def fillCache(df: org.apache.spark.sql.DataFrame): Int = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val buffers = ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .getOrElse(throw new IllegalStateException("frame is not persisted"))
+      .cachedRepresentation.cacheBuilder.cachedColumnBuffers
+    buffers.sparkContext.runJob(buffers, (_: Iterator[_]) => ())
+    buffers.id
+  }
+
+  /** Ids of the RDDs under `plan`'s `LogicalRDD` leaves. */
+  def leafRddIds(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[Int] =
+    plan.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+
   /** Append a planner strategy to a LIVE session (idempotent). */
   def addStrategy(spark: org.apache.spark.sql.SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {

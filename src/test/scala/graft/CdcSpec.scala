@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.expr.NativeFunctions.cdc_chunk_hashes
-import graft.operators.Dedup
+import graft.operators.{Boundary, Dedup}
 
 /** Content-defined chunking: the boundary rule is content-derived, so
   * chunk hashes must survive the insertions that shift every
@@ -89,7 +89,7 @@ class CdcSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getDouble(3)).toMap
     assert(ratios(1L) > 0.0 && ratios(2L) > 0.0)
     assert(ratios(3L) === 0.0, s"clean doc scored ${ratios(3L)}")
-    stats.unpersist()
+    Boundary.release(stats)
   }
 
   // ---- the standing index lifecycle ----
@@ -142,7 +142,7 @@ class CdcSpec extends SparkSpec {
     assert(byDoc(10L)._2 >= 3L, s"embedded passage undetected: ${byDoc(10L)}")
     assert(byDoc(10L)._3 > 0.0)
     assert(byDoc(11L)._2 === 0L && byDoc(11L)._3 === 0.0)
-    probe.unpersist()
+    Boundary.release(probe)
 
     CdcIndex.cdcIndexWrite(ix, "cdc_ix_chunks", "cdc_ix_members")
     val loaded = CdcIndex.cdcIndexLoad(spark, "cdc_ix_chunks",
@@ -150,7 +150,7 @@ class CdcSpec extends SparkSpec {
     val probe2 = CdcIndex.cdcProbeFromIndex(loaded, batch, "doc_id", "text")
     assert(probe2.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
       === probe.collect().map(r => (r.getLong(0), r.getLong(2))).toSet)
-    probe2.unpersist()
+    Boundary.release(probe2)
     // both guard directions: wrong param and unknown stamp both throw
     intercept[IllegalArgumentException] {
       CdcIndex.cdcIndexLoad(spark, "cdc_ix_chunks", "cdc_ix_members",
@@ -181,7 +181,7 @@ class CdcSpec extends SparkSpec {
       "doc_id", "text")
     val expected = oneShot.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    oneShot.unpersist()
+    Boundary.release(oneShot)
     assert(expected.exists(_._3 > 0L), "gate corpus should share chunks")
 
     val got = scala.collection.mutable.Set.empty[(Long, Long, Long)]

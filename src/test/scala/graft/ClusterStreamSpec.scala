@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.operators.{Clusters, Dedup}
+import graft.operators.{Boundary, Clusters, Dedup}
 import graft.sources.Tables
 import graft.streaming.{ClusterStream, DedupStream}
 
@@ -25,7 +25,7 @@ class ClusterStreamSpec extends SparkSpec {
       .select(col("node"), col("node").as("cluster_id"))
     val labels = cc.union(singles)
     val out = labels.as[(Long, Long)].collect().toSet
-    pairs.unpersist(blocking = false)
+    Boundary.release(pairs)
     out
   }
 
@@ -258,7 +258,7 @@ class ClusterStreamSpec extends SparkSpec {
       .join(cc.select("node"), Seq("node"), "left_anti")
       .select(col("node"), col("node").as("cluster_id"))
     val expected = cc.union(singles).as[(Long, Long)].collect().toSet
-    pairs.unpersist(blocking = false)
+    Boundary.release(pairs)
     assert(expected.exists(p => p._1 != p._2), "corpus should contain dups")
 
     val loop = TextClusterStream.empty(spark, "doc_id", "text", k, perms, bands, mtau)

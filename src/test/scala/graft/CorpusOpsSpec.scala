@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Events, Tier}
+import graft.operators.{Boundary, Curation, Events, Tier}
 import graft.sources.Tables
 
 /** Per-domain cap, mixture resampling, C4 filters (Curation) and the
@@ -136,7 +136,7 @@ class CorpusOpsSpec extends SparkSpec {
       val toks = graft.functions.Text.tokens(col("text"))
       def b(df: org.apache.spark.sql.DataFrame) = {
         val r = df.as[(Option[Long], Long, Double, String)].collect().toSet
-        df.unpersist(blocking = false)
+        Boundary.release(df)
         r
       }
       val pK = b(Curation.perplexityBuckets(docs, "doc_id", toks, 0.8))
@@ -352,7 +352,7 @@ class CorpusOpsSpec extends SparkSpec {
         headQ = 0.3, tailQ = 0.3)
     val out = outDf.select("doc_id", "avg_logprob", "ppl_bucket")
       .as[(Long, Double, String)].collect()
-    outDf.unpersist(blocking = false)
+    Boundary.release(outDf)
     assert(out.length === 13, "sub-2-token docs must drop, not bucket")
     val byB = out.groupBy(_._3).view.mapValues(_.map(_._2)).toMap
     assert(byB.keySet === Set("head", "middle", "tail"), s"buckets: ${byB.keySet}")
@@ -373,7 +373,7 @@ class CorpusOpsSpec extends SparkSpec {
         headQ = 0.3, tailQ = 0.3)
     val again = againDf.select("doc_id", "avg_logprob", "ppl_bucket")
       .as[(Long, Double, String)].collect()
-    againDf.unpersist(blocking = false)
+    Boundary.release(againDf)
     assert(out.sortBy(_._1).toSeq === again.sortBy(_._1).toSeq)
   }
 
@@ -384,7 +384,7 @@ class CorpusOpsSpec extends SparkSpec {
         headQ = 0.25, tailQ = 0.25)
     val out = outDf.groupBy("ppl_bucket").count()
       .as[(String, Long)].collect().toMap
-    outDf.unpersist(blocking = false)
+    Boundary.release(outDf)
     val n = out.values.sum.toDouble
     // quantile cuts land the advertised mass within tie slack
     assert(out("head") / n >= 0.15 && out("head") / n <= 0.45,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Clusters, Curation, Dedup}
+import graft.operators.{Boundary, Clusters, Curation, Dedup}
 import graft.sources.Tables
 
 /** Leakage-free holdout split, cross-doc boilerplate stats, and the
@@ -35,7 +35,7 @@ class CorpusSplitSpec extends SparkSpec {
       .filter((col("sa") === "train" && col("sb") === "test") ||
         (col("sa") === "test" && col("sb") === "train"))
     assert(crossing.count() === 0L)
-    pairs.unpersist()
+    Boundary.release(pairs)
   }
 
   test("holdoutSplit: test-touched clusters quarantine ALL their train-side docs") {
@@ -60,7 +60,7 @@ class CorpusSplitSpec extends SparkSpec {
         assert(r.getAs[Long]("n_leaked") === 0L,
           s"cluster ${r.get(0)} has no test doc but leaked docs")
     }
-    pairs.unpersist()
+    Boundary.release(pairs)
   }
 
   test("holdoutSplitWithClusters over a precomputed labeling matches holdoutSplit") {
@@ -74,7 +74,7 @@ class CorpusSplitSpec extends SparkSpec {
       buckets = 100, testBuckets = 20, clusters)
       .as[(Long, String)].collect().toSet
     assert(a === b)
-    pairs.unpersist()
+    Boundary.release(pairs)
   }
 
   // ---- boilerplateStats ----

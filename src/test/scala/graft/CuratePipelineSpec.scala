@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.operators.{CuratePipeline, Curation, Clusters, Dedup, DeconIndex}
+import graft.operators.{Boundary, CuratePipeline, Curation, Clusters, Dedup, DeconIndex}
 
 /** The end-to-end curation capstone: the composed funnel must agree
   * stage-for-stage with the standalone gated operators it wires
@@ -34,9 +34,13 @@ class CuratePipelineSpec extends SparkSpec {
 
   private lazy val cur = curate()
 
-  /** The boundary leaves, in the order of their persisted frames. */
+  /** The boundary leaves, in stage order. */
   private def leaves(c: CuratePipeline.Curated) =
     Seq(c.deduped, c.quality, c.deconned, c.mixed, c.packed)
+
+  /** The persisted frame behind each boundary leaf. */
+  private def origins(c: CuratePipeline.Curated) =
+    leaves(c).map(l => Boundary.origin(l).get)
 
   private def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
 
@@ -178,15 +182,14 @@ class CuratePipelineSpec extends SparkSpec {
       case s: InMemoryTableScanExec => Seq(s)
       case other => other.children.flatMap(scans)
     }
-    assert(cur.cached.size === 5)
-    cur.cached.foreach { df =>
+    origins(cur).foreach { df =>
       assert(scans(df.queryExecution.executedPlan).nonEmpty,
         "a boundary leaf must read the persisted frame, not recompute it")
     }
   }
 
   test("a leaf carries its boundary's size estimate") {
-    leaves(cur).zip(cur.cached).foreach { case (leaf, origin) =>
+    leaves(cur).zip(origins(cur)).foreach { case (leaf, origin) =>
       assert(leaf.queryExecution.optimizedPlan.stats.sizeInBytes ===
         origin.queryExecution.optimizedPlan.stats.sizeInBytes)
     }
@@ -207,10 +210,10 @@ class CuratePipelineSpec extends SparkSpec {
   }
 
   test("release unpersists the stage caches") {
+    val persisted = origins(cur)
     assert(cur.isLive)
     cur.release()
     assert(!cur.isLive)
-    assert(cur.cached.nonEmpty)
-    assert(cur.cached.forall(_.storageLevel === StorageLevel.NONE))
+    assert(persisted.forall(_.storageLevel === StorageLevel.NONE))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Relational}
+import graft.operators.{Boundary, Curation, Relational}
 import graft.sources.Tables
 
 /** Decontamination, stratified sampling, repetition stats, and the
@@ -232,6 +232,48 @@ class CurationNewSpec extends SparkSpec {
     assert(w.toSeq === w2.toSeq)
   }
 
+  test("logisticTrain reads a boundary leaf in place and stages a plain input") {
+    import scala.jdk.CollectionConverters._
+    val feats = (0 until 120).map { i =>
+      val x1 = (i % 60) / 60.0
+      (if (x1 > 0.5) 1.0 else 0.0, 1.0, x1)
+    }.toDF("y", "x0", "x1")
+    val unpersisted = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onUnpersistRDD(
+          e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
+        unpersisted.add(e.rddId)
+    }
+    // unpersists of RDDs made during the call: the context cleaner
+    // also unpersists older, collected RDDs at any time
+    def train(df: DataFrame): (Seq[Double], Int, Set[Int]) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      unpersisted.clear()
+      val firstId = spark.sparkContext.emptyRDD[Int].id
+      val w = Curation.logisticTrain(df, "y", Seq("x0", "x1"), iters = 3, lr = 5.0)
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      (w.toSeq, unpersisted.asScala.count(_ > firstId), added)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a plain frame is staged for the loop and released after it
+      val (wPlain, releasedPlain, leftPlain) = train(feats)
+      assert(releasedPlain === 1, "the loop's own boundary was not released")
+      assert(leftPlain.isEmpty)
+      // a boundary leaf is the caller's: no second cache is filled
+      // (and then released), and the leaf stays live
+      val leaf = Boundary.stage(feats)
+      val (wLeaf, releasedLeaf, leftLeaf) = train(leaf)
+      assert(releasedLeaf === 0, "a boundary leaf was cached a second time")
+      assert(leftLeaf.isEmpty)
+      assert(Boundary.isLive(leaf), "the caller's boundary was released")
+      assert(wLeaf === wPlain)
+      Boundary.release(leaf)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   // ---- hashedTokenFeatures: vocabulary separability ----
 
   // A planted LEXICAL rule: positives contain "zyzzyva", negatives
@@ -303,7 +345,7 @@ class CurationNewSpec extends SparkSpec {
     val sparse = Curation.logisticTrainSparse(long, "doc_id", "y",
       "bucket", "value", iters = 5)
     val sparseW = sparse.as[(Long, Double)].collect().toMap
-    sparse.unpersist()
+    Boundary.release(sparse)
     // dense pivot of the same frame: x_b = value if present else 0
     val dense = long.groupBy("doc_id").agg(
       first(col("y")).as("y"),

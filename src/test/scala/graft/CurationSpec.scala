@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Clusters, Curation, Dedup}
+import graft.operators.{Boundary, Clusters, Curation, Dedup}
 import graft.sources.Tables
 
 class CurationSpec extends SparkSpec {
@@ -108,8 +108,8 @@ class CurationSpec extends SparkSpec {
         "doc_a", "doc_b")
       .as[(Long, Long)].collect().toMap
     assert(inc === full)
-    oldPairs.unpersist(blocking = false)
-    allPairs.unpersist(blocking = false)
+    Boundary.release(oldPairs)
+    Boundary.release(allPairs)
   }
 
   test("connectedComponents resolves a long chain in O(log n) rounds") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Boundary, Dedup}
 import graft.sources.Tables
 
 class DedupSpec extends SparkSpec {
@@ -34,15 +34,13 @@ class DedupSpec extends SparkSpec {
     // operators that each build their own index
     val docs = Tables.documents(spark, sfDir)
     val cap = Dedup.autoCap(docs)
-    val sh = Dedup.shingleIndexOf(docs, "doc_id", "text", k = 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.count()
+    val sh = Boundary.stage(Dedup.shingleIndexOf(docs, "doc_id", "text", k = 3))
     val truthShared = Dedup.ngramJaccardPairsFromIndex(sh, cap, tau = 0.6)
       .orderBy("doc_a", "doc_b").collect().toSeq
     val candShared = Dedup.minhashLshPairsFromShingles(sh,
         perms = 64, bands = 16, tau = 0.5)
       .orderBy("doc_a", "doc_b").collect().toSeq
-    sh.unpersist(blocking = false)
+    Boundary.release(sh)
     val truth = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, tau = 0.6)
       .orderBy("doc_a", "doc_b").collect().toSeq
     val cand = Dedup.minhashLshPairs(docs, "doc_id", "text",

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Boundary, Dedup}
 import graft.sources.Tables
 import graft.streaming.DedupStream
 import graft.streaming.DedupStream.{Doc, ProbeResult}
@@ -128,7 +128,7 @@ class DedupStreamSpec extends SparkSpec {
     val idx = Dedup.substringIndexLoad(spark, "sst_h", "sst_m", "sst_t", k = 20)
     val oneShot = Dedup.substringProbe(idx, batchDocs.toDF(), "doc_id", "text")
     val expected = oneShot.as[(Long, Int, Int, Long)].collect().toSet
-    oneShot.unpersist(blocking = false)
+    Boundary.release(oneShot)
     assert(expected.nonEmpty, "gate corpus should contain cross passage dups")
 
     val got = scala.collection.mutable.Set.empty[(Long, Int, Int, Long)]
@@ -189,7 +189,7 @@ class DedupStreamSpec extends SparkSpec {
     val oneShot = Dedup.embeddingProbe(index,
       batchDocs.toDF("vec_id", "embedding"), "vec_id", "embedding", tau)
     val expected = oneShot.as[(Long, Long)].collect().toSet
-    oneShot.unpersist(blocking = false)
+    Boundary.release(oneShot)
     assert(expected.nonEmpty, "gate corpus should contain cross near-dups")
 
     val got = scala.collection.mutable.Set.empty[(Long, Long)]
@@ -224,7 +224,7 @@ class DedupStreamSpec extends SparkSpec {
       val b = Dedup.embeddingProbe(loaded, batch, "vec_id", "embedding", tau)
       assert(a.as[(Long, Long)].collect().toSet ===
         b.as[(Long, Long)].collect().toSet)
-      a.unpersist(blocking = false); b.unpersist(blocking = false)
+      Boundary.release(a); Boundary.release(b)
       inMem.release()
       // a different hyperplane family must hard-fail at load, not
       // silently probe dead buckets

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Profile, Tier}
+import graft.operators.{Boundary, Curation, Profile, Tier}
 
 /** Hand-checks for the r11 monitoring/planning trio: PMI
   * collocations, PSI drift, token-budget planner. */
@@ -56,7 +56,7 @@ class DriftPmiSpec extends SparkSpec {
     val docs = graft.sources.Tables.documents(spark, sfDir)
     def s(df: org.apache.spark.sql.DataFrame) = {
       val r = df.as[(String, String, Long, Double)].collect().toSet
-      df.unpersist(blocking = false)
+      Boundary.release(df)
       r
     }
     val kernel = s(Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 5L))
@@ -89,7 +89,7 @@ class DriftPmiSpec extends SparkSpec {
     ).toDF("text")
     def s(df: org.apache.spark.sql.DataFrame) = {
       val r = df.as[(String, String, Long, Double)].collect().toSet
-      df.unpersist(blocking = false)
+      Boundary.release(df)
       r
     }
     val kernel = s(Curation.pmiCollocations(docs, col("text"), window = 2, minCount = 2L))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Clusters, Dedup}
+import graft.operators.{Boundary, Clusters, Dedup}
 import graft.sources.Tables
 
 /** Durable standing-state contracts added in round 6 and hardened in
@@ -23,8 +23,8 @@ class DurableStateSpec extends SparkSpec {
     val b = viaIndex.as[(Long, Long)].collect().toSet
     assert(a.nonEmpty, "gate corpus should contain near-dups")
     assert(a === b)
-    direct.unpersist(blocking = false)
-    viaIndex.unpersist(blocking = false)
+    Boundary.release(direct)
+    Boundary.release(viaIndex)
     index.release()
   }
 
@@ -40,7 +40,7 @@ class DurableStateSpec extends SparkSpec {
     val refPairs = Dedup.embeddingPairsFromIndex(ref, tau)
     val expected = refPairs.as[(Long, Long)].collect().toSet
     val (refVecs, refBands) = (ref.vecs.count(), ref.banded.count())
-    refPairs.unpersist(blocking = false)
+    Boundary.release(refPairs)
     ref.release()
 
     // at-least-once delivery: the same batch re-delivered → no
@@ -54,7 +54,7 @@ class DurableStateSpec extends SparkSpec {
     assert(replayed.banded.count() === refBands)
     val replayedPairs = Dedup.embeddingPairsFromIndex(replayed, tau)
     assert(replayedPairs.as[(Long, Long)].collect().toSet === expected)
-    replayedPairs.unpersist(blocking = false)
+    Boundary.release(replayedPairs)
     replayed.release()
 
     // and the appended index ≡ an index built over the union outright
@@ -62,7 +62,7 @@ class DurableStateSpec extends SparkSpec {
       dim, bits, tables, seed)
     val fullPairs = Dedup.embeddingPairsFromIndex(full, tau)
     assert(fullPairs.as[(Long, Long)].collect().toSet === expected)
-    fullPairs.unpersist(blocking = false)
+    Boundary.release(fullPairs)
     full.release()
   }
 
@@ -80,7 +80,6 @@ class DurableStateSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     val (refSigs, refBands) = (ref.sigs.count(), ref.banded.count())
     assert(expected.nonEmpty, "gate corpus should contain near-dups")
-    refPairs.unpersist(blocking = false)
     ref.release()
 
     // re-delivered batch → no duplicate sig/band rows, same pairs
@@ -94,7 +93,6 @@ class DurableStateSpec extends SparkSpec {
     val replayedPairs = Dedup.minhashPairsFromIndex(replayed, mtau)
     assert(replayedPairs.select("doc_a", "doc_b")
       .as[(Long, Long)].collect().toSet === expected)
-    replayedPairs.unpersist(blocking = false)
     replayed.release()
 
     // appended ≡ an index built over the union outright
@@ -102,7 +100,6 @@ class DurableStateSpec extends SparkSpec {
     val fullPairs = Dedup.minhashPairsFromIndex(full, mtau)
     assert(fullPairs.select("doc_a", "doc_b")
       .as[(Long, Long)].collect().toSet === expected)
-    fullPairs.unpersist(blocking = false)
     full.release()
   }
 
@@ -121,14 +118,12 @@ class DurableStateSpec extends SparkSpec {
     val pd = Dedup.minhashPairsFromIndex(direct, mtau)
     val got = pr.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(got === pd.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
-    pr.unpersist(blocking = false); pd.unpersist(blocking = false)
     direct.release()
     // unknown ids: no-op
     val again = Dedup.minhashIndexRemove(removed,
       Seq(999999990L, 999999991L).toDF("doc_id"), "doc_id")
     val pa = Dedup.minhashPairsFromIndex(again, mtau)
     assert(pa.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet === got)
-    pa.unpersist(blocking = false)
     // re-admit: append restores the removed docs
     val readmitted = Dedup.minhashIndexAppend(again, victims, "doc_id", "text")
     val full = Dedup.minhashIndex(docs, "doc_id", "text", k, perms, bands)
@@ -137,7 +132,6 @@ class DurableStateSpec extends SparkSpec {
     val pf = Dedup.minhashPairsFromIndex(full, mtau)
     assert(prr.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet ===
       pf.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
-    prr.unpersist(blocking = false); pf.unpersist(blocking = false)
     readmitted.release(); full.release()
 
     // embedding twin: remove ≡ build over the survivors
@@ -152,7 +146,7 @@ class DurableStateSpec extends SparkSpec {
     val ed = Dedup.embeddingPairsFromIndex(eDirect, tau)
     assert(er.as[(Long, Long)].collect().toSet ===
       ed.as[(Long, Long)].collect().toSet)
-    er.unpersist(blocking = false); ed.unpersist(blocking = false)
+    Boundary.release(er); Boundary.release(ed)
     eRemoved.release(); eDirect.release()
   }
 
@@ -238,12 +232,12 @@ class DurableStateSpec extends SparkSpec {
         Seq((2L, s"b1 $shared b2")).toDF("doc_id", "text"), "doc_id", "text")
       assert(selfProbe.count() === 0L,
         "surviving representative must not flag against itself")
-      selfProbe.unpersist(blocking = false)
+      Boundary.release(selfProbe)
       val newProbe = Dedup.substringProbe(idx,
         Seq((300L, s"x1 $shared")).toDF("doc_id", "text"), "doc_id", "text")
       assert(newProbe.count() === 1L,
         "passage must still be indexed after its rep_doc's takedown")
-      newProbe.unpersist(blocking = false)
+      Boundary.release(newProbe)
     } finally idx.release()
   }
 
@@ -255,7 +249,7 @@ class DurableStateSpec extends SparkSpec {
     val expected = {
       val p = Dedup.substringProbe(idx, batch, "doc_id", "text")
       val r = p.as[(Long, Int, Int, Long)].collect().toSet
-      p.unpersist(blocking = false); r
+      Boundary.release(p); r
     }
     assert(expected.nonEmpty, "probe of a corpus text should span-flag")
     val ts = Seq("ss_hashes", "ss_members", "ss_tombs")
@@ -267,14 +261,14 @@ class DurableStateSpec extends SparkSpec {
         "ss_hashes", "ss_members", "ss_tombs", k = 20)
       val p2 = Dedup.substringProbe(back, batch, "doc_id", "text")
       assert(p2.as[(Long, Int, Int, Long)].collect().toSet === expected)
-      p2.unpersist(blocking = false)
+      Boundary.release(p2)
       // the loaded index continues the loop: append works against it
       // (the appended doc copies a corpus text, so the corpus doc
       // stays representative and the probe still flags the same span)
       val grown = Dedup.substringIndexAppend(back, batch, "doc_id", "text")
       val p3 = Dedup.substringProbe(grown, batch, "doc_id", "text")
       assert(p3.as[(Long, Int, Int, Long)].collect().toSet === expected)
-      p3.unpersist(blocking = false)
+      Boundary.release(p3)
       // wrong k → throw (a different window width never matches)
       intercept[IllegalArgumentException] {
         Dedup.substringIndexLoad(spark, "ss_hashes", "ss_members",
@@ -316,14 +310,14 @@ class DurableStateSpec extends SparkSpec {
       Seq((500L, s"q1 $w")).toDF("doc_id", "text"), "doc_id", "text")
     assert(probe.count() === 0L,
       "over-cap boilerplate must stop matching probes after append re-caps it")
-    probe.unpersist(blocking = false)
+    Boundary.release(probe)
     // tombstoned windows never re-enter via append...
     val idx3 = Dedup.substringIndexAppend(idx2,
       Seq(doc(5, "a")).toDF("doc_id", "text"), "doc_id", "text")
     val probe2 = Dedup.substringProbe(idx3,
       Seq((501L, s"q2 $w")).toDF("doc_id", "text"), "doc_id", "text")
     assert(probe2.count() === 0L, "tombstoned boilerplate re-entered via append")
-    probe2.unpersist(blocking = false)
+    Boundary.release(probe2)
     // ...and retraction does not resurrect them (monotone), even when
     // df drops back under cap
     val idx4 = Dedup.substringIndexRemove(idx3,
@@ -331,7 +325,7 @@ class DurableStateSpec extends SparkSpec {
     val probe3 = Dedup.substringProbe(idx4,
       Seq((502L, s"q3 $w")).toDF("doc_id", "text"), "doc_id", "text")
     assert(probe3.count() === 0L, "tombstone must survive retraction (monotone)")
-    probe3.unpersist(blocking = false)
+    Boundary.release(probe3)
     idx4.release()
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Urls
-import graft.operators.{Graph, Tier}
+import graft.operators.{Boundary, Graph, Tier}
 
 class GraphUrlSpec extends SparkSpec {
   import spark.implicits._
@@ -219,7 +219,7 @@ class GraphUrlSpec extends SparkSpec {
     assert(rows(2L) === ((3L, 2L, 0.666667)))
     assert(rows(3L) === ((2L, 1L, 1.0)))
     assert(rows(4L) === ((2L, 1L, 1.0)))
-    out.unpersist()
+    Boundary.release(out)
   }
 
   test("triangle census canonicalizes: duplicates, reversals, self-loops") {
@@ -229,7 +229,7 @@ class GraphUrlSpec extends SparkSpec {
     val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // one clean triangle on {1,2,3}, every node degree 2
     assert(rows.toSet === Set((1L, 2L, 1L), (2L, 2L, 1L), (3L, 2L, 1L)))
-    out.unpersist()
+    Boundary.release(out)
   }
 
   test("triangle census single-task kernel ≡ distributed wedge joins") {
@@ -247,7 +247,7 @@ class GraphUrlSpec extends SparkSpec {
     val k = kernel.orderBy("node").collect().toSeq
     val l = loop.orderBy("node").collect().toSeq
     assert(k === l)
-    kernel.unpersist(); loop.unpersist()
+    Boundary.release(kernel); Boundary.release(loop)
   }
 
   test("a star has no triangles and zero clustering at the hub") {
@@ -258,7 +258,7 @@ class GraphUrlSpec extends SparkSpec {
       .collect()(0).getDouble(0) === 0.0)
     // leaves have degree 1: clustering is defined as 0, not NaN/null
     assert(out.filter(col("degree") === 1 && col("clustering") =!= 0.0).count() === 0L)
-    out.unpersist()
+    Boundary.release(out)
   }
 
   // ---- label propagation ----

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.{Dedup, Similarity, Tier}
+import graft.operators.{Boundary, Dedup, Similarity, Tier}
 import graft.sources.Tables
 
 /** The adaptive-dispatch contract of the embedding-LSH family (the
@@ -17,10 +17,15 @@ import graft.sources.Tables
 class LshLocalSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The executed plan that produced `df`: a boundary leaf's is its
+    * persisted origin's. */
+  private def planOf(df: DataFrame): String =
+    Boundary.origin(df).getOrElse(df).queryExecution.executedPlan.toString
+
   /** Whether `df`'s plan is the single-task kernel: one Coalesce(1)
     * task and no exchange anywhere. */
   private def isKernel(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planOf(df)
     plan.contains("Coalesce 1") && !plan.contains("Exchange")
   }
 
@@ -62,9 +67,8 @@ class LshLocalSpec extends SparkSpec {
 
   test("local dispatch plan is single-task (Coalesce(1), no exchange)") {
     val e = Tables.embeddings(spark, sfDir)
-    val plan = Dedup.embeddingPairsLsh(e, "vec_id", "embedding",
-        dim = 64, bits = 4, tables = 8, seed = 42L, tau = 0.4)
-      .queryExecution.executedPlan.toString
+    val plan = planOf(Dedup.embeddingPairsLsh(e, "vec_id", "embedding",
+        dim = 64, bits = 4, tables = 8, seed = 42L, tau = 0.4))
     assert(plan.contains("Coalesce 1"), plan)
     assert(!plan.contains("Exchange"), plan)
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Relational, Tier}
+import graft.operators.{Boundary, Relational, Tier}
 import graft.sources.Tables
 
 /** Physical-plan assertions: correctness tests prove the small-SF
@@ -145,15 +145,18 @@ class PlanQualitySpec extends SparkSpec {
   test("perplexity triage: no global sort, thresholds are plan literals over the scored corpus") {
     // kernel + mid-tier pinned OFF (r18): this test pins the fully
     // DISTRIBUTED triage shape — the plan that runs at 100 TB
-    val ppl = Tier.pinned(spark, "distributed")(graft.operators.Curation.perplexityBuckets(
-      Tables.documents(spark, sfDir), "doc_id",
-      graft.functions.Text.tokens(col("text")), lambda = 0.8))
-    val p = plan(ppl)
-    ppl.unpersist(blocking = false) // caller-owned result cache (r17)
+    val docs = Tables.documents(spark, sfDir)
+    val toks = graft.functions.Text.tokens(col("text"))
+    val (ppl, scores) = Tier.pinned(spark, "distributed")((
+      graft.operators.Curation.perplexityBuckets(docs, "doc_id", toks, lambda = 0.8),
+      graft.operators.Curation.interpLogProb(docs, "doc_id", toks, 0.8)))
+    // the result is a boundary leaf over the score boundary's leaf:
+    // the triage is the score plan plus the result origin's bucket plan
+    val p = plan(scores) + plan(Boundary.origin(ppl).get)
+    Boundary.release(ppl)
     // bucket assignment must be a literal CASE compare, never a
-    // global sort or a single-partition rank window over the corpus
-    // (the r17 result cache prints the frozen bucket plan inside its
-    // InMemoryRelation, so the shape stays assertable). The only
+    // global sort or a single-partition rank window over the corpus.
+    // The only
     // Window allowed is the LM model's prefix-partitioned count fold
     // (r17) — keyed on __pfx, vocab-sized; a rank/row_number window
     // or a windowspecdefinition with an EMPTY partition clause
@@ -233,12 +236,12 @@ class PlanQualitySpec extends SparkSpec {
     val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 3)
     val sIdx = Dedup.substringIndex(corpus, "doc_id", "text", 20)
     try {
-      // the probe returns its result persisted; the executed plan
-      // still prints the cached join tree, so the broadcast assertion
+      // the probe returns a boundary leaf; its persisted origin
+      // prints the cached join tree, so the broadcast assertion
       // inspects the plan the probe actually ran
       val probed = Dedup.substringProbe(sIdx, batch, "doc_id", "text")
-      val p = plan(probed)
-      probed.unpersist(blocking = false)
+      val p = plan(Boundary.origin(probed).get)
+      Boundary.release(probed)
       assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
         s"substring probe candidate join does not broadcast:\n$p")
     } finally sIdx.release()
@@ -311,23 +314,22 @@ class PlanQualitySpec extends SparkSpec {
     assert(bigL.contains("LocalTableScan") && !bigL.contains("Exchange"),
       s"tiny-input bigram did not fold to the driver kernel:\n$bigL")
     // perplexityBuckets is the doc-bounded EXCEPTION: its bucket scan
-    // must read the persisted score frame (materialized by the cuts
-    // aggregate), never re-run the LM pipeline — r17: the returned
-    // frame is the caller-owned result cache, and the score cache it
-    // froze at materialization time must appear INSIDE its cached
-    // plan (an LM-pipeline subtree there means the bucket scan
-    // recomputed the scores instead of reading them). Pinned to the
+    // must read the staged score frame, never re-run the LM pipeline
+    // — the returned frame is a boundary leaf, and the score
+    // boundary's leaf must appear INSIDE its origin's cached plan (a
+    // corpus scan there means the bucket scan recomputed the scores
+    // instead of reading them). Pinned to the
     // distributed tiers (r18): on the kernel tier the scores are a
     // LocalRelation whose re-scan is free, so the internal score
     // cache is deliberately SKIPPED — asserted separately below.
     val pplDf = Tier.pinned(spark, "distributed")(graft.operators.Curation.perplexityBuckets(
       docs, "doc_id", toks, lambda = 0.8))
-    val ppl = plan(pplDf)
-    pplDf.unpersist(blocking = false)
-    // >= 2: the result's own cache read PLUS the frozen score-cache
-    // read inside it (1 alone would be the result cache wrapping a
-    // full LM recompute)
-    assert("InMemoryTableScan".r.findAllIn(ppl).size >= 2,
+    val ppl = plan(Boundary.origin(pplDf).get)
+    Boundary.release(pplDf)
+    // the result's own cache read PLUS the score leaf inside it, and
+    // no corpus scan (that would be a full LM recompute)
+    assert(ppl.contains("InMemoryTableScan") && ppl.contains("ExistingRDD") &&
+      !ppl.contains("FileScan"),
       s"perplexity bucket scan re-runs the LM pipeline instead of reading the score cache:\n$ppl")
     // kernel tier: the result cache wraps a LocalTableScan bucket
     // scan — no inner score cache (it would be pure overhead), no
@@ -335,7 +337,7 @@ class PlanQualitySpec extends SparkSpec {
     val pplK = graft.operators.Curation.perplexityBuckets(
       docs, "doc_id", toks, lambda = 0.8)
     val pk = plan(pplK)
-    pplK.unpersist(blocking = false)
+    Boundary.release(pplK)
     assert(pk.contains("LocalTableScan") || pk.contains("InMemoryTableScan"),
       s"kernel-tier perplexity result is not cached/local:\n$pk")
     assert(!pk.contains("FileScan"),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{Boundary, Similarity}
 import graft.sources.Tables
 
 class SimilaritySpec extends SparkSpec {
@@ -635,7 +635,7 @@ class SimilaritySpec extends SparkSpec {
     assert(wrong === 0L, s"$wrong vectors assigned across clusters")
     // and d2 is the exact squared distance to the OWN cluster's center
     assert(assign.filter(col("d2") > 1.0).count() === 0L)
-    assign.unpersist()
+    Boundary.release(assign)
   }
 
   test("nearest_centroid matches the composed argmin form bit-for-bit") {
