@@ -896,16 +896,17 @@ object SparkEntry {
 
     // the STANDING decon index's exact probe, driver-gated against
     // the SAME oracle as decon_ngram — the stored-tables path must
-    // flag identically to the one-shot operator (index frames are
-    // benchmark-sized localCheckpoints, released by the context
-    // cleaner when the result frame drops)
+    // flag identically to the one-shot operator (the probe is staged
+    // so the index generations can be released before returning)
     "decon_index_probe" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val isBench = col("source").isin("src0", "src1")
       val ix = graft.operators.DeconIndex.deconIndexBuild(
         docs.filter(isBench), "doc_id", "text", n = 5)
-      graft.operators.DeconIndex.deconProbeFromIndex(
-        ix, docs.filter(!isBench), "doc_id", "text")
+      val out = Boundary.stage(graft.operators.DeconIndex.deconProbeFromIndex(
+        ix, docs.filter(!isBench), "doc_id", "text"))
+      ix.release()
+      out
     }),
 
     // the INVERSE decon view: per benchmark doc, how much of it

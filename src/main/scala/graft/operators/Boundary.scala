@@ -29,8 +29,10 @@ import org.apache.spark.storage.StorageLevel
   * generation) before it returns; its result is a leaf the caller
   * releases. `unpersist()` on a leaf does nothing. A standing index's
   * frames ([[standing]]) are released only by name (the index's
-  * `release()`), never through a probe result's origin. Two
-  * boundaries over one plan share its cache. */
+  * `release()`), never through a probe result's origin. A
+  * [[generation]] — the lineage-cut frame a standing index or labeling
+  * swaps in — is released the same way. Two boundaries over one plan
+  * share its cache. */
 object Boundary {
 
   private sealed trait Slot
@@ -49,8 +51,9 @@ object Boundary {
       _ => new ConcurrentHashMap[Int, Slot]())
   }
 
-  private def cached(df: DataFrame): Set[Int] =
-    df.sparkSession.sparkContext.getPersistentRDDs.keySet.toSet
+  /** The context's persisted RDDs, by id. */
+  private def cached(df: DataFrame) =
+    df.sparkSession.sparkContext.getPersistentRDDs
 
   private def leaves(df: DataFrame): Seq[Int] =
     ColumnBridge.leafRddIds(df.queryExecution.analyzed).distinct
@@ -59,8 +62,20 @@ object Boundary {
   def stage(df: DataFrame): DataFrame = register(df, standing = false)
 
   /** [[stage]] for a standing index's frames (see the object doc). */
-  private[operators] def standing(df: DataFrame): DataFrame =
+  private[graft] def standing(df: DataFrame): DataFrame =
     register(df, standing = true)
+
+  /** An eager local checkpoint of `df`, registered like [[standing]]:
+    * the next generation of a standing index or labeling (old ∪ new −
+    * deleted), filled before its predecessor is released. Its lineage
+    * is cut, so a generation chain keeps a constant plan and a lost
+    * block fails the read instead of recomputing. */
+  private[graft] def generation(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(true)
+    val id = leaves(cp).head
+    slotsOf(df).put(id, Held(cp, id, standing = true, reads = Set.empty))
+    cp
+  }
 
   private def register(df: DataFrame, standing: Boolean): DataFrame = {
     // a fresh frame over df's plan: df's own QueryExecution may have
@@ -103,7 +118,11 @@ object Boundary {
       out ++= more
     }
     out.foreach { id =>
-      held(id).foreach(_.origin.unpersist(blocking = false))
+      held(id).foreach { h =>
+        h.origin.unpersist(blocking = false)
+        // a generation's blocks are its checkpoint RDD's, not a cache
+        cached(df).get(h.buffers).foreach(_.unpersist(blocking = false))
+      }
       reg.put(id, Released)
     }
   }

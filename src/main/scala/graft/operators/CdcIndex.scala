@@ -72,14 +72,13 @@ object CdcIndex {
     members.groupBy("ch").agg(countDistinct(col("doc_id")).as("n_docs"))
 
   /** Build the index from a landed corpus: one chunking pass, then
-    * the distinct membership + per-hash counts, lineage-truncated so
-    * append/remove chains compose without replaying prior
-    * generations (the deconIndexBuild contract). */
+    * the distinct membership + per-hash counts, each a
+    * [[Boundary.generation]] so append/remove chains compose without
+    * replaying prior generations (the deconIndexBuild contract). */
   def cdcIndexBuild(docs: DataFrame, idCol: String, textCol: String,
       w: Int = 4, modD: Int = 8, minLen: Int = 4): CdcIndex = {
-    val members = memberChunks(docs, idCol, textCol, w, modD, minLen)
-      .localCheckpoint(true)
-    CdcIndex(countsOf(members).localCheckpoint(true), members, w, modD, minLen)
+    val members = Boundary.generation(memberChunks(docs, idCol, textCol, w, modD, minLen))
+    CdcIndex(Boundary.generation(countsOf(members)), members, w, modD, minLen)
   }
 
   /** Fold a NEW batch in — replay-IDEMPOTENT (the
@@ -92,11 +91,10 @@ object CdcIndex {
     val fresh = memberChunks(docs, idCol, textCol,
         index.w, index.modD, index.minLen)
       .join(index.members, Seq("ch", "doc_id"), "left_anti")
-    val members2 = index.members.unionByName(fresh).localCheckpoint(true)
+    val members2 = Boundary.generation(index.members.unionByName(fresh))
     val affected = fresh.select(col("ch")).distinct()
-    val chunks2 = index.chunks.join(affected, Seq("ch"), "left_anti")
-      .unionByName(countsOf(members2.join(affected, Seq("ch"))))
-      .localCheckpoint(true)
+    val chunks2 = Boundary.generation(index.chunks.join(affected, Seq("ch"), "left_anti")
+      .unionByName(countsOf(members2.join(affected, Seq("ch")))))
     index.release()
     CdcIndex(chunks2, members2, index.w, index.modD, index.minLen)
   }
@@ -111,11 +109,9 @@ object CdcIndex {
     val del = ids.select(col(idCol).as("doc_id")).distinct()
     val affected = index.members.join(del, Seq("doc_id"))
       .select(col("ch")).distinct()
-    val members2 = index.members.join(del, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    val chunks2 = index.chunks.join(affected, Seq("ch"), "left_anti")
-      .unionByName(countsOf(members2.join(affected, Seq("ch"))))
-      .localCheckpoint(true)
+    val members2 = Boundary.generation(index.members.join(del, Seq("doc_id"), "left_anti"))
+    val chunks2 = Boundary.generation(index.chunks.join(affected, Seq("ch"), "left_anti")
+      .unionByName(countsOf(members2.join(affected, Seq("ch")))))
     index.release()
     CdcIndex(chunks2, members2, index.w, index.modD, index.minLen)
   }

@@ -67,14 +67,14 @@ object DeconIndex {
     members.groupBy("h").agg(countDistinct(col("bench_id")).as("n_bench_docs"))
 
   /** Build the index from a benchmark suite: one shingle pass, then
-    * the distinct membership + per-hash counts. Frames are
-    * localCheckpoint'd (truncated lineage — append/remove chains
-    * compose without replaying every prior generation). */
+    * the distinct membership + per-hash counts. Each frame is a
+    * [[Boundary.generation]] (truncated lineage — append/remove chains
+    * compose without replaying every prior generation); append and
+    * remove free the generation they replace. */
   def deconIndexBuild(bench: DataFrame, idCol: String, textCol: String,
       n: Int): DeconIndex = {
-    val members = benchShingles(bench, idCol, textCol, n)
-      .localCheckpoint(true)
-    DeconIndex(countsOf(members).localCheckpoint(true), members, n)
+    val members = Boundary.generation(benchShingles(bench, idCol, textCol, n))
+    DeconIndex(Boundary.generation(countsOf(members)), members, n)
   }
 
   /** Fold a NEW benchmark release in — replay-IDEMPOTENT (the
@@ -86,11 +86,10 @@ object DeconIndex {
       idCol: String, textCol: String): DeconIndex = {
     val fresh = benchShingles(bench, idCol, textCol, index.n)
       .join(index.members, Seq("h", "bench_id"), "left_anti")
-    val members2 = index.members.unionByName(fresh).localCheckpoint(true)
+    val members2 = Boundary.generation(index.members.unionByName(fresh))
     val affected = fresh.select(col("h")).distinct()
-    val shingles2 = index.shingles.join(affected, Seq("h"), "left_anti")
-      .unionByName(countsOf(members2.join(affected, Seq("h"))))
-      .localCheckpoint(true)
+    val shingles2 = Boundary.generation(index.shingles.join(affected, Seq("h"), "left_anti")
+      .unionByName(countsOf(members2.join(affected, Seq("h")))))
     index.release()
     DeconIndex(shingles2, members2, index.n)
   }
@@ -105,11 +104,9 @@ object DeconIndex {
     val del = ids.select(col(idCol).as("bench_id")).distinct()
     val affected = index.members.join(del, Seq("bench_id"))
       .select(col("h")).distinct()
-    val members2 = index.members.join(del, Seq("bench_id"), "left_anti")
-      .localCheckpoint(true)
-    val shingles2 = index.shingles.join(affected, Seq("h"), "left_anti")
-      .unionByName(countsOf(members2.join(affected, Seq("h"))))
-      .localCheckpoint(true)
+    val members2 = Boundary.generation(index.members.join(del, Seq("bench_id"), "left_anti"))
+    val shingles2 = Boundary.generation(index.shingles.join(affected, Seq("h"), "left_anti")
+      .unionByName(countsOf(members2.join(affected, Seq("h")))))
     index.release()
     DeconIndex(shingles2, members2, index.n)
   }

@@ -566,9 +566,10 @@ object Dedup {
     * already indexed, so a re-delivered micro-batch (or a re-sent
     * id) is a no-op instead of duplicate sig/band rows
     * (first-write-wins). The new generation is materialized
-    * lineage-free (`localCheckpoint`) BEFORE the old one is
-    * released — mandatory under foreachBatch, where the batch frame
-    * is not replayable after the micro-batch ends. The durable twin
+    * lineage-free ([[Boundary.generation]]) BEFORE the old one is
+    * released (which frees its blocks) — mandatory under
+    * foreachBatch, where the batch frame is not replayable after the
+    * micro-batch ends. The durable twin
     * is [[minhashIndexWrite]] mode-overwrite (rebuild-and-swap,
     * params re-stamped) + [[minhashIndexLoad]]. */
   def minhashIndexAppend(index: MinhashIndex, batch: DataFrame,
@@ -576,9 +577,9 @@ object Dedup {
     val fresh = batch.dropDuplicates(idCol)
       .join(index.sigs.select(col("doc_id").as(idCol)), Seq(idCol), "left_anti")
     val bSigs = minhashSigsOf(fresh, idCol, textCol, index.k, index.perms)
-    val sigs2 = index.sigs.union(bSigs).localCheckpoint(true)
-    val banded2 = index.banded
-      .union(bandedOf(bSigs, index.perms, index.bands)).localCheckpoint(true)
+    val sigs2 = Boundary.generation(index.sigs.union(bSigs))
+    val banded2 = Boundary.generation(
+      index.banded.union(bandedOf(bSigs, index.perms, index.bands)))
     index.release()
     MinhashIndex(sigs2, banded2, index.k, index.perms, index.bands)
   }
@@ -595,10 +596,8 @@ object Dedup {
   def minhashIndexRemove(index: MinhashIndex, ids: DataFrame,
       idCol: String): MinhashIndex = {
     val del = ids.select(col(idCol).as("doc_id")).distinct()
-    val sigs2 = index.sigs.join(del, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    val banded2 = index.banded.join(del, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val sigs2 = Boundary.generation(index.sigs.join(del, Seq("doc_id"), "left_anti"))
+    val banded2 = Boundary.generation(index.banded.join(del, Seq("doc_id"), "left_anti"))
     index.release()
     MinhashIndex(sigs2, banded2, index.k, index.perms, index.bands)
   }
@@ -609,10 +608,11 @@ object Dedup {
     * the join key → no Exchange when loaded from
     * [[minhashIndexWrite]] tables), and the verify reads stored
     * signatures. The re-dedup-after-policy-change shape: τ changes,
-    * the corpus doesn't, the index is already on disk. */
+    * the corpus doesn't, the index is already on disk. The pairs are
+    * a filled boundary leaf, released apart from the index. */
   def minhashPairsFromIndex(index: MinhashIndex, tau: Double): DataFrame =
-    verifyPairs(selfCandidates(index.banded), index.sigs, index.sigs,
-      index.perms, tau)
+    Boundary.stage(verifyPairs(selfCandidates(index.banded), index.sigs,
+      index.sigs, index.perms, tau))
 
   /** THE band-table self-join candidate block, shared by
     * [[minhashLshPairs]], [[minhashPairsFromIndex]] and the
@@ -853,9 +853,8 @@ object Dedup {
       .select(col("h"), col("doc_id")).dropDuplicates("h", "doc_id"))
     val agg = allPairs.groupBy("h")
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("rep_doc"))
-    val tombs = (if (dfCap == Int.MaxValue) agg.limit(0)
-      else agg.filter(col("n_docs") > dfCap))
-      .select(col("h")).localCheckpoint(true)
+    val tombs = Boundary.generation((if (dfCap == Int.MaxValue) agg.limit(0)
+      else agg.filter(col("n_docs") > dfCap)).select(col("h")))
     val hashes = Boundary.standing(agg.filter(col("n_docs") <= dfCap)
       .select(col("h"), col("rep_doc"), col("n_docs")))
     val members = Boundary.standing(allPairs.join(tombs, Seq("h"), "left_anti"))
@@ -886,13 +885,11 @@ object Dedup {
     val updated = grown.join(affected, Seq("h"))
       .groupBy("h").agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("rep_doc"))
     val newTombs = updated.filter(col("n_docs") > index.dfCap).select(col("h"))
-    val tombs2 = index.tombs.unionByName(newTombs).localCheckpoint(true)
-    val hashes2 = index.hashes.join(affected, Seq("h"), "left_anti")
+    val tombs2 = Boundary.generation(index.tombs.unionByName(newTombs))
+    val hashes2 = Boundary.generation(index.hashes.join(affected, Seq("h"), "left_anti")
       .unionByName(updated.filter(col("n_docs") <= index.dfCap)
-        .select(col("h"), col("rep_doc"), col("n_docs")))
-      .localCheckpoint(true)
-    val members2 = grown.join(newTombs, Seq("h"), "left_anti")
-      .localCheckpoint(true)
+        .select(col("h"), col("rep_doc"), col("n_docs"))))
+    val members2 = Boundary.generation(grown.join(newTombs, Seq("h"), "left_anti"))
     index.release()
     SubstringIndex(hashes2, members2, tombs2, index.k, index.dfCap)
   }
@@ -916,15 +913,13 @@ object Dedup {
       idCol: String): SubstringIndex = {
     val del = ids.select(col(idCol).as("doc_id")).distinct()
     val affected = index.members.join(del, Seq("doc_id")).select(col("h")).distinct()
-    val members2 = index.members.join(del, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val members2 = Boundary.generation(index.members.join(del, Seq("doc_id"), "left_anti"))
     val updated = members2.join(affected, Seq("h"))
       .groupBy("h").agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("rep_doc"))
-    val hashes2 = index.hashes.join(affected, Seq("h"), "left_anti")
-      .unionByName(updated.select(col("h"), col("rep_doc"), col("n_docs")))
-      .localCheckpoint(true)
-    // tombs carries over UNRELEASED (a localCheckpoint'd frame is
-    // unrecomputable once unpersisted) — release the replaced frames only
+    val hashes2 = Boundary.generation(index.hashes.join(affected, Seq("h"), "left_anti")
+      .unionByName(updated.select(col("h"), col("rep_doc"), col("n_docs"))))
+    // tombs carries over into the next generation: release the
+    // replaced frames only (a released generation is unreadable)
     Boundary.release(index.hashes)
     Boundary.release(index.members)
     SubstringIndex(hashes2, members2, index.tombs, index.k, index.dfCap)
@@ -1347,17 +1342,18 @@ object Dedup {
     * missed without this).
     *
     * The new generation (old rows ∪ signed batch rows) is
-    * MATERIALIZED LINEAGE-FREE (`localCheckpoint`) BEFORE the old
-    * generation is released — mandatory under `foreachBatch`, where
+    * MATERIALIZED LINEAGE-FREE ([[Boundary.generation]]) BEFORE the
+    * old generation is released — mandatory under `foreachBatch`, where
     * the batch frame is not replayable after the micro-batch ends, so
     * a lazy union referencing it would blow up on the next probe.
     * On a real cluster the durable twin is [[embeddingIndexWrite]]
     * mode-overwrite (rebuild-and-swap of the saved tables, params
     * re-stamped) with [[embeddingIndexLoad]] picking up the new
-    * generation; localCheckpoint here is the in-session form
+    * generation; the local checkpoint here is the in-session form
     * (executor-loss → job retry, same trade the CC rounds make).
     * Old and new generation briefly coexist (peak memory = old +
-    * batch); callers own the returned index's lifecycle.
+    * batch); the input index is released (its blocks freed) and the
+    * caller owns the returned one (`release()`).
     *
     * IDEMPOTENT under the at-least-once foreachBatch delivery the
     * probes run under: the batch is deduped on id and anti-joined
@@ -1376,10 +1372,9 @@ object Dedup {
       .withColumn("n2", Vectors.normSq(col("v")))
       .dropDuplicates("id")
       .join(index.vecs.select("id"), Seq("id"), "left_anti")
-    val vecs2 = index.vecs.union(b).localCheckpoint(true)
-    val banded2 = index.banded
-      .union(vecBands(b, index.dim, index.bits, index.tables, index.seed))
-      .localCheckpoint(true)
+    val vecs2 = Boundary.generation(index.vecs.union(b))
+    val banded2 = Boundary.generation(index.banded
+      .union(vecBands(b, index.dim, index.bits, index.tables, index.seed)))
     index.release()
     EmbeddingLshIndex(vecs2, banded2,
       index.dim, index.bits, index.tables, index.seed)
@@ -1392,10 +1387,8 @@ object Dedup {
   def embeddingIndexRemove(index: EmbeddingLshIndex, ids: DataFrame,
       idCol: String): EmbeddingLshIndex = {
     val del = ids.select(col(idCol).as("id")).distinct()
-    val vecs2 = index.vecs.join(del, Seq("id"), "left_anti")
-      .localCheckpoint(true)
-    val banded2 = index.banded.join(del, Seq("id"), "left_anti")
-      .localCheckpoint(true)
+    val vecs2 = Boundary.generation(index.vecs.join(del, Seq("id"), "left_anti"))
+    val banded2 = Boundary.generation(index.banded.join(del, Seq("id"), "left_anti"))
     index.release()
     EmbeddingLshIndex(vecs2, banded2,
       index.dim, index.bits, index.tables, index.seed)

@@ -42,8 +42,9 @@ import graft.operators.{Boundary, Clusters, Dedup}
   * corpus only in the one remap join and the id-projection anti-join
   * of the append; everything else is ∝ batch (probe candidates,
   * quotient CC). Standing frames are re-materialized lineage-free per
-  * batch (`localCheckpoint`, the generation-swap pattern) so lineage
-  * cannot grow with stream length; the durable cross-session twin is
+  * batch ([[Boundary.generation]], the generation-swap pattern) so
+  * lineage cannot grow with stream length, and each swap frees the
+  * generation it replaces; the durable cross-session twin is
   * [[checkpointTo]] / [[ClusterStream.resume]] on the
   * [[Clusters.clustersWrite]] bucketed table.
   *
@@ -58,72 +59,63 @@ import graft.operators.{Boundary, Clusters, Dedup}
 /** The labeling-fold core shared by the embedding loop
   * ([[ClusterStream]]) and the text loop ([[TextClusterStream]]):
   * given the previous labeling, the batch ids and the new
-  * (normalized, deduped) pairs, produce the next labeling
-  * (lineage-free) and the decision delta (persisted, materialized
-  * while the previous generation is still alive). */
+  * (normalized, deduped) pairs, produce the next labeling (a
+  * [[Boundary.generation]]) and the decision delta (a boundary leaf,
+  * filled while the previous generation is still alive). */
 private[graft] object ClusterFold {
 
   /** @return (next labels, delta). Caller releases `prev` AFTER this
-    *         returns (the delta is already materialized). The pair
-    *         frame is persisted for the duration of the fold: the CC
-    *         inside is ITERATIVE, and an unpersisted pair plan would
-    *         re-derive its candidate joins every round. */
+    *         returns (the delta is already filled). */
   def ingestFold(prev: DataFrame, ids: DataFrame,
-      pairs: DataFrame): (DataFrame, DataFrame) = {
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pairs: DataFrame): (DataFrame, DataFrame) = withPairs(pairs) { p =>
     // batch ids ride the incremental remap as extraNodes: edge-less
     // new docs become their own singleton label inside the SAME
     // resolution join, so each ingest pays exactly two labeling-sized
     // exchanges (resolution + remap) — not a third anti-join against
     // the corpus-sized result (r7 verdict plan-tightening)
-    val next = Clusters.incrementalComponents(prev, p, "vec_a", "vec_b",
-      extraNodes = Some(ids)).localCheckpoint(true)
-    val delta = changedDelta(next, prev)
-    p.unpersist(blocking = false)
-    (next, delta)
+    val next = Boundary.generation(Clusters.incrementalComponents(
+      prev, p, "vec_a", "vec_b", extraNodes = Some(ids)))
+    (next, Boundary.stage(changedDelta(next, prev)))
   }
 
   /** Retraction fold: untouched clusters pass through, the touched
     * clusters' remaining members re-cluster from `subPairs`, and the
     * delta carries tombstones (cluster_id NULL) + changed mappings. */
   def retractFold(prev: DataFrame, del: DataFrame, touched: DataFrame,
-      remaining: DataFrame, subPairs: DataFrame): (DataFrame, DataFrame) = {
-    val p = subPairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cc = Clusters.connectedComponents(p, "vec_a", "vec_b")
-    val singles = remaining.select("node")
-      .join(cc.select("node"), Seq("node"), "left_anti")
-      .select(col("node"), col("node").as("cluster_id"))
-    val untouched = prev.join(touched, Seq("cluster_id"), "left_anti")
-      .select(col("node"), col("cluster_id"))
-    val next = untouched.union(cc.select(col("node"), col("cluster_id")))
-      .union(singles).localCheckpoint(true)
-    val tombstones = del.join(prev, Seq("node"), "left_semi")
-      .select(col("node"), lit(null).cast("long").as("cluster_id"),
-        lit(false).as("keep"))
-    val delta = changedDelta(next, prev, materialize = false)
-      .union(tombstones)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    delta.count() // materialize while prev is still alive
-    p.unpersist(blocking = false)
-    (next, delta)
+      remaining: DataFrame, subPairs: DataFrame): (DataFrame, DataFrame) =
+    withPairs(subPairs) { p =>
+      val cc = Clusters.connectedComponents(p, "vec_a", "vec_b")
+      val singles = remaining.select("node")
+        .join(cc.select("node"), Seq("node"), "left_anti")
+        .select(col("node"), col("node").as("cluster_id"))
+      val untouched = prev.join(touched, Seq("cluster_id"), "left_anti")
+        .select(col("node"), col("cluster_id"))
+      val next = Boundary.generation(untouched
+        .union(cc.select(col("node"), col("cluster_id"))).union(singles))
+      val tombstones = del.join(prev, Seq("node"), "left_semi")
+        .select(col("node"), lit(null).cast("long").as("cluster_id"),
+          lit(false).as("keep"))
+      (next, Boundary.stage(changedDelta(next, prev).union(tombstones)))
+    }
+
+  /** Run a fold over its pair frame, cached: the CC inside is
+    * ITERATIVE, and an uncached pair plan would re-derive its
+    * candidate joins every round. A frame that already reads live
+    * boundaries (a probe or pair-operator result) is read in place;
+    * a plain one is staged for the fold and released after it. */
+  private def withPairs[T](pairs: DataFrame)(fold: DataFrame => T): T = {
+    val owned = !Boundary.isLive(pairs)
+    val p = if (owned) Boundary.stage(pairs) else pairs
+    try fold(p) finally if (owned) Boundary.release(p)
   }
 
-  private def changedDelta(next: DataFrame, prev: DataFrame,
-      materialize: Boolean = true): DataFrame = {
-    val changed = next.as("n")
+  private def changedDelta(next: DataFrame, prev: DataFrame): DataFrame =
+    next.as("n")
       .join(prev.select(col("node"), col("cluster_id").as("old_cid")).as("p"),
         Seq("node"), "left")
       .filter(col("old_cid").isNull || col("old_cid") =!= col("cluster_id"))
       .select(col("node"), col("cluster_id"),
         (col("node") === col("cluster_id")).as("keep"))
-    if (!materialize) changed
-    else {
-      val delta = changed
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      delta.count()
-      delta
-    }
-  }
 
   /** Normalize a raw pair frame (possibly with self-hits and both
     * orientations) to deduped unordered (vec_a < vec_b) pairs. */
@@ -166,9 +158,9 @@ private[graft] final class TombSet(session: => SparkSession) {
     * tomb-sized work (union + distinct + count over the tomb set). */
   def add(del: DataFrame): Unit = {
     val old = live()
-    val next = old.union(del).distinct().localCheckpoint(true)
+    val next = Boundary.generation(old.union(del).distinct())
     countState = next.count()
-    old.unpersist(blocking = false)
+    Boundary.release(old)
     tombsState = next
   }
 
@@ -197,13 +189,12 @@ private[graft] final class TombSet(session: => SparkSession) {
 
   /** Reset after the owner physically removed the tombstoned rows. */
   def reset(): Unit = {
-    if (tombsState != null) tombsState.unpersist(blocking = false)
+    release()
     tombsState = empty()
     countState = 0L
   }
 
-  def release(): Unit =
-    if (tombsState != null) tombsState.unpersist(blocking = false)
+  def release(): Unit = if (tombsState != null) Boundary.release(tombsState)
 }
 
 private[graft] object TombSet {
@@ -283,8 +274,8 @@ final class ClusterStream private (
   /** Fold one micro-batch of (id, vector) docs into the standing
     * state and return the decision delta:
     * `(node, cluster_id, keep)` for every node whose mapping is new
-    * or changed. The delta is eagerly persisted (the pair-operator
-    * caching contract) — callers unpersist when consumed. */
+    * or changed. The delta is a filled boundary leaf (the operator
+    * result contract): `Boundary.release` it once consumed. */
   def ingest(batch: DataFrame): DataFrame = synchronized {
     val prev = labelsState
     val ids = batch.select(col(idCol).cast("long").as("node")).distinct()
@@ -309,7 +300,7 @@ final class ClusterStream private (
     // frames are not replayable after the micro-batch ends)
     val (next, delta) = ClusterFold.ingestFold(prev, ids, pairs)
     Boundary.release(raw)
-    prev.unpersist(blocking = false)
+    Boundary.release(prev)
     index = extended
     indexSizeState = -1L // appended a batch: size re-derives on demand
     labelsState = next
@@ -343,7 +334,7 @@ final class ClusterStream private (
     * (`cluster_id` NULL, `keep` false), plus every surviving node
     * whose mapping changed (splits, representative renames) with the
     * usual `keep = (node = cluster_id)`. Retracting unknown ids is a
-    * no-op. Eagerly persisted — callers unpersist. */
+    * no-op. A filled boundary leaf, like [[ingest]]'s delta. */
   def retract(ids: DataFrame): DataFrame = synchronized {
     val prev = labelsState
     val del = ids.select(col(ids.columns.head).cast("long").as("node")).distinct()
@@ -367,7 +358,7 @@ final class ClusterStream private (
     val (next, delta) =
       ClusterFold.retractFold(prev, del, touched, remaining, pairs)
     Boundary.release(pairs)
-    prev.unpersist(blocking = false)
+    Boundary.release(prev)
     labelsState = next
     // derived threshold (r18) against the MAINTAINED size (r19): no
     // per-retract count job — indexSize() memoizes per generation
@@ -403,7 +394,7 @@ final class ClusterStream private (
 
   def release(): Unit = synchronized {
     index.release()
-    labelsState.unpersist(blocking = false)
+    Boundary.release(labelsState)
     tombSet.release()
   }
 }
@@ -454,8 +445,8 @@ final class TextClusterStream private (
   }
 
   /** Fold one micro-batch of (id, text) docs into the standing state;
-    * returns the (node, cluster_id, keep) decision delta (persisted —
-    * callers unpersist). */
+    * returns the (node, cluster_id, keep) decision delta (a filled
+    * boundary leaf — `Boundary.release` it once consumed). */
   def ingest(batch: DataFrame): DataFrame = synchronized {
     val prev = labelsState
     val ids = batch.select(col(idCol).cast("long").as("node")).distinct()
@@ -468,7 +459,7 @@ final class TextClusterStream private (
       ClusterFold.normalizePairs(raw, "doc_a", "doc_b"), "vec_a", "vec_b")
     val (next, delta) = ClusterFold.ingestFold(prev, ids, pairs)
     Boundary.release(raw)
-    prev.unpersist(blocking = false)
+    Boundary.release(prev)
     index = extended
     indexSizeState = -1L
     labelsState = next
@@ -494,13 +485,11 @@ final class TextClusterStream private (
       index.sigs.join(remIds, Seq("doc_id"), "left_semi"),
       index.banded.join(remIds, Seq("doc_id"), "left_semi"),
       index.k, index.perms, index.bands)
-    // the raw pairs are lazy (retractFold persists its own
-    // normalized copy): nothing to release after the fold
-    val pairs = ClusterFold.normalizePairs(
-      Dedup.minhashPairsFromIndex(sub, tau), "doc_a", "doc_b")
-    val (next, delta) =
-      ClusterFold.retractFold(prev, del, touched, remaining, pairs)
-    prev.unpersist(blocking = false)
+    val raw = Dedup.minhashPairsFromIndex(sub, tau)
+    val (next, delta) = ClusterFold.retractFold(prev, del, touched,
+      remaining, ClusterFold.normalizePairs(raw, "doc_a", "doc_b"))
+    Boundary.release(raw)
+    Boundary.release(prev)
     labelsState = next
     // maintained size (r19): no per-retract count job
     if (tombSet.needsCompact(indexSize())) compact()
@@ -529,7 +518,7 @@ final class TextClusterStream private (
 
   def release(): Unit = synchronized {
     index.release()
-    labelsState.unpersist(blocking = false)
+    Boundary.release(labelsState)
     tombSet.release()
   }
 }
@@ -541,7 +530,7 @@ object TextClusterStream {
   def apply(index: Dedup.MinhashIndex, labels: DataFrame,
       idCol: String, textCol: String, tau: Double): TextClusterStream =
     new TextClusterStream(index,
-      labels.select(col("node"), col("cluster_id")).localCheckpoint(true),
+      Boundary.generation(labels.select(col("node"), col("cluster_id"))),
       idCol, textCol, tau)
 
   /** Cold start: the first batches build the corpus. */
@@ -575,7 +564,7 @@ object TextClusterStream {
     stream.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[DedupStream.Doc], _: Long) =>
         val delta = loop.ingest(batch.toDF())
-        try onBatch(delta) finally delta.unpersist(blocking = false)
+        try onBatch(delta) finally Boundary.release(delta)
       }
       .start()
 }
@@ -591,7 +580,7 @@ object ClusterStream {
       idCol: String, vecCol: String, tau: Double,
       probeRadius: Int = 0): ClusterStream =
     new ClusterStream(index,
-      labels.select(col("node"), col("cluster_id")).localCheckpoint(true),
+      Boundary.generation(labels.select(col("node"), col("cluster_id"))),
       idCol, vecCol, tau, probeRadius)
 
   /** Start a loop from EMPTY state (cold start: the first batches
@@ -625,14 +614,14 @@ object ClusterStream {
   /** Drive the loop from a stream: one [[ClusterStream.ingest]] per
     * micro-batch, the decision delta handed to `onBatch` (an
     * idempotent upsert sink in production — replays emit empty
-    * deltas). The delta's persist is released when `onBatch`
+    * deltas). The delta's boundary is released when `onBatch`
     * returns. */
   def semdedupQuery(stream: Dataset[DedupStream.EmbDoc], loop: ClusterStream)
       (onBatch: DataFrame => Unit): StreamingQuery =
     stream.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[DedupStream.EmbDoc], _: Long) =>
         val delta = loop.ingest(batch.toDF())
-        try onBatch(delta) finally delta.unpersist(blocking = false)
+        try onBatch(delta) finally Boundary.release(delta)
       }
       .start()
 }

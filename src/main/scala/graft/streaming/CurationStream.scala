@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Curation, Dedup, DeconIndex}
+import graft.operators.{Boundary, Curation, Dedup, DeconIndex}
 
 /** The END-TO-END continuous curation pipeline: every micro-batch
   * runs the same gauntlet a batch corpus build runs — exact-dup
@@ -76,29 +76,26 @@ object CurationStream {
 
   /** foreachBatch driver: run each micro-batch through the gauntlet
     * against the frozen corpus and hand the decision frame to the
-    * sink callback. The corpus HASH index is built and persisted
-    * ONCE (16 bytes/doc — corpus text is never re-hashed per batch);
-    * micro-batches broadcast their own hashes into it, so per-batch
-    * cost ∝ batch. The index's lifecycle is owned by the QUERY: a
-    * termination listener unpersists it when the query stops (for
-    * any reason), so a stopped gauntlet leaks no executor storage. */
+    * sink callback. The corpus HASH index is built ONCE as a standing
+    * boundary (16 bytes/doc — corpus text is never re-hashed per
+    * batch); micro-batches broadcast their own hashes into it, so
+    * per-batch cost ∝ batch. Each batch's decisions are a boundary
+    * released once the callback returns. The index's lifecycle is
+    * owned by the QUERY: a termination listener releases it when the
+    * query stops (for any reason), so a stopped gauntlet leaks no
+    * executor storage. */
   def curateQuery(stream: Dataset[Doc], corpus: DataFrame)(
       onBatch: DataFrame => Unit): StreamingQuery = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val corpusHashes = corpus
-      .select(col("doc_id").as("__cid"), md5(col("text")).as("__h"))
-      .persist(lvl)
-    corpusHashes.count()
+    val corpusHashes = Boundary.standing(corpus
+      .select(col("doc_id").as("__cid"), md5(col("text")).as("__h")))
     val query = stream.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[Doc], _: Long) =>
         val b = batch.toDF()
-        val decided = decide(
+        val decided = Boundary.stage(decide(
           Dedup.exactIncrementalHashed(corpusHashes, b, "doc_id", "text"),
-          b, 10, 50000, 0, -2.0, 0.6, -6.0, 0.1, -4.0, 0.12, 0.05)
-          .persist(lvl)
-        decided.count()
+          b, 10, 50000, 0, -2.0, 0.6, -6.0, 0.1, -4.0, 0.12, 0.05))
         try onBatch(decided)
-        finally decided.unpersist(blocking = false)
+        finally Boundary.release(decided)
       }
       .start()
     val spark = corpus.sparkSession
@@ -109,7 +106,7 @@ object CurationStream {
         override def onQueryProgress(e: QueryProgressEvent): Unit = ()
         override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
           if (e.id == query.id) {
-            corpusHashes.unpersist(blocking = false)
+            Boundary.release(corpusHashes)
             spark.streams.removeListener(this)
           }
       }
@@ -117,9 +114,9 @@ object CurationStream {
     // close the start→addListener race (r9 ADVICE): a query that
     // terminated before the listener registered never receives its
     // QueryTerminatedEvent — clean up inline in that case. (If the
-    // event DID also fire, the double-unpersist/remove are no-ops.)
+    // event DID also fire, the double release/remove are no-ops.)
     if (!query.isActive) {
-      corpusHashes.unpersist(blocking = false)
+      Boundary.release(corpusHashes)
       spark.streams.removeListener(listener)
     }
     query

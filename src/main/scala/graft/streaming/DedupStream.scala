@@ -23,20 +23,15 @@ object DedupStream {
   case class ProbeResult(doc_id: Long, dup_of: Option[Long])
 
   /** Standing exact index of a corpus: content hash → lowest doc id,
-    * PERSISTED AND MATERIALIZED here (the minhashIndex land-time
-    * pattern) — without it the stream-static join would re-scan the
-    * corpus and re-run the groupBy on every micro-batch, which is
-    * exactly the O(corpus)-per-batch cost this module exists to
-    * avoid. Refresh by building a new index and swapping; callers own
-    * the lifecycle (`unpersist()` when done — same contract as the
-    * batch pair operators). */
-  def exactIndex(corpus: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val idx = corpus.select(md5(col(textCol)).as("h"), col(idCol).as("__cid"))
-      .groupBy("h").agg(min("__cid").as("corpus_dup"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    idx.count()
-    idx
-  }
+    * a filled standing boundary (the minhashIndex land-time pattern)
+    * — without it the stream-static join would re-scan the corpus
+    * and re-run the groupBy on every micro-batch, which is exactly the
+    * O(corpus)-per-batch cost this module exists to avoid. Refresh by
+    * building a new index and swapping; callers own the lifecycle
+    * (`Boundary.release` when done). */
+  def exactIndex(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
+    Boundary.standing(corpus.select(md5(col(textCol)).as("h"), col(idCol).as("__cid"))
+      .groupBy("h").agg(min("__cid").as("corpus_dup")))
 
   /** Continuous exact-dedup probe with CROSS-BATCH memory.
     *

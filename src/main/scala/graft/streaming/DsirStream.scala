@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Curation
+import graft.operators.{Boundary, Curation}
 
 /** Continuous DSIR deployment — the staleness answer for the
   * data-selection scorer, mirroring the LM loop (LmStream): scoring
@@ -127,8 +127,8 @@ object DsirStream {
   /** foreachBatch driver: score each micro-batch against the current
     * generation, fold its count delta, refresh every `refreshEvery`
     * batches AFTER scoring (a batch never influences its own
-    * weights). Scored frames are eagerly persisted by ingest — the
-    * callback consumes them, then this driver unpersists. */
+    * weights). Scored frames are boundary leaves — the callback
+    * consumes them, then this driver releases them. */
   def refreshingScoreQuery(stream: Dataset[Doc], loop: DsirLoop,
       refreshEvery: Int)(onBatch: DataFrame => Unit): StreamingQuery = {
     require(refreshEvery >= 1, s"refreshEvery must be >= 1, got $refreshEvery")
@@ -136,7 +136,7 @@ object DsirStream {
       .foreachBatch { (batch: Dataset[Doc], batchId: Long) =>
         val scored = loop.ingest(batchId, batch.toDF(), col("target"))
         try onBatch(scored)
-        finally scored.unpersist(blocking = false)
+        finally Boundary.release(scored)
         if ((batchId + 1) % refreshEvery == 0) loop.refresh()
       }
       .start()
@@ -177,25 +177,23 @@ final class DsirLoop(initial: DsirStream.DsirModel,
     * batchId was already ingested (at-least-once replay): replays
     * re-score (downstream consumes by batchId) but never re-fold.
     * The batch is tokenized/bucketized ONCE, feeding both the
-    * scoring dot and the count delta. The scored frame is eagerly
-    * persisted — callers unpersist when consumed. */
+    * scoring dot and the count delta. The scored frame is a filled
+    * boundary leaf, filled BEFORE the delta fold can swap state —
+    * `Boundary.release` it once consumed. */
   def ingest(batchId: Long, batch: DataFrame, isTarget: Column): DataFrame =
     synchronized {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val base = graft.operators.Curation.dsirBucketize(
-        batch, "doc_id", col("text"), isTarget, model.nBuckets).persist(lvl)
-      val scored = base.select(col("__id").as("doc_id"),
-          round(graft.operators.Curation.dsirDotCol(model.logRatios), 6)
-            .as("dsir_logweight"))
-        .persist(lvl)
-      scored.count() // materialize BEFORE the delta fold can swap state
+      val base = Boundary.stage(graft.operators.Curation.dsirBucketize(
+        batch, "doc_id", col("text"), isTarget, model.nBuckets))
+      val scored = Boundary.stage(base.select(col("__id").as("doc_id"),
+        round(graft.operators.Curation.dsirDotCol(model.logRatios), 6)
+          .as("dsir_logweight")))
       if (batchId > highWater && !seen.contains(batchId)) {
         val (ct, cr) = graft.operators.Curation.dsirCounts(base, model.nBuckets)
         val delta = DsirModel(ct, cr)
         pending = Some(pending.fold(delta)(merge(_, delta)))
         seen += batchId
       }
-      base.unpersist(blocking = false)
+      Boundary.release(base)
       scored
     }
 

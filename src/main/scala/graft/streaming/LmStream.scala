@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.Boundary
+
 /** Streaming LM quality scoring — the continuous deployment shape of
   * [[graft.operators.Curation.interpLogProb]]: the n-gram LM is a
   * FROZEN artifact trained once on a reference corpus (and refreshed
@@ -20,18 +22,14 @@ object LmStream {
 
   case class Doc(doc_id: Long, text: String)
 
-  /** Frozen hash-keyed LM tables (persisted) + the two corpus
-    * scalars. `vocab` counts distinct unigrams; unseen tokens take
-    * add-one mass over (total + vocab + 1) — the +1 is the OOV
+  /** Frozen hash-keyed LM tables (standing boundaries) + the two
+    * corpus scalars. `vocab` counts distinct unigrams; unseen tokens
+    * take add-one mass over (total + vocab + 1) — the +1 is the OOV
     * class, so every token (seen or not) gets positive probability
     * and no score is −∞. */
   final case class LmModel(bigram: DataFrame, prefix: DataFrame,
       unigram: DataFrame, total: Long, vocab: Long) {
-    def release(): Unit = {
-      bigram.unpersist(blocking = false)
-      prefix.unpersist(blocking = false)
-      unigram.unpersist(blocking = false)
-    }
+    def release(): Unit = Seq(bigram, prefix, unigram).foreach(Boundary.release)
   }
 
   // bigram/unigram builders are SHARED with the batch operator
@@ -43,22 +41,20 @@ object LmStream {
 
   /** Train (and materialize) the frozen LM: three map-side-combining
     * frequency aggregates over the corpus, 8-byte hash keys
-    * throughout (the interpLogProb shapes), persisted as the standing
-    * lookup tables. The corpus is tokenized twice (unigram pass +
-    * bigram pass) and never again. */
+    * throughout (the interpLogProb shapes), filled once as the
+    * standing lookup tables. The corpus is tokenized twice (unigram
+    * pass + bigram pass) and never again. */
   def trainLm(corpus: DataFrame, idCol: String, tokens: Column): LmModel = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val uni = graft.operators.Curation.unigramHashCounts(corpus, tokens)
-      .persist(lvl)
+    val uni = Boundary.standing(
+      graft.operators.Curation.unigramHashCounts(corpus, tokens))
     val withB = bigramRows(corpus, idCol, tokens)
-    val bf = withB.groupBy("bigram_h").agg(count("*").as("bcnt")).persist(lvl)
-    val pf = withB.groupBy("prefix_h").agg(count("*").as("pcnt")).persist(lvl)
+    val bf = Boundary.standing(withB.groupBy("bigram_h").agg(count("*").as("bcnt")))
+    val pf = Boundary.standing(withB.groupBy("prefix_h").agg(count("*").as("pcnt")))
     // two corpus scalars (land-time driver state, the centroid/codebook
     // pattern): total token occurrences and distinct vocab
     val Array(total, vocab) = uni
       .agg(sum("ucnt").cast("long"), count("*")).collect()(0)
       .toSeq.map(_.asInstanceOf[Long]).toArray
-    bf.count(); pf.count() // materialize the standing tables once
     LmModel(bf, pf, uni, total, vocab)
   }
 
@@ -71,19 +67,17 @@ object LmStream {
     * is the merged table's row count (distinct union). Cost ∝ model
     * table sizes (vocab-bounded), never ∝ corpus — the property that
     * makes periodic refresh affordable at 100 TB standing state.
-    * Returns a new materialized model; inputs stay live (callers
-    * release). */
+    * Returns a new filled model whose tables are plan leaves, so a
+    * chain of merges keeps a constant plan; inputs stay live
+    * (callers release). */
   def mergeLm(a: LmModel, b: LmModel): LmModel = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def merged(x: DataFrame, y: DataFrame, key: String, cnt: String) =
-      x.select(col(key), col(cnt)).union(y.select(col(key), col(cnt)))
-        .groupBy(key).agg(sum(cnt).as(cnt)).persist(lvl)
+      Boundary.standing(x.select(col(key), col(cnt)).union(y.select(col(key), col(cnt)))
+        .groupBy(key).agg(sum(cnt).as(cnt)))
     val bf = merged(a.bigram, b.bigram, "bigram_h", "bcnt")
     val pf = merged(a.prefix, b.prefix, "prefix_h", "pcnt")
     val uni = merged(a.unigram, b.unigram, "token_h", "ucnt")
-    bf.count(); pf.count()
-    val vocab = uni.count() // materializes uni; distinct union vocab
-    LmModel(bf, pf, uni, a.total + b.total, vocab)
+    LmModel(bf, pf, uni, a.total + b.total, uni.count()) // distinct union vocab
   }
 
   /** Version of the LM hash/tokenization convention (whitespace
@@ -192,8 +186,8 @@ object LmStream {
     * the loop's CURRENT frozen generation and lands for the next
     * refresh; every `refreshEvery`-th batch triggers the
     * merge-and-swap AFTER its own scoring (a batch never influences
-    * its own scores). Scored frames are eagerly persisted — the
-    * callback consumes them, then this driver unpersists. */
+    * its own scores). Scored frames are boundary leaves — the
+    * callback consumes them, then this driver releases them. */
   def refreshingScoreQuery(stream: Dataset[Doc], loop: LmLoop,
       refreshEvery: Int)(onBatch: DataFrame => Unit): StreamingQuery = {
     require(refreshEvery >= 1, s"refreshEvery must be >= 1, got $refreshEvery")
@@ -201,7 +195,7 @@ object LmStream {
       .foreachBatch { (batch: Dataset[Doc], batchId: Long) =>
         val scored = loop.ingest(batchId, batch.toDF())
         try onBatch(scored)
-        finally scored.unpersist(blocking = false)
+        finally Boundary.release(scored)
         if ((batchId + 1) % refreshEvery == 0) loop.refresh()
       }
       .start()
@@ -215,8 +209,8 @@ object LmStream {
   * what's new is the generation lifecycle:
   *
   *   - [[ingest]] scores a micro-batch against the current frozen
-  *     model and LANDS the batch (persisted, batch-sized) for the
-  *     next refresh;
+  *     model and LANDS the batch (a standing boundary, batch-sized)
+  *     for the next refresh;
   *   - [[refresh]] trains a DELTA LM on the landed batches only and
   *     [[LmStream.mergeLm]]s it into the standing model — exact ≡
   *     retraining on corpus ∪ landed (counts add), at cost ∝ landed
@@ -257,20 +251,18 @@ final class LmLoop(initial: LmStream.LmModel, lambda: Double,
   /** Score one micro-batch against the FROZEN current generation and
     * land it for the next refresh — UNLESS this batchId was already
     * ingested (at-least-once replay): replays re-score (downstream
-    * consumes by batchId) but never re-land. The scored frame is
-    * eagerly persisted (the pair-operator caching contract) —
-    * callers unpersist when consumed. */
+    * consumes by batchId) but never re-land. The scored frame is a
+    * filled boundary leaf (the operator result contract) —
+    * `Boundary.release` it once consumed. */
   def ingest(batchId: Long, batch: DataFrame): DataFrame = synchronized {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val b = batch.select(col("doc_id"), col("text")).persist(lvl)
-    b.count() // land eagerly: foreachBatch frames die with the batch
-    val scored = scoreBatch(model, b, "doc_id",
-      graft.functions.Text.tokens(col("text")), lambda).persist(lvl)
-    scored.count()
+    // land eagerly: foreachBatch frames die with the batch
+    val b = Boundary.standing(batch.select(col("doc_id"), col("text")))
+    val scored = Boundary.stage(scoreBatch(model, b, "doc_id",
+      graft.functions.Text.tokens(col("text")), lambda))
     if (batchId > highWater && !seen.contains(batchId)) {
       landed = b :: landed
       seen += batchId
-    } else b.unpersist(blocking = false) // replay: nothing to land
+    } else Boundary.release(b) // replay: nothing to land
     scored
   }
 
@@ -287,14 +279,14 @@ final class LmLoop(initial: LmStream.LmModel, lambda: Double,
       val prev = model
       model = next
       prev.release(); delta.release()
-      landed.foreach(_.unpersist(blocking = false))
+      landed.foreach(Boundary.release)
       landed = Nil
     }
   }
 
   def release(): Unit = synchronized {
     model.release()
-    landed.foreach(_.unpersist(blocking = false))
+    landed.foreach(Boundary.release)
     landed = Nil
   }
 

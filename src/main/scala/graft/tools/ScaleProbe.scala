@@ -3,7 +3,6 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.storage.StorageLevel
 
 import graft.SparkEntry
 import graft.functions.Text
@@ -202,7 +201,6 @@ object ScaleProbe {
     * in the N× state too. */
   private def standing(spark: SparkSession, names: Seq[String], mult: Int,
       dir1: String, dirN: String, res: Results): Unit = {
-    val lvl = StorageLevel.MEMORY_AND_DISK
     val docs1 = Tables.table(spark, dir1, "documents").select("doc_id", "text")
     val docsN = Tables.table(spark, dirN, "documents").select("doc_id", "text")
     val emb1 = Tables.table(spark, dir1, "embeddings").select("vec_id", "embedding")
@@ -215,12 +213,10 @@ object ScaleProbe {
     if (names.contains("curate_probe")) {
       // novel text (suffix token): the batch is dup-free against BOTH
       // corpora, so the survivor count reads identically at 1× and N×
-      val batch = docs1.limit(500).withColumn("text", concat(col("text"), lit(" zz"))).persist(lvl)
-      batch.count()
-      def index(c: DataFrame): DataFrame = {
-        val i = c.select(col("doc_id").as("__cid"), md5(col("text")).as("__h")).persist(lvl)
-        i.count(); i
-      }
+      val batch = Boundary.stage(
+        docs1.limit(500).withColumn("text", concat(col("text"), lit(" zz"))))
+      def index(c: DataFrame): DataFrame =
+        Boundary.stage(c.select(col("doc_id").as("__cid"), md5(col("text")).as("__h")))
       val idx1 = index(docs1); val idxN = index(docsN)
       def probe(idx: DataFrame) = timed {
         val dups = Dedup.exactIncrementalHashed(idx, batch, "doc_id", "text")
@@ -231,7 +227,7 @@ object ScaleProbe {
       probe(idx1) // warm codegen
       val (t1, n1) = probe(idx1)
       val (tN, nN) = probe(idxN)
-      Seq(idx1, idxN, batch).foreach(_.unpersist(blocking = false))
+      Seq(idx1, idxN, batch).foreach(Boundary.release)
       res.record("curate_probe", t1, tN, n1, nN, "flat=1")
     }
 
@@ -275,9 +271,8 @@ object ScaleProbe {
         d.select(col("doc_id").as("src"), (col("doc_id") - pmod(col("doc_id"), lit(4))).as("dst"))
           .filter(col("src") =!= col("dst"))
       val edgesN = chain(docsN)
-      val lab1 = Clusters.connectedComponents(chain(docs1), "src", "dst").persist(lvl)
-      val labN = Clusters.connectedComponents(edgesN, "src", "dst").persist(lvl)
-      lab1.count(); labN.count()
+      val lab1 = Boundary.stage(Clusters.connectedComponents(chain(docs1), "src", "dst"))
+      val labN = Boundary.stage(Clusters.connectedComponents(edgesN, "src", "dst"))
       // fixed frontier: pair up 2000 real representatives (cluster
       // ids ARE member ids by the CC contract) → 1000 merge edges
       val reps = lab1.select("cluster_id").distinct().orderBy("cluster_id")
@@ -293,7 +288,7 @@ object ScaleProbe {
       val (t1, n1) = time(Clusters.incrementalComponents(lab1, frontier, "src", "dst").count())
       val (tN, nN) = time(Clusters.incrementalComponents(labN, frontier, "src", "dst").count())
       val (tFull, _) = time(Clusters.connectedComponents(edgesN.union(frontier), "src", "dst").count())
-      lab1.unpersist(blocking = false); labN.unpersist(blocking = false)
+      Boundary.release(lab1); Boundary.release(labN)
       res.record("clusters_inc_fold", t1, tN, n1, nN, s"linear=$mult")
       println(f"[scaleprobe] clusters_inc_vs_full inc@${mult}x: $tN%6.2f s  " +
         f"full-recompute@${mult}x: $tFull%6.2f s  inc/full: ${tN / tFull}%5.2f (want ≪ 1)")
@@ -327,8 +322,8 @@ object ScaleProbe {
     def textLoop(corpus: DataFrame): TextClusterStream = {
       val idx = Dedup.minhashIndex(corpus, "doc_id", "text", 3, 64, 16)
       val pairs = Dedup.minhashPairsFromIndex(idx, 0.5)
-      // the pairs are lazy over the standing index: nothing to release
       val labels = Clusters.connectedComponents(pairs, "doc_a", "doc_b")
+      Boundary.release(pairs)
       TextClusterStream(idx, labels, "doc_id", "text", 0.5)
     }
     def at[T](scale: Int, one: T, many: T): T = if (scale == 1) one else many
@@ -401,7 +396,7 @@ object ScaleProbe {
       val batch = batchOf(docs1, "doc_id")
       def refresh(corpus: DataFrame): Double = {
         val loop = new LmLoop(LmStream.trainLm(corpus, "doc_id", toks), 0.9)
-        loop.ingest(0L, batch).unpersist(blocking = false)
+        Boundary.release(loop.ingest(0L, batch))
         val (dt, _) = timed { loop.refresh(); 0L }
         loop.release()
         dt

@@ -76,7 +76,7 @@ class ClusterStreamSpec extends SparkSpec {
     assert(delta.select("node", "cluster_id", "keep")
       .as[(Long, Long, Boolean)].collect().toSet ===
       Set((7L, 1L, false), (8L, 8L, true), (9L, 9L, true)))
-    delta.unpersist(blocking = false)
+    Boundary.release(delta)
 
     // plan shape: the fold's labeling plan must contain NO anti-join —
     // singletons surface from the null side of the SAME resolution
@@ -99,12 +99,12 @@ class ClusterStreamSpec extends SparkSpec {
       dim, bits, tables, seed, tau)
     Seq(first, second).foreach { b =>
       val d = loop.ingest(b.toDF("vec_id", "embedding"))
-      assert(d.count() > 0); d.unpersist(blocking = false)
+      assert(d.count() > 0); Boundary.release(d)
     }
     val before = loop.labels.as[(Long, Long)].collect().toSet
     val replay = loop.ingest(second.toDF("vec_id", "embedding"))
     assert(replay.count() === 0L)
-    replay.unpersist(blocking = false)
+    Boundary.release(replay)
     assert(loop.labels.as[(Long, Long)].collect().toSet === before)
     loop.release()
   }
@@ -125,11 +125,11 @@ class ClusterStreamSpec extends SparkSpec {
     val d1 = loop.ingest(a.toDF("vec_id", "embedding"))
     val s1 = loop.labels.as[(Long, Long)].collect().toSet
     assert(s1 === Set((10L, 10L), (11L, 10L), (20L, 20L), (21L, 20L)))
-    d1.unpersist(blocking = false)
+    Boundary.release(d1)
     val d2 = loop.ingest(bridge.toDF("vec_id", "embedding"))
     val changes = d2.select("node", "cluster_id", "keep")
       .as[(Long, Long, Boolean)].collect().toSet
-    d2.unpersist(blocking = false)
+    Boundary.release(d2)
     // cluster 20 is absorbed into 10: its members re-label, the old
     // representative 20 flips to keep=false; bridge doc is a dup too
     assert(changes === Set(
@@ -147,7 +147,7 @@ class ClusterStreamSpec extends SparkSpec {
       EmbDoc(30L, vec(0.7, 0.7)))
     val loop = ClusterStream.empty(spark, "vec_id", "embedding",
       dim, bits, tables, seed, tau = 0.7, probeRadius = 1)
-    loop.ingest(a.toDF("vec_id", "embedding")).unpersist(blocking = false)
+    Boundary.release(loop.ingest(a.toDF("vec_id", "embedding")))
     assert(loop.labels.as[(Long, Long)].collect().toSet ===
       Set((10L, 10L), (11L, 10L), (20L, 10L), (21L, 10L), (30L, 10L)))
     // retract the bridge: the cluster must SPLIT back in two, with
@@ -155,7 +155,7 @@ class ClusterStreamSpec extends SparkSpec {
     val d = loop.retract(Seq(30L).toDF("vec_id"))
     val rows = d.select("node", "cluster_id", "keep")
       .as[(Long, Option[Long], Boolean)].collect().toSet
-    d.unpersist(blocking = false)
+    Boundary.release(d)
     assert(rows === Set(
       (30L, None, false),          // tombstone
       (20L, Some(20L), true),      // split + representative rename
@@ -165,7 +165,7 @@ class ClusterStreamSpec extends SparkSpec {
     // unknown ids are a no-op
     val d2 = loop.retract(Seq(999L).toDF("vec_id"))
     assert(d2.count() === 0L)
-    d2.unpersist(blocking = false)
+    Boundary.release(d2)
     loop.release()
   }
 
@@ -179,9 +179,9 @@ class ClusterStreamSpec extends SparkSpec {
     def vec(x: Double, y: Double) = Array.fill(62)(0.0) ++ Array(x, y)
     val loop = ClusterStream.empty(spark, "vec_id", "embedding",
       dim, bits, tables, seed, tau = 0.7, probeRadius = 1)
-    loop.ingest(Seq(EmbDoc(10L, vec(1.0, 0.0)), EmbDoc(11L, vec(0.0, 1.0)))
-      .toDF("vec_id", "embedding")).unpersist(blocking = false)
-    loop.retract(Seq(11L).toDF("vec_id")).unpersist(blocking = false)
+    Boundary.release(loop.ingest(Seq(EmbDoc(10L, vec(1.0, 0.0)), EmbDoc(11L, vec(0.0, 1.0)))
+      .toDF("vec_id", "embedding")))
+    Boundary.release(loop.retract(Seq(11L).toDF("vec_id")))
     assert(loop.labels.as[(Long, Long)].collect().toSet === Set((10L, 10L)))
     // 12 is near-identical to the RETRACTED 11 and far from 10: with
     // the tombstone filter it must land as a singleton
@@ -189,7 +189,7 @@ class ClusterStreamSpec extends SparkSpec {
       .toDF("vec_id", "embedding"))
     assert(d.select("node", "cluster_id", "keep")
       .as[(Long, Long, Boolean)].collect().toSet === Set((12L, 12L, true)))
-    d.unpersist(blocking = false)
+    Boundary.release(d)
     assert(loop.labels.as[(Long, Long)].collect().toSet ===
       Set((10L, 10L), (12L, 12L)))
     // re-admission: a batch containing the tombstoned id compacts the
@@ -197,7 +197,7 @@ class ClusterStreamSpec extends SparkSpec {
     // the min-id representative wins
     val d2 = loop.ingest(Seq(EmbDoc(11L, vec(0.0, 1.0)))
       .toDF("vec_id", "embedding"))
-    d2.unpersist(blocking = false)
+    Boundary.release(d2)
     assert(loop.labels.as[(Long, Long)].collect().toSet ===
       Set((10L, 10L), (11L, 11L), (12L, 11L)))
     loop.release()
@@ -208,14 +208,14 @@ class ClusterStreamSpec extends SparkSpec {
     val mk = (id: Long, t: String) => (id, t)
     val base = "the quick brown fox jumps over the lazy dog again and again today"
     val loop = TextClusterStream.empty(spark, "doc_id", "text", 3, 64, 16, 0.5)
-    loop.ingest(Seq(mk(1L, base), mk(2L, "completely different words entirely unrelated content here now"))
-      .toDF("doc_id", "text")).unpersist(blocking = false)
-    loop.retract(Seq(1L).toDF("doc_id")).unpersist(blocking = false)
+    Boundary.release(loop.ingest(Seq(mk(1L, base), mk(2L, "completely different words entirely unrelated content here now"))
+      .toDF("doc_id", "text")))
+    Boundary.release(loop.retract(Seq(1L).toDF("doc_id")))
     // 3 is a near-copy of the RETRACTED 1 — must land as a singleton
     val d = loop.ingest(Seq(mk(3L, base + " extra")).toDF("doc_id", "text"))
     assert(d.select("node", "cluster_id", "keep")
       .as[(Long, Long, Boolean)].collect().toSet === Set((3L, 3L, true)))
-    d.unpersist(blocking = false)
+    Boundary.release(d)
     assert(loop.labels.as[(Long, Long)].collect().toSet ===
       Set((2L, 2L), (3L, 3L)))
     loop.release()
@@ -230,15 +230,14 @@ class ClusterStreamSpec extends SparkSpec {
 
     val loop = ClusterStream.empty(spark, "vec_id", "embedding",
       dim, bits, tables, seed, tau)
-    loop.ingest(docs.toDF("vec_id", "embedding")).unpersist(blocking = false)
-    loop.retract(victims.toDF("vec_id")).unpersist(blocking = false)
+    Boundary.release(loop.ingest(docs.toDF("vec_id", "embedding")))
+    Boundary.release(loop.retract(victims.toDF("vec_id")))
     val got = loop.labels.as[(Long, Long)].collect().toSet
     loop.release()
 
     val ref = ClusterStream.empty(spark, "vec_id", "embedding",
       dim, bits, tables, seed, tau)
-    ref.ingest(docs.filter(d => d.vec_id % 10 != 7).toDF("vec_id", "embedding"))
-      .unpersist(blocking = false)
+    Boundary.release(ref.ingest(docs.filter(d => d.vec_id % 10 != 7).toDF("vec_id", "embedding")))
     val expected = ref.labels.as[(Long, Long)].collect().toSet
     ref.release()
     assert(got === expected)
@@ -279,7 +278,7 @@ class ClusterStreamSpec extends SparkSpec {
     // replay the last batch directly: empty delta
     val replay = loop.ingest(docs.takeRight(docs.size / 4).toDF("doc_id", "text"))
     assert(replay.count() === 0L)
-    replay.unpersist(blocking = false)
+    Boundary.release(replay)
     loop.release()
   }
 
@@ -291,15 +290,13 @@ class ClusterStreamSpec extends SparkSpec {
     val docs = docsDf.select(col("doc_id"), col("text"))
       .as[Doc].collect().sortBy(_.doc_id).toSeq
     val loop = TextClusterStream.empty(spark, "doc_id", "text", k, perms, bands, mtau)
-    loop.ingest(docs.toDF("doc_id", "text")).unpersist(blocking = false)
-    loop.retract(docs.filter(_.doc_id % 10 == 7).map(_.doc_id).toDF("doc_id"))
-      .unpersist(blocking = false)
+    Boundary.release(loop.ingest(docs.toDF("doc_id", "text")))
+    Boundary.release(loop.retract(docs.filter(_.doc_id % 10 == 7).map(_.doc_id).toDF("doc_id")))
     val got = loop.labels.as[(Long, Long)].collect().toSet
     loop.release()
 
     val ref = TextClusterStream.empty(spark, "doc_id", "text", k, perms, bands, mtau)
-    ref.ingest(docs.filter(_.doc_id % 10 != 7).toDF("doc_id", "text"))
-      .unpersist(blocking = false)
+    Boundary.release(ref.ingest(docs.filter(_.doc_id % 10 != 7).toDF("doc_id", "text")))
     val expected = ref.labels.as[(Long, Long)].collect().toSet
     ref.release()
     assert(got === expected)
@@ -321,7 +318,7 @@ class ClusterStreamSpec extends SparkSpec {
     try {
       val loop = TextClusterStream.empty(spark, "doc_id", "text",
         k, perms, bands, mtau)
-      loop.ingest(first.toDF("doc_id", "text")).unpersist(blocking = false)
+      Boundary.release(loop.ingest(first.toDF("doc_id", "text")))
       // land both halves of the standing state durably: the docs
       // whose ids are indexed so far, re-signed into bucketed tables
       val landed = docsDf.join(
@@ -330,12 +327,12 @@ class ClusterStreamSpec extends SparkSpec {
         "tcs_sigs", "tcs_band")
       loop.checkpointTo("tcs_labels", params)
       // continue the ORIGINAL loop as the reference
-      loop.ingest(second.toDF("doc_id", "text")).unpersist(blocking = false)
+      Boundary.release(loop.ingest(second.toDF("doc_id", "text")))
       val expected = loop.labels.as[(Long, Long)].collect().toSet
       loop.release()
       val resumed = TextClusterStream.resume(spark, "tcs_sigs", "tcs_band",
         "tcs_labels", params, "doc_id", "text", k, perms, bands, mtau)
-      resumed.ingest(second.toDF("doc_id", "text")).unpersist(blocking = false)
+      Boundary.release(resumed.ingest(second.toDF("doc_id", "text")))
       assert(resumed.labels.as[(Long, Long)].collect().toSet === expected)
       resumed.release()
     } finally Seq("tcs_sigs", "tcs_band", "tcs_labels")
@@ -356,7 +353,7 @@ class ClusterStreamSpec extends SparkSpec {
       val loop = ClusterStream.empty(spark, "vec_id", "embedding",
         dim, bits, tables, seed, tau)
       val d1 = loop.ingest(first.toDF("vec_id", "embedding"))
-      d1.unpersist(blocking = false)
+      Boundary.release(d1)
       // land both halves of the standing state durably
       Dedup.embeddingIndexWrite(
         loop.standingIndex.vecs.select(col("id").as("vec_id"), col("v").as("embedding")),
@@ -364,7 +361,7 @@ class ClusterStreamSpec extends SparkSpec {
       loop.checkpointTo("cs_labels", params)
       // continue the ORIGINAL loop as the reference
       val d2 = loop.ingest(second.toDF("vec_id", "embedding"))
-      d2.unpersist(blocking = false)
+      Boundary.release(d2)
       val expected = loop.labels.as[(Long, Long)].collect().toSet
       loop.release()
       // resume from disk in a "new session" and ingest the same tail
@@ -372,7 +369,7 @@ class ClusterStreamSpec extends SparkSpec {
         "cs_labels", params, "vec_id", "embedding",
         dim, bits, tables, seed, tau)
       val d3 = resumed.ingest(second.toDF("vec_id", "embedding"))
-      d3.unpersist(blocking = false)
+      Boundary.release(d3)
       assert(resumed.labels.as[(Long, Long)].collect().toSet === expected)
       resumed.release()
     } finally Seq("cs_vecs", "cs_band", "cs_labels")
@@ -396,9 +393,9 @@ class ClusterStreamSpec extends SparkSpec {
     try {
       val loop = ClusterStream.empty(spark, "vec_id", "embedding",
         dim, bits, tables, seed, t, probeRadius = 1)
-      loop.ingest(Seq(EmbDoc(10L, vec(1.0, 0.0)), EmbDoc(11L, vec(0.0, 1.0)))
-        .toDF("vec_id", "embedding")).unpersist(blocking = false)
-      loop.retract(Seq(11L).toDF("vec_id")).unpersist(blocking = false)
+      Boundary.release(loop.ingest(Seq(EmbDoc(10L, vec(1.0, 0.0)), EmbDoc(11L, vec(0.0, 1.0)))
+        .toDF("vec_id", "embedding")))
+      Boundary.release(loop.retract(Seq(11L).toDF("vec_id")))
       // land both halves through the PUBLIC surface, exactly the
       // recipe the roundtrip spec demonstrates — this used to write
       // the un-compacted index (11 still physically present)
@@ -420,7 +417,7 @@ class ClusterStreamSpec extends SparkSpec {
         .toDF("vec_id", "embedding"))
       assert(d.select("node", "cluster_id", "keep")
         .as[(Long, Long, Boolean)].collect().toSet === Set((12L, 12L, true)))
-      d.unpersist(blocking = false)
+      Boundary.release(d)
       assert(resumed.labels.as[(Long, Long)].collect().toSet ===
         Set((10L, 10L), (12L, 12L)))
       resumed.release()
@@ -444,11 +441,11 @@ class ClusterStreamSpec extends SparkSpec {
     try {
       val loop = TextClusterStream.empty(spark, "doc_id", "text",
         k, perms, bands, mtau)
-      loop.ingest(Seq(
+      Boundary.release(loop.ingest(Seq(
         (1L, base),
         (2L, "completely different words entirely unrelated content here now"))
-        .toDF("doc_id", "text")).unpersist(blocking = false)
-      loop.retract(Seq(1L).toDF("doc_id")).unpersist(blocking = false)
+        .toDF("doc_id", "text")))
+      Boundary.release(loop.retract(Seq(1L).toDF("doc_id")))
       loop.checkpointIndexTo("rtcs_sigs", "rtcs_band")
       loop.checkpointTo("rtcs_labels", params)
       loop.release()
@@ -461,7 +458,7 @@ class ClusterStreamSpec extends SparkSpec {
       val d = resumed.ingest(Seq((3L, base + " extra")).toDF("doc_id", "text"))
       assert(d.select("node", "cluster_id", "keep")
         .as[(Long, Long, Boolean)].collect().toSet === Set((3L, 3L, true)))
-      d.unpersist(blocking = false)
+      Boundary.release(d)
       assert(resumed.labels.as[(Long, Long)].collect().toSet ===
         Set((2L, 2L), (3L, 3L)))
       resumed.release()

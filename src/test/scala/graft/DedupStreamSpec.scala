@@ -25,7 +25,7 @@ class DedupStreamSpec extends SparkSpec {
     val q = DedupStream.exactProbe(mem.toDS(), idx)
       .writeStream.outputMode("update").format("memory").queryName(name).start()
     try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-    finally { q.stop(); idx.unpersist(blocking = false) }
+    finally { q.stop(); Boundary.release(idx) }
     spark.table(name).as[ProbeResult].collect()
       .map(r => r.doc_id -> r.dup_of).toMap
   }
@@ -107,7 +107,7 @@ class DedupStreamSpec extends SparkSpec {
       assert(out(11L) === Some(1L))
       assert(out(31L) === Some(1L),
         "corpus matches rebuild from the standing index regardless of TTL")
-    } finally { q.stop(); idx.unpersist(blocking = false) }
+    } finally { q.stop(); Boundary.release(idx) }
   }
 
   test("streamed substring probes over batches ≡ the one-shot standing-index probe (and resume from durable tables)") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.Curation
+import graft.operators.{Boundary, Curation}
 import graft.sources.Tables
 import graft.streaming.{DsirLoop, DsirStream}
 import graft.streaming.DsirStream.Doc
@@ -51,12 +51,12 @@ class DsirStreamSpec extends SparkSpec {
       col("text")).as[(Long, Double)].collect().toMap
     val before = probeScores
     val scored = loop.ingest(0L, rest, tgt)
-    scored.unpersist(blocking = false)
+    Boundary.release(scored)
     // landed but not refreshed: scores unchanged (frozen generation)
     assert(probeScores === before)
     // at-least-once replay: the SAME batchId re-delivered must
     // re-score but never re-fold its counts
-    loop.ingest(0L, rest, tgt).unpersist(blocking = false)
+    Boundary.release(loop.ingest(0L, rest, tgt))
     loop.refresh()
     // after refresh: exactly the model trained on the union — a
     // double-folded replay would double rest's counts here
@@ -144,7 +144,7 @@ class DsirStreamSpec extends SparkSpec {
     try {
       val loop = new DsirLoop(
         DsirStream.train(half, "doc_id", col("text"), tgt, B))
-      loop.ingest(0L, rest, tgt).unpersist(blocking = false)
+      Boundary.release(loop.ingest(0L, rest, tgt))
       // checkpoint WITHOUT an explicit refresh: the un-refreshed
       // pending delta must land in the checkpoint, not silently drop
       loop.checkpointTo(spark, "dsir_ledger_spec")
@@ -155,13 +155,13 @@ class DsirStreamSpec extends SparkSpec {
       // driver restart: the stream checkpoint re-delivers batch 0 to
       // a RESUMED loop — its durable ledger must refuse the re-fold
       val resumed = DsirLoop.resume(spark, "dsir_ledger_spec")
-      resumed.ingest(0L, rest, tgt).unpersist(blocking = false)
+      Boundary.release(resumed.ingest(0L, rest, tgt))
       resumed.refresh()
       assert(resumed.current.ct.toSeq === union.ct.toSeq,
         "re-delivered checkpointed batch double-folded after resume")
       assert(resumed.current.cr.toSeq === union.cr.toSeq)
       // a genuinely NEW batch id still folds
-      resumed.ingest(1L, rest.limit(5), tgt).unpersist(blocking = false)
+      Boundary.release(resumed.ingest(1L, rest.limit(5), tgt))
       resumed.refresh()
       assert(resumed.current.cr.sum > union.cr.sum,
         "post-checkpoint batch must fold on the resumed loop")

@@ -80,6 +80,7 @@ class DurableStateSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     val (refSigs, refBands) = (ref.sigs.count(), ref.banded.count())
     assert(expected.nonEmpty, "gate corpus should contain near-dups")
+    Boundary.release(refPairs)
     ref.release()
 
     // re-delivered batch → no duplicate sig/band rows, same pairs
@@ -93,6 +94,7 @@ class DurableStateSpec extends SparkSpec {
     val replayedPairs = Dedup.minhashPairsFromIndex(replayed, mtau)
     assert(replayedPairs.select("doc_a", "doc_b")
       .as[(Long, Long)].collect().toSet === expected)
+    Boundary.release(replayedPairs)
     replayed.release()
 
     // appended ≡ an index built over the union outright
@@ -100,6 +102,7 @@ class DurableStateSpec extends SparkSpec {
     val fullPairs = Dedup.minhashPairsFromIndex(full, mtau)
     assert(fullPairs.select("doc_a", "doc_b")
       .as[(Long, Long)].collect().toSet === expected)
+    Boundary.release(fullPairs)
     full.release()
   }
 
@@ -118,12 +121,14 @@ class DurableStateSpec extends SparkSpec {
     val pd = Dedup.minhashPairsFromIndex(direct, mtau)
     val got = pr.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(got === pd.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
+    Seq(pr, pd).foreach(Boundary.release)
     direct.release()
     // unknown ids: no-op
     val again = Dedup.minhashIndexRemove(removed,
       Seq(999999990L, 999999991L).toDF("doc_id"), "doc_id")
     val pa = Dedup.minhashPairsFromIndex(again, mtau)
     assert(pa.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet === got)
+    Boundary.release(pa)
     // re-admit: append restores the removed docs
     val readmitted = Dedup.minhashIndexAppend(again, victims, "doc_id", "text")
     val full = Dedup.minhashIndex(docs, "doc_id", "text", k, perms, bands)
@@ -132,6 +137,7 @@ class DurableStateSpec extends SparkSpec {
     val pf = Dedup.minhashPairsFromIndex(full, mtau)
     assert(prr.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet ===
       pf.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
+    Seq(prr, pf).foreach(Boundary.release)
     readmitted.release(); full.release()
 
     // embedding twin: remove ≡ build over the survivors
@@ -199,9 +205,8 @@ class DurableStateSpec extends SparkSpec {
     def universe(i: Dedup.SubstringIndex) =
       i.hashes.as[(Long, Long, Long)].collect().toSet
     // snapshot BEFORE handing `removed` to the next remove — the
-    // mutators unpersist their input's frames (ownership transfer),
-    // and collecting a released localCheckpoint'd frame is a
-    // use-after-free race
+    // mutators release their input's generations (ownership
+    // transfer), and a released generation is unreadable
     val uRemoved = universe(removed)
     assert(uRemoved === universe(direct))
     direct.release()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.operators.Boundary
 import graft.sources.Tables
 import graft.streaming.LmStream
 import graft.streaming.LmStream.Doc
@@ -115,7 +116,7 @@ class LmStreamSpec extends SparkSpec {
       assert(loop.current eq gen0, "empty refresh must not swap generations")
 
       val scored = loop.ingest(0L, batch)
-      assert(scored.count() > 0); scored.unpersist()
+      assert(scored.count() > 0); Boundary.release(scored)
       assert(loop.pendingBatches === 1)
       // FROZEN: landing a batch must not move any probe score
       assert(scoresOf(loop.current, probe) === before,
@@ -123,7 +124,7 @@ class LmStreamSpec extends SparkSpec {
       // at-least-once replay: the SAME batchId re-delivered must not
       // land twice (a double-land would double its n-gram counts in
       // the refreshed model forever)
-      loop.ingest(0L, batch).unpersist()
+      Boundary.release(loop.ingest(0L, batch))
       assert(loop.pendingBatches === 1, "replayed batch landed twice")
 
       loop.refresh()
@@ -232,7 +233,7 @@ class LmStreamSpec extends SparkSpec {
     val loop = new graft.streaming.LmLoop(
       LmStream.trainLm(corpus, "doc_id", toks), lambda = 0.9)
     try {
-      loop.ingest(0L, batch).unpersist()
+      Boundary.release(loop.ingest(0L, batch))
       assert(loop.pendingBatches === 1)
       // checkpoint WITHOUT an explicit refresh: the pending batch
       // must fold into the landed model, not silently miss it
@@ -248,11 +249,11 @@ class LmStreamSpec extends SparkSpec {
       // the resumed loop's durable ledger must refuse the re-land
       val resumed = graft.streaming.LmLoop.resume(
         spark, "lm_ck_uni", "lm_ck_bi", "lm_ck_pre", lambda = 0.9)
-      resumed.ingest(0L, batch).unpersist()
+      Boundary.release(resumed.ingest(0L, batch))
       assert(resumed.pendingBatches === 0,
         "re-delivered checkpointed batch landed again after resume")
       // a genuinely NEW batch id still lands
-      resumed.ingest(1L, batch.limit(3)).unpersist()
+      Boundary.release(resumed.ingest(1L, batch.limit(3)))
       assert(resumed.pendingBatches === 1)
     } finally {
       loop.release()
