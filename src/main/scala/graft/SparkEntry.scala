@@ -896,15 +896,15 @@ object SparkEntry {
 
     // the STANDING decon index's exact probe, driver-gated against
     // the SAME oracle as decon_ngram — the stored-tables path must
-    // flag identically to the one-shot operator (the probe is staged
-    // so the index generations can be released before returning)
+    // flag identically to the one-shot operator (the probe is a
+    // filled leaf, so the index is released before returning)
     "decon_index_probe" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val isBench = col("source").isin("src0", "src1")
       val ix = graft.operators.DeconIndex.deconIndexBuild(
         docs.filter(isBench), "doc_id", "text", n = 5)
-      val out = Boundary.stage(graft.operators.DeconIndex.deconProbeFromIndex(
-        ix, docs.filter(!isBench), "doc_id", "text"))
+      val out = graft.operators.DeconIndex.deconProbeFromIndex(
+        ix, docs.filter(!isBench), "doc_id", "text")
       ix.release()
       out
     }),

@@ -116,30 +116,32 @@ object DeconIndex {
     * the benchmark: per corpus doc, distinct shared shingles and
     * distinct benchmark docs carrying them. The index side
     * broadcasts (benchmark ≪ corpus); the corpus explodes its own
-    * shingles once and is never shuffled on row identity. */
+    * shingles once and is never shuffled on row identity. A filled
+    * boundary leaf: it outlives the index's release. */
   def deconProbeFromIndex(index: DeconIndex, corpus: DataFrame,
       idCol: String, textCol: String): DataFrame =
-    corpus.select(col(idCol).as("doc_id"),
+    Boundary.stage(corpus.select(col(idCol).as("doc_id"),
         explode(shingle_hashes(col(textCol), index.n)).as("h"))
       .join(broadcast(index.members), "h")
       .groupBy("doc_id")
       .agg(countDistinct(col("h")).as("n_shared_shingles"),
-        countDistinct(col("bench_id")).as("n_bench_docs"))
+        countDistinct(col("bench_id")).as("n_bench_docs")))
 
   /** BLOOM probe from the standing tables —
     * [[Curation.contaminationFlagsBloom]] semantics: the filter
     * re-aggregates from the stored distinct-shingle hashes (a
     * #shingles scan — benchmark TEXT is never touched again), then
-    * every corpus doc is probed in-row against the broadcast bitset. */
+    * every corpus doc is probed in-row against the broadcast bitset.
+    * A filled boundary leaf, like [[deconProbeFromIndex]]. */
   def deconBloomFromIndex(index: DeconIndex, corpus: DataFrame,
       idCol: String, textCol: String, numBits: Int,
       kHashes: Int): DataFrame = {
     val bloom = index.shingles
       .agg(bloom_agg(col("h"), numBits, kHashes).as("__bf"))
-    corpus.crossJoin(broadcast(bloom))
+    Boundary.stage(corpus.crossJoin(broadcast(bloom))
       .select(col(idCol).as("doc_id"),
         bloom_contains_any(col("__bf"),
-          shingle_hashes(col(textCol), index.n), kHashes).as("flagged"))
+          shingle_hashes(col(textCol), index.n), kHashes).as("flagged")))
   }
 
   /** Land the index durably (the substringIndexWrite contract):

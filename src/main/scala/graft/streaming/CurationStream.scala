@@ -63,14 +63,17 @@ object CurationStream {
     * benchmark shingle tables ([[DeconIndex]], built once at
     * benchmark-land time, append/remove-refreshed on the benchmark's
     * own release cadence). Per batch only the batch shingles; the
-    * index side broadcasts — benchmark text is never re-read. */
+    * index side broadcasts — benchmark text is never re-read. Each
+    * batch's flags are a boundary released once the callback
+    * returns. */
   def deconProbeQuery(stream: Dataset[Doc],
       index: DeconIndex.DeconIndex)(
       onBatch: DataFrame => Unit): StreamingQuery =
     stream.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[Doc], _: Long) =>
-        onBatch(DeconIndex.deconProbeFromIndex(
-          index, batch.toDF(), "doc_id", "text"))
+        val flags = DeconIndex.deconProbeFromIndex(
+          index, batch.toDF(), "doc_id", "text")
+        try onBatch(flags) finally Boundary.release(flags)
       }
       .start()
 

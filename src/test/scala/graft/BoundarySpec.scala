@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.operators.{Boundary, CdcIndex, CuratePipeline, Curation, Dedup, Graph, Tier}
+import graft.operators.{Boundary, CdcIndex, CuratePipeline, Curation, DeconIndex, Dedup, Graph, Tier}
 import graft.sources.Tables
 
 /** The one cache boundary: every result an operator returns is a
@@ -131,7 +131,22 @@ class BoundarySpec extends SparkSpec {
         CdcIndex.cdcIndexBuild(corpus, "doc_id", "text"),
         (_: CdcIndex.CdcIndex) => Nil,
         (ix: CdcIndex.CdcIndex) => ix.release())(
-        CdcIndex.cdcProbeFromIndex(_, batch, "doc_id", "text")))
+        CdcIndex.cdcProbeFromIndex(_, batch, "doc_id", "text")),
+      "minhashPairsFromIndex" -> withIndex(
+        Dedup.minhashIndex(corpus, "doc_id", "text", 3, 64, 16),
+        (ix: Dedup.MinhashIndex) => Seq(ix.sigs, ix.banded),
+        (ix: Dedup.MinhashIndex) => ix.release())(
+        Dedup.minhashPairsFromIndex(_, 0.5)),
+      "deconProbeFromIndex" -> withIndex(
+        DeconIndex.deconIndexBuild(corpus, "doc_id", "text", 5),
+        (ix: DeconIndex.DeconIndex) => Seq(ix.shingles, ix.members),
+        (ix: DeconIndex.DeconIndex) => ix.release())(
+        DeconIndex.deconProbeFromIndex(_, batch, "doc_id", "text")),
+      "deconBloomFromIndex" -> withIndex(
+        DeconIndex.deconIndexBuild(corpus, "doc_id", "text", 5),
+        (ix: DeconIndex.DeconIndex) => Seq(ix.shingles, ix.members),
+        (ix: DeconIndex.DeconIndex) => ix.release())(
+        DeconIndex.deconBloomFromIndex(_, batch, "doc_id", "text", 1 << 16, 3)))
 
     for ((name, run) <- results; round <- 1 to 2) {
       val (out, after) = run()

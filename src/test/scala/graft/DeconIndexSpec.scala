@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, DeconIndex}
+import graft.operators.{Boundary, Curation, DeconIndex}
 import graft.operators.DeconIndex.{deconIndexAppend, deconIndexBuild, deconIndexLoad, deconIndexRemove, deconIndexWrite}
 import graft.streaming.CurationStream
 import graft.streaming.CurationStream.Doc
@@ -29,9 +29,11 @@ class DeconIndexSpec extends SparkSpec {
     (3L, "a completely clean document with no leaked windows at all"))
     .toDF("doc_id", "text")
 
-  private def probeRows(ix: DeconIndex.DeconIndex) =
-    DeconIndex.deconProbeFromIndex(ix, corpus, "doc_id", "text")
-      .as[(Long, Long, Long)].collect().toSet
+  private def probeRows(ix: DeconIndex.DeconIndex) = {
+    val probe = DeconIndex.deconProbeFromIndex(ix, corpus, "doc_id", "text")
+    try probe.as[(Long, Long, Long)].collect().toSet
+    finally Boundary.release(probe)
+  }
 
   test("exact probe from the index ≡ one-shot contaminationFlags") {
     val ix = deconIndexBuild(bench, "doc_id", "text", N)
@@ -47,9 +49,10 @@ class DeconIndexSpec extends SparkSpec {
   test("bloom probe from the index ≡ one-shot contaminationFlagsBloom") {
     val ix = deconIndexBuild(bench, "doc_id", "text", N)
     try {
-      val fromIndex = DeconIndex.deconBloomFromIndex(
+      val probe = DeconIndex.deconBloomFromIndex(
           ix, corpus, "doc_id", "text", numBits = 1 << 16, kHashes = 3)
-        .as[(Long, Boolean)].collect().toSet
+      val fromIndex = probe.as[(Long, Boolean)].collect().toSet
+      Boundary.release(probe)
       val oneShot = Curation.contaminationFlagsBloom(
           corpus, bench, "doc_id", "text", N, 1 << 16, 3)
         .as[(Long, Boolean)].collect().toSet
