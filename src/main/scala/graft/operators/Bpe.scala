@@ -89,7 +89,7 @@ object Bpe {
     require(nMerges > 0, s"nMerges $nMerges must be positive")
     val base = Boundary.stage(vocabOf(docs, textCol).filter(col("freq") >= minFreq))
     try {
-      if (Tier.allows(docs.sparkSession, Tier.Model)(
+      if (Tier.allows(docs.sparkSession, Tier.Model, "bpe")(
           base.count() <= LocalVocabThreshold)) {
         val words = base.collect().map(r =>
           (graft.functions.expr.BpeOps.codepointSyms(r.getString(0)), r.getLong(1)))

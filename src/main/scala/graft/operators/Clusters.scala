@@ -189,7 +189,7 @@ object Clusters {
       case _ => false
     }
     lazy val edgeCount = e.count()
-    if (Tier.allows(e.sparkSession, Tier.Input)(
+    if (Tier.allows(e.sparkSession, Tier.Input, "cc")(
         integral && edgeCount <= LocalEdgeThreshold)) {
       import e.sparkSession.implicits._
       val expectedNodes = math.min(edgeCount, 1L << 28).toInt

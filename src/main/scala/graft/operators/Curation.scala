@@ -268,7 +268,7 @@ object Curation {
 
   /** The LM model-fold probe gate: pin, then input-plan stats. */
   private def modelProbeOk(docs: DataFrame): Boolean =
-    Tier.allows(docs.sparkSession, Tier.Model)(
+    Tier.allows(docs.sparkSession, Tier.Model, "lm_model")(
       docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
         BigInt(LmModelProbeMaxBytes))
 
@@ -282,7 +282,7 @@ object Curation {
       tokens: Column): Option[Array[(java.lang.Long, String)]] = {
     lazy val textCol =
       org.apache.spark.sql.graft.ColumnBridge.whitespaceSplitSource(tokens)
-    if (!Tier.allows(docs.sparkSession, Tier.Input)(
+    if (!Tier.allows(docs.sparkSession, Tier.Input, "lm")(
         docs.schema(idCol).dataType == org.apache.spark.sql.types.LongType &&
           textCol.isDefined &&
           docs.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(LmLocalMaxBytes)))
@@ -597,7 +597,7 @@ object Curation {
     // chain runs in-process (the distributed floor at that size is
     // two serial ~150 ms corpus scan stages). The `distributed`
     // [[Tier]] pins everything distributed, the probe/spec convention.
-    if (Tier.allows(docs.sparkSession, Tier.Input)(
+    if (Tier.allows(docs.sparkSession, Tier.Input, "pmi")(
         docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
           BigInt(LmLocalMaxBytes))) {
       val texts = docs.select(textCol.cast("string")).collect()
@@ -657,7 +657,7 @@ object Curation {
     // Above the gate the distributed path is unchanged and pinnable
     // with the `distributed` [[Tier]] (the plan-spec convention).
     lazy val vocab = collectIfSmall(uc, PmiLocalVocabThreshold)
-    val localOut = (if (Tier.allows(docs.sparkSession, Tier.Model)(
+    val localOut = (if (Tier.allows(docs.sparkSession, Tier.Model, "pmi_model")(
         vocab.isDefined)) vocab else None).map { urows =>
       val pc = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_cooc")).collect()
       val cx = urows.map(r => r.getString(0) -> r.getLong(1)).toMap

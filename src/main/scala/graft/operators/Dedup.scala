@@ -1177,7 +1177,7 @@ object Dedup {
     // their child's size absent CBO stats), which errs distributed.
     def maybeTiny = embeddings.queryExecution.optimizedPlan.stats.sizeInBytes <=
       BigInt(LocalVecThreshold) * 4096
-    if (Tier.allows(embeddings.sparkSession, Tier.Input)(
+    if (Tier.allows(embeddings.sparkSession, Tier.Input, "lsh_pairs")(
         integralId && maybeTiny && embeddings.count() <= LocalVecThreshold)) {
       val spark = embeddings.sparkSession
       import spark.implicits._

@@ -119,7 +119,7 @@ object Graph {
     // materialize anyway — in local mode it computes, caches and
     // lineage-truncates `e` (the lazy localCheckpoint above), so the
     // expensive upstream edge derivation still runs exactly once.
-    if (Tier.allows(edges.sparkSession, Tier.Input)(
+    if (Tier.allows(edges.sparkSession, Tier.Input, "pagerank")(
         tolerance.isEmpty && (onIteration eq NoIteration) &&
           e.count() <= Clusters.LocalEdgeThreshold)) {
       val nodeType = e.schema("src").dataType
@@ -250,7 +250,7 @@ object Graph {
     val nodeType = e.schema("u").dataType
     val integral = nodeType == org.apache.spark.sql.types.LongType ||
       nodeType == org.apache.spark.sql.types.IntegerType
-    if (Tier.allows(edges.sparkSession, Tier.Input)(
+    if (Tier.allows(edges.sparkSession, Tier.Input, "triangles")(
         integral && e.count() <= LocalCensusThreshold)) {
       // int ids ride as longs through the kernel (ordering and
       // equality are unchanged by the widening; node is cast back
@@ -403,7 +403,7 @@ object Graph {
            org.apache.spark.sql.types.ByteType => true
       case _ => false
     }
-    if (Tier.allows(edges.sparkSession, Tier.Input)(
+    if (Tier.allows(edges.sparkSession, Tier.Input, "lpa")(
         integral && (onRound eq NoRound) &&
           adj.count() <= Clusters.LocalEdgeThreshold)) {
       import adj.sparkSession.implicits._

@@ -937,7 +937,7 @@ object Similarity {
     // tiny", so a huge corpus never pays a dispatch scan
     def maybeTiny = tagged.queryExecution.optimizedPlan.stats.sizeInBytes <=
       BigInt(Dedup.LocalVecThreshold) * 4096
-    if (Tier.allows(corpus.sparkSession, Tier.Input)(
+    if (Tier.allows(corpus.sparkSession, Tier.Input, "lsh_topk")(
         integralId && maybeTiny && tagged.count() <= Dedup.LocalVecThreshold)) {
       val spark = corpus.sparkSession
       import spark.implicits._

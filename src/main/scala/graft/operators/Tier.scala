@@ -1,6 +1,17 @@
 package graft.operators
 
+import org.apache.spark.graft.ListenerBusPost
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.SparkSession
+
+/** One tier decision of an adaptive operator, posted on the listener
+  * bus: the operator `family`, the `tier` it picked (`input`, `model`
+  * or `distributed`), the plan-stats size `estimate` in bytes and the
+  * `rows` measured when the decision read them, the `limit` it was
+  * held to and the session `pin`. */
+final case class TierPick(family: String, tier: String,
+    estimate: Option[BigInt], rows: Option[Long], limit: Option[String],
+    pin: String) extends SparkListenerEvent
 
 /** The one switch between an adaptive operator's tiers. The graph,
   * embedding-LSH, LM/PMI and tokenizer-training operators run a
@@ -38,15 +49,21 @@ object Tier {
     value
   }
 
-  /** Whether a `kind` tier may run in `spark`'s session: the pin must
-    * allow it AND `fits` must hold. A forbidding pin never evaluates
-    * `fits`, so no gate job (a count, a probe collect) runs. */
-  def allows(spark: SparkSession, kind: Kind)(fits: => Boolean): Boolean =
-    (checked(spark.conf.get(Key, "auto")) match {
+  /** Whether `family`'s `kind` tier may run in `spark`'s session: the
+    * pin must allow it AND `fits` must hold. A forbidding pin never
+    * evaluates `fits`, so no gate job (a count, a probe collect) runs.
+    * Posts one [[TierPick]]. */
+  def allows(spark: SparkSession, kind: Kind, family: String)(fits: => Boolean): Boolean = {
+    val pin = checked(spark.conf.get(Key, "auto"))
+    val ok = (pin match {
       case "auto" => true
       case "model" => kind == Model
       case _ => false
     }) && fits
+    val tier = if (!ok) "distributed" else if (kind == Model) "model" else "input"
+    ListenerBusPost(spark.sparkContext, TierPick(family, tier, None, None, None, pin))
+    ok
+  }
 
   /** Run `body` with the tier pinned to `value`, restoring the
     * previous setting afterwards (also when `body` throws). */

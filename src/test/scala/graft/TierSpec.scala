@@ -13,7 +13,7 @@ class TierSpec extends SparkSpec {
     // a value set directly on the session is rejected when read
     spark.conf.set(Tier.Key, "local")
     try {
-      intercept[IllegalArgumentException](Tier.allows(spark, Tier.Input)(true))
+      intercept[IllegalArgumentException](Tier.allows(spark, Tier.Input, "t")(true))
     } finally spark.conf.unset(Tier.Key)
   }
 
@@ -35,17 +35,17 @@ class TierSpec extends SparkSpec {
     var evaluated = 0
     def fits: Boolean = { evaluated += 1; true }
     Tier.pinned(spark, "distributed") {
-      assert(!Tier.allows(spark, Tier.Input)(fits))
-      assert(!Tier.allows(spark, Tier.Model)(fits))
+      assert(!Tier.allows(spark, Tier.Input, "t")(fits))
+      assert(!Tier.allows(spark, Tier.Model, "t")(fits))
     }
     assert(evaluated === 0)
     // model admits only Model tiers; auto admits both
     Tier.pinned(spark, "model") {
-      assert(!Tier.allows(spark, Tier.Input)(fits))
-      assert(Tier.allows(spark, Tier.Model)(fits))
+      assert(!Tier.allows(spark, Tier.Input, "t")(fits))
+      assert(Tier.allows(spark, Tier.Model, "t")(fits))
     }
     assert(evaluated === 1)
-    assert(Tier.allows(spark, Tier.Input)(fits) && Tier.allows(spark, Tier.Model)(fits))
+    assert(Tier.allows(spark, Tier.Input, "t")(fits) && Tier.allows(spark, Tier.Model, "t")(fits))
     assert(evaluated === 3)
   }
 }
