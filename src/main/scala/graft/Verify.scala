@@ -46,7 +46,7 @@ object Verify {
     def opt(v: Option[Any]): String = v.fold("null")(_.toString)
     s"""{"family": ${q(p.family)}, "tier": ${q(p.tier)}, """ +
       s""""estimate": ${opt(p.estimate)}, "rows": ${opt(p.rows)}, """ +
-      s""""limit": ${p.limit.fold("null")(q)}, "pin": ${q(p.pin)}}"""
+      s""""limit": ${p.limit}, "unit": ${q(p.unit)}, "pin": ${q(p.pin)}}"""
   }
 
   def main(args: Array[String]): Unit = {

@@ -45,9 +45,7 @@ object Bpe {
     * (top-pair collect + re-persist count) were ~2/3 of the row's
     * driver jobs while the actual per-round math is microseconds. A
     * corpus whose vocab exceeds the gate (the 100 TB shape — vocab
-    * grows with corpus) keeps the distributed loop; the
-    * `distributed` [[Tier]] pins it for the parity specs and scale
-    * probes. */
+    * grows with corpus) keeps the distributed loop. */
   private val LocalVocabThreshold: Long = 1000000L
 
   /** Whitespace word frequencies — the training vocabulary (and the
@@ -89,8 +87,7 @@ object Bpe {
     require(nMerges > 0, s"nMerges $nMerges must be positive")
     val base = Boundary.stage(vocabOf(docs, textCol).filter(col("freq") >= minFreq))
     try {
-      if (Tier.allows(docs.sparkSession, Tier.Model, "bpe")(
-          base.count() <= LocalVocabThreshold)) {
+      if (Tier.pick("bpe", Tier.Model, base, Tier.Rows(LocalVocabThreshold))(true)) {
         val words = base.collect().map(r =>
           (graft.functions.expr.BpeOps.codepointSyms(r.getString(0)), r.getLong(1)))
         trainLocal(words, nMerges)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Single-task min-root union-find over Long node ids — the in-memory
@@ -11,45 +12,56 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * task's memory, one linear union-find pass replaces the entire
   * distributed convergence loop and its per-round driver actions).
   *
-  * Open-addressed (linear probing, splitmix64-mixed) and PRESIZED
-  * from the measured edge count, so it never rehashes; path-halving
-  * find. Unions attach the larger root under the smaller, so the
+  * Open-addressed (linear probing, splitmix64-mixed), doubling at
+  * half load; path-halving find. Unions attach the larger root under the smaller, so the
   * invariant "root = min id of its set" holds at every step and the
   * emitted labels match the distributed min-label loop EXACTLY
   * (property-spec'd against it on random graphs).
   */
-private[graft] final class LongUnionFind(expectedNodes: Int) {
+private[graft] final class LongUnionFind {
   private val EMPTY = Long.MinValue
-  private val cap: Int = {
-    var c = 16
-    while (c < expectedNodes.max(1) * 2L && c < (1 << 30)) c <<= 1
-    c
-  }
-  private val mask = cap - 1
-  private val keys = Array.fill[Long](cap)(EMPTY)
-  private val parent = new Array[Int](cap)
+  private var cap = 16
+  private var mask = cap - 1
+  private var keys = Array.fill[Long](cap)(EMPTY)
+  private var parent = new Array[Int](cap)
   private var n = 0
 
-  private def idx(k: Long): Int = {
-    require(k != EMPTY, "node id Long.MinValue is reserved")
+  /** The slot holding `k`, or the empty slot where it would go. */
+  private def slot(k: Long): Int = {
     // splitmix64 finalizer: ids are typically sequential — spread them
     var h = k
     h ^= h >>> 30; h *= 0xbf58476d1ce4e5b9L
     h ^= h >>> 27; h *= 0x94d049bb133111ebL
     h ^= h >>> 31
     var i = h.toInt & mask
-    while (true) {
-      val cur = keys(i)
-      if (cur == k) return i
-      if (cur == EMPTY) {
-        require(n < cap - 1, s"LongUnionFind presized for $expectedNodes " +
-          s"nodes overflowed — edge count exceeded the threshold contract")
-        keys(i) = k; parent(i) = i; n += 1
-        return i
-      }
-      i = (i + 1) & mask
+    while (keys(i) != k && keys(i) != EMPTY) i = (i + 1) & mask
+    i
+  }
+
+  /** Double the table, keeping the load at most one half: every slot
+    * index moves, so parents are remapped through the new slots. */
+  private def grow(): Unit = {
+    require(cap < (1 << 29), s"LongUnionFind is full at $n nodes")
+    val (oldKeys, oldParent) = (keys, parent)
+    cap <<= 1; mask = cap - 1
+    keys = Array.fill[Long](cap)(EMPTY)
+    parent = new Array[Int](cap)
+    val moved = new Array[Int](oldKeys.length)
+    for (i <- oldKeys.indices if oldKeys(i) != EMPTY) {
+      val j = slot(oldKeys(i))
+      keys(j) = oldKeys(i)
+      moved(i) = j
     }
-    -1 // unreachable
+    for (i <- oldKeys.indices if oldKeys(i) != EMPTY)
+      parent(moved(i)) = moved(oldParent(i))
+  }
+
+  /** `k`'s slot, inserting it; the caller made room first. */
+  private def idx(k: Long): Int = {
+    require(k != EMPTY, "node id Long.MinValue is reserved")
+    val i = slot(k)
+    if (keys(i) != k) { keys(i) = k; parent(i) = i; n += 1 }
+    i
   }
 
   private def find(s0: Int): Int = {
@@ -59,6 +71,8 @@ private[graft] final class LongUnionFind(expectedNodes: Int) {
   }
 
   def union(a: Long, b: Long): Unit = {
+    // grow before either insert: a grow moves every slot index
+    if (2 * (n + 2) > cap) grow()
     val ra = find(idx(a))
     val rb = find(idx(b))
     if (ra != rb) {
@@ -95,15 +109,20 @@ private[graft] final class LongUnionFind(expectedNodes: Int) {
   * on disk (it backs the returned frame; it is cleaned with the
   * application's checkpoint dir). The checkpoint dir is assumed
   * private to this application, as Spark itself assumes. Without a
-  * checkpoint dir, executor-local checkpoints are used
-  * (ContextCleaner-collected; a lost executor fails the job, which
-  * is then rerun — acceptable for a retryable batch operator).
+  * checkpoint dir, executor-local checkpoints are used (a lost
+  * executor fails the job, which is then rerun — acceptable for a
+  * retryable batch operator): the loop unpersists each superseded
+  * labeling and jump intermediate once the next generation's count
+  * has filled it, and the edge set when it returns, so only the
+  * returned labels' blocks stay. The single-task path's result is
+  * lazy over the edge set's blocks, so those stay until the context
+  * cleaner collects them.
   */
 object Clusters {
 
   /** Symmetrized-edge-row count at or below which the single-task
     * union-find strategy replaces the distributed loop (2²¹ rows =
-    * ~1M undirected pairs ⇒ ≤2M distinct nodes ⇒ ≤96 MB of presized
+    * ~1M undirected pairs ⇒ ≤2M distinct nodes ⇒ ≤96 MB of union-find
     * arrays in the one task — comfortably inside any sane executor).
     * The count is MEASURED on the already-materialized edge frame
     * (one job over checkpointed blocks), so the dispatch is a
@@ -162,6 +181,17 @@ object Clusters {
     def delete(files: Set[String]): Unit =
       files.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
 
+    // the local-checkpoint RDDs a non-reliable frame reads, and their
+    // release: a superseded generation is freed at once, not when a GC
+    // lets the context cleaner find it
+    def blocks(df: DataFrame): Set[Int] =
+      if (reliable) Set.empty
+      else ColumnBridge.leafRddIds(df.queryExecution.analyzed).toSet
+    def free(ids: Set[Int]): Unit = {
+      val rdds = sc.getPersistentRDDs
+      ids.foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
+    }
+
     // undirected: propagate both ways. Non-reliable mode marks the
     // checkpoint LAZILY — the dispatch count below (or the first
     // round) materializes + lineage-truncates in the SAME action
@@ -180,25 +210,23 @@ object Clusters {
     // the materialized edge blocks IS the fixpoint (DuckDB's
     // recursive CTE runs the same computation in-process; matching
     // it when the data is measured-tiny is honest adaptivity, not a
-    // shortcut — the loop below is what runs at corpus scale, and
-    // the scale probes pin it with the `distributed` [[Tier]]). The
-    // count reads blocks the eager truncation just materialized.
+    // shortcut — the loop below is what runs at corpus scale).
     val nodeType = e.schema("src").dataType
     val integral = nodeType match {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    lazy val edgeCount = e.count()
-    if (Tier.allows(e.sparkSession, Tier.Input, "cc")(
-        integral && edgeCount <= LocalEdgeThreshold)) {
+    // Counted, no size pre-gate: an upstream join multiplies `e`'s
+    // estimate (the incremental fold's 110 rows read 440 GB at sf0.1),
+    // and the count fills the lazy checkpoint the loop reads anyway.
+    if (Tier.pick("cc", Tier.Input, e, Tier.CountedRows(LocalEdgeThreshold))(integral)) {
       import e.sparkSession.implicits._
-      val expectedNodes = math.min(edgeCount, 1L << 28).toInt
       val out = e
         .select(col("src").cast("long"), col("dst").cast("long"))
         .as[(Long, Long)]
         .coalesce(1) // no exchange: one task fetches the blocks
         .mapPartitions { it =>
-          val uf = new LongUnionFind(expectedNodes)
+          val uf = new LongUnionFind
           it.foreach { case (a, b) => uf.union(a, b) }
           uf.labels
         }
@@ -221,6 +249,7 @@ object Clusters {
     var (labels, liveFiles) = truncate(
       e.select(col("src").as("node")).distinct()
         .withColumn("cluster_id", col("node")))
+    var liveBlocks = blocks(labels)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -238,10 +267,12 @@ object Clusters {
       // materialized BEFORE the self-join so the propagate join runs
       // once, not twice; in frugal (k>1) rounds the double execution
       // of a frontier-sized chain is cheaper than the extra job.
+      var stepBlocks = Set.empty[Int]
       val (stepped, stepFiles) =
         if (iter < 2) (prop, Set.empty[String])
         else if (doTrunc) {
           val (p, pf) = truncate(prop)
+          stepBlocks = blocks(p)
           val jump = p.select(col("node").as("j_node"), col("mid").as("j_mid"))
           (p.join(jump, col("mid") === col("j_node"), "left")
             .select(col("node"), col("old_cluster"),
@@ -284,7 +315,9 @@ object Clusters {
         val nextFiles =
           if (reliable) listDir() -- before else Set.empty[String]
         delete(liveFiles ++ stepFiles)
+        free(liveBlocks ++ stepBlocks)
         liveFiles = nextFiles
+        liveBlocks = blocks(next)
         // checkpoint files exist (doCheckpoint runs inside the count
         // action) — the cached blocks are redundant now
         if (reliable) stepOut.unpersist(blocking = false)
@@ -293,6 +326,8 @@ object Clusters {
       iter += 1
     }
     delete(eFiles) // the returned labels stand alone
+    // unless the last round was a frugal one, whose labels still read e
+    if (!blocks(labels).exists(blocks(e))) free(blocks(e))
     require(changed == 0,
       s"connectedComponents did not converge in $maxIter rounds " +
         s"(pointer jumping bounds rounds by ~log2(component size); " +

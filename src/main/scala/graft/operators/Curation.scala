@@ -191,12 +191,12 @@ object Curation {
     // bigram vocab — the r17 partition-window fold is unchanged
     // (pinnable with the `distributed` [[Tier]], how the plan spec +
     // scale probes keep the distributed shape honest).
-    // r19 probe stats gate (r18 ADVICE): the vocab probe is itself a
-    // full corpus aggregation, so it only runs when the input plan is
-    // small enough that losing it is cheap — see
-    // [[LmModelProbeMaxBytes]]. Above the bound: straight to the
-    // distributed partition-window fold, zero wasted passes.
-    val model = (if (modelProbeOk(docs)) localBigramModel(bfreq)
+    // the vocab probe is itself a full corpus aggregation, so it only
+    // runs when the input is small enough that losing it is cheap —
+    // see [[LmModelProbeMaxBytes]]; the probe then keeps the model
+    // only if it fits [[LocalModelThreshold]] rows
+    val model = (if (Tier.pick("lm_model", Tier.Model, docs,
+        Tier.Bytes(LmModelProbeMaxBytes))(true)) localBigramModel(bfreq)
       else None).getOrElse {
       bfreq
         .withColumn("pcnt", sum(col("bcnt")).over(Window.partitionBy(col("__pfx"))))
@@ -266,26 +266,18 @@ object Curation {
     * have a ≤[[LocalModelThreshold]] bigram vocab. */
   private val LmModelProbeMaxBytes: Long = 256L << 20
 
-  /** The LM model-fold probe gate: pin, then input-plan stats. */
-  private def modelProbeOk(docs: DataFrame): Boolean =
-    Tier.allows(docs.sparkSession, Tier.Model, "lm_model")(
-      docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(LmModelProbeMaxBytes))
-
-  /** Eligibility + collect for the LM driver kernel: the [[Tier]]
-    * pin must allow [[Tier.Input]] tiers, the id column must be
-    * LongType (the kernel keys boxed longs), the tokens column must
-    * be EXACTLY the shared whitespace convention (any custom
+  /** Eligibility + collect for the LM driver kernel: the id column
+    * must be LongType (the kernel keys boxed longs) and the tokens
+    * column EXACTLY the shared whitespace convention (any custom
     * tokenizer → None — the kernel's byte-level \s scan would
-    * diverge), and the input plan must fit the stats gate. */
+    * diverge). */
   private def lmLocalDocs(docs: DataFrame, idCol: String,
       tokens: Column): Option[Array[(java.lang.Long, String)]] = {
     lazy val textCol =
       org.apache.spark.sql.graft.ColumnBridge.whitespaceSplitSource(tokens)
-    if (!Tier.allows(docs.sparkSession, Tier.Input, "lm")(
+    if (!Tier.pick("lm", Tier.Input, docs, Tier.Bytes(LmLocalMaxBytes))(
         docs.schema(idCol).dataType == org.apache.spark.sql.types.LongType &&
-          textCol.isDefined &&
-          docs.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(LmLocalMaxBytes)))
+          textCol.isDefined))
       None
     else Some(docs.select(col(idCol), textCol.get.cast("string")).collect()
       .map(r => (if (r.isNullAt(0)) null
@@ -376,10 +368,9 @@ object Curation {
     // um.get filter mirrors the distributed inner join on token_h
     // exactly (a missing token cannot occur — both sides key the
     // same seed-1L hash of the same non-empty tokens).
-    // r19 probe stats gate — see [[bigramLogProb]] /
-    // [[LmModelProbeMaxBytes]]: both probes are corpus-scale
-    // aggregations; skip them outright on large inputs
-    val localScore = (if (modelProbeOk(docs)) collectIfSmall(bfreq, LocalModelThreshold)
+    // both probes are corpus-scale aggregations (see [[bigramLogProb]])
+    val localScore = (if (Tier.pick("lm_model", Tier.Model, docs,
+        Tier.Bytes(LmModelProbeMaxBytes))(true)) collectIfSmall(bfreq, LocalModelThreshold)
       else None).flatMap { brows =>
       collectIfSmall(uni, LocalModelThreshold).map { urows =>
         val pc = localPrefixCounts(brows)
@@ -595,11 +586,8 @@ object Curation {
     // r18 TIER 1 — the driver kernel ([[LmLocal.pmiCollocations]]):
     // a tiny input collects once and the whole pair/count/score
     // chain runs in-process (the distributed floor at that size is
-    // two serial ~150 ms corpus scan stages). The `distributed`
-    // [[Tier]] pins everything distributed, the probe/spec convention.
-    if (Tier.allows(docs.sparkSession, Tier.Input, "pmi")(
-        docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          BigInt(LmLocalMaxBytes))) {
+    // two serial ~150 ms corpus scan stages).
+    if (Tier.pick("pmi", Tier.Input, docs, Tier.Bytes(LmLocalMaxBytes))(true)) {
       val texts = docs.select(textCol.cast("string")).collect()
         .map(r => if (r.isNullAt(0)) null else r.getString(0))
       // r19 token-mass cap (r18 ADVICE): the bytes gate compares
@@ -635,30 +623,23 @@ object Curation {
       .select(col("__p.w1").as("w1"), col("__p.w2").as("w2"))
     val ucRaw = docs.select(explode(tk).as("token"))
       .groupBy("token").agg(count(lit(1)).as("__cx"))
-    // r19 (r18 ADVICE): stage the vocab table BEFORE the probe —
-    // the probe below is a full corpus-scale tokenize+aggregate, and
-    // without the cache an over-the-gate corpus (any real one, with
-    // the provable v ≤ 1024 bound) paid that aggregation once for
-    // the discarded probe and AGAIN on the distributed path. Both
-    // branches read the filled cache; each releases it.
+    // the vocab table is a filled boundary both branches read (each
+    // releases it), so the gate reads its row count for free
     val uc = Boundary.stage(ucRaw)
-    // r18 adaptive fold (the bigram-LM driver gate, with a PROVABLE
-    // bound making the probe free): if the token vocab fits the gate
-    // (v ≤ threshold, one vocab-sized collect of the table the
-    // distributed path reads anyway), the distinct-pair table is
-    // AT MOST v(v+1)/2 rows — collectable by construction, so the
-    // local branch never wastes a probe on a corpus it must abandon.
+    // adaptive fold: if the token vocab fits the gate (v ≤ threshold,
+    // one vocab-sized collect of the table the distributed path reads
+    // anyway), the distinct-pair table is AT MOST v(v+1)/2 rows —
+    // collectable by construction, so the local branch never abandons
+    // a collect.
     // Both corpus scalars fold out driver-side (nt = Σ ucnt exactly
     // matches the lengths-scan derivation — explode skips null/empty
     // arrays just as the clamped sum contributes 0; np = Σ n_cooc is
     // the pair-emission identity), and the whole scoring — minCount
     // filter, ln, HALF_UP 4dp round — replays Spark's arithmetic
     // bit-for-bit (same promotion order, same java.math rounding).
-    // Above the gate the distributed path is unchanged and pinnable
-    // with the `distributed` [[Tier]] (the plan-spec convention).
-    lazy val vocab = collectIfSmall(uc, PmiLocalVocabThreshold)
-    val localOut = (if (Tier.allows(docs.sparkSession, Tier.Model, "pmi_model")(
-        vocab.isDefined)) vocab else None).map { urows =>
+    // Above the gate the distributed path is unchanged.
+    val localOut = Option.when(Tier.pick("pmi_model", Tier.Model, uc,
+        Tier.Rows(PmiLocalVocabThreshold))(true))(uc.collect()).map { urows =>
       val pc = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_cooc")).collect()
       val cx = urows.map(r => r.getString(0) -> r.getLong(1)).toMap
       val nt = urows.foldLeft(0L)((s, r) => s + r.getLong(1))
@@ -675,8 +656,7 @@ object Curation {
       Boundary.stage(rows.toDF("w1", "w2", "n_cooc", "pmi"))
     }
     if (localOut.isDefined) {
-      // the vocab cache fed the probe only — the local branch scored
-      // from the collected rows
+      // the local branch scored from the collected vocab rows
       Boundary.release(uc)
       return localOut.get
     }

@@ -47,17 +47,12 @@ object Dedup {
     * land — keeps the two identical. The driver's oracle gate reads
     * bare parquet frames, where N is always the exact count. */
   def autoCap(docs: DataFrame): Int = {
-    val plan = docs.queryExecution.optimizedPlan
-    // trust catalog stats only when the frame IS the analyzed
-    // relation: any operator above a leaf makes rowCount a Catalyst
-    // ESTIMATE (filter selectivity guesses), which would silently
-    // shift the cap away from ceil(sqrt(actual N)) — and away from
-    // the oracle's exact-count replay
-    val n = plan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LeafNode =>
-        plan.stats.rowCount.map(_.toLong).getOrElse(docs.count())
-      case _ => docs.count()
-    }
+    // trust stats only when the frame IS a leaf ([[Tier.rows]]): any
+    // operator above a leaf makes rowCount a Catalyst ESTIMATE (filter
+    // selectivity guesses), which would silently shift the cap away
+    // from ceil(sqrt(actual N)) — and away from the oracle's
+    // exact-count replay
+    val n = Tier.rows(docs)
     math.max(50, math.ceil(math.sqrt(n.toDouble)).toInt)
   }
 
@@ -1165,20 +1160,11 @@ object Dedup {
     // a measured-tiny corpus dispatches to one task — the distributed
     // plan's 9 driver jobs are pure orchestration at that size, and
     // the single-task kernel reproduces the output exactly (spec).
-    // The `distributed` [[Tier]] pins the distributed path (scale
-    // probes do).
     val idType = embeddings.schema(idCol).dataType
     val integralId = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
-    // sizeInBytes pre-gate: the confirming count() only runs when the
-    // plan's own size estimate says "possibly tiny" (generous 4 KB/row
-    // bound), so a 100 TB corpus never pays a dispatch scan — the
-    // estimate is free and only ever OVER-estimates (filters keep
-    // their child's size absent CBO stats), which errs distributed.
-    def maybeTiny = embeddings.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(LocalVecThreshold) * 4096
-    if (Tier.allows(embeddings.sparkSession, Tier.Input, "lsh_pairs")(
-        integralId && maybeTiny && embeddings.count() <= LocalVecThreshold)) {
+    if (Tier.pick("lsh_pairs", Tier.Input, embeddings, Tier.Rows(LocalVecThreshold))(
+        integralId)) {
       val spark = embeddings.sparkSession
       import spark.implicits._
       val out = embeddings

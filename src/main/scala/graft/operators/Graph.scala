@@ -112,16 +112,11 @@ object Graph {
     // declared 6dp surface) — instead of paying one co-partitioned
     // join + inflow aggregate + truncation job per iteration.
     // Eligibility mirrors LPA: a custom onIteration pins the loop
-    // (the observer watches its per-iteration driver reads), the
-    // tolerance branch needs those reads anyway, and the
-    // `distributed` [[Tier]] pins the distributed path. The gate is
-    // one count() of the frame the distributed path was about to
-    // materialize anyway — in local mode it computes, caches and
-    // lineage-truncates `e` (the lazy localCheckpoint above), so the
-    // expensive upstream edge derivation still runs exactly once.
-    if (Tier.allows(edges.sparkSession, Tier.Input, "pagerank")(
-        tolerance.isEmpty && (onIteration eq NoIteration) &&
-          e.count() <= Clusters.LocalEdgeThreshold)) {
+    // (the observer watches its per-iteration driver reads) and the
+    // tolerance branch needs those reads anyway. A gate count fills
+    // the lazy checkpoint of `e` the loop would fill in round 1.
+    if (Tier.pick("pagerank", Tier.Input, e, Tier.Rows(Clusters.LocalEdgeThreshold))(
+        tolerance.isEmpty && (onIteration eq NoIteration))) {
       val nodeType = e.schema("src").dataType
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("node", nodeType),
@@ -238,9 +233,8 @@ object Graph {
     * the cached edge list — same orientation, same wedge closure,
     * integer-exact degree/tri_count, and the clustering column is the
     * SAME Catalyst expression applied on top, so rounding semantics
-    * cannot drift. The gate is one count() of the canonical frame
-    * both paths stage anyway. The `distributed`
-    * [[Tier]] pins the distributed wedge joins. */
+    * cannot drift. The canonical frame both paths read is a filled
+    * boundary, so the [[Tier]] gate reads its row count for free. */
   def triangleCensus(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val e = Boundary.stage(edges.select(
         least(col(aCol), col(bCol)).as("u"),
@@ -250,8 +244,8 @@ object Graph {
     val nodeType = e.schema("u").dataType
     val integral = nodeType == org.apache.spark.sql.types.LongType ||
       nodeType == org.apache.spark.sql.types.IntegerType
-    if (Tier.allows(edges.sparkSession, Tier.Input, "triangles")(
-        integral && e.count() <= LocalCensusThreshold)) {
+    if (Tier.pick("triangles", Tier.Input, e, Tier.Rows(LocalCensusThreshold))(
+        integral)) {
       // int ids ride as longs through the kernel (ordering and
       // equality are unchanged by the widening; node is cast back
       // below) so the kernel reads one primitive width
@@ -393,8 +387,7 @@ object Graph {
     // cap-parity output (property-spec'd ≡ the loop across caps) —
     // instead of paying one driver action + exchange jobs per round.
     // A custom onRound pins the loop (the observer watches its
-    // per-round driver reads); scale probes pin it with the
-    // `distributed` [[Tier]].
+    // per-round driver reads).
     val nodeType = adj.schema("node").dataType
     val integral = nodeType match {
       case org.apache.spark.sql.types.LongType |
@@ -403,9 +396,8 @@ object Graph {
            org.apache.spark.sql.types.ByteType => true
       case _ => false
     }
-    if (Tier.allows(edges.sparkSession, Tier.Input, "lpa")(
-        integral && (onRound eq NoRound) &&
-          adj.count() <= Clusters.LocalEdgeThreshold)) {
+    if (Tier.pick("lpa", Tier.Input, adj, Tier.Rows(Clusters.LocalEdgeThreshold))(
+        integral && (onRound eq NoRound))) {
       import adj.sparkSession.implicits._
       val iters = iterations
       val out = adj

@@ -921,24 +921,18 @@ object Similarity {
       dim: Int, bits: Int, tables: Int, seed: Long, k: Int): DataFrame = {
     // adaptive strategy (the Clusters.connectedComponents pattern):
     // measured-tiny corpus+queries dispatch to one task; the kernel
-    // reproduces the distributed output exactly (spec). The
-    // `distributed` [[Tier]] pins the distributed path.
+    // reproduces the distributed output exactly (spec).
     val idType = corpus.schema(idCol).dataType
     val integralId = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
-    lazy val tagged = corpus.select(lit(false).as("q"),
+    val tagged = corpus.select(lit(false).as("q"),
         col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .unionAll(queries.select(lit(true).as("q"),
         col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v")))
-    // sizeInBytes pre-gate (see embeddingPairsLsh): the confirming
-    // count() only runs when the free plan estimate says "possibly
-    // tiny", so a huge corpus never pays a dispatch scan
-    def maybeTiny = tagged.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(Dedup.LocalVecThreshold) * 4096
-    if (Tier.allows(corpus.sparkSession, Tier.Input, "lsh_topk")(
-        integralId && maybeTiny && tagged.count() <= Dedup.LocalVecThreshold)) {
+    if (Tier.pick("lsh_topk", Tier.Input, tagged, Tier.Rows(Dedup.LocalVecThreshold))(
+        integralId)) {
       val spark = corpus.sparkSession
       import spark.implicits._
       return tagged.as[(Boolean, Long, Array[Double])]

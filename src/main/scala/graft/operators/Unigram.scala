@@ -80,8 +80,7 @@ object Unigram {
       maxLen: Int = 3, seedTopK: Int = 200): Model = {
     require(iters >= 1 && maxLen >= 1 && seedTopK >= 1)
     val vocab = Boundary.stage(vocabOf(docs, textCol))
-    if (Tier.allows(docs.sparkSession, Tier.Model, "unigram")(
-        vocab.count() <= LocalVocabThreshold)) {
+    if (Tier.pick("unigram", Tier.Model, vocab, Tier.Rows(LocalVocabThreshold))(true)) {
       // try/finally like the distributed arm below: a collect that
       // throws must not leave the corpus-vocab cache pinned
       val words =

@@ -123,4 +123,17 @@ class ClustersStrategySpec extends SparkSpec {
     val second = df.as[(Long, Long)].collect().toMap
     assert(first === second)
   }
+
+  test("the union-find grows past its first table without losing a union") {
+    // a singleton, then 50k two-node components: every union inserts
+    // two new nodes, and the odd count makes the table double between
+    // a union's two lookups
+    val uf = new graft.operators.LongUnionFind
+    uf.union(-1L, -1L)
+    (0L until 50000L).foreach(i => uf.union(2 * i + 1, 2 * i))
+    val labels = uf.labels.toMap
+    assert(labels.size === 100001)
+    assert(labels.forall { case (node, root) =>
+      root === (if (node < 0) node else node - node % 2) })
+  }
 }

@@ -5,11 +5,12 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
 import graft.functions.Text
-import graft.operators.{Boundary, CdcIndex, DeconIndex, Dedup}
+import graft.operators.{Boundary, CdcIndex, Clusters, DeconIndex, Dedup, Tier}
 import graft.sources.Tables
 import graft.streaming.{ClusterStream, DsirLoop, DsirStream, LmLoop, LmStream, TextClusterStream}
 
@@ -184,5 +185,22 @@ class GenerationReleaseSpec extends SparkSpec {
     Boundary.release(dsir.ingest(2L, batch(2), tgt))
     assert(cacheEmpty, "DsirLoop left a cache entry")
     assertFreed("DsirLoop", baseline)
+  }
+
+  test("a distributed CC loop leaves only its returned labels' blocks") {
+    val sess = spark
+    import sess.implicits._
+    val chain = (1L until 48L).map(i => (i, i + 1)).toDF("a", "b")
+    def cc(maxIter: Int) = Tier.pinned(spark, "distributed")(
+      Clusters.connectedComponents(chain, "a", "b", maxIter = maxIter))
+    // the chain needs more than three rounds
+    intercept[IllegalArgumentException](cc(3))
+    val baseline = persisted
+    val labels = cc(50)
+    // no System.gc(): the loop itself frees what it superseded
+    assert(persisted -- baseline ===
+      ColumnBridge.leafRddIds(labels.queryExecution.analyzed).toSet)
+    assert(labels.select("cluster_id").distinct().as[Long].collect().toSeq === Seq(1L))
+    assert(labels.count() === 48)
   }
 }
