@@ -23,9 +23,8 @@ object DumpOracles {
   * records its adaptive operators posted, in order. */
 object Verify {
   /** A JSON string. The escape covers backslash, quote, and ALL
-    * control chars (<0x20) — a tab or CR in builder-authored SQL would
-    * otherwise make the driver's json.load fail and silently zero the
-    * round's correctness. */
+    * control chars (<0x20) — a tab or CR in the oracle SQL would
+    * otherwise make a JSON reader reject the whole file. */
   private def q(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

@@ -13,10 +13,10 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * distributed convergence loop and its per-round driver actions).
   *
   * Open-addressed (linear probing, splitmix64-mixed), doubling at
-  * half load; path-halving find. Unions attach the larger root under the smaller, so the
-  * invariant "root = min id of its set" holds at every step and the
-  * emitted labels match the distributed min-label loop EXACTLY
-  * (property-spec'd against it on random graphs).
+  * half load; path-halving find. Unions attach the larger root under
+  * the smaller, so the invariant "root = min id of its set" holds at
+  * every step and the emitted labels match the distributed min-label
+  * loop EXACTLY (property-spec'd against it on random graphs).
   */
 private[graft] final class LongUnionFind {
   private val EMPTY = Long.MinValue
