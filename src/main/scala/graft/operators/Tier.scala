@@ -99,20 +99,20 @@ object Tier {
     val spark = input.sparkSession
     val pin = checked(spark.conf.get(Key, "auto"))
     val allowed = pin == "auto" || (pin == "model" && kind == Model)
-    var estimate: Option[BigInt] = None
-    var measured: Option[Long] = None
-    val fits = allowed && eligible && {
-      val size = input.queryExecution.optimizedPlan.stats.sizeInBytes
-      estimate = Some(size)
-      limit match {
-        case Bytes(n) => size <= n
-        case Rows(n) if statsRows(input).isEmpty && size > BigInt(n) * BytesPerRow =>
-          false
-        case _ =>
-          measured = Some(rows(input))
-          measured.get <= limit.n
+    // (fits, size estimate, measured rows)
+    val (fits, estimate, measured) =
+      if (!allowed || !eligible) (false, None, None)
+      else {
+        val size = input.queryExecution.optimizedPlan.stats.sizeInBytes
+        limit match {
+          case Bytes(n) => (size <= n, Some(size), None)
+          case Rows(n) if statsRows(input).isEmpty && size > BigInt(n) * BytesPerRow =>
+            (false, Some(size), None)
+          case _ =>
+            val n = rows(input)
+            (n <= limit.n, Some(size), Some(n))
+        }
       }
-    }
     val tier = if (!fits) "distributed" else if (kind == Model) "model" else "input"
     val unit = if (limit.isInstanceOf[Bytes]) "bytes" else "rows"
     ListenerBusPost(spark.sparkContext,
