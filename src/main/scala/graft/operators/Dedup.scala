@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.functions.{Text, Vectors}
 
@@ -95,6 +96,12 @@ object Dedup {
     * and they generate the quadratic bucket blowup). Default = the
     * stats-derived [[autoCap]] (√N rule, [[CapPolicy.Auto]]); pass
     * [[CapPolicy.Off]] to disable pruning outright (no count job).
+    *
+    * Tiers ([[sharedCounts]]): an index of at most 2^17 (doc, shingle)
+    * rows with an Int/Long id (sf0.01's corpus) counts the shared
+    * shingles in one [[JaccardLocal]] task; a larger index (sf0.1 and
+    * up), another id type or the `distributed` pin runs the join above.
+    * The ratio, its rounding and the τ gate run in Spark on both.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int, tau: Double, maxDf: CapPolicy = CapPolicy.Auto): DataFrame = {
@@ -135,6 +142,46 @@ object Dedup {
     * returns. */
   private[graft] def ngramJaccardPairsFromIndex(sh: DataFrame, dfCap: Int,
       tau: Double): DataFrame = {
+    val out = sharedCounts(sh, dfCap)
+      .withColumn("jaccard",
+        round(col("shared") / (col("n_a") + col("n_b") - col("shared")), 4))
+      .filter(col("jaccard") >= tau)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    // the result (tiny next to the corpus) is a [[Boundary]] leaf,
+    // filled before the corpus-sized index is released
+    Boundary.stage(out)
+  }
+
+  /** Row limit of [[sharedCounts]]' single-task kernel
+    * ([[JaccardLocal]]): 2^17 (doc, shingle) rows. sf0.01's 500-doc
+    * corpus makes 26k rows and runs there; sf0.1's ~260k rows take the
+    * distributed plan. */
+  private[operators] val LocalShingleThreshold: Long = 1L << 17
+
+  /** The shared-count frame both k-gram pair operators' tails read:
+    * one (doc_a, doc_b, shared, n_a, n_b) row per doc pair a < b that
+    * shares a shingle of the (doc_id, s) index `sh` whose document
+    * frequency is at most `dfCap` (`Int.MaxValue` = no cut); `shared` =
+    * |S_a ∩ S_b| and `n_a`, `n_b` = |S_a|, |S_b|, all over the pruned
+    * shingle universe. `sh` is a filled [[Boundary]] leaf, so the tier
+    * gate reads its exact row count with no job: an index of at most
+    * [[LocalShingleThreshold]] rows with an Int/Long doc_id runs the
+    * single-task [[JaccardLocal]] kernel, anything else (or the
+    * `distributed` pin) the inverted-index join below. Both tiers give
+    * the same rows and schema. */
+  private[graft] def sharedCounts(sh: DataFrame, dfCap: Int): DataFrame = {
+    val idField = sh.schema("doc_id")
+    val intIds = idField.dataType == IntegerType
+    if (Tier.pick("jaccard", Tier.Input, sh, Tier.Rows(LocalShingleThreshold))(
+        intIds || idField.dataType == LongType)) {
+      val counted = StructField("shared", LongType, nullable = false)
+      val schema = StructType(Seq(idField.copy(name = "doc_a"),
+        idField.copy(name = "doc_b"), counted, counted.copy(name = "n_a"),
+        counted.copy(name = "n_b")))
+      return sh.select("doc_id", "s").coalesce(1) // one task, no exchange
+        .mapPartitions(it => JaccardLocal.sharedRows(it, dfCap, intIds))(
+          Encoders.row(schema))
+    }
     val shPruned =
       if (dfCap == Int.MaxValue) sh
       else {
@@ -157,16 +204,10 @@ object Dedup {
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count("*").as("shared"))
-    val out = shared
+    shared
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-      .withColumn("jaccard",
-        round(col("shared") / (col("n_a") + col("n_b") - col("shared")), 4))
-      .filter(col("jaccard") >= tau)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    // the result (tiny next to the corpus) is a [[Boundary]] leaf,
-    // filled before the corpus-sized index is released
-    Boundary.stage(out)
+      .select("doc_a", "doc_b", "shared", "n_a", "n_b")
   }
 
   /** Directed CONTAINMENT near-dup pairs — the asymmetric cousin of
@@ -182,40 +223,16 @@ object Dedup {
     *
     * Same scale machinery as the Jaccard operator, shared by
     * construction: the pruned 8-byte-hash inverted index, the
-    * stats-derived √N hot-shingle cap, sizes from the PRUNED
-    * universe, one a<b bucket join — both directions derive from the
-    * single shared-count row, so containment costs ZERO extra
-    * shuffles over Jaccard. */
+    * stats-derived √N hot-shingle cap and the [[sharedCounts]] frame
+    * (so the same tier pick: the single-task kernel for an index of at
+    * most 2^17 rows, the distributed join above it) — both directions
+    * derive from the single shared-count row, so containment costs
+    * ZERO extra shuffles over Jaccard. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int, tauC: Double, maxDf: CapPolicy = CapPolicy.Auto): DataFrame = {
     val dfCap = resolveCap(docs, maxDf)
     // a filled boundary: see ngramJaccardPairs
     val sh = Boundary.stage(shingleIndexOf(docs, idCol, textCol, k))
-    val shPruned =
-      if (dfCap == Int.MaxValue) sh
-      else {
-        val hot = sh.groupBy("s").agg(count("*").as("df"))
-          .filter(col("df") > dfCap).select("s")
-        sh.join(broadcast(hot), Seq("s"), "left_anti")
-      }
-    val sizes = shPruned.groupBy("doc_id").agg(count("*").as("n_sh"))
-    // shuffled-hash, not sort-merge, for the index self-join (r14
-    // same-JVM A/B: 1.8-2.3 s -> 1.1-1.5 s on the full stage): both
-    // sides are already hash-partitioned on s, the sorts are pure
-    // overhead, and the build side is SAFE by construction - the
-    // df-cap bounds per-key fan-out and per-partition build memory is
-    // index/shuffle.partitions (the usual sizing knob); AQE's skew
-    // split covers shuffled-hash joins too
-    val shared = shPruned.as("a")
-      .join(shPruned.as("b").hint("shuffle_hash"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count("*").as("shared"))
-    val both = shared
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_sh", "n_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_sh", "n_b"), "doc_b")
     // both directions in ONE pass: a unionByName of two selects over
     // the un-persisted join subtree makes AQE plan and run the whole
     // shared-count pipeline TWICE (measured 54 driver jobs vs the
@@ -235,7 +252,7 @@ object Dedup {
     // quotient form shared/min can disagree by an ulp, so the slack
     // is widened to 0.6e-4 (extra survivors only re-face the rounded
     // filter; none can be wrongly dropped).
-    val out = both
+    val out = sharedCounts(sh, dfCap)
       .filter(col("shared") >=
         lit(tauC - 0.6e-4) * least(col("n_a"), col("n_b")))
       .select(explode(array(
@@ -1161,8 +1178,7 @@ object Dedup {
     // plan's 9 driver jobs are pure orchestration at that size, and
     // the single-task kernel reproduces the output exactly (spec).
     val idType = embeddings.schema(idCol).dataType
-    val integralId = idType == org.apache.spark.sql.types.LongType ||
-      idType == org.apache.spark.sql.types.IntegerType
+    val integralId = idType == LongType || idType == IntegerType
     if (Tier.pick("lsh_pairs", Tier.Input, embeddings, Tier.Rows(LocalVecThreshold))(
         integralId)) {
       val spark = embeddings.sparkSession

@@ -15,10 +15,12 @@ final case class TierPick(family: String, tier: String,
     estimate: Option[BigInt], rows: Option[Long], limit: Long, unit: String,
     pin: String) extends SparkListenerEvent
 
-/** The one gate between an adaptive operator's tiers. The graph,
-  * embedding-LSH, LM/PMI and tokenizer-training operators run a
-  * single-task or driver kernel when their input is small and their
-  * distributed plan otherwise. Each site names its family, its kernel's
+/** The one gate between an adaptive operator's tiers. Thirteen
+  * families — the graph operators (CC, PageRank, LPA, the triangle
+  * census), embedding-LSH pairs and top-k, the k-gram shared-count join
+  * behind Jaccard and containment dedup, LM/PMI and tokenizer training
+  * — run a single-task or driver kernel when their input is small and
+  * their distributed plan otherwise. Each site names its family, its kernel's
   * [[Kind]], the frame the kernel would read, a [[Limit]] and its own
   * eligibility check, and [[pick]] decides in this order, stopping at
   * the first step that settles it:
@@ -89,7 +91,7 @@ object Tier {
     }
 
   /** The row count of `df`: [[statsRows]], else one `count()` job. */
-  private[operators] def rows(df: DataFrame): Long =
+  private[graft] def rows(df: DataFrame): Long =
     statsRows(df).getOrElse(df.count())
 
   /** Whether `family`'s `kind` kernel tier runs over `input` held to

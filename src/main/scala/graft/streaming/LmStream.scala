@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Boundary
+import graft.operators.{Boundary, Tier}
 
 /** Streaming LM quality scoring — the continuous deployment shape of
   * [[graft.operators.Curation.interpLogProb]]: the n-gram LM is a
@@ -77,7 +77,8 @@ object LmStream {
     val bf = merged(a.bigram, b.bigram, "bigram_h", "bcnt")
     val pf = merged(a.prefix, b.prefix, "prefix_h", "pcnt")
     val uni = merged(a.unigram, b.unigram, "token_h", "ucnt")
-    LmModel(bf, pf, uni, a.total + b.total, uni.count()) // distinct union vocab
+    // distinct union vocab: the filled leaf's exact rowCount, no job
+    LmModel(bf, pf, uni, a.total + b.total, Tier.rows(uni))
   }
 
   /** Version of the LM hash/tokenization convention (whitespace

@@ -76,8 +76,12 @@ class BoundarySpec extends SparkSpec {
     val results: Seq[(String, Run)] = Seq(
       "ngramJaccardPairs" -> plain(
         Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.6)),
+      "ngramJaccardPairs distributed" -> plain(distributed(
+        Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.6))),
       "containmentPairs" -> plain(
         Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.8)),
+      "containmentPairs distributed" -> plain(distributed(
+        Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.8))),
       "cdcDocStats" -> plain(Dedup.cdcDocStats(docs, "doc_id", "text", 4, 8, 4)),
       "minhashLshPairs" -> plain(
         Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 64, 16, 0.5)),
