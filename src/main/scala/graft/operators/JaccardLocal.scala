@@ -22,53 +22,6 @@ import org.apache.spark.sql.Row
   */
 object JaccardLocal {
 
-  /** Open-addressing count map of positive longs (0 = empty slot):
-    * keys pack two dense doc indices i < j as (i<<32 | j), so 0 never
-    * occurs as a key. */
-  private final class LongCounts(initialCapacity: Int) {
-    private var cap = Integer.highestOneBit(math.max(initialCapacity, 16) * 2)
-    private var keys = new Array[Long](cap)
-    private var counts = new Array[Int](cap)
-    private var n = 0
-
-    def increment(key: Long): Unit = {
-      if (n * 2 >= cap) grow()
-      var idx = slot(key)
-      while (keys(idx) != 0L && keys(idx) != key) idx = (idx + 1) & (cap - 1)
-      if (keys(idx) == 0L) { keys(idx) = key; n += 1 }
-      counts(idx) += 1
-    }
-
-    def foreach(f: (Long, Int) => Unit): Unit = {
-      var i = 0
-      while (i < cap) { if (keys(i) != 0L) f(keys(i), counts(i)); i += 1 }
-    }
-
-    private def slot(k: Long): Int = {
-      var x = k * -7046029254386353131L
-      x ^= x >>> 32
-      x.toInt & (cap - 1)
-    }
-
-    private def grow(): Unit = {
-      val (oldKeys, oldCounts) = (keys, counts)
-      cap <<= 1
-      keys = new Array[Long](cap)
-      counts = new Array[Int](cap)
-      var i = 0
-      while (i < oldKeys.length) {
-        val k = oldKeys(i)
-        if (k != 0L) {
-          var idx = slot(k)
-          while (keys(idx) != 0L) idx = (idx + 1) & (cap - 1)
-          keys(idx) = k
-          counts(idx) = oldCounts(i)
-        }
-        i += 1
-      }
-    }
-  }
-
   /** `xs` sorted ascending without repeats. */
   private def sortedDistinct(xs: Array[Long]): Array[Long] = {
     val s = xs.clone()
@@ -114,7 +67,7 @@ object JaccardLocal {
     def docOf(k: Long): Int = (k & 0xffffffffL).toInt
 
     val nSh = new Array[Long](ids.length)
-    val shared = new LongCounts(1 << 16)
+    val shared = new LongPairCounts(1 << 16)
     var lo = 0
     while (lo < keys.length) {
       var hi = lo + 1

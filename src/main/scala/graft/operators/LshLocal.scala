@@ -4,6 +4,59 @@ import scala.collection.mutable.ArrayBuffer
 
 import graft.functions.Vectors
 
+/** Open-addressing count map of positive longs (0 = empty slot), the
+  * pair table of the single-task kernels: the LSH candidate dedup and
+  * the k-gram shared counts run ~10^6-10^7 increments per task, where
+  * a boxed java.util.HashMap measured 5-10× slower (allocation +
+  * rehash churn dominated the whole kernel). Keys pack two
+  * non-negative array indices i < j as (i<<32 | j), so 0 never occurs
+  * as a key. */
+private[operators] final class LongPairCounts(initialCapacity: Int) {
+  private var cap = Integer.highestOneBit(math.max(initialCapacity, 16) * 2)
+  private var keys = new Array[Long](cap)
+  private var counts = new Array[Int](cap)
+  private var n = 0
+
+  /** Add one to `key`'s count and return the new count. */
+  def increment(key: Long): Int = {
+    if (n * 2 >= cap) grow()
+    var idx = slot(key)
+    while (keys(idx) != 0L && keys(idx) != key) idx = (idx + 1) & (cap - 1)
+    if (keys(idx) == 0L) { keys(idx) = key; n += 1 }
+    counts(idx) += 1
+    counts(idx)
+  }
+
+  def foreach(f: (Long, Int) => Unit): Unit = {
+    var i = 0
+    while (i < cap) { if (keys(i) != 0L) f(keys(i), counts(i)); i += 1 }
+  }
+
+  private def slot(k: Long): Int = {
+    var x = k * -7046029254386353131L
+    x ^= x >>> 32
+    x.toInt & (cap - 1)
+  }
+
+  private def grow(): Unit = {
+    val (oldKeys, oldCounts) = (keys, counts)
+    cap <<= 1
+    keys = new Array[Long](cap)
+    counts = new Array[Int](cap)
+    var i = 0
+    while (i < oldKeys.length) {
+      val k = oldKeys(i)
+      if (k != 0L) {
+        var idx = slot(k)
+        while (keys(idx) != 0L) idx = (idx + 1) & (cap - 1)
+        keys(idx) = k
+        counts(idx) = oldCounts(i)
+      }
+      i += 1
+    }
+  }
+}
+
 /** Single-task kernels for the embedding-LSH family, dispatched by
   * [[Dedup.embeddingPairsLsh]] / [[Similarity.lshTopK]] when the
   * measured corpus is tiny (≤ 2^12 vectors) and the [[Tier]] pin
@@ -59,53 +112,6 @@ object LshLocal {
     s
   }
 
-  /** Open-addressing set of positive longs (0 = empty slot) — the
-    * candidate-pair dedup runs ~10^6-10^7 inserts per task, where a
-    * boxed java.util.HashSet[Long] measured 5-10× slower (allocation
-    * + rehash churn dominated the whole kernel). Keys here pack two
-    * non-negative array indices i < j as (i<<32 | j), so 0 (= the
-    * excluded i==j==0 self-pair) never occurs as a key. */
-  private final class LongPairSet(initialCapacity: Int) {
-    private var cap = Integer.highestOneBit(math.max(initialCapacity, 16) * 2)
-    private var table = new Array[Long](cap)
-    private var n = 0
-
-    /** true if newly added. */
-    def add(key: Long): Boolean = {
-      if (n * 2 >= cap) grow()
-      var idx = mix(key) & (cap - 1)
-      while (true) {
-        val cur = table(idx)
-        if (cur == 0L) { table(idx) = key; n += 1; return true }
-        if (cur == key) return false
-        idx = (idx + 1) & (cap - 1)
-      }
-      false
-    }
-
-    private def mix(k: Long): Int = {
-      var x = k * -7046029254386353131L
-      x ^= x >>> 32
-      x.toInt
-    }
-
-    private def grow(): Unit = {
-      val old = table
-      cap <<= 1
-      table = new Array[Long](cap)
-      var i = 0
-      while (i < old.length) {
-        val k = old(i)
-        if (k != 0L) {
-          var idx = mix(k) & (cap - 1)
-          while (table(idx) != 0L) idx = (idx + 1) & (cap - 1)
-          table(idx) = k
-        }
-        i += 1
-      }
-    }
-  }
-
   /** All self-pairs within hamming-`probeRadius` LSH buckets with
     * cosine ≥ tau — the [[Dedup.embeddingPairsLsh]] contract
     * (candidates meet once across tables; verify once per pair). */
@@ -122,12 +128,12 @@ object LshLocal {
 
     // pair keys pack (i, j) array indices; ids are sorted so idx
     // order ≡ id order and i < j ⟺ id_i < id_j (the a<b orientation)
-    val seen = new LongPairSet(1 << 16)
+    val seen = new LongPairCounts(1 << 16)
     val out = new ArrayBuffer[(Long, Long)]()
 
     def tryPair(x: Int, y: Int): Unit = {
       val (i0, j0) = if (x < y) (x, y) else (y, x)
-      if (i0 != j0 && seen.add((i0.toLong << 32) | j0.toLong)) {
+      if (i0 != j0 && seen.increment((i0.toLong << 32) | j0.toLong) == 1) {
         val cos = dot(vs(i0), vs(j0)) / math.sqrt(norms(i0) * norms(j0))
         if (cos >= tau) out += ((ids(i0), ids(j0)))
       }
