@@ -156,7 +156,7 @@ object Dedup {
     * ([[JaccardLocal]]): 2^17 (doc, shingle) rows. sf0.01's 500-doc
     * corpus makes 26k rows and runs there; sf0.1's ~260k rows take the
     * distributed plan. */
-  private[operators] val LocalShingleThreshold: Long = 1L << 17
+  private val LocalShingleThreshold: Long = 1L << 17
 
   /** The shared-count frame both k-gram pair operators' tails read:
     * one (doc_a, doc_b, shared, n_a, n_b) row per doc pair a < b that

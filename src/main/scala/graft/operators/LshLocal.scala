@@ -5,12 +5,12 @@ import scala.collection.mutable.ArrayBuffer
 import graft.functions.Vectors
 
 /** Open-addressing count map of positive longs (0 = empty slot), the
-  * pair table of the single-task kernels: the LSH candidate dedup and
-  * the k-gram shared counts run ~10^6-10^7 increments per task, where
-  * a boxed java.util.HashMap measured 5-10× slower (allocation +
-  * rehash churn dominated the whole kernel). Keys pack two
-  * non-negative array indices i < j as (i<<32 | j), so 0 never occurs
-  * as a key. */
+  * pair table of the single-task kernels (the LSH candidate dedup, the
+  * k-gram shared counts): the LSH dedup runs ~10^6-10^7 inserts per
+  * task, where a boxed java.util.HashSet[Long] measured 5-10× slower
+  * (allocation + rehash churn dominated the whole kernel). Keys pack
+  * two non-negative array indices i < j as (i<<32 | j), so 0 never
+  * occurs as a key. */
 private[operators] final class LongPairCounts(initialCapacity: Int) {
   private var cap = Integer.highestOneBit(math.max(initialCapacity, 16) * 2)
   private var keys = new Array[Long](cap)
