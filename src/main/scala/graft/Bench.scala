@@ -24,6 +24,10 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_ONLY subset naming report without curate still runs
   * report standalone (full funnel) — the pairing is positional, not
   * a hidden dependency.
+  *
+  * Every timed run is measured by the session's [[LayerCollector]];
+  * the artifact's `layers` object carries, per query, the
+  * [[LayerRecord]] of the run whose time it reports.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -31,6 +35,7 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Sessions.build(cpus, appName = "graft-bench")
+    val layers = LayerCollector(spark)
 
     // optional comma-separated subset (iteration aid — targeted
     // quiet-window re-measurement; the driver always runs the full map)
@@ -61,31 +66,28 @@ object Bench {
       spark.catalog.clearCache()
     }
 
+    /** The run's seconds (-1.0 if it failed) and its layer record. */
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        clear: Boolean): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
+        clear: Boolean): (Double, LayerRecord) = {
+      val (out, record) = layers.measure(name)(fn(spark, sfDir).count())
+      out.failed.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
       // operators may materialize intermediates; drop them so later
       // queries aren't charged their memory — except INSIDE a paired
       // unit, where the follower's contract is exactly that reuse
       if (clear) spark.catalog.clearCache()
       // a failed query must not masquerade as a fast one
-      if (ok) dt else -1.0
+      (if (out.isSuccess) record.wallSeconds else -1.0, record)
     }
 
-    def runUnit(unit: Vector[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): Vector[Double] =
+    def runUnit(unit: Vector[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): Vector[(Double, LayerRecord)] =
       unit.zipWithIndex.map { case ((name, fn), i) =>
         timeOne(name, fn, clear = i == unit.size - 1)
       }
 
-    // host load at the timed phase's ends: the window-envelope
-    // evidence (windows_rN.json) needs the ambient context a wall
-    // number was sampled under, and only the bench process itself
-    // can observe it at the right moment
+    // host load at the timed phase's ends: a wall number is read
+    // with the ambient context it was sampled under, and only the
+    // bench process itself can observe it at the right moment
     def loadAvg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
         .split("\\s+").head.toDouble
@@ -93,7 +95,7 @@ object Bench {
     val loadStart = loadAvg()
     val tEpoch = System.currentTimeMillis() / 1000
 
-    val results: Seq[(String, Double)] = units.flatMap { unit =>
+    val timed: Seq[(String, (Double, LayerRecord))] = units.flatMap { unit =>
       // min over the successful runs per member; -1.0 only when BOTH
       // runs failed. When any member's two runs disagree >3x, one hit
       // an ambient host-contention spike (this VM shows 10-20x
@@ -103,15 +105,17 @@ object Bench {
       val r1 = runUnit(unit)
       val r2 = runUnit(unit)
       val disagree = unit.indices.exists { i =>
-        r1(i) >= 0 && r2(i) >= 0 &&
-          math.max(r1(i), r2(i)) / math.min(r1(i), r2(i)) > 3.0
+        val (a, b) = (r1(i)._1, r2(i)._1)
+        a >= 0 && b >= 0 && math.max(a, b) / math.min(a, b) > 3.0
       }
       val r3 = if (disagree) Some(runUnit(unit)) else None
       unit.indices.map { i =>
-        val runs = (Seq(r1(i), r2(i)) ++ r3.map(_(i))).filter(_ >= 0)
-        unit(i)._1 -> (if (runs.isEmpty) -1.0 else runs.min)
+        val runs = Seq(r1(i), r2(i)) ++ r3.map(_(i))
+        val ok = runs.filter(_._1 >= 0)
+        unit(i)._1 -> (if (ok.isEmpty) (-1.0, runs.head._2) else ok.minBy(_._1))
       }
     }
+    val results: Seq[(String, Double)] = timed.map { case (k, (v, _)) => k -> v }
 
     def jsonLine(entries: Seq[(String, Double)], extra: String): String = {
       val qs = entries.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -171,7 +175,9 @@ object Bench {
       s""""n_queries":${results.size},"queries_full":"$outPath","queries_shown":${compact.size},"""))
     try {
       val w = new java.io.PrintWriter(new java.io.File(outPath), "UTF-8")
-      try w.println(jsonLine(results, "")) finally w.close()
+      val layersJson = timed.map { case (k, (_, r)) => JsonOut.str(k) + ":" + r.json }
+        .mkString("\"layers\":{", ",", "},")
+      try w.println(jsonLine(results, layersJson)) finally w.close()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     spark.stop()

@@ -1652,7 +1652,7 @@ object SparkEntry {
       // folding the COUNT EXPRESSIONS directly nested 2^7 copies of
       // the 7 regexp_replace chains into one Project — ~0.9 s of
       // driver analysis/optimization per run for 14 ms of task work
-      // (QueryJobs: 96% nonwork). Compute each count ONCE in a first
+      // (96% of wall was `sched.nonwork_s`). Compute each count ONCE in a first
       // projection; the fold then references attributes, which
       // CollapseProject keeps separate (non-cheap expressions are
       // never re-inlined into multi-reference consumers). Same fold,
@@ -2073,9 +2073,10 @@ object SparkEntry {
     * serves stale labels/edges (production owns its standing state
     * explicitly via the Clusters/Dedup index APIs; this memo exists
     * for the harness surface). Measurement note: the FIRST invocation
-    * per (session, dir) pays the standing-state build — timing tools
-    * must warm the memo before rep 1 (QueryJobs does, via its
-    * untimed warm-up pass) or rep-1 walls include the build. */
+    * per (session, dir) pays the standing-state build — a timing tool
+    * must read a warmed run, or the wall includes the build (Bench's
+    * warm-up is at another dir, so its rep 1 pays the build and its
+    * min-of-2 reports rep 2). */
   private val incStateMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), (DataFrame, DataFrame)]()
 

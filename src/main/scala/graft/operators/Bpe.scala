@@ -189,8 +189,4 @@ object Bpe {
       .filter(col("word") =!= "")
       .select(col(idCol), col("word"),
         NativeFunctions.bpe_encode(col("word"), model.rules).as("subwords"))
-
-  /** Decode = concatenation (word-internal merges lose nothing). */
-  def decodeCol(subwords: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    concat_ws("", subwords)
 }

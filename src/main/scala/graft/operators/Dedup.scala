@@ -334,16 +334,6 @@ object Dedup {
     result
   }
 
-  /** MinHash signature over an in-row shingle array — used for
-    * small-side/test paths. NOTE: higher-order functions evaluate
-    * interpreted (no codegen); the operator path below uses the
-    * relational explode+groupBy form instead, which is ~10× faster
-    * and shuffles only (hash, id) pairs. */
-  def minhashSignature(shingleArr: Column, perms: Int): Column =
-    array((0 until perms).map { i =>
-      array_min(transform(shingleArr, s => xxhash64(lit(i), s)))
-    }: _*)
-
   /** Relational MinHash signatures: one row per (doc, shingle), one
     * MinHashAgg sketch aggregate per doc — partial aggregation
     * map-side, one shuffle carrying serialized 1 KB sketch buffers.

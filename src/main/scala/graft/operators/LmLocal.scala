@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.Platform
   * when the measured input plan is tiny (≤ 16 MB of source stats)
   * and the [[Tier]] pin allows it — the
   * LshLocal/Bpe adaptive-strategy pattern applied to the LM chain.
-  * Measured motivation (r18, QueryJobs + a per-variant microbench at
-  * sf0.1): the distributed chain's wall is two serial corpus passes
+  * Measured motivation (r18, per-query job and task counts + a
+  * per-variant microbench at sf0.1): the distributed chain's wall is two serial corpus passes
   * whose scan-stage floor is ~150 ms EACH on local mode (job launch +
   * parquet reader init dominate a 1.5 MB read), plus tokenize+hash
   * work that a 32-way repartition made 25× SLOWER (156-doc tasks

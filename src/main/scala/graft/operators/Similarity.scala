@@ -905,13 +905,6 @@ object Similarity {
       .agg(sum(col("d2"))).collect()(0).getDouble(0)
   }
 
-  /** Random-hyperplane LSH bucket id for each vector. Deterministic
-    * (seeded) — safe under task retries. */
-  def lshBuckets(df: DataFrame, idCol: String, vecCol: String,
-      dim: Int, bits: Int, seed: Long): DataFrame =
-    df.select(col(idCol), col(vecCol),
-      Vectors.hyperplaneSig(col(vecCol), dim, bits, seed).as("bucket"))
-
   /** LSH-bucketed approximate top-k: score only candidates sharing
     * the query's bucket under at least one of `tables` independent
     * hash tables (multi-probe via independent seeds). Recall is

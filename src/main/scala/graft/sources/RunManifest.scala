@@ -90,12 +90,6 @@ object RunManifest {
     if (r.isNullAt(0)) None else Some(r.getLong(0))
   }
 
-  /** Committed-run probe: one partition-pruned scan (run_id is the
-    * partition key, so this reads ONE directory's footer, not the
-    * ledger). */
-  def isCommitted(spark: SparkSession, path: String, runId: String): Boolean =
-    runs(spark, path).filter(col("run_id") === runId).limit(1).count() > 0
-
   /** The atomic commit step: stage the 1-row frame beside the ledger,
     * then RENAME it into the per-run_id partition slot. Exactly one
     * committer can win — the slot existing (or the rename landing

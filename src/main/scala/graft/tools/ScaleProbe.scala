@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.SparkEntry
+import graft.{JsonOut, SparkEntry}
 import graft.functions.Text
 import graft.operators.{Boundary, Clusters, Curation, Dedup, Tier}
 import graft.sources.Tables
@@ -447,25 +447,4 @@ object ScaleProbe {
     }
     spark.stop()
   }
-}
-
-/** Minimal JSON string escaping shared by the measurement tools'
-  * hand-rolled artifact writers (paths and labels must not be able
-  * to produce an unparseable committed artifact). */
-private[tools] object JsonOut {
-  def str(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }.mkString("\"", "", "\"")
-
-  /** Locale-independent fixed-point number (the `f` interpolator
-    * follows the default locale — a comma-decimal JVM would make a
-    * committed artifact unparseable). NaN/Inf (a 0-second t1 divide)
-    * degrade to null rather than invalid JSON. */
-  def num(x: Double, scale: Int): String =
-    if (x.isNaN || x.isInfinite) "null"
-    else BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
 }

@@ -187,19 +187,12 @@ class BoundarySpec extends SparkSpec {
   test("a frame read before it is staged still reads its filled cache") {
     val df = docs.select(col("doc_id"), length(col("text")).as("n"))
     val expected = df.collect().toSet // plans and runs df's own QueryExecution
-    val read = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
     val leaf = Boundary.stage(df)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(leaf.collect().toSet === expected)
-      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-      // a cache read counts its batches, a recompute every source row
-      assert(read.get < expected.size, s"the leaf re-read ${read.get} records")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rows, record) = LayerCollector(spark).measure("leaf-read")(leaf.collect().toSet)
+    assert(rows.get === expected)
+    // a cache read counts its batches, a recompute every source row
+    val read = record("sources.read_records").toLong
+    assert(read < expected.size, s"the leaf re-read $read records")
     Boundary.release(leaf)
   }
 

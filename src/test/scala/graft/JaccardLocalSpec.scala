@@ -1,16 +1,10 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 
-import graft.operators.{Boundary, Dedup, Tier, TierPick}
+import graft.operators.{Boundary, Dedup, Tier}
 import graft.operators.Dedup.CapPolicy
 
 /** The two tiers of the k-gram shared-count join: the single-task
@@ -147,31 +141,16 @@ class JaccardLocalSpec extends SparkSpec {
   }
 
   test("an auto run over a filled index posts one jaccard pick with rows and runs no gate job") {
-    val jobs = new AtomicInteger
-    val picks = new ConcurrentLinkedQueue[TierPick]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case p: TierPick => picks.add(p)
-        case _ =>
-      }
-    }
     val docs = intCorpus(11L)
     val sh = Boundary.stage(Dedup.shingleIndexOf(docs, "doc_id", "text", k = 3))
     val n = sh.count()
-    spark.sparkContext.addSparkListener(listener)
     try {
-      ListenerBusDrain(spark.sparkContext)
-      jobs.set(0); picks.clear()
-      val shared = Tier.pinned(spark, "auto")(Dedup.sharedCounts(sh, 50))
-      ListenerBusDrain(spark.sparkContext)
-      assert(jobs.get === 0, "the gate ran a job over a filled index")
-      assert(picks.asScala.toSeq.map(p => (p.family, p.tier, p.rows)) ===
+      val (shared, record) = LayerCollector(spark).measure("jaccard-spec")(
+        Tier.pinned(spark, "auto")(Dedup.sharedCounts(sh, 50)))
+      assert(record("sched.jobs").toInt === 0, "the gate ran a job over a filled index")
+      assert(record.picks.map(p => (p.family, p.tier, p.rows)) ===
         Seq(("jaccard", "input", Some(n))))
-      assert(isKernel(shared, leaf = false))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      Boundary.release(sh)
-    }
+      assert(isKernel(shared.get, leaf = false))
+    } finally Boundary.release(sh)
   }
 }

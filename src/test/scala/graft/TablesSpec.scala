@@ -1,14 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 import graft.sources.Tables
@@ -30,26 +27,11 @@ class TablesSpec extends SparkSpec {
     try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  /** Jobs submitted while `body` runs, counted through a listener. */
+  /** Jobs submitted while `body` runs, counted by the layer collector. */
   private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "tables-spec-" + System.nanoTime()
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesSpec job count")
-    try {
-      body
-      ListenerBusDrain(sc)
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (out, record) = LayerCollector(spark).measure("tables-spec")(body)
+    out.get
+    record("sched.jobs").toInt
   }
 
   test("footer schema equals Spark's inferred schema for every testdata table") {

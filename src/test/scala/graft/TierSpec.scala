@@ -1,12 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.{Boundary, Tier, TierPick}
@@ -16,24 +11,10 @@ import graft.operators.{Boundary, Tier, TierPick}
   * limit open — and one posted record per decision. */
 class TierSpec extends SparkSpec {
 
-  private val jobs = new AtomicInteger
-  private val picks = new ConcurrentLinkedQueue[TierPick]()
-  private lazy val listening = spark.sparkContext.addSparkListener(new SparkListener {
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case p: TierPick => picks.add(p)
-      case _ =>
-    }
-  })
-
   /** `body`'s result, the jobs it ran and the records it posted. */
   private def observed[T](body: => T): (T, Int, Seq[TierPick]) = {
-    listening
-    ListenerBusDrain(spark.sparkContext)
-    jobs.set(0); picks.clear()
-    val out = body
-    ListenerBusDrain(spark.sparkContext)
-    (out, jobs.get, picks.asScala.toSeq)
+    val (out, record) = LayerCollector(spark).measure("tier-spec")(body)
+    (out.get, record("sched.jobs").toInt, record.picks)
   }
 
   private def pick(input: DataFrame, limit: Tier.Limit, kind: Tier.Kind = Tier.Input)(
