@@ -7,6 +7,7 @@ import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
@@ -41,6 +42,7 @@ object LayerRecord {
   val Metrics: Seq[(String, String)] = Seq(
     "plans.analysis_s" -> "s", "plans.optimization_s" -> "s",
     "plans.planning_s" -> "s", "plans.executions" -> "count",
+    "codegen.compiles" -> "count",
     "sched.jobs" -> "count", "sched.stages" -> "count", "sched.tasks" -> "count",
     "sched.nonwork_s" -> "s",
     "exec.busy_s" -> "s", "exec.run_s" -> "s", "exec.cpu_s" -> "s", "exec.gc_s" -> "s",
@@ -82,7 +84,9 @@ object LayerRecord {
   * because the bus is drained before a body starts and before its
   * record is read. `exec.busy_s` is the union of the body's task
   * intervals and `sched.nonwork_s` the rest of its wall time: driver
-  * planning, job submission and stage-launch gaps.
+  * planning, job submission and stage-launch gaps. `codegen.compiles`
+  * is the body's delta of Spark's generated-class compile count, a
+  * JVM-wide counter, so it too is exact for one client thread.
   *
   * Installed by the mains that report it (Bench, Verify), never by
   * [[Sessions.build]]. */
@@ -123,11 +127,13 @@ final class LayerCollector private (spark: SparkSession)
     groups.put(group, tally)
     current = tally
     sc.setJobGroup(group, name, interruptOnCancel = false)
+    val compiles0 = LayerCollector.compiles
     val wall0 = System.currentTimeMillis()
     val t0 = System.nanoTime()
     val out = try Success(body) catch { case e: Throwable => Failure(e) }
     val seconds = (System.nanoTime() - t0) / 1e9
     val wall1 = System.currentTimeMillis()
+    tally.add("codegen.compiles", (LayerCollector.compiles - compiles0).toDouble)
     sc.clearJobGroup()
     ListenerBusDrain(sc)
     current = null
@@ -211,6 +217,9 @@ object LayerCollector {
     "planning" -> "plans.planning_s")
 
   private val installed = mutable.HashMap[SparkSession, LayerCollector]()
+
+  /** Generated classes compiled in this JVM so far. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** `spark`'s collector, installed on its first use. */
   def apply(spark: SparkSession): LayerCollector = synchronized {

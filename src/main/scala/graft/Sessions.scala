@@ -13,7 +13,26 @@ import org.apache.spark.sql.SparkSession
   *   - ns-timestamp parquet compat (the driver's events.parquet
   *     carries int64 nanoseconds; see [[graft.sources.Tables.events]]);
   *   - graft's native SQL functions + the AsOfJoin planner strategy
-  *     registered via [[graft.plans.GraftExtensions]].
+  *     registered via [[graft.plans.GraftExtensions]];
+  *   - artifact isolation off (`spark.sql.artifact.isolation.enabled`).
+  *     Spark's generated-class cache is keyed by the source text AND
+  *     the compiling thread's context class loader. Every
+  *     `Boundary.stage` persists through `CacheManager`, which clones
+  *     the session (autoBucketedScan is on by default), and with
+  *     isolation on each clone runs its tasks under an executor class
+  *     loader of its own: the stages reading every new boundary
+  *     recompiled the same sources, each janino class lookup a failing
+  *     RPC to the driver's artifact server. graft adds no jars, files
+  *     or artifacts, so one loader serves every task;
+  *   - a codegen cache of 1000 classes
+  *     (`spark.sql.codegen.cache.maxEntries`, default 100). A session's
+  *     stable working set is 117–155 classes (a perfbench pass), so
+  *     the default cache evicts and recompiles part of it on every
+  *     pass. Neither setting alone is enough: a timed perfbench
+  *     curation_heavy pass compiled 170 classes with neither, 151 with
+  *     isolation off only, 54 with the bigger cache only and 0 with
+  *     both; its pass time fell from about 6 s to under 4 s (4-core
+  *     host, sf0.01).
   *
   * `build` constructs a local session (tests/CLI mains); `install`
   * retrofits an EXISTING session (e.g. a cluster session created by
@@ -58,6 +77,9 @@ object Sessions {
       // PlanCost) raise the limit per session at runtime.
       .config("spark.sql.maxPlanStringLength", (64 * 1024).toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the codegen cache holds a pass (see the class doc)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // bucketed tables (Tables.writeBucketed) need a catalog home;
       // keep it out of the source tree
       .config("spark.sql.warehouse.dir",
@@ -70,7 +92,13 @@ object Sessions {
 
   /** Register graft's SQL functions and planner strategy on a live
     * session (idempotent; the withExtensions construction path is
-    * `spark.sql.extensions=graft.plans.GraftExtensions`). */
+    * `spark.sql.extensions=graft.plans.GraftExtensions`).
+    *
+    * It cannot carry the two codegen-cache settings of [[build]]: both
+    * take effect only when the context and session are created. A
+    * cluster session passes them at submit:
+    * `--conf spark.sql.artifact.isolation.enabled=false
+    * --conf spark.sql.codegen.cache.maxEntries=1000`. */
   def install(spark: SparkSession): Unit = {
     graft.plans.GraftExtensions.registerAll(spark)
     org.apache.spark.sql.graft.ColumnBridge.addStrategy(

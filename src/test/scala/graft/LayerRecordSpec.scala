@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, sum}
+
 import graft.operators.{Boundary, Tier}
 
 /** The one per-query layer collector: each measured body gets its own
@@ -63,6 +65,18 @@ class LayerRecordSpec extends SparkSpec {
       assert(plain("cache.blocks") === 0.0)
       assert(plain("sched.jobs") >= 1)
     } finally Boundary.release(leaf.get)
+  }
+
+  test("a fresh plan's first run counts its codegen compiles; a repeat counts none") {
+    // the literal is inlined into the generated source, so no earlier
+    // body in this JVM compiled this plan's classes
+    def run(): Long = spark.range(0, 1000, 1, 2).selectExpr("id * 982451653 + 7 as v")
+      .groupBy((col("v") % 3).as("m")).agg(sum("v")).collect().length.toLong
+    val (first, fresh) = layers.measure("fresh")(run())
+    val (again, repeat) = layers.measure("repeat")(run())
+    assert(first.get === 3L && again.get === 3L)
+    assert(fresh("codegen.compiles") > 0)
+    assert(repeat("codegen.compiles") === 0.0)
   }
 
   test("the record is one JSON object with every metric and the picks") {
