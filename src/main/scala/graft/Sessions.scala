@@ -20,19 +20,18 @@ import org.apache.spark.sql.SparkSession
   *     `Boundary.stage` persists through `CacheManager`, which clones
   *     the session (autoBucketedScan is on by default), and with
   *     isolation on each clone runs its tasks under an executor class
-  *     loader of its own: the stages reading every new boundary
-  *     recompiled the same sources, each janino class lookup a failing
-  *     RPC to the driver's artifact server. graft adds no jars, files
-  *     or artifacts, so one loader serves every task;
+  *     loader of its own, so the stages reading every new boundary
+  *     recompiled the same sources. graft adds no jars, files or
+  *     artifacts, so one loader serves every task;
   *   - a codegen cache of 1000 classes
   *     (`spark.sql.codegen.cache.maxEntries`, default 100). A session's
-  *     stable working set is 117–155 classes (a perfbench pass), so
-  *     the default cache evicts and recompiles part of it on every
-  *     pass. Neither setting alone is enough: a timed perfbench
-  *     curation_heavy pass compiled 170 classes with neither, 151 with
-  *     isolation off only, 54 with the bigger cache only and 0 with
-  *     both; its pass time fell from about 6 s to under 4 s (4-core
-  *     host, sf0.01).
+  *     working set is 117–155 classes (the first perfbench pass of
+  *     each workload), so the default cache evicts and recompiles part
+  *     of it on every pass. Neither setting alone is enough: a timed
+  *     perfbench curation_heavy pass compiled 170 classes with
+  *     neither, 151 with isolation off only, 54 with the bigger cache
+  *     only and 0 with both; its median pass fell from 5.5 s to 3.3 s
+  *     (4-core host, 10 alternating pairs).
   *
   * `build` constructs a local session (tests/CLI mains); `install`
   * retrofits an EXISTING session (e.g. a cluster session created by
