@@ -33,8 +33,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Sessions.build(cpus, appName = "graft-bench")
+    val spark = Sessions.build(Sessions.envCpus, appName = "graft-bench")
     val layers = LayerCollector(spark)
 
     // optional comma-separated subset (iteration aid — targeted

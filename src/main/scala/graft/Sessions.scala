@@ -41,6 +41,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** Local cores for a graft main: `SPARK_GRAFT_CPUS`, default 4. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   /** Local session with `cpus` cores and graft extensions installed. */
   def build(cpus: Int, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()

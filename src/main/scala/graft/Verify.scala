@@ -12,8 +12,7 @@ object Verify {
     // optional third arg: comma-separated query names (iteration aid;
     // the driver always runs the full map)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Sessions.build(cpus, appName = "graft-verify")
+    val spark = Sessions.build(Sessions.envCpus, appName = "graft-verify")
     val layers = LayerCollector(spark)
     new java.io.File(outDir).mkdirs()
     val picks = SparkEntry.queries.toSeq

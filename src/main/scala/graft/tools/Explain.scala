@@ -12,8 +12,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.Sessions.build(cpus, appName = "graft-explain")
+    val spark = graft.Sessions.build(graft.Sessions.envCpus, appName = "graft-explain")
     // the committed plan artifacts must be complete: lift the session
     // default 64 KB stringification cap (Sessions.scala, r20) here
     spark.conf.set("spark.sql.maxPlanStringLength", (1 << 28).toString)

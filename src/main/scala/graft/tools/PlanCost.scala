@@ -22,39 +22,63 @@ import org.apache.spark.sql.execution.ExplainMode
   * sf0.001 so eager jobs are cheap — planning cost is structural, not
   * data-sized.
   *
-  * Usage: runMain graft.tools.PlanCost [sfDir] [topN]
+  * Each row also carries the physical plan's red flags —
+  * CartesianProduct, non-broadcast NestedLoop, codegen fallbacks —
+  * and a marker for a global single-partition Sort/Window; every
+  * flagged row is listed. Given a names list, the sweep covers only
+  * those queries and prints each one's executed plan: after a query
+  * goes green, read its plan and keep reading it.
+  *
+  * Usage: runMain graft.tools.PlanCost [sfDir] [topN] [names-csv]
   */
 object PlanCost {
   private final case class Cost(name: String, buildS: Double,
-      planS: Double, planChars: Int, explainS: Double, explainChars: Int)
+      planS: Double, planChars: Int, explainS: Double, explainChars: Int,
+      flags: Seq[String])
+
+  private val redFlags = Seq(
+    "CartesianProduct",
+    "BroadcastNestedLoopJoin LeftOuter",
+    "BroadcastNestedLoopJoin Inner, BuildLeft", // non-broadcast-side scans
+    "codegen is disabled")
+
+  /** The red flags and the global-sort marker a physical plan string shows. */
+  private def flagsOf(plan: String): Seq[String] = {
+    val globalSort = plan.linesIterator.exists(l =>
+      l.contains("Sort [") && l.contains("global=true") &&
+        !l.contains("TakeOrdered"))
+    redFlags.filter(plan.contains) ++ (if (globalSort) Seq("global sort") else Nil)
+  }
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val topN = args.lift(1).map(_.toInt).getOrElse(25)
-    val spark = graft.Sessions.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
-      appName = "graft-plancost")
+    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    val spark = graft.Sessions.build(graft.Sessions.envCpus, appName = "graft-plancost")
     spark.conf.set("spark.sql.maxPlanStringLength", (1 << 28).toString)
     val modeName = spark.conf.get("spark.sql.ui.explainMode")
     val mode = ExplainMode.fromString(modeName)
     def secs(t0: Long) = (System.nanoTime() - t0) / 1e9
-    val rows = for ((name, q) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) yield {
+    val rows = for ((name, q) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)
+                    if only.forall(_.contains(name))) yield {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val df = q(spark, dir)
       val tBuild = secs(t0)
       val t1 = System.nanoTime()
       val qe = df.queryExecution
-      val plan = qe.executedPlan
+      val plan = qe.executedPlan.toString
       val tPlan = secs(t1)
       val t2 = System.nanoTime()
       val explain = qe.explainString(mode)
       val tExplain = secs(t2)
-      Cost(name, tBuild, tPlan, plan.toString.length, tExplain, explain.length)
+      if (only.isDefined) { println(s"===== $name"); println(plan) }
+      Cost(name, tBuild, tPlan, plan.length, tExplain, explain.length, flagsOf(plan))
     }
     def show(c: Cost): Unit = println(f"[plan-cost] ${c.name}%-28s " +
       f"${c.buildS}%8.3f ${c.planS}%8.3f ${c.planChars}%10d " +
-      f"${c.explainS}%9.3f ${c.explainChars}%12d")
+      f"${c.explainS}%9.3f ${c.explainChars}%12d" +
+      (if (c.flags.nonEmpty) s"  ⚠ ${c.flags.mkString(";")}" else ""))
     println(f"${"query"}%-40s ${"build_s"}%8s ${"plan_s"}%8s " +
       f"${"plan_chars"}%10s ${"explain_s"}%9s ${"explain_chars"}%12s" +
       s"  (explain mode: $modeName)")
@@ -63,6 +87,8 @@ object PlanCost {
     rows.sortBy(-_.explainChars).take(10).foreach(show)
     println("[plan-cost] explain string above 64 KB (follow-up candidates):")
     rows.filter(_.explainChars > 64 * 1024).sortBy(-_.explainChars).foreach(show)
+    println("[plan-cost] red flags:")
+    rows.filter(_.flags.nonEmpty).foreach(show)
     spark.stop()
   }
 }

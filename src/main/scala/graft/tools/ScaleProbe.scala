@@ -425,7 +425,7 @@ object ScaleProbe {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val only = args.lift(2).map(_.split(",").toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.Sessions.envCpus
     // overridable so concurrent probes don't clobber each other's corpora
     val tmp = sys.env.getOrElse("SCALEPROBE_DIR", "/tmp/graft_scaleprobe")
     val spark = graft.Sessions.build(cpus, appName = "graft-scaleprobe")

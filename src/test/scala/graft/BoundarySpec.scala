@@ -108,7 +108,7 @@ class BoundarySpec extends SparkSpec {
       "triangleCensus" -> plain(Graph.triangleCensus(edgeDf, "a", "b")),
       "triangleCensus distributed" -> plain(
         distributed(Graph.triangleCensus(edgeDf, "a", "b"))),
-      "hotSupplierGraph" -> plain(SparkEntry.hotSupplierGraph(spark, sfDir)),
+      "hotSupplierGraph" -> plain(queries.GraphQueries.hotSupplierGraph(spark, sfDir)),
       "minhashProbe" -> withIndex(
         Dedup.minhashIndex(corpus, "doc_id", "text", 3, 64, 16),
         (ix: Dedup.MinhashIndex) => Seq(ix.sigs, ix.banded),

@@ -25,9 +25,9 @@ class CacheBoundaryGuardSpec extends AnyFunSuite {
     ("Graph.scala", graphTrunc, "label-propagation loop truncation"),
     ("Similarity.scala", ".localCheckpoint(true)",
       "tombstone rewrite: cuts lineage to the durable table it overwrites"),
-    ("SparkEntry.scala", ".localCheckpoint(true)",
+    ("DedupQueries.scala", ".localCheckpoint(true)",
       "incStateMemo labels: harness standing state that clearCache must not drop"),
-    ("SparkEntry.scala", "val newEdges = allPairs.filter(newA || newB).localCheckpoint(true)",
+    ("DedupQueries.scala", "val newEdges = allPairs.filter(newA || newB).localCheckpoint(true)",
       "incStateMemo edges: harness standing state that clearCache must not drop"))
 
   private def key(t: (String, String, Any)) = (t._1, t._2)

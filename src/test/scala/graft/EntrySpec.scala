@@ -7,9 +7,17 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracleSql key has a queries entry") {
-    val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("query names are unique") {
+    // every record carries its own oracle, so a query without an
+    // oracle (or the reverse) cannot be declared; what the family
+    // files can still do is declare one name twice
+    val names = SparkEntry.records.map(_.name)
+    assert(names.distinct.size === names.size,
+      s"declared twice: ${names.diff(names.distinct).distinct}")
+    assert(SparkEntry.queries.size === names.size)
+    val q = SparkEntry.records.head
+    val e = intercept[IllegalArgumentException](SparkEntry.byName(Seq(q, q)))
+    assert(e.getMessage.contains(q.name))
   }
 
   test("every query is oracle-gated (no rows-only checks left)") {
