@@ -18,11 +18,6 @@ object Text {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish surface tokenizer: alpha runs, digit runs, single
-    * non-alnum marks. Returns the array of matches. */
-  def surfaceTokens(text: Column): Column =
-    regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0))
-
   /** Word k-shingles (k consecutive tokens joined by a single space),
     * distinct. Empty array when fewer than k tokens. */
   def shingles(text: Column, k: Int): Column = {

@@ -28,8 +28,6 @@ object Vectors {
   /** Squared L2 norm |a|^2. */
   def normSq(a: Column): Column = { val ad = d(a); dot(ad, ad) }
 
-  def norm2(a: Column): Column = sqrt(normSq(a))
-
   /** Cosine similarity: dot / sqrt(|a|^2 * |b|^2) — the same
     * association DuckDB's list_cosine_similarity uses, so oracle
     * comparisons agree to the last ulp. */

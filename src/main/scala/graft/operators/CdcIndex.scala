@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.expr.NativeFunctions.cdc_chunk_hashes
+import graft.sources.{StampedTables, Tables}
 
 /** STANDING content-defined-chunk index (r11): the incremental /
   * continuous-ingest story for [[Dedup.cdcDuplicateChunks]], with the
@@ -147,47 +148,26 @@ object CdcIndex {
     * hash-family version travel WITH the tables. */
   def cdcIndexWrite(index: CdcIndex, chunksTable: String,
       membersTable: String, buckets: Int = 16): Unit = {
-    val spark = index.members.sparkSession
-    index.chunks.write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "ch").sortBy("ch").saveAsTable(chunksTable)
+    Tables.writeBucketed(index.chunks, chunksTable, "ch", buckets)
     index.members.write.format("parquet").mode("overwrite")
       .bucketBy(buckets, "ch").saveAsTable(membersTable)
-    Seq(chunksTable, membersTable).foreach { t =>
-      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES (" +
-        s"'graft.cdc.w'='${index.w}', 'graft.cdc.modD'='${index.modD}', " +
-        s"'graft.cdc.minLen'='${index.minLen}', " +
-        s"'graft.cdc.hashVersion'='$cdcHashVersion')")
-    }
+    StampedTables.stamp(index.members.sparkSession, Seq(chunksTable, membersTable),
+      "cdc", cdcStamp(index.w, index.modD, index.minLen))
   }
 
-  /** Reattach a durable index written by [[cdcIndexWrite]],
-    * validating BOTH directions (the clustersLoad contract): the
-    * requested params and the session's hash-family version must
-    * equal the stamps; missing stamps throw (not a cdcIndexWrite
-    * table); a `graft.cdc.*` property this loader does not understand
-    * throws (a newer writer's policy this session cannot honor). */
+  private def cdcStamp(w: Int, modD: Int, minLen: Int): Map[String, Any] =
+    Map("w" -> w, "modD" -> modD, "minLen" -> minLen, "hashVersion" -> cdcHashVersion)
+
+  /** Reattach a durable index written by [[cdcIndexWrite]] under the
+    * [[graft.sources.StampedTables.check]] policy: the requested
+    * params and the session's hash-family version must equal the
+    * stamps; missing stamps (not a cdcIndexWrite table) or a
+    * `graft.cdc.*` property this loader does not understand (a newer
+    * writer's policy this session cannot honor) throw. */
   def cdcIndexLoad(spark: SparkSession, chunksTable: String,
       membersTable: String, w: Int, modD: Int, minLen: Int): CdcIndex = {
-    val known = Set("w", "modD", "minLen", "hashVersion")
-    Seq(chunksTable, membersTable).foreach { t =>
-      val props = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-        .collect { case (key, v) if key.startsWith("graft.cdc.") =>
-          key.stripPrefix("graft.cdc.") -> v }
-      val unknown = props.keySet -- known
-      require(unknown.isEmpty,
-        s"index table $t stamps params this loader does not understand: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-      Seq("w" -> w, "modD" -> modD, "minLen" -> minLen,
-          "hashVersion" -> cdcHashVersion).foreach {
-        case (name, v) => props.get(name) match {
-          case Some(s) => require(s == v.toString,
-            s"index table $t was built with $name=$s, load requested $v")
-          case None => throw new IllegalArgumentException(
-            s"table $t lacks graft.cdc.$name — not a cdcIndexWrite table")
-        }
-      }
-    }
+    StampedTables.check(spark, Seq(chunksTable, membersTable), "cdc",
+      cdcStamp(w, modD, minLen))
     CdcIndex(spark.table(chunksTable), spark.table(membersTable),
       w, modD, minLen)
   }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
+import graft.sources.{StampedTables, Tables}
+
 /** Single-task min-root union-find over Long node ids — the in-memory
   * strategy [[Clusters.connectedComponents]] dispatches to when the
   * MEASURED edge count fits one task (the AQE-broadcast reasoning
@@ -449,22 +451,10 @@ object Clusters {
     *        safe. */
   def clustersWrite(labels: DataFrame, table: String,
       sourceParams: Map[String, String], buckets: Int = 16): Unit = {
-    val spark = labels.sparkSession
-    sourceParams.keys.foreach { k =>
-      require(k.matches("[A-Za-z0-9_.-]+"),
-        s"sourceParams key '$k' must match [A-Za-z0-9_.-]+ " +
-          "(it becomes a table-property name)")
-    }
-    labels.select(col("node"), col("cluster_id"))
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "node").sortBy("node").saveAsTable(table)
-    // values are interpolated into SQL string literals — escape the
-    // literal metacharacters (quote, backslash) so a value like
-    // "it's" can't break the statement or smuggle SQL in
-    def lit(v: String) = "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    val props = (sourceParams + ("format" -> clustersFormatVersion.toString))
-      .map { case (k, v) => s"'graft.clusters.$k'=${lit(v)}" }.mkString(", ")
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($props)")
+    StampedTables.requireKeys(sourceParams.keys.toSeq)
+    Tables.writeBucketed(labels.select(col("node"), col("cluster_id")), table, "node", buckets)
+    StampedTables.stamp(labels.sparkSession, Seq(table), "clusters",
+      sourceParams + ("format" -> clustersFormatVersion.toString))
   }
 
   /** Reattach a durable labeling written by [[clustersWrite]]. The
@@ -478,25 +468,8 @@ object Clusters {
     * different similarity regime. */
   def clustersLoad(spark: org.apache.spark.sql.SparkSession, table: String,
       sourceParams: Map[String, String]): DataFrame = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val wanted = sourceParams + ("format" -> clustersFormatVersion.toString)
-    wanted.foreach { case (k, v) =>
-      props.get(s"graft.clusters.$k") match {
-        case Some(got) => require(got == v,
-          s"cluster table $table was built with $k=$got, load requested $v")
-        case None => throw new IllegalArgumentException(
-          s"table $table lacks graft.clusters.$k — not a clustersWrite table")
-      }
-    }
-    val stamped = props.keys.collect {
-      case k if k.startsWith("graft.clusters.") => k.stripPrefix("graft.clusters.")
-    }.toSet
-    val unrequested = stamped -- wanted.keySet
-    require(unrequested.isEmpty,
-      s"cluster table $table stamps params the load did not request: " +
-        s"${unrequested.toSeq.sorted.mkString(", ")} — name every " +
-        "source parameter (or the labeling's similarity regime is unverified)")
+    StampedTables.check(spark, Seq(table), "clusters",
+      sourceParams + ("format" -> clustersFormatVersion.toString))
     spark.table(table)
   }
 

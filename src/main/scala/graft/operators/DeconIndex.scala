@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.expr.NativeFunctions.shingle_hashes
 import graft.functions.expr.SketchAggregates.{bloom_agg, bloom_contains_any}
+import graft.sources.{StampedTables, Tables}
 
 /** STANDING decontamination index (r10 — the r8/r9 wishlist item):
   * benchmarks change on their own release cadence, but the r9 decon
@@ -149,46 +150,23 @@ object DeconIndex {
     * hash-family version travel WITH the tables. */
   def deconIndexWrite(index: DeconIndex, shinglesTable: String,
       membersTable: String, buckets: Int = 16): Unit = {
-    val spark = index.members.sparkSession
-    index.shingles.write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "h").sortBy("h").saveAsTable(shinglesTable)
+    Tables.writeBucketed(index.shingles, shinglesTable, "h", buckets)
     index.members.write.format("parquet").mode("overwrite")
       .bucketBy(buckets, "h").saveAsTable(membersTable)
-    Seq(shinglesTable, membersTable).foreach { t =>
-      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES (" +
-        s"'graft.decon.n'='${index.n}', " +
-        s"'graft.decon.hashVersion'='$deconHashVersion')")
-    }
+    StampedTables.stamp(index.members.sparkSession, Seq(shinglesTable, membersTable),
+      "decon", Map("n" -> index.n, "hashVersion" -> deconHashVersion))
   }
 
-  /** Reattach a durable index written by [[deconIndexWrite]],
-    * validating BOTH directions (the clustersLoad contract): the
-    * requested n and the session's hash-family version must equal
-    * the stamps; a table missing them was not written by
-    * deconIndexWrite and throws; a `graft.decon.*` property this
-    * loader does not understand throws (a newer writer's policy this
-    * session cannot honor). */
+  /** Reattach a durable index written by [[deconIndexWrite]] under
+    * the [[graft.sources.StampedTables.check]] policy: the requested
+    * n and the session's hash-family version must equal the stamps;
+    * a missing stamp (not a deconIndexWrite table) or a
+    * `graft.decon.*` property this loader does not understand (a
+    * newer writer's policy this session cannot honor) throws. */
   def deconIndexLoad(spark: SparkSession, shinglesTable: String,
       membersTable: String, n: Int): DeconIndex = {
-    val known = Set("n", "hashVersion")
-    Seq(shinglesTable, membersTable).foreach { t =>
-      val props = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-        .collect { case (key, v) if key.startsWith("graft.decon.") =>
-          key.stripPrefix("graft.decon.") -> v }
-      val unknown = props.keySet -- known
-      require(unknown.isEmpty,
-        s"index table $t stamps params this loader does not understand: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-      Seq("n" -> n, "hashVersion" -> deconHashVersion).foreach {
-        case (name, v) => props.get(name) match {
-          case Some(s) => require(s == v.toString,
-            s"index table $t was built with $name=$s, load requested $v")
-          case None => throw new IllegalArgumentException(
-            s"table $t lacks graft.decon.$name — not a deconIndexWrite table")
-        }
-      }
-    }
+    StampedTables.check(spark, Seq(shinglesTable, membersTable), "decon",
+      Map("n" -> n, "hashVersion" -> deconHashVersion))
     DeconIndex(spark.table(shinglesTable), spark.table(membersTable), n)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.functions.{Text, Vectors}
+import graft.sources.{StampedTables, Tables}
 
 /** Deduplication family for LLM training corpora (SURVEY.md §2c).
   *
@@ -475,28 +476,8 @@ object Dedup {
       k: Int, perms: Int, bands: Int,
       sigsTable: String, bandTable: String, buckets: Int = 16): Unit = {
     require(perms % bands == 0, "bands must divide perms")
-    val spark = corpus.sparkSession
-    minhashSigsOf(corpus, idCol, textCol, k, perms)
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id").saveAsTable(sigsTable)
-    // bands derive from the LANDED sigs (one clean scan, no recompute)
-    bandedOf(spark.table(sigsTable), perms, bands)
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "band", "bh").saveAsTable(bandTable)
-    // the build parameters travel WITH the tables: a later session
-    // loading with different (k, perms, bands) must hard-fail, not
-    // silently produce zero candidates / skewed jaccard estimates.
-    // hashVersion pins the HASH FAMILY itself: (k, perms, bands) can
-    // all match while the underlying shingle/permutation hashes have
-    // evolved (v1 byte fold → v2 codepoint fold did exactly that) —
-    // without the stamp, a landed index would silently stop matching
-    // freshly-signed probes (zero candidates on non-ASCII)
-    Seq(sigsTable, bandTable).foreach { t =>
-      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES (" +
-        s"'graft.minhash.k'='$k', 'graft.minhash.perms'='$perms', " +
-        s"'graft.minhash.bands'='$bands', " +
-        s"'graft.minhash.hashVersion'='$minhashHashVersion')")
-    }
+    landMinhash(minhashSigsOf(corpus, idCol, textCol, k, perms), k, perms, bands,
+      sigsTable, bandTable, buckets)
   }
 
   /** Version of the MinHash hash family (shingle fold + permutation
@@ -515,24 +496,32 @@ object Dedup {
     * THIS session's hash family, so the current
     * [[minhashHashVersion]] stamp is the correct provenance. */
   def minhashIndexWriteSigned(index: MinhashIndex,
-      sigsTable: String, bandTable: String, buckets: Int = 16): Unit = {
-    val spark = index.sigs.sparkSession
-    index.sigs
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id").saveAsTable(sigsTable)
-    // bands re-derive from the LANDED sigs (one clean scan) — same
-    // recipe as minhashIndexWrite, and cheaper than landing the
-    // in-memory band table (banding is pure arithmetic on the sig)
-    bandedOf(spark.table(sigsTable), index.perms, index.bands)
+      sigsTable: String, bandTable: String, buckets: Int = 16): Unit =
+    landMinhash(index.sigs, index.k, index.perms, index.bands,
+      sigsTable, bandTable, buckets)
+
+  /** The one landing path of both MinHash writers: signatures bucketed
+    * on doc_id, bands re-derived from the LANDED sigs (one clean
+    * scan; banding is pure arithmetic on the sig), then the stamps.
+    * The build parameters travel WITH the tables: a later session
+    * loading with different (k, perms, bands) must hard-fail, not
+    * silently produce zero candidates / skewed jaccard estimates.
+    * hashVersion pins the HASH FAMILY itself: (k, perms, bands) can
+    * all match while the underlying shingle/permutation hashes have
+    * evolved (v1 byte fold → v2 codepoint fold did exactly that). */
+  private def landMinhash(sigs: DataFrame, k: Int, perms: Int, bands: Int,
+      sigsTable: String, bandTable: String, buckets: Int): Unit = {
+    val spark = sigs.sparkSession
+    Tables.writeBucketed(sigs, sigsTable, "doc_id", buckets)
+    bandedOf(spark.table(sigsTable), perms, bands)
       .write.format("parquet").mode("overwrite")
       .bucketBy(buckets, "band", "bh").saveAsTable(bandTable)
-    Seq(sigsTable, bandTable).foreach { t =>
-      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES (" +
-        s"'graft.minhash.k'='${index.k}', 'graft.minhash.perms'='${index.perms}', " +
-        s"'graft.minhash.bands'='${index.bands}', " +
-        s"'graft.minhash.hashVersion'='$minhashHashVersion')")
-    }
+    StampedTables.stamp(spark, Seq(sigsTable, bandTable), "minhash",
+      minhashStamp(k, perms, bands))
   }
+
+  private def minhashStamp(k: Int, perms: Int, bands: Int): Map[String, Any] =
+    Map("k" -> k, "perms" -> perms, "bands" -> bands, "hashVersion" -> minhashHashVersion)
 
   /** Reattach a durable index written by [[minhashIndexWrite]].
     * The requested parameters are validated against the properties
@@ -542,19 +531,8 @@ object Dedup {
   def minhashIndexLoad(spark: org.apache.spark.sql.SparkSession,
       sigsTable: String, bandTable: String,
       k: Int, perms: Int, bands: Int): MinhashIndex = {
-    Seq(sigsTable, bandTable).foreach { t =>
-      val props = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      Seq("k" -> k, "perms" -> perms, "bands" -> bands,
-          "hashVersion" -> minhashHashVersion).foreach { case (name, v) =>
-        props.get(s"graft.minhash.$name") match {
-          case Some(s) => require(s == v.toString,
-            s"index table $t was built with $name=$s, load requested $v")
-          case None => throw new IllegalArgumentException(
-            s"table $t lacks graft.minhash.$name — not a minhashIndexWrite table")
-        }
-      }
-    }
+    StampedTables.check(spark, Seq(sigsTable, bandTable), "minhash",
+      minhashStamp(k, perms, bands))
     MinhashIndex(spark.table(sigsTable), spark.table(bandTable), k, perms, bands)
   }
 
@@ -944,58 +922,31 @@ object Dedup {
   def substringIndexWrite(index: SubstringIndex, hashesTable: String,
       membersTable: String, tombsTable: String, buckets: Int = 16): Unit = {
     val spark = index.hashes.sparkSession
-    index.hashes.write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "h").sortBy("h").saveAsTable(hashesTable)
+    Tables.writeBucketed(index.hashes, hashesTable, "h", buckets)
     index.members.write.format("parquet").mode("overwrite")
       .bucketBy(buckets, "h").saveAsTable(membersTable)
     // tombs: few rows (one per boilerplate hash) — plain table
     index.tombs.write.format("parquet").mode("overwrite")
       .saveAsTable(tombsTable)
-    Seq(hashesTable, membersTable, tombsTable).foreach { t =>
-      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES (" +
-        s"'graft.substr.k'='${index.k}', " +
-        s"'graft.substr.dfCap'='${index.dfCap}', " +
-        s"'graft.substr.hashVersion'='$minhashHashVersion')")
-    }
+    StampedTables.stamp(spark, Seq(hashesTable, membersTable, tombsTable), "substr",
+      Map("k" -> index.k, "dfCap" -> index.dfCap, "hashVersion" -> minhashHashVersion))
   }
 
   /** Reattach a durable index written by [[substringIndexWrite]].
     * The requested k and the session's hash-family version must
     * match the stamps; `dfCap` is INDEX STATE (resolved at build
     * time), so it is read back from the stamp rather than requested
-    * — but it must agree across all three tables, and any
-    * `graft.substr.*` property this loader does not understand
-    * throws (a table stamped by a newer writer encodes policy this
-    * session cannot honor). A table missing the stamps was not
-    * written by substringIndexWrite and throws. */
+    * — and must agree across all three tables. The
+    * [[graft.sources.StampedTables.check]] policy: a missing stamp, a
+    * mismatch, or a `graft.substr.*` key this loader does not
+    * understand all throw. */
   def substringIndexLoad(spark: org.apache.spark.sql.SparkSession,
       hashesTable: String, membersTable: String, tombsTable: String,
       k: Int): SubstringIndex = {
-    val known = Set("k", "dfCap", "hashVersion")
-    val caps = Seq(hashesTable, membersTable, tombsTable).map { t =>
-      val props = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-        .collect { case (key, v) if key.startsWith("graft.substr.") =>
-          key.stripPrefix("graft.substr.") -> v }
-      val unknown = props.keySet -- known
-      require(unknown.isEmpty,
-        s"index table $t stamps params this loader does not understand: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-      Seq("k" -> k, "hashVersion" -> minhashHashVersion).foreach {
-        case (name, v) => props.get(name) match {
-          case Some(s) => require(s == v.toString,
-            s"index table $t was built with $name=$s, load requested $v")
-          case None => throw new IllegalArgumentException(
-            s"table $t lacks graft.substr.$name — not a substringIndexWrite table")
-        }
-      }
-      props.getOrElse("dfCap", throw new IllegalArgumentException(
-        s"table $t lacks graft.substr.dfCap — not a substringIndexWrite table"))
-    }
-    require(caps.distinct.size == 1,
-      s"dfCap stamps disagree across index tables: $caps")
+    val dfCap = StampedTables.check(spark, Seq(hashesTable, membersTable, tombsTable),
+      "substr", Map("k" -> k, "hashVersion" -> minhashHashVersion), Seq("dfCap"))("dfCap")
     SubstringIndex(spark.table(hashesTable), spark.table(membersTable),
-      spark.table(tombsTable), k, caps.head.toInt)
+      spark.table(tombsTable), k, dfCap.toInt)
   }
 
   /** Probe a batch against the standing window universe: maximal
@@ -1275,20 +1226,15 @@ object Dedup {
       dim: Int, bits: Int, tables: Int, seed: Long,
       vecsTable: String, bandTable: String, buckets: Int = 16): Unit = {
     val spark = corpus.sparkSession
-    corpus.select(col(idCol).as("id"),
+    Tables.writeBucketed(corpus.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
-      .withColumn("n2", Vectors.normSq(col("v")))
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "id").sortBy("id").saveAsTable(vecsTable)
+      .withColumn("n2", Vectors.normSq(col("v"))), vecsTable, "id", buckets)
     // bands derive from the LANDED vectors (one clean scan)
     vecBands(spark.table(vecsTable), dim, bits, tables, seed)
       .write.format("parquet").mode("overwrite")
       .bucketBy(buckets, "tbl", "bucket").saveAsTable(bandTable)
-    Seq(vecsTable, bandTable).foreach { t =>
-      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES (" +
-        s"'graft.emblsh.dim'='$dim', 'graft.emblsh.bits'='$bits', " +
-        s"'graft.emblsh.tables'='$tables', 'graft.emblsh.seed'='$seed')")
-    }
+    StampedTables.stamp(spark, Seq(vecsTable, bandTable), "emblsh",
+      Map("dim" -> dim, "bits" -> bits, "tables" -> tables, "seed" -> seed))
   }
 
   /** Reattach a durable embedding index written by
@@ -1297,20 +1243,8 @@ object Dedup {
   def embeddingIndexLoad(spark: org.apache.spark.sql.SparkSession,
       vecsTable: String, bandTable: String,
       dim: Int, bits: Int, tables: Int, seed: Long): EmbeddingLshIndex = {
-    Seq(vecsTable, bandTable).foreach { t =>
-      val props = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      Seq("dim" -> dim.toString, "bits" -> bits.toString,
-          "tables" -> tables.toString, "seed" -> seed.toString).foreach {
-        case (name, v) =>
-          props.get(s"graft.emblsh.$name") match {
-            case Some(got) => require(got == v,
-              s"index table $t was built with $name=$got, load requested $v")
-            case None => throw new IllegalArgumentException(
-              s"table $t lacks graft.emblsh.$name — not an embeddingIndexWrite table")
-          }
-      }
-    }
+    StampedTables.check(spark, Seq(vecsTable, bandTable), "emblsh",
+      Map("dim" -> dim, "bits" -> bits, "tables" -> tables, "seed" -> seed))
     EmbeddingLshIndex(spark.table(vecsTable), spark.table(bandTable),
       dim, bits, tables, seed)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
+import graft.sources.{StampedTables, Tables}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §2c).
@@ -142,11 +143,9 @@ object Similarity {
   def sq8IndexWrite(corpus: DataFrame, idCol: String, vecCol: String,
       mins: Array[Double], spans: Array[Double], table: String,
       buckets: Int = 16): Unit = {
-    sq8Rows(corpus, idCol, vecCol, mins, spans)
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "neighbor_id").sortBy("neighbor_id")
-      .saveAsTable(table)
-    stampProps(corpus.sparkSession, table, "sq8",
+    Tables.writeBucketed(sq8Rows(corpus, idCol, vecCol, mins, spans), table,
+      "neighbor_id", buckets)
+    StampedTables.stamp(corpus.sparkSession, Seq(table), "sq8",
       sq8Props(mins, spans) + ("buckets" -> buckets.toString))
   }
 
@@ -182,8 +181,8 @@ object Similarity {
   def sq8IndexAppend(spark: org.apache.spark.sql.SparkSession, table: String,
       batch: DataFrame, idCol: String, vecCol: String,
       mins: Array[Double], spans: Array[Double],
-      buckets: Int = 16, maxDriftFrac: Double = 0.0): Unit = {
-    requireProps(spark, table, "sq8", sq8Props(mins, spans))
+      maxDriftFrac: Double = 0.0): Unit = {
+    val buckets = annStamps(spark, table, "sq8", sq8Props(mins, spans))("buckets").toInt
     val drift = sq8RangeDriftFrac(batch, vecCol, mins, spans)
     require(drift <= maxDriftFrac,
       f"batch drifts outside the stamped quantization ranges " +
@@ -202,10 +201,10 @@ object Similarity {
     * removed). */
   def sq8IndexRebuild(spark: org.apache.spark.sql.SparkSession, table: String,
       corpus: DataFrame, idCol: String, vecCol: String,
-      mins: Array[Double], spans: Array[Double], buckets: Int = 16): Unit =
+      mins: Array[Double], spans: Array[Double]): Unit =
     indexMutationLock.synchronized {
-      val physBuckets = stampedBuckets(spark, table, "sq8", buckets)
-      sq8IndexWrite(corpus, idCol, vecCol, mins, spans, table, physBuckets)
+      sq8IndexWrite(corpus, idCol, vecCol, mins, spans, table,
+        rebuildBuckets(spark, table, "sq8"))
       spark.sql(s"DROP TABLE IF EXISTS ${tombTable(table)}")
     }
 
@@ -215,9 +214,8 @@ object Similarity {
       ids: DataFrame, idCol: String): Unit =
     removeIndexIds(spark, table, ids, idCol)
 
-  def sq8IndexCompact(spark: org.apache.spark.sql.SparkSession, table: String,
-      buckets: Int = 16): Unit =
-    compactIndexTable(spark, table, buckets, bucketCol = "neighbor_id")
+  def sq8IndexCompact(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
+    compactIndexTable(spark, table, "sq8", bucketCol = "neighbor_id")
 
   /** Probe a persisted SQ8 index — result-identical to [[sq8TopK]]
     * under the same ranges (the encode→pack→dequant path is literally
@@ -225,7 +223,7 @@ object Similarity {
   def sq8ProbeIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       queries: DataFrame, idCol: String, vecCol: String,
       mins: Array[Double], spans: Array[Double], k: Int): DataFrame = {
-    requireProps(spark, table, "sq8", sq8Props(mins, spans))
+    annStamps(spark, table, "sq8", sq8Props(mins, spans))
     val deq = storedRows(spark, table).select(col("neighbor_id"),
       graft.functions.expr.NativeFunctions
         .sq8_dequant(col("code"), mins.toSeq, spans.toSeq).as("dv"))
@@ -376,16 +374,12 @@ object Similarity {
   def ivfIndexWrite(corpus: DataFrame, idCol: String, vecCol: String,
       quantizer: Array[Array[Double]], table: String, buckets: Int = 16): Unit = {
     val cents = quantizer.zipWithIndex.map { case (c, i) => (i, c) }
-    ivfRows(corpus, idCol, vecCol, cents)
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
+    Tables.writeBucketed(ivfRows(corpus, idCol, vecCol, cents), table, "cid", buckets)
     // the quantizer travels with the table as a fingerprint (the
     // minhashIndexWrite param-stamping contract): stored cids are
     // meaningless under any other centroid set. The physical bucket
-    // count is stamped too, so compaction re-buckets to the ORIGINAL
-    // spec instead of its caller's default.
-    stampProps(corpus.sparkSession, table, "ivf",
+    // count is stamped too: appends, compactions and rebuilds read it.
+    StampedTables.stamp(corpus.sparkSession, Seq(table), "ivf",
       ivfProps(quantizer) + ("buckets" -> buckets.toString))
   }
 
@@ -400,8 +394,8 @@ object Similarity {
     * minhash/embedding re-append semantics). */
   def ivfIndexAppend(spark: org.apache.spark.sql.SparkSession, table: String,
       batch: DataFrame, idCol: String, vecCol: String,
-      quantizer: Array[Array[Double]], buckets: Int = 16): Unit = {
-    requireProps(spark, table, "ivf", ivfProps(quantizer))
+      quantizer: Array[Array[Double]]): Unit = {
+    val buckets = annStamps(spark, table, "ivf", ivfProps(quantizer))("buckets").toInt
     val cents = quantizer.zipWithIndex.map { case (c, i) => (i, c) }
     appendIndexRows(spark, table, ivfRows(batch, idCol, vecCol, cents), buckets)
   }
@@ -421,9 +415,8 @@ object Similarity {
     * over), then swap-by-rename and clear the tombstones. No-op
     * without tombstones. Probe results are identical before and
     * after — compaction is purely physical. */
-  def ivfIndexCompact(spark: org.apache.spark.sql.SparkSession, table: String,
-      buckets: Int = 16): Unit =
-    compactIndexTable(spark, table, buckets)
+  def ivfIndexCompact(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
+    compactIndexTable(spark, table, "ivf")
 
   /** REBUILD a landed IVF index under a NEW quantizer (the retune
     * path): overwrite the table from `corpus` — the caller's current
@@ -435,31 +428,41 @@ object Similarity {
     * takedown/append cannot interleave with the overwrite; drop-AFTER-
     * overwrite keeps the crash windows safe (a crash between the two
     * leaves takedowns over-applied until the retune re-runs, never
-    * removed ids resurrected). Re-buckets to the ORIGINAL stamped
-    * physical spec when the table already carries one (the compact
-    * convention — a silent re-bucketing would break later appends). */
+    * removed ids resurrected). Re-buckets to the table's stamped
+    * physical spec (the compact convention — a silent re-bucketing
+    * would break later appends). */
   def ivfIndexRebuild(spark: org.apache.spark.sql.SparkSession, table: String,
       corpus: DataFrame, idCol: String, vecCol: String,
-      quantizer: Array[Array[Double]], buckets: Int = 16): Unit =
+      quantizer: Array[Array[Double]]): Unit =
     indexMutationLock.synchronized {
-      val physBuckets = stampedBuckets(spark, table, "ivf", buckets)
-      ivfIndexWrite(corpus, idCol, vecCol, quantizer, table, physBuckets)
+      ivfIndexWrite(corpus, idCol, vecCol, quantizer, table,
+        rebuildBuckets(spark, table, "ivf"))
       spark.sql(s"DROP TABLE IF EXISTS ${tombTable(table)}")
     }
 
-  /** The physical bucket count a table was stamped with at write
-    * time, falling back to the caller's default for a fresh table —
-    * rebuilds must re-bucket to the ORIGINAL spec (the compact
-    * convention). */
-  private def stampedBuckets(spark: org.apache.spark.sql.SparkSession,
-      table: String, family: String, default: Int): Int =
-    if (spark.catalog.tableExists(table))
-      spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-        .collectFirst {
-          case r if r.getString(0) == s"graft.$family.buckets" =>
-            r.getString(1).toInt
-        }.getOrElse(default)
-    else default
+  /** Every key an ANN index table of `family` is stamped with. */
+  private val annKeys = Map(
+    "sq8" -> Seq("dim", "rfp", "buckets"),
+    "ivf" -> Seq("nlist", "dim", "qfp", "buckets"),
+    "ivfpq" -> Seq("nlist", "dim", "m", "kcent", "qfp", "cbfp", "buckets"))
+
+  /** Validate an ANN index table's stamps against the caller's model
+    * (`model`, empty to read every key back) and return the rest —
+    * always including the physical bucket count, which appends,
+    * compactions and rebuilds re-bucket to: Spark refuses an append
+    * whose bucketing differs from the table's, and a silent
+    * re-bucketing would break later appends. */
+  private def annStamps(spark: org.apache.spark.sql.SparkSession, table: String,
+      family: String, model: Map[String, String]): Map[String, String] =
+    StampedTables.check(spark, Seq(table), family, model,
+      annKeys(family).filterNot(model.contains))
+
+  /** The bucket count a rebuild lands with: the table's stamped
+    * count, or the write default for a table that does not exist. */
+  private def rebuildBuckets(spark: org.apache.spark.sql.SparkSession,
+      table: String, family: String): Int =
+    if (spark.catalog.tableExists(table)) annStamps(spark, table, family, Map.empty)("buckets").toInt
+    else 16
 
   /** Probe a persisted IVF index ([[ivfIndexWrite]]) — result-
     * identical to [[ivfTopK]] with the same quantizer (spec-proven),
@@ -469,19 +472,9 @@ object Similarity {
   def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       queries: DataFrame, idCol: String, vecCol: String,
       quantizer: Array[Array[Double]], nprobe: Int, k: Int): DataFrame = {
-    requireProps(spark, table, "ivf", Map(
-      "nlist" -> quantizer.length.toString,
-      "dim" -> quantizer.headOption.map(_.length).getOrElse(0).toString,
-      "qfp" -> modelFingerprint(
-        Seq(quantizer.length), quantizer.iterator.flatten)))
+    annStamps(spark, table, "ivf", ivfProps(quantizer))
     val cents = quantizer.zipWithIndex.map { case (c, i) => (i, c) }
     probeLists(storedRows(spark, table), queries, idCol, vecCol, cents, nprobe, k)
-  }
-
-  private def stampProps(spark: org.apache.spark.sql.SparkSession,
-      table: String, family: String, props: Map[String, String]): Unit = {
-    val kv = props.map { case (n, v) => s"'graft.$family.$n'='$v'" }.mkString(", ")
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($kv)")
   }
 
   /** Tombstone sibling of a durable ANN index table: ids taken down
@@ -580,33 +573,25 @@ object Similarity {
     }
 
   private def compactIndexTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, buckets: Int,
+      table: String, family: String,
       bucketCol: String = "cid"): Unit = indexMutationLock.synchronized {
     indexTombstones(spark, table).foreach { tombs =>
-      def esc(v: String) = v.replace("\\", "\\\\").replace("'", "\\'")
-      val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-        .filter(_._1.startsWith("graft."))
       if (tombs.isEmpty) {
         // nothing pending (e.g. every takedown was re-admitted):
         // drop the empty sibling, skip the corpus-sized rewrite
         spark.sql(s"DROP TABLE IF EXISTS ${tombTable(table)}")
       } else {
-        // re-bucket to the ORIGINAL stamped spec, not this caller's
-        // default — a silent re-bucketing would break later appends
-        val physBuckets = props.collectFirst {
-          case (k, v) if k.endsWith(".buckets") => v.toInt
-        }.getOrElse(buckets)
+        // the rewrite carries the stamps over and re-buckets to the
+        // ORIGINAL stamped spec
+        val stamps = annStamps(spark, table, family, Map.empty)
         // rewrite into a sibling then swap-by-rename: Spark cannot
         // overwrite a table from a plan that reads it, and the rename
         // keeps the swap a metadata operation (one physical pass total)
         val tmp = s"${table}__compacting"
         spark.sql(s"DROP TABLE IF EXISTS $tmp")
-        spark.table(table).join(tombs, Seq("neighbor_id"), "left_anti")
-          .write.format("parquet").mode("overwrite")
-          .bucketBy(physBuckets, bucketCol).sortBy(bucketCol).saveAsTable(tmp)
-        val kv = props.map { case (k, v) => s"'${esc(k)}'='${esc(v)}'" }.mkString(", ")
-        if (kv.nonEmpty) spark.sql(s"ALTER TABLE $tmp SET TBLPROPERTIES ($kv)")
+        Tables.writeBucketed(spark.table(table).join(tombs, Seq("neighbor_id"), "left_anti"),
+          tmp, bucketCol, stamps("buckets").toInt)
+        StampedTables.stamp(spark, Seq(tmp), family, stamps)
         // swap order keeps every crash window recoverable: rename the
         // live table ASIDE, rename the rewrite IN, only then drop the
         // old rows and the folded tombstones (dropping tombstones
@@ -617,20 +602,6 @@ object Similarity {
         spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
         spark.sql(s"DROP TABLE $old")
         spark.sql(s"DROP TABLE IF EXISTS ${tombTable(table)}")
-      }
-    }
-  }
-
-  private def requireProps(spark: org.apache.spark.sql.SparkSession,
-      table: String, family: String, expected: Map[String, String]): Unit = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    expected.foreach { case (n, v) =>
-      props.get(s"graft.$family.$n") match {
-        case Some(got) => require(got == v,
-          s"index table $table was built with $n=$got, probe supplied $v")
-        case None => throw new IllegalArgumentException(
-          s"table $table lacks graft.$family.$n — not a ${family}IndexWrite table")
       }
     }
   }
@@ -1219,11 +1190,9 @@ object Similarity {
       quantizer: Array[Array[Double]], codebook: IndexedSeq[Double],
       m: Int, kCent: Int, table: String, buckets: Int = 16): Unit = {
     val cents = quantizer.zipWithIndex.map { case (c, i) => (i, c) }
-    ivfPqRows(corpus, idCol, vecCol, cents, codebook, m, kCent)
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
-    stampProps(corpus.sparkSession, table, "ivfpq",
+    Tables.writeBucketed(ivfPqRows(corpus, idCol, vecCol, cents, codebook, m, kCent),
+      table, "cid", buckets)
+    StampedTables.stamp(corpus.sparkSession, Seq(table), "ivfpq",
       ivfPqProps(quantizer, codebook, m, kCent) + ("buckets" -> buckets.toString))
   }
 
@@ -1234,8 +1203,9 @@ object Similarity {
   def ivfPqIndexAppend(spark: org.apache.spark.sql.SparkSession, table: String,
       batch: DataFrame, idCol: String, vecCol: String,
       quantizer: Array[Array[Double]], codebook: IndexedSeq[Double],
-      m: Int, kCent: Int, buckets: Int = 16): Unit = {
-    requireProps(spark, table, "ivfpq", ivfPqProps(quantizer, codebook, m, kCent))
+      m: Int, kCent: Int): Unit = {
+    val buckets = annStamps(spark, table, "ivfpq",
+      ivfPqProps(quantizer, codebook, m, kCent))("buckets").toInt
     val cents = quantizer.zipWithIndex.map { case (c, i) => (i, c) }
     appendIndexRows(spark, table,
       ivfPqRows(batch, idCol, vecCol, cents, codebook, m, kCent), buckets)
@@ -1247,9 +1217,8 @@ object Similarity {
     removeIndexIds(spark, table, ids, idCol)
 
   /** [[ivfIndexCompact]] for the IVF-PQ family. */
-  def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession, table: String,
-      buckets: Int = 16): Unit =
-    compactIndexTable(spark, table, buckets)
+  def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
+    compactIndexTable(spark, table, "ivfpq")
 
   private def ivfPqProps(quantizer: Array[Array[Double]],
       codebook: IndexedSeq[Double], m: Int, kCent: Int): Map[String, String] = Map(
@@ -1269,7 +1238,7 @@ object Similarity {
       queries: DataFrame, idCol: String, vecCol: String,
       quantizer: Array[Array[Double]], codebook: IndexedSeq[Double],
       m: Int, kCent: Int, nprobe: Int, k: Int, rerank: Int = 50): DataFrame = {
-    requireProps(spark, table, "ivfpq", ivfPqProps(quantizer, codebook, m, kCent))
+    annStamps(spark, table, "ivfpq", ivfPqProps(quantizer, codebook, m, kCent))
     val cents = quantizer.zipWithIndex.map { case (c, i) => (i, c) }
     val dim = quantizer.headOption.map(_.length).getOrElse(0)
     require(m > 0 && dim % m == 0, s"ivfPqProbeIndex: dim $dim not divisible by m=$m")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Boundary, Curation}
+import graft.sources.StampedTables
 
 /** Continuous DSIR deployment — the staleness answer for the
   * data-selection scorer, mirroring the LM loop (LmStream): scoring
@@ -86,16 +87,14 @@ object DsirStream {
     (0 until model.nBuckets)
       .map(b => (b, model.ct(b), model.cr(b))).toDF("b", "ct", "cr")
       .write.format("parquet").mode("overwrite").saveAsTable(table)
-    // ONE ALTER carries every stamp, including the replay ledger's
-    // high-water (r9 ADVICE): a crash between saveAsTable and this
-    // statement leaves a table WITHOUT the version stamp, which
-    // dsirLoad/resume REFUSE — loud recovery, never a silent
-    // hw=-1 re-fold of batches the landed model already contains
-    val ledger = maxBatch
-      .map(hw => s", 'graft.dsir.maxbatch'='$hw'").getOrElse("")
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'graft.dsir.version'='$dsirVersion', " +
-      s"'graft.dsir.nbuckets'='${model.nBuckets}'$ledger)")
+    // ONE statement carries every stamp, including the replay
+    // ledger's high-water (r9 ADVICE): a crash between saveAsTable and
+    // the stamp leaves a table WITHOUT the version stamp, which
+    // dsirLoad/resume REFUSE — loud recovery, never a silent hw=-1
+    // re-fold of batches the landed model already contains
+    StampedTables.stamp(spark, Seq(table), "dsir",
+      Map("version" -> dsirVersion, "nbuckets" -> model.nBuckets) ++
+        maxBatch.map("maxbatch" -> _))
   }
 
   /** Reattach a durable DSIR model written by [[dsirWrite]]. A table
@@ -103,17 +102,15 @@ object DsirStream {
     * version, or whose row set disagrees with the stamped width)
     * throws. */
   def dsirLoad(spark: org.apache.spark.sql.SparkSession,
-      table: String): DsirModel = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    Seq("version", "nbuckets").foreach { k =>
-      require(props.contains(s"graft.dsir.$k"),
-        s"table $table lacks graft.dsir.$k — not a dsirWrite table")
-    }
-    require(props("graft.dsir.version") == dsirVersion.toString,
-      s"table $table was written under DSIR hash convention " +
-        s"${props("graft.dsir.version")}, this session scores with $dsirVersion")
-    val b = props("graft.dsir.nbuckets").toInt
+      table: String): DsirModel = loadStamped(spark, table)._1
+
+  /** [[dsirLoad]] plus the replay ledger's high-water stamp (-1 when
+    * the table carries none), from one read of the stamps. */
+  private[streaming] def loadStamped(spark: org.apache.spark.sql.SparkSession,
+      table: String): (DsirModel, Long) = {
+    val stamps = StampedTables.check(spark, Seq(table), "dsir",
+      Map("version" -> dsirVersion), Seq("nbuckets"), Seq("maxbatch"))
+    val b = stamps("nbuckets").toInt
     val rows = spark.table(table).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     require(rows.length == b && rows.map(_._1).sorted.sameElements(0 until b),
@@ -121,7 +118,7 @@ object DsirStream {
     val ct = Array.fill(b)(0L)
     val cr = Array.fill(b)(0L)
     rows.foreach { case (i, c1, c2) => ct(i) = c1; cr(i) = c2 }
-    DsirModel(ct, cr)
+    (DsirModel(ct, cr), stamps.get("maxbatch").map(_.toLong).getOrElse(-1L))
   }
 
   /** foreachBatch driver: score each micro-batch against the current
@@ -229,9 +226,7 @@ object DsirLoop {
     * a FRESH stream checkpoint). */
   def resume(spark: org.apache.spark.sql.SparkSession,
       table: String): DsirLoop = {
-    val hw = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-      .get("graft.dsir.maxbatch").map(_.toLong).getOrElse(-1L)
-    new DsirLoop(DsirStream.dsirLoad(spark, table), hw)
+    val (model, hw) = DsirStream.loadStamped(spark, table)
+    new DsirLoop(model, hw)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Boundary, Tier}
+import graft.sources.{StampedTables, Tables}
 
 /** Streaming LM quality scoring — the continuous deployment shape of
   * [[graft.operators.Curation.interpLogProb]]: the n-gram LM is a
@@ -96,26 +97,18 @@ object LmStream {
   def lmWrite(model: LmModel, unigramTable: String, bigramTable: String,
       prefixTable: String, buckets: Int = 16,
       maxBatch: Option[Long] = None): Unit = {
-    val spark = model.unigram.sparkSession
-    def land(df: DataFrame, key: String, table: String): Unit =
-      df.write.format("parquet").mode("overwrite")
-        .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
-    land(model.unigram, "token_h", unigramTable)
-    land(model.bigram, "bigram_h", bigramTable)
-    land(model.prefix, "prefix_h", prefixTable)
+    Tables.writeBucketed(model.unigram, unigramTable, "token_h", buckets)
+    Tables.writeBucketed(model.bigram, bigramTable, "bigram_h", buckets)
+    Tables.writeBucketed(model.prefix, prefixTable, "prefix_h", buckets)
     // each table's stamps — including the replay ledger's high-water
-    // when checkpointing (r9 ADVICE) — land in ONE ALTER per table:
-    // a crash mid-sequence leaves some table without its version
-    // stamp, which lmLoad REFUSES loudly; there is no state where a
-    // loadable model carries folded batches but no ledger
-    val ledger = maxBatch
-      .map(hw => s", 'graft.lm.maxbatch'='$hw'").getOrElse("")
-    Seq(unigramTable, bigramTable, prefixTable).foreach { t =>
-      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES (" +
-        s"'graft.lm.version'='$lmVersion', " +
-        s"'graft.lm.total'='${model.total}', " +
-        s"'graft.lm.vocab'='${model.vocab}'$ledger)")
-    }
+    // when checkpointing (r9 ADVICE) — land in ONE statement per
+    // table: a crash mid-sequence leaves some table without its
+    // version stamp, which lmLoad REFUSES loudly; there is no state
+    // where a loadable model carries folded batches but no ledger
+    StampedTables.stamp(model.unigram.sparkSession,
+      Seq(unigramTable, bigramTable, prefixTable), "lm",
+      Map("version" -> lmVersion, "total" -> model.total, "vocab" -> model.vocab) ++
+        maxBatch.map("maxbatch" -> _))
   }
 
   /** Reattach a durable LM written by [[lmWrite]]. Each table must
@@ -125,25 +118,18 @@ object LmStream {
     * from two different landed models would silently mis-normalize
     * every score). */
   def lmLoad(spark: org.apache.spark.sql.SparkSession, unigramTable: String,
-      bigramTable: String, prefixTable: String): LmModel = {
-    val stamps = Seq(unigramTable, bigramTable, prefixTable).map { t =>
-      val props = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      Seq("version", "total", "vocab").foreach { k =>
-        require(props.contains(s"graft.lm.$k"),
-          s"table $t lacks graft.lm.$k — not an lmWrite table")
-      }
-      require(props("graft.lm.version") == lmVersion.toString,
-        s"table $t was written under LM hash convention " +
-          s"${props("graft.lm.version")}, this session scores with $lmVersion")
-      (props("graft.lm.total").toLong, props("graft.lm.vocab").toLong)
-    }
-    require(stamps.distinct.size == 1,
-      s"LM tables disagree on (total, vocab): $stamps — they were not " +
-        "written by one lmWrite call")
-    val (total, vocab) = stamps.head
-    LmModel(spark.table(bigramTable), spark.table(prefixTable),
-      spark.table(unigramTable), total, vocab)
+      bigramTable: String, prefixTable: String): LmModel =
+    loadStamped(spark, unigramTable, bigramTable, prefixTable)._1
+
+  /** [[lmLoad]] plus the replay ledger's high-water stamp (-1 when the
+    * tables carry none), from one read of the stamps. */
+  private[streaming] def loadStamped(spark: org.apache.spark.sql.SparkSession,
+      unigramTable: String, bigramTable: String, prefixTable: String): (LmModel, Long) = {
+    val stamps = StampedTables.check(spark, Seq(unigramTable, bigramTable, prefixTable),
+      "lm", Map("version" -> lmVersion), Seq("total", "vocab"), Seq("maxbatch"))
+    (LmModel(spark.table(bigramTable), spark.table(prefixTable),
+      spark.table(unigramTable), stamps("total").toLong, stamps("vocab").toLong),
+      stamps.get("maxbatch").map(_.toLong).getOrElse(-1L))
   }
 
   /** Score one (micro-)batch against the frozen model:
@@ -319,11 +305,7 @@ object LmLoop {
   def resume(spark: org.apache.spark.sql.SparkSession,
       unigramTable: String, bigramTable: String, prefixTable: String,
       lambda: Double): LmLoop = {
-    val hw = spark.sql(s"SHOW TBLPROPERTIES $unigramTable").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-      .get("graft.lm.maxbatch").map(_.toLong).getOrElse(-1L)
-    new LmLoop(
-      LmStream.lmLoad(spark, unigramTable, bigramTable, prefixTable),
-      lambda, hw)
+    val (model, hw) = LmStream.loadStamped(spark, unigramTable, bigramTable, prefixTable)
+    new LmLoop(model, lambda, hw)
   }
 }

@@ -416,6 +416,16 @@ class DedupSpec extends SparkSpec {
         Dedup.minhashIndexLoad(spark, "mh_sigs_spec", "mh_bands_spec",
           k, perms, bands)
       }
+      // a stamp this loader does not understand → throw
+      spark.sql("ALTER TABLE mh_sigs_spec SET TBLPROPERTIES " +
+        s"('graft.minhash.hashVersion'='${Dedup.minhashHashVersion}')")
+      Dedup.minhashIndexLoad(spark, "mh_sigs_spec", "mh_bands_spec", k, perms, bands)
+      spark.sql("ALTER TABLE mh_bands_spec SET TBLPROPERTIES " +
+        "('graft.minhash.futurePolicy'='x')")
+      intercept[IllegalArgumentException] {
+        Dedup.minhashIndexLoad(spark, "mh_sigs_spec", "mh_bands_spec",
+          k, perms, bands)
+      }
     } finally {
       spark.sql("DROP TABLE IF EXISTS mh_sigs_spec")
       spark.sql("DROP TABLE IF EXISTS mh_bands_spec")

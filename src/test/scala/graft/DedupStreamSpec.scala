@@ -232,6 +232,13 @@ class DedupStreamSpec extends SparkSpec {
         Dedup.embeddingIndexLoad(spark, "emb_vecs_spec", "emb_band_spec",
           dim, bits, tables, seed + 1)
       }
+      // a stamp this loader does not understand → throw
+      spark.sql("ALTER TABLE emb_band_spec SET TBLPROPERTIES " +
+        "('graft.emblsh.futurePolicy'='x')")
+      intercept[IllegalArgumentException] {
+        Dedup.embeddingIndexLoad(spark, "emb_vecs_spec", "emb_band_spec",
+          dim, bits, tables, seed)
+      }
     } finally {
       spark.sql("DROP TABLE IF EXISTS emb_vecs_spec")
       spark.sql("DROP TABLE IF EXISTS emb_band_spec")

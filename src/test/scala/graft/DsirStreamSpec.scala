@@ -97,6 +97,12 @@ class DsirStreamSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         DsirStream.dsirLoad(spark, "dsir_not_a_model")
       }
+      // guard: a stamp this loader does not understand throws
+      spark.sql("ALTER TABLE dsir_spec SET TBLPROPERTIES " +
+        "('graft.dsir.futurePolicy'='x')")
+      intercept[IllegalArgumentException] {
+        DsirStream.dsirLoad(spark, "dsir_spec")
+      }
     } finally dropTables("dsir_spec", "dsir_not_a_model")
   }
 

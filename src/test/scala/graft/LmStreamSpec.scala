@@ -174,6 +174,12 @@ class LmStreamSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         LmStream.lmLoad(spark, "lm_uni_h", "lm_bi_t", "lm_pre_t")
       }
+      // guard: a stamp this loader does not understand throws
+      spark.sql("ALTER TABLE lm_pre_t SET TBLPROPERTIES " +
+        "('graft.lm.futurePolicy'='x')")
+      intercept[IllegalArgumentException] {
+        LmStream.lmLoad(spark, "lm_uni_t", "lm_bi_t", "lm_pre_t")
+      }
     } finally {
       model.release()
       dropTables(specTables: _*)

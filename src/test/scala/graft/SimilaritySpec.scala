@@ -129,6 +129,13 @@ class SimilaritySpec extends SparkSpec {
         "vec_id", "embedding", mins, spans, 5)
       .as[(Long, Int, Long)].collect().sorted.toSeq
     assert(afterCompact === afterRemove)
+    // a stamp this probe does not understand → throw
+    spark.sql("ALTER TABLE sq8_ix SET TBLPROPERTIES " +
+      "('graft.sq8.futurePolicy'='x')")
+    intercept[IllegalArgumentException] {
+      Similarity.sq8ProbeIndex(spark, "sq8_ix", queries,
+        "vec_id", "embedding", mins, spans, 5)
+    }
     dropTables("sq8_ix", "sq8_ix__tombstones")
   }
 
@@ -521,6 +528,13 @@ class SimilaritySpec extends SparkSpec {
         Similarity.ivfPqIndexAppend(spark, "ivfpq_lc", batch, "vec_id",
           "embedding", q, cbTampered, m = 8, kCent = 32)
       }
+      // a stamp this probe does not understand → throw
+      spark.sql("ALTER TABLE ivfpq_lc SET TBLPROPERTIES " +
+        "('graft.ivfpq.futurePolicy'='x')")
+      intercept[IllegalArgumentException] {
+        Similarity.ivfPqProbeIndex(spark, "ivfpq_lc", queries, "vec_id", "embedding",
+          q, cb, m = 8, kCent = 32, nprobe = 4, k = 5)
+      }
     } finally Seq("ivfpq_lc", "ivfpq_lc_full", "ivfpq_lc_without",
       "ivfpq_lc__tombstones", "ivfpq_lc__compacting").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -541,7 +555,52 @@ class SimilaritySpec extends SparkSpec {
         Similarity.ivfProbeIndex(spark, "ivf_fp_spec", queries,
           "vec_id", "embedding", tampered, nprobe = 4, k = 5)
       }
+      // a stamp this probe does not understand → throw
+      spark.sql("ALTER TABLE ivf_fp_spec SET TBLPROPERTIES " +
+        "('graft.ivf.futurePolicy'='x')")
+      intercept[IllegalArgumentException] {
+        Similarity.ivfProbeIndex(spark, "ivf_fp_spec", queries,
+          "vec_id", "embedding", q, nprobe = 4, k = 5)
+      }
     } finally spark.sql("DROP TABLE IF EXISTS ivf_fp_spec")
+  }
+
+  test("IVF index written with buckets = 4 keeps 4 buckets through append, remove, compact and rebuild") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val e = Tables.embeddings(spark, sfDir)
+    val all = e.filter(col("vec_id") >= 8)
+    val base = all.filter(pmod(col("vec_id"), lit(3)) =!= 0)
+    val batch = all.filter(pmod(col("vec_id"), lit(3)) === 0)
+    val victims = batch.filter(pmod(col("vec_id"), lit(2)) === 0).select(col("vec_id"))
+    val queries = e.filter(col("vec_id") < 8)
+    val q = base.select(col("embedding").cast("array<double>"), col("vec_id"))
+      .orderBy("vec_id").limit(16).collect()
+      .map(_.getSeq[Double](0).toArray)
+    def probeSet(table: String) =
+      Similarity.ivfProbeIndex(spark, table, queries, "vec_id", "embedding",
+        q, nprobe = 4, k = 5).as[(Long, Int, Long)].collect().toSet
+    def bucketCount(table: String) = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(table)).bucketSpec.map(_.numBuckets)
+    val ts = Seq("ivf_b4", "ivf_b4_full", "ivf_b4_without", "ivf_b4__tombstones",
+      "ivf_b4__compacting")
+    ts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      Similarity.ivfIndexWrite(base, "vec_id", "embedding", q, "ivf_b4", buckets = 4)
+      Similarity.ivfIndexWrite(all, "vec_id", "embedding", q, "ivf_b4_full")
+      Similarity.ivfIndexWrite(all.join(victims, Seq("vec_id"), "left_anti"),
+        "vec_id", "embedding", q, "ivf_b4_without")
+      assert(bucketCount("ivf_b4") === Some(4))
+      Similarity.ivfIndexAppend(spark, "ivf_b4", batch, "vec_id", "embedding", q)
+      assert(bucketCount("ivf_b4") === Some(4))
+      assert(probeSet("ivf_b4") === probeSet("ivf_b4_full"))
+      Similarity.ivfIndexRemove(spark, "ivf_b4", victims, "vec_id")
+      Similarity.ivfIndexCompact(spark, "ivf_b4")
+      assert(bucketCount("ivf_b4") === Some(4))
+      assert(probeSet("ivf_b4") === probeSet("ivf_b4_without"))
+      Similarity.ivfIndexRebuild(spark, "ivf_b4", all, "vec_id", "embedding", q)
+      assert(bucketCount("ivf_b4") === Some(4))
+      assert(probeSet("ivf_b4") === probeSet("ivf_b4_full"))
+    } finally ts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("trained quantizer balances inverted lists better than lowest-id centroids") {
