@@ -87,6 +87,10 @@ object LayerRecord {
   * planning, job submission and stage-launch gaps. `codegen.compiles`
   * is the body's delta of Spark's generated-class compile count, a
   * JVM-wide counter, so it too is exact for one client thread.
+  * `sources.write_s` is the sum of the body's write-command durations,
+  * not their union: writes that overlap (the reference DAG lands two
+  * tables at a time) can make it exceed the body's wall time, as in a
+  * traced DAG run that read 2.79 s of writes in a 1.58 s body.
   *
   * Installed by the mains that report it (Bench, Verify), never by
   * [[Sessions.build]]. */
