@@ -127,7 +127,7 @@ object ReferenceDag {
         try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
       }
       failures.headOption.foreach { first =>
-        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        failures.tail.foreach(first.addSuppressed)
         throw first
       }
     } finally {

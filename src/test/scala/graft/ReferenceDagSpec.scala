@@ -80,34 +80,41 @@ class ReferenceDagSpec extends SparkSpec {
 
   test("every job of a measured run carries the measure's job group") {
     val out = Files.createTempDirectory("graft_dag_grp").toFile.getAbsolutePath
-    val groups = mutable.ArrayBuffer[Option[String]]()
-    @volatile var open = false
-    @volatile var sawWriter = false
+    // (submission time, job group) of every job start
+    val starts = mutable.ArrayBuffer[(Long, Option[String])]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (open) {
-        groups.synchronized(groups += Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
-        if (writerThreads.nonEmpty) sawWriter = true
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.synchronized {
+        starts += e.time -> Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
       }
     }
+    @volatile var sawWriter = false
+    val watcher = new Thread(() =>
+      try while (!sawWriter) { sawWriter = writerThreads.nonEmpty; Thread.sleep(2) }
+      catch { case _: InterruptedException => () })
     spark.sparkContext.addSparkListener(listener)
     try {
-      // measure drains the bus before the body and after it, so the
-      // listener sees exactly the body's jobs
+      var t0, t1 = 0L
       val (res, record) = LayerCollector(spark).measure("reference_dag") {
-        open = true
+        t0 = System.currentTimeMillis()
+        watcher.start()
         try ReferenceDag.run(spark, sfDir, out, asOfBatch = "2000-01-01")
-        finally open = false
+        finally t1 = System.currentTimeMillis()
       }
+      watcher.interrupt()
+      watcher.join()
       assert(res.isSuccess)
-      val seen = groups.synchronized(groups.toList)
+      // measure drains the bus after the body, so every start of the
+      // call's jobs has been seen; they are the ones submitted inside it
+      val seen = starts.synchronized(starts.toList)
+        .collect { case (t, g) if t >= t0 && t <= t1 => g }
       assert(seen.nonEmpty)
       assert(seen.forall(_.isDefined), s"ungrouped jobs: $seen")
       assert(seen.flatten.distinct.size === 1)
       assert(seen.flatten.head.startsWith("graft-layer-"))
       assert(record("sched.jobs") === seen.size.toDouble)
       assert(record("plans.executions") >= Landed.size.toDouble)
-      assert(sawWriter, "no job started while a writer thread was alive")
+      assert(sawWriter, "no writer thread was alive during the run")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
